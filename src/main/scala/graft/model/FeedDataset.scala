@@ -30,10 +30,14 @@ final case class FeedDataset(tables: Map[String, DataFrame], fkGraph: Seq[FkEdge
 
   /** Cut the lineage of the named (small, dimension-sized) tables by
     * eager local checkpoint. Multi-step tasks that rewrite the same
-    * dimension repeatedly (RemoveUnusedEntities, Merge) MUST do this
+    * dimension repeatedly (Merge, once per merged feed) MUST do this
     * between steps: Catalyst analyzes logical plans as trees, so a
-    * chain of cascades over shared, ever-deepening subplans blows up
-    * tree size exponentially. Fact tables (stop_times at 100 TB) are
+    * chain of rewrites over shared, ever-deepening subplans blows up
+    * tree size exponentially. Each checkpoint is at least one Spark job
+    * and re-runs the table's whole lazy lineage, so a task that only
+    * decides which rows survive should checkpoint narrow key frames
+    * instead and cascade once at the end (RemoveUnusedEntities,
+    * [[withShrunk]]). Fact tables (stop_times at 100 TB) are
     * deliberately NOT checkpointed — they stay lazy chains of
     * broadcast semi-joins against the flat checkpointed dimensions. */
   def materialized(names: String*): FeedDataset =
@@ -42,7 +46,9 @@ final case class FeedDataset(tables: Map[String, DataFrame], fkGraph: Seq[FkEdge
     })
 
   /** Replace `name` with `df` and drop orphaned children transitively,
-    * emulating SQLite's `ON DELETE CASCADE` (SURVEY §1.4).
+    * emulating SQLite's `ON DELETE CASCADE` (SURVEY §1.4). For one
+    * deletion; a task that deletes from several tables in turn should
+    * decide them all first and call [[withShrunk]] once.
     *
     * Scale notes: each cascade step is one `left_semi` join on the FK
     * key — shuffle-free when the parent side is small enough for a
@@ -79,30 +85,13 @@ final case class FeedDataset(tables: Map[String, DataFrame], fkGraph: Seq[FkEdge
       fkGraph.filter(e => e.parent == parent && applied(e) < 2).foreach { e =>
         applied(e) += 1
         acc.get(e.child).foreach { child =>
-          import org.apache.spark.sql.functions.{col, lit}
-          // Rename the parent key columns so self-FK edges (stops.
-          // parent_station -> stops.stop_id) don't trip Spark's
-          // ambiguous-self-join detection. The child plan must appear
-          // exactly ONCE here — a filter/union split would copy the
-          // child subtree per edge application and grow the logical
-          // plan exponentially across multi-FK tables like transfers.
-          val renamed = e.parentCols.map(pc => s"__cascade_$pc")
+          import org.apache.spark.sql.functions.col
           val parentKeys = keySets.getOrElseUpdate(e.parentCols, {
             acc(e.parent)
               .select(e.parentCols.map(col): _*).distinct()
               .localCheckpoint(true)
-          }).toDF(renamed: _*)
-            .withColumn("__cascade_hit", lit(1))
-          val cond = e.childCols.zip(renamed).map { case (cc, pc) =>
-            col(cc) === col(pc)
-          }.reduce(_ && _)
-          // SQLite FK semantics: a NULL FK references nothing and is
-          // never cascaded — keep those rows unconditionally.
-          val anyNull = e.childCols.map(col(_).isNull).reduce(_ || _)
-          val kept = child.join(parentKeys, cond, "left")
-            .filter(anyNull || col("__cascade_hit").isNotNull)
-            .drop((renamed :+ "__cascade_hit"): _*)
-          acc = acc.updated(e.child, kept)
+          })
+          acc = acc.updated(e.child, FeedDataset.keepReferencing(child, e.childCols, parentKeys))
           // a self-FK edge just shrank the table we're popping — the
           // memoized key sets are stale for the remaining edges
           if (e.child == parent) keySets.clear()
@@ -112,9 +101,78 @@ final case class FeedDataset(tables: Map[String, DataFrame], fkGraph: Seq[FkEdge
     }
     copy(tables = acc)
   }
+
+  /** Keep only the rows of each table of `kept` whose key is in its key
+    * frame, and filter every other table once against its final
+    * parents — the net effect of `ON DELETE CASCADE` after several
+    * deletions.
+    *
+    * A key frame holds the key columns of the table's surviving rows,
+    * each key once, with every cascade among the kept tables (their
+    * self-FKs included) already applied; their own FK edges are not
+    * re-applied. Every other table with a kept or filtered parent is
+    * filtered against each such parent, parents first, in one lazy pass;
+    * a kept parent supplies its keys from its (small, usually
+    * checkpointed) key frame rather than from its full table. Filtering
+    * a child once against its final parent equals filtering it against
+    * each of the parent's intermediate states, because a parent only
+    * shrinks and NULL FKs are kept throughout. Edges from unchanged
+    * parents are not applied, and a self-FK of a table not in `kept` is
+    * ignored. Parent key columns must be keys of the parent (GTFS FKs
+    * reference primary keys), since [[FeedDataset.keepReferencing]]
+    * needs them unique. */
+  def withShrunk(kept: Map[String, DataFrame]): FeedDataset = {
+    import org.apache.spark.sql.functions.col
+    var acc = tables ++ kept.map { case (t, keys) =>
+      t -> tables(t).join(keys, keys.columns.toSeq, "left_semi")
+    }
+    val changed = scala.collection.mutable.Set(kept.keys.toSeq: _*)
+    def keysOf(e: FkEdge): DataFrame =
+      kept.getOrElse(e.parent, acc(e.parent)).select(e.parentCols.map(col): _*)
+    val edges = fkGraph.filter(e => !kept.contains(e.child) && e.child != e.parent)
+      .groupBy(_.child)
+    var pending = edges.keySet
+    while (pending.nonEmpty) {
+      val ready = pending.filter(c => edges(c).forall(e => !pending.contains(e.parent)))
+      require(ready.nonEmpty, s"FK graph has a cycle through ${pending.mkString(", ")}")
+      for (c <- ready; child <- acc.get(c)) {
+        val live = edges(c).filter(e => changed(e.parent) && acc.contains(e.parent))
+        if (live.nonEmpty) {
+          acc = acc.updated(c, live.foldLeft(child) { (df, e) =>
+            FeedDataset.keepReferencing(df, e.childCols, keysOf(e))
+          })
+          changed += c
+        }
+      }
+      pending --= ready
+    }
+    copy(tables = acc)
+  }
 }
 
 object FeedDataset {
+  /** Rows of `child` whose FK `childCols` are NULL or match a row of
+    * `parentKeys` (the parent key columns, in `childCols` order, each
+    * key at most once) — one FK edge of a cascade.
+    *
+    * SQLite FK semantics: a NULL FK references nothing and is never
+    * cascaded, so those rows are kept unconditionally. The parent key
+    * columns are renamed so self-FK edges (stops.parent_station ->
+    * stops.stop_id) don't trip Spark's ambiguous-self-join detection.
+    * The child plan appears exactly ONCE — a filter/union split would
+    * copy the child subtree per edge and grow the logical plan
+    * exponentially across multi-FK tables like transfers. */
+  def keepReferencing(child: DataFrame, childCols: Seq[String], parentKeys: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val renamed = parentKeys.columns.toSeq.map(pc => s"__cascade_$pc")
+    val keys = parentKeys.toDF(renamed: _*).withColumn("__cascade_hit", lit(1))
+    val cond = childCols.zip(renamed).map { case (cc, pc) => col(cc) === col(pc) }.reduce(_ && _)
+    val anyNull = childCols.map(col(_).isNull).reduce(_ || _)
+    child.join(keys, cond, "left")
+      .filter(anyNull || col("__cascade_hit").isNotNull)
+      .drop((renamed :+ "__cascade_hit"): _*)
+  }
+
   /** FK graph of the 16-table GTFS model, dependency edges from SURVEY
     * §1.2 (DDL cites per entity). */
   val gtfsFkGraph: Seq[FkEdge] = Seq(

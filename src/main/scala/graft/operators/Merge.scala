@@ -56,17 +56,17 @@ final case class Merge(
     var acc = feed
 
     // --- accumulated merge state (initialize_known_objects, merge.py:253-274)
-    // known route hashes -> actual id; hash uses the ORIGINAL incoming id
+    // known route hashes -> actual id; hash uses the ORIGINAL incoming id.
+    // The ids in use are exactly the known mapped/actual ids: every id a
+    // merged feed adds also enters the known hashes.
     var knownRoutes = acc("routes").select(
       routeHashCols.map(c => col(c).as(s"h_$c")) :+ col("route_id").as("mapped_id"): _*)
       .localCheckpoint(true)
-    var usedRouteIds = acc("routes").select("route_id").localCheckpoint(true)
     var knownStops = acc("stops").select(
       stopHashCols.map(c => col(c).as(s"h_$c")) ++
         Seq(col("stop_id").as("actual_id"), col("lat").as("k_lat"), col("lon").as("k_lon"),
           monotonically_increasing_id().as("k_seq")): _*)
       .localCheckpoint(true)
-    var usedStopIds = acc("stops").select("stop_id").localCheckpoint(true)
     val runtimeHasFeedInfo = !acc("feed_info").isEmpty
     val feedInfos = scala.collection.mutable.Buffer.empty[Option[org.apache.spark.sql.Row]]
 
@@ -92,8 +92,8 @@ final case class Merge(
       val rMerged = rJoined.filter(col("mapped_id").isNotNull)
         .select(col("route_id").as("old_id"), col("mapped_id").as("new_id"))
       val rUnmatched = rJoined.filter(col("mapped_id").isNull).select(incRoutes.columns.map(col): _*)
-      val rConflicts = resolveConflicts(
-        rUnmatched.select("route_id"), usedRouteIds, "route_id", rt)
+      val rConflicts = resolveConflicts(rUnmatched.select("route_id"),
+        knownRoutes.select(col("mapped_id").as("route_id")), "route_id", rt)
       // (broadcast hints are applied at the join sites — hinting a
       // checkpointed frame that is later re-selected detaches the hint
       // and triggers HintErrorLogger warnings)
@@ -110,9 +110,6 @@ final case class Merge(
       knownRoutes = knownRoutes.unionByName(
         rUnmatchedWithNew.select(
           routeHashCols.map(c => col(c).as(s"h_$c")) :+ col("final_id").as("mapped_id"): _*))
-        .localCheckpoint(true)
-      usedRouteIds = usedRouteIds
-        .unionByName(rUnmatchedWithNew.select(col("final_id").as("route_id")))
         .localCheckpoint(true)
       val routes = acc("routes").unionByName(
         remapRoutes(incRoutes, "route_id")
@@ -137,7 +134,8 @@ final case class Merge(
         .select(col("stop_id").as("old_id"), col("matched_id").as("new_id"))
       val sUnmatchedIds = sBest.filter(col("matched_id").isNull).select("stop_id")
       val sUnmatched = incStops.join(sUnmatchedIds, Seq("stop_id"), "left_semi")
-      val sConflicts = resolveConflicts(sUnmatchedIds, usedStopIds, "stop_id", rt)
+      val sConflicts = resolveConflicts(sUnmatchedIds,
+        knownStops.select(col("actual_id").as("stop_id")), "stop_id", rt)
       val stopMap = sMerged.unionByName(sConflicts).localCheckpoint(true)
 
       def remapStops(df: DataFrame, c: String): DataFrame = remap(df, c, stopMap)
@@ -151,9 +149,6 @@ final case class Merge(
           stopHashCols.map(c => col(c).as(s"h_$c")) ++ Seq(
             col("final_id").as("actual_id"), col("lat").as("k_lat"), col("lon").as("k_lon"),
             monotonically_increasing_id().as("k_seq")): _*))
-        .localCheckpoint(true)
-      usedStopIds = usedStopIds
-        .unionByName(sUnmatchedWithNew.select(col("final_id").as("stop_id")))
         .localCheckpoint(true)
       // parent_station follows the incoming db's ON UPDATE CASCADE
       val stops = acc("stops").unionByName(

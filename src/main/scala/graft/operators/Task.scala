@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.LogicalRDD
 import graft.model.FeedDataset
 
 /** Execution context handed to every task (reference: TaskRuntime,
@@ -27,7 +28,9 @@ trait Task {
   * `checkpointAfter`: task names after which the feed is materialized
   * to cut lineage — the Spark stand-in for the reference's "shared mutable DB
   * persists intermediate state". Expensive multi-pass tasks (Merge)
-  * should be followed by a checkpoint at scale.
+  * should be followed by a checkpoint at scale. Tables already
+  * checkpointed (plan is a checkpointed `LogicalRDD`) are kept as they
+  * are.
   */
 final class Pipeline(
     tasks: Seq[Task],
@@ -37,15 +40,25 @@ final class Pipeline(
     tasks.foldLeft(initial) { (feed, task) =>
       val t0 = System.nanoTime()
       val rss0 = LoadTracker.memoryUsageKb()
-      var out = task.execute(feed, rt)
-      if (checkpointAfter.contains(task.name)) {
-        out = out.copy(tables = out.tables.map { case (n, df) =>
-          n -> df.localCheckpoint(true)
-        })
-      }
+      // Spark jobs carry the running task's name; a nested pipeline (a
+      // Merge pre-merge pipeline) restores its caller's name when done
+      val sc = rt.spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(task.name)
+      val out =
+        try {
+          val done = task.execute(feed, rt)
+          if (!checkpointAfter.contains(task.name)) done
+          else done.copy(tables = done.tables.map { case (n, df) =>
+            // a table the task left checkpointed needs no second copy
+            n -> (df.queryExecution.logical match {
+              case r: LogicalRDD if r.rdd.isCheckpointed => df
+              case _ => df.localCheckpoint(true)
+            })
+          })
+        } finally sc.setJobDescription(outer)
       val secs = (System.nanoTime() - t0) / 1e9
       val rss1 = LoadTracker.memoryUsageKb()
-      rt.spark.sparkContext.setJobDescription(null)
       graft.util.Logs.info("pipeline",
         f"${task.name}%-28s ${secs}%8.3f s; " +
           f"memory usage: ${rss0 / 1024} MiB -> ${rss1 / 1024} MiB (diff ${rss1 - rss0} KiB)")

@@ -142,58 +142,100 @@ case object GenerateTripHeadsign extends Task {
 
 /** Drop entities that serve no purpose, in the reference's fixed order
   * with FK cascades after every step (reference: RemoveUnusedEntities,
-  * tasks/remove_unused_entities.py; SURVEY J2). Each step is one
-  * anti-/semi-join; calendar date-emptiness uses the expansion kernel. */
+  * tasks/remove_unused_entities.py; SURVEY J2).
+  *
+  * The seven steps are decided on narrow key frames — trips
+  * (trip_id, calendar_id, route_id), calendars, stops (stop_id,
+  * location_type, parent_station), routes (route_id, agency_id) and
+  * agencies — and the full tables are cascaded once at the end
+  * ([[FeedDataset.withShrunk]]). This equals cascading after every step:
+  * rows are only ever removed, so filtering a child once against its
+  * parent's final rows equals filtering it after each of the parent's
+  * shrinks; and every edge the per-step cascades apply to a decided table
+  * is applied here to its key frame after its parent's last shrink
+  * (trips against calendars after step 3, against routes after step 7;
+  * routes against agencies after step 7; the stops self-FK twice after
+  * steps 4 and 5, as `withCascade` applies it). A step reads its inputs in
+  * the state the earlier steps left them: step 4's stop_times are those
+  * of the trips kept by steps 1-3, steps 6 and 7 see the routes before
+  * the routes' own cascade. The edges from trips to shapes are never
+  * applied, since shapes never shrink.
+  *
+  * Only the key frames are checkpointed; stop_times is scanned once for
+  * the step-1 counts and once for the step-4 used stops. */
 case object RemoveUnusedEntities extends Task {
+  import FeedDataset.keepReferencing
+
   override def name = "RemoveUnusedEntities"
   def execute(feed: FeedDataset, rt: TaskRuntime): FeedDataset = {
-    var f = feed
+    val stopTimes = feed("stop_times")
 
     // 1. trips with 0 or 1 stop_time (remove_unused_entities.py:38-42)
-    val multi = f("stop_times").groupBy("trip_id").count().filter(col("count") >= 2)
+    val multi = stopTimes.groupBy("trip_id").count().filter(col("count") >= 2)
       .select("trip_id")
-    f = f.withCascade("trips", f("trips").join(multi, Seq("trip_id"), "left_semi"))
-      .materialized("trips")
+    val trips1 = feed("trips").select("trip_id", "calendar_id", "route_id")
+      .join(multi, Seq("trip_id"), "left_semi")
+      .localCheckpoint(true)
 
     // 2. calendars without trips (:45-49)
-    f = f.withCascade("calendars",
-      f("calendars").join(f("trips").select("calendar_id"), Seq("calendar_id"), "left_semi"))
-      .materialized("calendars", "trips")
+    val calendars2 = feed("calendars")
+      .join(trips1.select("calendar_id"), Seq("calendar_id"), "left_semi")
 
-    // 3. calendars without active dates (:52-70) — expansion kernel
-    val withDates = CalendarOps.activeDates(f("calendars"), f("calendar_exceptions"))
+    // 3. calendars without active dates (:52-70) — expansion kernel; a
+    // calendar's dates depend only on its own exceptions, so the
+    // exceptions of calendars dropped by step 2 need no filtering
+    val withDates = CalendarOps.activeDates(calendars2, feed("calendar_exceptions"))
       .select("calendar_id").distinct()
-    f = f.withCascade("calendars",
-      f("calendars").join(withDates, Seq("calendar_id"), "left_semi"))
-      .materialized("calendars", "trips")
+    val calendars = calendars2.join(withDates, Seq("calendar_id"), "left_semi")
+      .select("calendar_id")
+      .localCheckpoint(true)
+    val trips3 = keepReferencing(trips1, Seq("calendar_id"), calendars)
 
-    // 4. stops (location_type 0) without stop_times (:73-77)
-    val usedStops = f("stop_times").select("stop_id")
-    f = f.withCascade("stops",
-      f("stops").filter(col("location_type") =!= 0)
-        .unionByName(f("stops").filter(col("location_type") === 0)
-          .join(usedStops, Seq("stop_id"), "left_semi")))
-      .materialized("stops")
+    // 4. stops (location_type 0) without stop_times (:73-77), counting
+    // the stop_times of the trips kept so far
+    val lt = col("location_type")
+    val usedStops = keepReferencing(stopTimes.select("trip_id", "stop_id"), Seq("trip_id"),
+      trips3.select("trip_id")).select("stop_id")
+    val stops0 = feed("stops").select("stop_id", "location_type", "parent_station")
+    val stops4 = dropOrphanedPlaces(
+      stops0.filter(lt =!= 0)
+        .unionByName(stops0.filter(lt === 0).join(usedStops, Seq("stop_id"), "left_semi"))
+        .localCheckpoint(true))
 
     // 5. stations (location_type 1) without child stops (:80-85)
-    val parentsInUse = f("stops").filter(col("location_type") === 0)
+    val parentsInUse = stops4.filter(lt === 0)
       .select(col("parent_station").as("stop_id")).filter(col("stop_id").isNotNull)
-    f = f.withCascade("stops",
-      f("stops").filter(col("location_type") =!= 1)
-        .unionByName(f("stops").filter(col("location_type") === 1)
-          .join(parentsInUse, Seq("stop_id"), "left_semi")))
-      .materialized("stops")
+    val stops = dropOrphanedPlaces(
+      stops4.filter(lt =!= 1)
+        .unionByName(stops4.filter(lt === 1).join(parentsInUse, Seq("stop_id"), "left_semi")))
+      .select("stop_id")
+      .localCheckpoint(true)
 
     // 6. routes without trips (:88-92)
-    f = f.withCascade("routes",
-      f("routes").join(f("trips").select("route_id"), Seq("route_id"), "left_semi"))
-      .materialized("routes", "trips")
+    val routes6 = feed("routes").select("route_id", "agency_id")
+      .join(trips3.select("route_id"), Seq("route_id"), "left_semi")
 
-    // 7. agencies without routes (:95-99)
-    f = f.withCascade("agencies",
-      f("agencies").join(f("routes").select("agency_id"), Seq("agency_id"), "left_semi"))
+    // 7. agencies without routes (:95-99), then the routes' cascade
+    val agencies = feed("agencies").select("agency_id")
+      .join(routes6.select("agency_id"), Seq("agency_id"), "left_semi")
+      .localCheckpoint(true)
+    val routes = keepReferencing(routes6, Seq("agency_id"), agencies)
+      .select("route_id")
+      .localCheckpoint(true)
+    val trips = keepReferencing(trips3, Seq("route_id"), routes)
+      .select("trip_id")
+      .localCheckpoint(true)
 
-    f
+    feed.withShrunk(Map(
+      "trips" -> trips, "calendars" -> calendars, "stops" -> stops,
+      "routes" -> routes, "agencies" -> agencies))
+  }
+
+  /** The stops self-FK cascade as `withCascade` applies it, twice:
+    * places whose parent station is gone, then their children. */
+  private def dropOrphanedPlaces(stops: DataFrame): DataFrame = {
+    def once(s: DataFrame) = keepReferencing(s, Seq("parent_station"), s.select("stop_id"))
+    once(once(stops))
   }
 }
 

@@ -75,7 +75,7 @@ final case class SaveGtfs(
       // BEST_SPEED: the zip is a freshly-regenerated interchange file,
       // not an archive — measured 3-4x less serial deflate time for
       // ~25 % larger output, and the deflate is the one phase that
-      // cannot be distributed (ProfileSink, round 5)
+      // cannot be distributed (sink profile, round 5)
       val zip = new ZipOutputStream(
         new BufferedOutputStream(new FileOutputStream(target.toFile)))
       zip.setLevel(java.util.zip.Deflater.BEST_SPEED)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,14 +68,12 @@ object AnnIndex {
     * anchor for [[codesSchema]] and the empty-probe fallback, costing
     * one page instead of the recursive full-file enumeration a
     * `spark.read.parquet(codes)` would pay. */
-  private def firstCellDir(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: String): Option[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(base)
+  private def firstCellDir(fs: FileSystem, base: String): Option[Path] = {
+    val p = new Path(base)
     if (!fs.exists(p)) None
     else {
       val it = fs.listStatusIterator(p)
-      var found: Option[org.apache.hadoop.fs.Path] = None
+      var found: Option[Path] = None
       while (found.isEmpty && it.hasNext) {
         val st = it.next()
         if (st.isDirectory && st.getPath.getName.startsWith("cell="))
@@ -92,8 +91,7 @@ object AnnIndex {
   private def codesSchema(
       spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
     val base = s"$dir/codes"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Maintenance.fsOf(spark)
     firstCellDir(fs, base) match {
       case Some(d) =>
         spark.read.option("basePath", base).parquet(d.toString).schema
@@ -124,10 +122,9 @@ object AnnIndex {
     val distinctCells = cells.distinct
     if (distinctCells.size.toLong * 8 >= nCells.toLong)
       return spark.read.parquet(base)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Maintenance.fsOf(spark)
     val dirs = distinctCells
-      .map(c => new org.apache.hadoop.fs.Path(s"$base/cell=$c"))
+      .map(c => new Path(s"$base/cell=$c"))
       .filter(fs.exists)
       .map(_.toString)
     if (dirs.nonEmpty)
@@ -165,35 +162,26 @@ object AnnIndex {
 
   private val GenTables = Seq("codes", "ivf_centroids", "pq_codebooks")
 
-  private def stampGen(
-      fs: org.apache.hadoop.fs.FileSystem, base: String,
-      tables: Seq[String] = GenTables): String = {
+  private def stampGen(fs: FileSystem, base: String): Unit = {
     val gen = java.util.UUID.randomUUID().toString
-    tables.foreach { t =>
-      fs.create(new org.apache.hadoop.fs.Path(s"$base/$t/$GenPrefix$gen"),
-        true).close()
-    }
-    gen
+    GenTables.foreach(t => fs.create(new Path(s"$base/$t/$GenPrefix$gen"), true).close())
   }
 
-  private def genOf(
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
+  private def genOf(fs: FileSystem, tableDir: String): Option[String] = {
+    val p = new Path(tableDir)
     if (!fs.exists(p)) None
     else fs.listStatus(p).iterator.map(_.getPath.getName)
       .find(_.startsWith(GenPrefix)).map(_.stripPrefix(GenPrefix))
   }
 
-  private def requireOneGeneration(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
+  private def requireOneGeneration(fs: FileSystem, dir: String): Unit = {
     // only tables that EXIST participate: inside a swap window one dir
     // is legitimately absent for two renames (append's refusal must
     // stay the lock's, per its scaladoc), and a crashed single-table
     // swap leaves a `_precompact` aside that the maintenance ops
     // refuse on — this gate is for the BETWEEN-swaps crash, which
     // leaves all three tables present but generation-mixed
-    val existing = GenTables.filter(t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$t")))
+    val existing = GenTables.filter(t => fs.exists(new Path(s"$dir/$t")))
     val gens = existing.map(t => t -> genOf(fs, s"$dir/$t"))
     val defined = gens.collect { case (t, Some(g)) => t -> g }
     require(defined.isEmpty ||
@@ -207,7 +195,44 @@ object AnnIndex {
         "the source of truth.")
   }
 
-  /** Train both quantizers on the corpus, encode every row, persist.
+  private def train(
+      df: DataFrame, embCol: String, idCol: String,
+      nCells: Int, m: Int, k: Int, dim: Int, iters: Int)
+      : (Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) =
+    (Similarity.trainCodebook(df, embCol, idCol, nCells, dim, iters, exactMean = true),
+      Similarity.trainPqCodebooks(df, embCol, idCol, m, k, dim, iters))
+
+  private def writeModels(
+      spark: SparkSession, base: String,
+      centroids: Seq[(Long, Seq[Double])],
+      codebooks: Seq[Seq[(Long, Seq[Double])]]): Unit = {
+    import spark.implicits._
+    centroids.toDF("cid", "cv")
+      .write.mode("overwrite").parquet(s"$base/ivf_centroids")
+    codebooks.zipWithIndex
+      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
+      .toDF("mi", "cid", "cv")
+      .write.mode("overwrite").parquet(s"$base/pq_codebooks")
+  }
+
+  /** The one table-set write: build, append, rebuild and the shadow's
+    * sidecar and delta all land encoded code rows through it, one
+    * writer wave per cell (no tiny files). A full write also lands the
+    * models and stamps one fresh generation across the three tables; an
+    * append adds codes under the frozen models the table already
+    * carries. */
+  private def writeState(
+      codes: DataFrame, centroids: Seq[(Long, Seq[Double])],
+      codebooks: Seq[Seq[(Long, Seq[Double])]], base: String,
+      mode: String): Unit = {
+    val full = mode == "overwrite"
+    if (full) writeModels(codes.sparkSession, base, centroids, codebooks)
+    codes.repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(s"$base/codes")
+    if (full) stampGen(Maintenance.fsOf(codes.sparkSession), base)
+  }
+
+  /** Train both quantizers on the corpus, then [[buildWith]] them.
     * One pass for IVF assignment + PQ codes (both are narrow
     * literal-codebook maps); the code table shuffles once on `cell`
     * for the partitioned write (that shuffle IS the index build).
@@ -220,23 +245,8 @@ object AnnIndex {
       df: DataFrame, embCol: String, idCol: String, dir: String,
       nCells: Int, m: Int, k: Int, dim: Int, iters: Int = 3,
       attrCols: Seq[String] = Nil): Handle = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centroids = Similarity.trainCodebook(
-      df, embCol, idCol, nCells, dim, iters, exactMean = true)
-    val codebooks = Similarity.trainPqCodebooks(df, embCol, idCol, m, k, dim, iters)
-    centroids.toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$dir/ivf_centroids")
-    codebooks.zipWithIndex
-      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
-      .toDF("mi", "cid", "cv")
-      .write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-    encodeRows(df, embCol, idCol, centroids, codebooks, attrCols)
-      .repartition(col("cell")) // one writer wave per cell, no tiny files
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    stampGen(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), dir)
-    Handle(dir, centroids, codebooks)
+    val (centroids, codebooks) = train(df, embCol, idCol, nCells, m, k, dim, iters)
+    buildWith(df, embCol, idCol, dir, centroids, codebooks, attrCols)
   }
 
   /** Persist a NEW index from a slice encoded under GIVEN quantizers
@@ -255,19 +265,8 @@ object AnnIndex {
       attrCols: Seq[String] = Nil): Handle = {
     require(centroids.nonEmpty && codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "buildWith needs trained models (non-empty centroids and codebooks)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    centroids.toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$dir/ivf_centroids")
-    codebooks.zipWithIndex
-      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
-      .toDF("mi", "cid", "cv")
-      .write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-    encodeRows(df, embCol, idCol, centroids, codebooks, attrCols)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    stampGen(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), dir)
+    writeState(encodeRows(df, embCol, idCol, centroids, codebooks, attrCols),
+      centroids, codebooks, dir, "overwrite")
     Handle(dir, centroids, codebooks)
   }
 
@@ -286,7 +285,7 @@ object AnnIndex {
   def merge(
       spark: SparkSession, shardDirs: Seq[String], outDir: String): Handle = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+    val fs = FileSystem.get(conf)
     Maintenance.requireMergeable(fs, shardDirs, outDir, "vectors")
     val hs = shardDirs.map(load(spark, _))
     val h0 = hs.head
@@ -307,17 +306,10 @@ object AnnIndex {
       .filterNot(f => f == "cell" || f.startsWith("code_")).head
     Maintenance.requireDisjointShardIds(spark, shardDirs, "codes", annId,
       "id sets must be disjoint")
-    import spark.implicits._
-    h0.centroids.toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$outDir/ivf_centroids")
-    h0.codebooks.zipWithIndex
-      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
-      .toDF("mi", "cid", "cv")
-      .write.mode("overwrite").parquet(s"$outDir/pq_codebooks")
+    writeModels(spark, outDir, h0.centroids, h0.codebooks)
     shardDirs.zipWithIndex.foreach { case (d, i) =>
       Maintenance.copyDataFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$d/codes"),
-        new org.apache.hadoop.fs.Path(s"$outDir/codes"), s"s$i", conf)
+        new Path(s"$d/codes"), new Path(s"$outDir/codes"), s"s$i", conf)
     }
     // fresh generation for the merged index (copyDataFiles never
     // carries a shard's marker — it skips bookkeeping files)
@@ -336,14 +328,12 @@ object AnnIndex {
     * for the union under these models (OpsSpec asserts row-level
     * equality with the in-memory encoding of the union) — retrain
     * deliberately when distribution drift warrants it, the
-    * [[Similarity]] training ops are one call away. */
+    * [[Similarity]] training ops are one call away. Runs under an
+    * append marker (see [[Maintenance]]). */
   def append(
-      handle: Handle, df: DataFrame, embCol: String, idCol: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    // marker/lock handshake with a concurrent compact — see Maintenance
+      handle: Handle, df: DataFrame, embCol: String, idCol: String): Unit =
     Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
+        Maintenance.fsOf(df.sparkSession), new Path(handle.dir)) {
       // the slice must carry whatever attribute columns the table was
       // built with — a parquet append with a narrower schema would
       // silently NULL the attrs on the new rows and a filtered probe
@@ -354,14 +344,9 @@ object AnnIndex {
       val attrs = attrColsOf(df.sparkSession, handle.dir, idCol)
       val encoded = encodeRows(
         df, embCol, idCol, handle.centroids, handle.codebooks, attrs)
-      // a tombstoned id must not be re-added before compact — the
-      // shared live-gated guard (see Tombstones)
       Tombstones.refuseReAdd(df.sparkSession, handle.dir, idCol, encoded)
-      encoded
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"${handle.dir}/codes")
+      writeState(encoded, handle.centroids, handle.codebooks, handle.dir, "append")
     }
-  }
 
   /** Tombstone-delete vectors from the index — the
     * right-to-be-forgotten path for the vector side ([[Bm25Index
@@ -369,162 +354,81 @@ object AnnIndex {
     * rewrite the cell-partitioned code table (that is [[compact]]'s
     * job). `ids` is a DataFrame holding `idCol` (deletion lists are
     * corpus-scaled). Ids land in a small `tombstones/` side table;
-    * [[query]] and [[queryBatch]] anti-join it (skipped entirely
-    * while the handle records none), so a deleted vector can never
-    * occupy a result slot. The quantizers are untouched — cell
-    * shapes reflect the corpus they were trained on until a
+    * [[query]] and [[queryBatch]] anti-join it, so a deleted vector
+    * can never occupy a result slot. The quantizers are untouched —
+    * cell shapes reflect the corpus they were trained on until a
     * [[rebuild]], which also clears the tombstones (its `corpus`
     * argument is the post-delete source of truth). Idempotent
-    * against replays: already-tombstoned ids are skipped, ids the
-    * code table never held are tombstoned anyway (the code table is
-    * derived state — a concurrent ingest may land the row later, and
-    * the tombstone must already cover it... which [[append]]'s
-    * re-add refusal makes loud instead of silent). Returns a handle
-    * that probes the post-delete state. */
+    * against replays ([[Tombstones.record]]); ids the code table
+    * never held are tombstoned anyway (the code table is derived
+    * state — a concurrent ingest may land the row later, and the
+    * tombstone must already cover it... which [[append]]'s re-add
+    * refusal makes loud instead of silent). Returns a handle that
+    * probes the post-delete state. */
   def delete(handle: Handle, ids: DataFrame, idCol: String): Handle = {
     val spark = ids.sparkSession
     require(ids.columns.contains(idCol),
       s"delete: the ids frame must carry '$idCol', " +
         s"has ${ids.columns.mkString(", ")}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
-      val idOnly = ids.select(col(idCol)).na.drop().distinct()
-      val fresh = Tombstones.liveOnly(spark, handle.dir, idCol, idOnly)
-        .localCheckpoint(true) // one materialization: emptiness + write
-      // an all-replayed (or all-null) request must not create an
-      // empty side table — that would flip every probe's exists()
-      // gate on for nothing until a compact clears it
-      if (fresh.isEmpty) handle.copy(
-        hasTombstones = fs.exists(Tombstones.path(handle.dir)))
-      else {
-        fresh.write.mode("append").parquet(Tombstones.path(handle.dir).toString)
-        handle.copy(hasTombstones = true)
-      }
+    val fs = Maintenance.fsOf(spark)
+    Maintenance.withAppendMarker(fs, new Path(handle.dir)) {
+      Tombstones.record(spark, handle.dir, idCol,
+        ids.select(col(idCol)).na.drop().distinct())(Tombstones.nonEmpty)
+      handle.copy(hasTombstones = fs.exists(Tombstones.path(handle.dir)))
     }
   }
-
-  /** The probe-side tombstone filter ([[Bm25Index.liveOnly]]'s
-    * vector twin): no read and no join node while no tombstones
-    * exist. The gate is a LIVE filesystem check rather than the
-    * handle's snapshot flag — a long-lived query service holds its
-    * handle across deletes, and a stale no-tombstone flag would
-    * silently keep serving deleted vectors (the `hasTombstones`
-    * field stays informational: what load() saw). */
-  private def liveOnly(
-      spark: SparkSession, handle: Handle, idCol: String,
-      rows: DataFrame): DataFrame =
-    Tombstones.liveOnly(spark, handle.dir, idCol, rows)
 
   /** Rewrite the code table compacted — the maintenance pass for the
     * append loop ([[DedupIndex.compact]] is the dedup-side twin):
     * every [[append]] lays a new file wave into each touched cell
     * partition, so a long-running ingest accumulates small files;
-    * this snapshots the table's file list, collapses EXACT duplicate
-    * rows across the snapshot (a replayed append re-encodes
-    * identically under the frozen models — any survivor is THE row),
-    * and rewrites one wave per cell through a temp directory + the
-    * checked rename-aside swap of [[Maintenance.swapCompacted]]:
-    * every rename's result is verified before anything is deleted, a
-    * leftover `codes_precompact` from a prior crash aborts the pass
-    * untouched, and files appended after the snapshot (a concurrent
-    * [[graft.streaming.AnnIngest]] micro-batch) are folded back in —
-    * see the [[Maintenance]] doc for the exact crash / concurrency
-    * contract. For a clean append history the answers are untouched;
-    * after a REPLAYED append, compaction also restores single-copy
-    * top-k (a duplicated row would otherwise occupy two result
-    * slots). */
+    * this collapses EXACT duplicate rows of the snapshot (a replayed
+    * append re-encodes identically under the frozen models — any
+    * survivor is THE row), purges tombstoned ids and rewrites one wave
+    * per cell, carrying the `_model_gen` marker forward (the models do
+    * not change). Lock, snapshot, swap, late-append fold-in (a
+    * concurrent [[graft.streaming.AnnIngest]] micro-batch) and crash
+    * posture are [[Maintenance]]'s compact protocol. For a clean
+    * append history the answers are untouched; after a REPLAYED
+    * append, compaction also restores single-copy top-k (a duplicated
+    * row would otherwise occupy two result slots). */
   def compact(handle: Handle, waitForAppendsMs: Long = 60000L): Unit = {
     val spark = SparkSession.active
-    val dir = handle.dir
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try compactLocked(spark, handle, fs)
-    finally Maintenance.releaseCompactLock(fs, root)
+    val fs = Maintenance.fsOf(spark)
+    Maintenance.withCompactLock(fs, new Path(handle.dir), waitForAppendsMs)(
+      compactLocked(spark, handle, fs))
   }
 
   private[ops] def compactLocked(
-      spark: SparkSession, handle: Handle,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val dir = handle.dir
-    val live = new org.apache.hadoop.fs.Path(s"$dir/codes")
-    // refuse crashed state BEFORE the expensive rewrite (swapCompacted
-    // re-checks right before the swap)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_precompact")),
-      s"$dir/codes_precompact already exists — a prior compact crashed " +
-        "mid-swap; recover it manually before compacting again")
-    val snapshot = Maintenance.dataFiles(fs, live)
-    require(snapshot.nonEmpty, s"$live holds no data files — nothing to compact")
-    // the physical purge for delete(): tombstoned rows drop from the
-    // compacted codes, then the tombstones clear (the lock excludes
-    // concurrent delete()s; crash after the swap leaves stale
-    // tombstones anti-joining already-purged ids — harmless, cleared
-    // by the next compact). The id column name comes from the code
-    // table itself: every column that is not `cell` or a `code_*` is
-    // the id.
-    val tombs = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val hadTombs = fs.exists(tombs)
-    val purge: DataFrame => DataFrame =
-      if (hadTombs) {
-        val ts = spark.read.parquet(tombs.toString)
-        val idCol = ts.schema.fieldNames.head
-        df => df.join(ts, Seq(idCol), "left_anti")
-      } else identity
-    purge(spark.read.option("basePath", s"$dir/codes")
-        .parquet(snapshot.map(rel => s"$dir/codes/$rel"): _*))
-      .distinct()
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/compact_tmp/codes")
-    // compaction never changes the MODELS — the rewritten codes carry
-    // the live table's generation marker forward
-    genOf(fs, s"$dir/codes").foreach { g =>
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"$dir/compact_tmp/codes/$GenPrefix$g"), true).close()
+      spark: SparkSession, handle: Handle, fs: FileSystem): Unit =
+    Maintenance.compactTables(spark, fs, handle.dir, Seq("codes")) { (_, rows, out) =>
+      rows.distinct().repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(out)
+      genOf(fs, s"${handle.dir}/codes").foreach { g =>
+        fs.create(new Path(s"$out/$GenPrefix$g"), true).close()
+      }
     }
-    Maintenance.swapCompacted(fs, live,
-      new org.apache.hadoop.fs.Path(s"$dir/compact_tmp/codes"), snapshot.toSet)
-    fs.delete(tombs, true)
-    // tombstoned rows are physically gone AND their tombstones cleared:
-    // a shadow rebuild whose sidecar predates this purge must not swap
-    // in (it would resurrect them) — see Maintenance.requireNoPurgeSince
-    if (hadTombs)
-      Maintenance.bumpPurgeEpoch(fs, new org.apache.hadoop.fs.Path(dir))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/compact_tmp"), true)
-  }
 
   /** Retrain-and-migrate — the operator form of the drift→retrain
     * contract ([[Similarity.embeddingDrift]] is the measurement that
     * triggers it): retrain BOTH quantizers on the CURRENT corpus,
     * re-encode every row under the new models, and swap all three
-    * tables (codes, ivf_centroids, pq_codebooks) into place under the
-    * same `_compact.lock` / `_appending.*` handshake as [[compact]].
-    * The end state is bit-identical to what [[build]] would write for
-    * `corpus` at these parameters — a frozen-model [[append]] history
-    * whose recall decayed is replaced wholesale by the canonical
-    * state (the q153 oracle replays exactly that equivalence).
+    * tables (codes, ivf_centroids, pq_codebooks) into place. The end
+    * state is bit-identical to what [[build]] would write for `corpus`
+    * at these parameters — a frozen-model [[append]] history whose
+    * recall decayed is replaced wholesale by the canonical state (the
+    * q153 oracle replays exactly that equivalence).
     *
     * `corpus` must be the full current corpus including every row
     * ever [[append]]ed — the code table is derived state, never the
     * source of truth for raw vectors (PQ codes cannot be decoded back
     * losslessly). The lock is held for the WHOLE retrain+encode+swap
-    * span, so an ingest append during a rebuild refuses loudly
-    * instead of landing rows encoded under models about to be thrown
-    * away (and the post-snapshot fold-in set of each swap is empty by
-    * construction — folding an old-model append into a new-model
-    * table would corrupt it). Rebuild is the expensive, occasional
-    * move; [[compact]] stays the cheap frequent one.
-    *
-    * Crash posture: a crash before the first swap leaves the live
-    * tables untouched (plus an inert `rebuild_tmp` and the lock — the
-    * next rebuild clears the tmp; the lock is removed by hand, the
-    * [[Maintenance]] rule). A crash INSIDE the three-table swap span
-    * leaves a `<table>_precompact` aside dir, which blocks every
-    * maintenance op until recovered by hand — the aside copies are
-    * the old state, `rebuild_tmp` holds whatever was not yet swapped.
+    * span ([[Maintenance]]'s rebuild protocol), so an ingest append
+    * during a rebuild refuses loudly instead of landing rows encoded
+    * under models about to be thrown away. Rebuild is the expensive,
+    * occasional move; [[compact]] stays the cheap frequent one. The
+    * three tmp tables share one fresh `_model_gen`, so a crash between
+    * the swaps leaves a mixed-generation dir that [[load]] refuses.
     * `beforeSwap` is a test seam invoked between the first table's
     * two renames; production callers leave the default no-op. */
   def rebuild(
@@ -533,121 +437,37 @@ object AnnIndex {
       waitForAppendsMs: Long = 60000L,
       beforeSwap: () => Unit = () => ()): Handle = {
     val spark = corpus.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try rebuildLocked(corpus, embCol, idCol, dir, nCells, m, k, dim,
-      iters, fs, beforeSwap)
-    finally Maintenance.releaseCompactLock(fs, root)
-  }
-
-  private def rebuildLocked(
-      corpus: DataFrame, embCol: String, idCol: String, dir: String,
-      nCells: Int, m: Int, k: Int, dim: Int, iters: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
-      beforeSwap: () => Unit): Handle = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val tables = Seq("codes", "ivf_centroids", "pq_codebooks")
-    tables.foreach { t => // refuse crashed state BEFORE the expensive retrain
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-        s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-          "crashed mid-swap; recover it manually before rebuilding")
+    Maintenance.rebuildSwap(Maintenance.fsOf(spark), dir, GenTables,
+        waitForAppendsMs, beforeSwap) { tmp =>
+      // the rebuilt table keeps the live table's attribute columns —
+      // `corpus` is the post-delete source of truth and must carry them
+      val attrs = attrColsOf(spark, dir, idCol)
+      val (centroids, codebooks) =
+        train(corpus, embCol, idCol, nCells, m, k, dim, iters)
+      writeState(encodeRows(corpus, embCol, idCol, centroids, codebooks, attrs),
+        centroids, codebooks, tmp, "overwrite")
+      Handle(dir, centroids, codebooks)
     }
-    // a leftover rebuild_tmp from a pre-swap crash is inert (the live
-    // tables were never touched) — clear it and start over
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/rebuild_tmp"), true)
-    // the rebuilt table keeps the live table's attribute columns —
-    // `corpus` is the post-delete source of truth and must carry them
-    val attrs = attrColsOf(spark, dir, idCol)
-    val centroids = Similarity.trainCodebook(
-      corpus, embCol, idCol, nCells, dim, iters, exactMean = true)
-    val codebooks =
-      Similarity.trainPqCodebooks(corpus, embCol, idCol, m, k, dim, iters)
-    val tmp = s"$dir/rebuild_tmp"
-    centroids.toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$tmp/ivf_centroids")
-    codebooks.zipWithIndex
-      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
-      .toDF("mi", "cid", "cv")
-      .write.mode("overwrite").parquet(s"$tmp/pq_codebooks")
-    encodeRows(corpus, embCol, idCol, centroids, codebooks, attrs)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/codes")
-    // one fresh generation across all three tmp tables: a crash
-    // between the swaps below leaves a mixed-generation dir that
-    // load() refuses instead of decoding under the wrong models
-    stampGen(fs, tmp)
-    tables.zipWithIndex.foreach { case (t, i) =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      // snapshot under the held lock: appends are excluded for the
-      // whole span, so nothing can appear after this listing — the
-      // swap's fold-in set is provably empty
-      val snapshot = Maintenance.dataFiles(fs, live).toSet
-      Maintenance.swapCompacted(fs, live,
-        new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshot,
-        if (i == 0) beforeSwap else () => ())
-    }
-    // the rebuilt state IS canonical for `corpus` (the caller's
-    // post-delete source of truth) — tombstones are obsolete
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    // wholesale replace: any concurrently-retraining shadow sidecar is
-    // now stale in every way — invalidate it at its lock-time check
-    Maintenance.bumpPurgeEpoch(fs, new org.apache.hadoop.fs.Path(dir))
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    Handle(dir, centroids, codebooks)
   }
 
   /** NON-BLOCKING retrain-and-migrate — the 100 TB form of
     * [[rebuild]]: rebuild holds the lock for its WHOLE
     * retrain+encode span, so at scale ingest refuses for hours;
-    * shadow rebuild trains and encodes into a SIDECAR directory
-    * while the live index keeps serving AND accepting appends, then
-    * takes the lock only for a bounded catch-up window — ids that
-    * landed in the live code table after the sidecar encode (the
-    * append delta) are re-encoded from `source` under the NEW models
-    * and appended to the sidecar, and the three tables swap. The
-    * ingest-refusal window is the delta encode + three renames, not
-    * the retrain.
-    *
-    * `source` is a THUNK producing the corpus source of truth,
-    * invoked once for training + the sidecar encode and ONCE MORE
-    * under the lock for the delta fetch — a thunk, not a DataFrame,
-    * because a parquet read lists its files at DataFrame creation
-    * (an `InMemoryFileIndex` snapshot), so a plan built before the
-    * retrain would never see rows appended during it; re-invoking
-    * re-lists. A row appended to the index during the retrain must
-    * be present in the re-read source (the ingest contract: the code
-    * table is derived state; a row reaches the source table before
-    * or with its index append). A delta id the source cannot resolve
-    * fails loudly rather than silently dropping the row from the new
-    * index.
-    *
-    * Tombstones are NOT cleared (unlike [[rebuild]], whose corpus
-    * argument is post-delete by contract): a delete that raced the
-    * retrain keeps its tombstone, the probe-side anti-join keeps
-    * hiding the row even if the sidecar encode saw it, and the next
-    * [[compact]] purges physically. Tombstoned ids are excluded from
-    * the delta, so deleting a row mid-retrain never trips the
-    * missing-from-source guard. A delete+COMPACT racing the retrain
-    * (or a standing tombstone plus a routine compact inside the
-    * hours-long window) is refused at the lock: the compact purged the
-    * rows AND removed the tombstones that hid them, while the sidecar
-    * — encoded from snapshot0 — may still carry them; the purge-epoch
-    * check ([[Maintenance.requireNoPurgeSince]]) discards the sidecar
-    * loudly instead of resurrecting deleted data (re-run the shadow
-    * rebuild — its next snapshot is post-purge). A pure small-file
-    * compact with no tombstones to purge does not bump the epoch and
-    * never invalidates a shadow.
+    * shadow rebuild trains and encodes into a sidecar while the live
+    * index keeps serving AND accepting appends, then takes the lock
+    * only for the bounded catch-up — ids that landed in the live code
+    * table after the sidecar encode are re-encoded from `source` under
+    * the NEW models — and the three renames ([[Maintenance]]'s shadow
+    * protocol: `source` is a thunk re-invoked under the lock, a delta
+    * id it cannot resolve refuses, tombstones stay, and a purge during
+    * the retrain discards the sidecar). A row appended to the index
+    * during the retrain must be present in the re-read source (the
+    * ingest contract: the code table is derived state).
     *
     * End state: code rows bit-identical to [[buildWith]] over
     * source-at-swap-time under the new models — the q153 canonical
     * equality, extended to mid-rebuild appends (OpsSpec interleaves
-    * one through `beforeLock`). Crash posture: before the lock —
-    * live tables untouched, inert `shadow_tmp` (cleared on the next
-    * attempt); inside the swap — a `<table>_precompact` aside, the
-    * [[rebuild]] recovery. `beforeLock` is a test seam invoked
+    * one through `beforeLock`). `beforeLock` is a test seam invoked
     * between the sidecar encode and the lock acquisition (where a
     * concurrent append would land); `beforeSwap` between the first
     * table's two renames; production leaves both default. */
@@ -656,104 +476,27 @@ object AnnIndex {
       nCells: Int, m: Int, k: Int, dim: Int, iters: Int = 3,
       waitForAppendsMs: Long = 60000L,
       beforeLock: () => Unit = () => (),
-      beforeSwap: () => Unit = () => ()): Handle = {
-    // the delete+compact race guard: a compact that PURGES tombstoned
-    // rows during the unlocked retrain also deletes the tombstone
-    // table, so the sidecar (encoded from snapshot0, which still holds
-    // those rows) would swap in with nothing left to hide them —
-    // silent resurrection. The epoch is read BEFORE the thunk's file
-    // listing (a purge landing between the listing and the epoch read
-    // would be invisible to the lock-time check, and at 100 TB a
-    // listing takes minutes): the first invocation supplies only the
-    // session, and the retrain re-invokes the thunk so its
-    // InMemoryFileIndex snapshot postdates epoch0.
-    val spark = source().sparkSession
-    import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val epoch0 = Maintenance.purgeEpoch(
-      fs, new org.apache.hadoop.fs.Path(dir))
-    val snapshot0 = source()
-    val tables = Seq("codes", "ivf_centroids", "pq_codebooks")
-    tables.foreach { t => // refuse crashed state BEFORE the expensive retrain
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-        s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-          "crashed mid-swap; recover it manually before rebuilding")
-    }
-    val tmp = s"$dir/shadow_tmp"
-    // a leftover sidecar from a pre-lock crash is inert — start over
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val attrs = attrColsOf(spark, dir, idCol)
-    // ---- phase 1, UNLOCKED: train + encode beside the live index
-    val centroids = Similarity.trainCodebook(
-      snapshot0, embCol, idCol, nCells, dim, iters, exactMean = true)
-    val codebooks =
-      Similarity.trainPqCodebooks(snapshot0, embCol, idCol, m, k, dim, iters)
-    centroids.toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$tmp/ivf_centroids")
-    codebooks.zipWithIndex
-      .flatMap { case (cb, mi) => cb.map { case (cid, v) => (mi, cid, v) } }
-      .toDF("mi", "cid", "cv")
-      .write.mode("overwrite").parquet(s"$tmp/pq_codebooks")
-    encodeRows(snapshot0, embCol, idCol, centroids, codebooks, attrs)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/codes")
-    // one fresh generation across the sidecar tables (the delta append
-    // under the lock keeps the marker) — the rebuildLocked rule
-    stampGen(fs, tmp)
-    beforeLock()
-    // ---- phase 2, LOCKED: bounded catch-up + swap
-    val root = new org.apache.hadoop.fs.Path(dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try {
-      Maintenance.requireNoPurgeSince(fs, root, epoch0, "rebuildShadow")
-      val id = col(idCol)
-      // the append delta: live non-tombstoned ids the sidecar encode
-      // never saw (appends that landed during the retrain)
-      val delta = Tombstones.liveOnly(spark, dir, idCol,
-          spark.read.parquet(s"$dir/codes").select(id).distinct())
-        .join(spark.read.parquet(s"$tmp/codes").select(id).distinct(),
-          Seq(idCol), "left_anti")
-        .localCheckpoint(false) // feeds the count AND the semi-join
-      val nDelta = delta.count()
-      if (nDelta > 0L) {
-        // re-invoke the thunk: the delta rows landed AFTER snapshot0's
-        // file listing, so only a fresh read can resolve them
-        val rows = source().join(delta, Seq(idCol), "left_semi")
-          .localCheckpoint(false) // feeds the resolve check AND the encode
-        val nRows = rows.select(id).distinct().count()
-        require(nRows == nDelta,
-          s"rebuildShadow: ${nDelta - nRows} ids appended to the live " +
-            "index during the retrain are missing from `source` — the " +
-            "code table is derived state and every appended row must " +
-            "reach the source of truth; refusing to swap a table that " +
-            "would silently drop them")
-        encodeRows(rows, embCol, idCol, centroids, codebooks, attrs)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$tmp/codes")
-      }
-      tables.zipWithIndex.foreach { case (t, i) =>
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        // snapshot under the held lock — appends are excluded for the
-        // swap span, so the fold-in set is provably empty
-        val snapshot = Maintenance.dataFiles(fs, live).toSet
-        Maintenance.swapCompacted(fs, live,
-          new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshot,
-          if (i == 0) beforeSwap else () => ())
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      Handle(dir, centroids, codebooks,
-        fs.exists(Tombstones.path(dir)))
-    } finally Maintenance.releaseCompactLock(fs, root)
-  }
+      beforeSwap: () => Unit = () => ()): Handle =
+    Maintenance.shadowRebuild(source, dir, GenTables, idCol, "codes",
+        waitForAppendsMs, beforeLock, beforeSwap) { snap =>
+      (snap.sparkSession, attrColsOf(snap.sparkSession, dir, idCol),
+        train(snap, embCol, idCol, nCells, m, k, dim, iters))
+    }(
+      write = { case ((_, attrs, (centroids, codebooks)), rows, base, mode) =>
+        writeState(encodeRows(rows, embCol, idCol, centroids, codebooks, attrs),
+          centroids, codebooks, base, mode)
+      },
+      finish = { case ((spark, _, (centroids, codebooks)), _) =>
+        Handle(dir, centroids, codebooks,
+          Maintenance.fsOf(spark).exists(Tombstones.path(dir)))
+      })
 
   /** Re-open a persisted index: the models are dimension-table-sized
     * driver reads; the code table stays on disk until a query prunes
     * into it. */
   def load(spark: SparkSession, dir: String): Handle = {
     // torn-rebuild gate: codes must decode under THESE models
-    requireOneGeneration(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), dir)
+    requireOneGeneration(Maintenance.fsOf(spark), dir)
     val centroids = spark.read.parquet(s"$dir/ivf_centroids")
       .select(col("cid").cast("long"), col("cv"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq)
@@ -765,10 +508,8 @@ object AnnIndex {
     require(cbRows.nonEmpty, s"$dir/pq_codebooks is empty")
     val codebooks = cbRows.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(r => r._2 -> r._3).toSeq }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     Handle(dir, centroids, codebooks,
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
+      Maintenance.fsOf(spark).exists(Tombstones.path(dir)))
   }
 
 
@@ -899,7 +640,7 @@ object AnnIndex {
     // on `cell` and stays correct under the large-probe-set fallback
     val scan = prunedCodes(spark, handle.dir, probed, handle.centroids.size)
       .filter(col("cell").isin(probed: _*))
-    val codes = liveOnly(spark, handle, idCol,
+    val codes = Tombstones.liveOnly(spark, handle.dir, idCol,
       filter.fold(scan)(scan.filter))
     Similarity.pqTopKFromCodes(codes, idCol, handle.codebooks, queryVec, k)
   }
@@ -1075,7 +816,7 @@ object AnnIndex {
     // isin stays in-plan for PartitionFilters and the fallback)
     val scan = prunedCodes(spark, handle.dir, cells, handle.centroids.size)
       .filter(col("cell").isin(cells: _*))
-    val codes = liveOnly(spark, handle, idCol,
+    val codes = Tombstones.liveOnly(spark, handle.dir, idCol,
       filter.fold(scan)(scan.filter))
     // ONE literal codebook DataFrame (mi, cid, cv) — m·k rows — crossed
     // with the query table builds every LUT entry in a single plan

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -277,18 +278,27 @@ object Bm25Index {
     (postings, doclens)
   }
 
-  private def writeMeta(
-      spark: SparkSession, dir: String, idCol: String, numBuckets: Int,
-      nDocs: Long, totalTokens: Long,
-      fields: Seq[String], fieldTokens: Seq[Long],
-      nTombstones: Long = 0L): Unit = {
+  private def writeMeta(spark: SparkSession, base: String, h: Handle): Unit = {
     import spark.implicits._
-    Seq((idCol, fields.head, numBuckets, nDocs, totalTokens,
-        CurrentVersion, fields, fieldTokens, nTombstones))
+    Seq((h.idCol, h.fields.head, h.numBuckets, h.nDocs, h.totalTokens,
+        CurrentVersion, h.fields, h.fieldTokens, h.nTombstones))
       .toDF("idCol", "textCol", "numBuckets", "nDocs", "totalTokens",
         "version", "fields", "fieldTokens", "nTombstones")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/meta")
+      .coalesce(1).write.mode("overwrite").json(s"$base/meta")
   }
+
+  /** A current-version handle carrying `stats` ([[statsOf]]). */
+  private def handleOf(
+      dir: String, idCol: String, fields: Seq[String], numBuckets: Int,
+      stats: (Long, Long, Seq[Long]), nTombstones: Long = 0L): Handle =
+    Handle(dir, idCol, fields.head, numBuckets, stats._1, stats._2,
+      CurrentVersion, fields, stats._3, nTombstones)
+
+  /** `h` with a stats delta ([[statsOf]]) added (`sign` 1) or taken
+    * away (`sign` -1). */
+  private def shifted(h: Handle, d: (Long, Long, Seq[Long]), sign: Long): Handle =
+    h.copy(nDocs = h.nDocs + sign * d._1, totalTokens = h.totalTokens + sign * d._2,
+      fieldTokens = h.fieldTokens.zip(d._3).map { case (a, b) => a + sign * b })
 
   /** Collection statistics from a v2 doclens frame: distinct docs,
     * total tokens, and the per-field token totals (aligned to
@@ -304,6 +314,61 @@ object Bm25Index {
     (r.getLong(0), r.getLong(1), fields.indices.map(i => r.getLong(i + 2)))
   }
 
+  private def requireLayout(fields: Seq[String], numBuckets: Int): Unit = {
+    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
+    require(fields.nonEmpty && fields.distinct.size == fields.size,
+      s"fields must be non-empty and distinct: $fields")
+  }
+
+  /** The tables, in swap order: meta swaps last. */
+  private val Tables = Seq("postings", "doclens", "termvecs", "meta")
+
+  private def writePostings(postings: DataFrame, path: String, mode: String): Unit =
+    postings.repartition(col("term_bucket")).sortWithinPartitions("term")
+      .write.mode(mode).partitionBy("term_bucket").parquet(path)
+
+  /** The one table-set write: build, append, rebuild and the shadow's
+    * sidecar and delta all land [[statFrames]] output through it, plus
+    * the forward index it projects to ([[termvecsOf]]). A full write
+    * projects the WRITTEN postings (one narrow read, no re-tokenize);
+    * an append projects the slice's frame, and only where the index
+    * already carries the forward index — a legacy index stays without
+    * it (a half-covered table would silently under-count feedback
+    * terms) until a rebuild adds it. */
+  private def writeState(
+      postings: DataFrame, doclens: DataFrame, idCol: String, base: String,
+      mode: String): Unit = {
+    val spark = postings.sparkSession
+    writePostings(postings, s"$base/postings", mode)
+    // r17: the r16 "sized write" repartition(idCol) here is REVERTED —
+    // measured, the exchange produced the SAME file count as the plain
+    // write (AQE's parallelism-first coalescing keeps partition count
+    // at core count either way), so it was pure shuffle cost; output
+    // sizing belongs to advisoryPartitionSize tuning on the deploying
+    // cluster, not a blanket exchange
+    doclens.write.mode(mode).parquet(s"$base/doclens")
+    val tv = s"$base/termvecs"
+    if (mode == "overwrite")
+      writeTermvecs(termvecsOf(spark.read.parquet(s"$base/postings"), idCol),
+        idCol, tv, mode)
+    else if (Maintenance.fsOf(spark).exists(new Path(tv)))
+      writeTermvecs(termvecsOf(postings, idCol), idCol, tv, mode)
+  }
+
+  /** One corpus pass into `base`: the tables, then meta from a recount
+    * of the written doclens. Returns the handle for `dir`. */
+  private def writeFull(
+      corpus: DataFrame, idCol: String, dir: String, fields: Seq[String],
+      numBuckets: Int, base: String): Handle = {
+    val spark = corpus.sparkSession
+    val (postings, doclens) = statFrames(corpus, idCol, fields, numBuckets)
+    writeState(postings, doclens, idCol, base, "overwrite")
+    val h = handleOf(dir, idCol, fields, numBuckets,
+      statsOf(spark.read.parquet(s"$base/doclens"), idCol, fields))
+    writeMeta(spark, base, h)
+    h
+  }
+
   /** One corpus pass → persisted postings + collection stats. */
   def build(
       corpus: DataFrame, idCol: String, dir: String,
@@ -317,30 +382,8 @@ object Bm25Index {
   def buildFields(
       corpus: DataFrame, idCol: String, dir: String,
       fields: Seq[String], numBuckets: Int = DefaultNumBuckets): Handle = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    require(fields.nonEmpty && fields.distinct.size == fields.size,
-      s"fields must be non-empty and distinct: $fields")
-    val spark = corpus.sparkSession
-    val (postings, doclens) = statFrames(corpus, idCol, fields, numBuckets)
-    postings.repartition(col("term_bucket")).sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(s"$dir/postings")
-    // r17: the r16 "sized write" repartition(idCol) here is REVERTED —
-    // ProfileSizedWrite measured the exchange producing the SAME file
-    // count as the plain write (AQE's parallelism-first coalescing
-    // keeps partition count at core count either way), so it was pure
-    // shuffle cost; output sizing belongs to advisoryPartitionSize
-    // tuning on the deploying cluster, not a blanket exchange
-    doclens.write.mode("overwrite").parquet(s"$dir/doclens")
-    // the forward index projects the WRITTEN postings (one narrow read,
-    // no re-tokenize) — see [[termvecsOf]]
-    writeTermvecs(
-      termvecsOf(spark.read.parquet(s"$dir/postings"), idCol), idCol,
-      s"$dir/termvecs", "overwrite")
-    val (n, total, perField) =
-      statsOf(spark.read.parquet(s"$dir/doclens"), idCol, fields)
-    writeMeta(spark, dir, idCol, numBuckets, n, total, fields, perField)
-    Handle(dir, idCol, fields.head, numBuckets, n, total,
-      CurrentVersion, fields, perField)
+    requireLayout(fields, numBuckets)
+    writeFull(corpus, idCol, dir, fields, numBuckets, dir)
   }
 
   /** Fold a new slice into the persisted state — parquet appends plus
@@ -350,7 +393,8 @@ object Bm25Index {
     * its first micro-batch, and trusting it would silently rewind N
     * and the token total ([[graft.streaming.Bm25Ingest]] relies on
     * this). Returns the updated handle (a stale handle still probes
-    * correctly — it would just score with yesterday's N/avgdl). */
+    * correctly — it would just score with yesterday's N/avgdl). Runs
+    * under an append marker (see [[Maintenance]]). */
   def append(handle: Handle, slice: DataFrame): Handle = {
     val spark = slice.sparkSession
     // ONE materialization feeds all three outputs (postings write,
@@ -364,11 +408,7 @@ object Bm25Index {
       if (handle.fields.nonEmpty) handle.fields else Seq(handle.textCol)
     val (postings, doclens) =
       statFrames(frozen, handle.idCol, handleFields, handle.numBuckets)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // marker/lock handshake with a concurrent compact — see Maintenance
-    Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
+    Maintenance.withAppendMarker(Maintenance.fsOf(spark), new Path(handle.dir)) {
       val cur = load(spark, handle.dir)
       require(cur.version == CurrentVersion,
         s"append: ${handle.dir} is a v${cur.version} (legacy) index — " +
@@ -390,23 +430,10 @@ object Bm25Index {
       // written its tombstones: trusting nTombstones here would land
       // rows the next compact silently purges)
       Tombstones.refuseReAdd(spark, handle.dir, cur.idCol, frozen)
-      postings.repartition(col("term_bucket")).sortWithinPartitions("term")
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(s"${handle.dir}/postings")
-      doclens.write.mode("append").parquet(s"${handle.dir}/doclens")
-      // indexes built before the forward index existed stay without it
-      // (a half-covered table would silently under-count feedback
-      // terms) — rebuild to gain it
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"${handle.dir}/termvecs")))
-        writeTermvecs(termvecsOf(postings, cur.idCol), cur.idCol,
-          s"${handle.dir}/termvecs", "append")
-      val (dn, dtotal, dPerField) = statsOf(doclens, cur.idCol, cur.fields)
-      val n = cur.nDocs + dn
-      val total = cur.totalTokens + dtotal
-      val perField = cur.fieldTokens.zip(dPerField).map { case (a, b) => a + b }
-      writeMeta(spark, handle.dir, cur.idCol, cur.numBuckets, n, total,
-        cur.fields, perField, cur.nTombstones)
-      cur.copy(nDocs = n, totalTokens = total, fieldTokens = perField)
+      writeState(postings, doclens, cur.idCol, handle.dir, "append")
+      val upd = shifted(cur, statsOf(doclens, cur.idCol, cur.fields), 1L)
+      writeMeta(spark, handle.dir, upd)
+      upd
     }
   }
 
@@ -431,7 +458,7 @@ object Bm25Index {
   def merge(
       spark: SparkSession, shardDirs: Seq[String], outDir: String): Handle = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+    val fs = FileSystem.get(conf)
     Maintenance.requireMergeable(fs, shardDirs, outDir, "docs")
     val hs = shardDirs.map(load(spark, _))
     val h0 = hs.head
@@ -454,7 +481,7 @@ object Bm25Index {
     // but only when EVERY shard carries it; a mixed set would leave a
     // silently half-covered table
     val haveTv = shardDirs.map(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/termvecs")))
+      fs.exists(new Path(s"$d/termvecs")))
     require(haveTv.distinct.size == 1,
       s"merge: shards disagree on the termvecs table (" +
         shardDirs.zip(haveTv).map { case (d, h) => s"$d=$h" }.mkString(", ") +
@@ -463,18 +490,15 @@ object Bm25Index {
     shardDirs.zipWithIndex.foreach { case (d, i) =>
       (Seq("postings", "doclens") ++ tvTables).foreach { t =>
         Maintenance.copyDataFiles(fs,
-          new org.apache.hadoop.fs.Path(s"$d/$t"),
-          new org.apache.hadoop.fs.Path(s"$outDir/$t"), s"s$i", conf)
+          new Path(s"$d/$t"),
+          new Path(s"$outDir/$t"), s"s$i", conf)
       }
     }
-    val n = hs.map(_.nDocs).sum
-    val total = hs.map(_.totalTokens).sum
-    val perField = hs.map(_.fieldTokens)
-      .reduce((a, b) => a.zip(b).map { case (x, y) => x + y })
-    writeMeta(spark, outDir, h0.idCol, h0.numBuckets, n, total,
-      h0.fields, perField)
-    Handle(outDir, h0.idCol, h0.textCol, h0.numBuckets, n, total,
-      CurrentVersion, h0.fields, perField)
+    val h = handleOf(outDir, h0.idCol, h0.fields, h0.numBuckets,
+      (hs.map(_.nDocs).sum, hs.map(_.totalTokens).sum,
+        hs.map(_.fieldTokens).reduce((a, b) => a.zip(b).map { case (x, y) => x + y })))
+    writeMeta(spark, outDir, h)
+    h
   }
 
   /** Re-tokenize-and-swap — the rebuild every positional probe's
@@ -486,7 +510,8 @@ object Bm25Index {
     *
     *  - '''layout upgrade''' — a v1 index (no positions/fields)
     *    becomes a v2 positional one without the caller hand-managing
-    *    a second directory and a cutover;
+    *    a second directory and a cutover; a legacy index without the
+    *    forward index gains it;
     *  - '''disaster recovery''' — derived state suspected corrupt
     *    (fsck findings, torn external writes) is replaced wholesale
     *    from the source of truth.
@@ -495,126 +520,48 @@ object Bm25Index {
     * is bit-identical to what [[buildFields]] writes for it at these
     * parameters — tombstones are obsolete and clear with the swap,
     * meta rewrites from a recount. The lock is held for the whole
-    * pass (appends refuse; at 100 TB prefer scheduling rebuilds in
-    * ingest gaps — the [[AnnIndex.rebuildShadow]] sidecar shape is
-    * about retrain SPANS, which BM25 does not have: its rebuild IS
-    * one corpus write). The new layout REPLACES the old wholesale —
-    * idCol/fields/numBuckets are the caller's; nothing is inherited
-    * from the possibly-corrupt old meta. Crash posture: before the
-    * first swap the live tables are untouched (an inert
-    * `rebuild_tmp` clears on the next attempt); mid-swap leaves a
-    * `<table>_precompact` aside, the [[compact]] recovery. Meta is
-    * written into the tmp dir and swapped as the THIRD table, so a
-    * crash between the swaps can no longer serve new-layout postings
-    * under a fully-committed stale meta; the remaining between-swap
-    * instants are caught by [[load]]'s partitioning cross-check.
-    * `beforeSwap` is a test seam on the first table's swap. */
+    * pass (appends refuse; at 100 TB prefer [[rebuildShadow]] or
+    * scheduling rebuilds in ingest gaps). The new layout REPLACES the
+    * old wholesale — idCol/fields/numBuckets are the caller's; nothing
+    * is inherited from the possibly-corrupt old meta. Lock, swap and
+    * crash posture are [[Maintenance]]'s rebuild protocol; meta swaps
+    * last, and [[load]]'s partitioning cross-check catches a crash
+    * between the swaps. `beforeSwap` is a test seam on the first
+    * table's swap. */
   def rebuild(
       corpus: DataFrame, idCol: String, dir: String,
       fields: Seq[String] = Seq("text"),
       numBuckets: Int = DefaultNumBuckets,
       waitForAppendsMs: Long = 60000L,
       beforeSwap: () => Unit = () => ()): Handle = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    require(fields.nonEmpty && fields.distinct.size == fields.size,
-      s"fields must be non-empty and distinct: $fields")
-    val spark = corpus.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try {
-      // meta swaps as a THIRD table (stats recounted from the tmp
-      // doclens BEFORE any swap): the old shape wrote meta only after
-      // both table swaps, so a crash in between served new-layout
-      // postings (possibly a different numBuckets/fields) under the
-      // stale meta — bucket pruning would silently miss terms. The
-      // residual window is now the instants BETWEEN the three swaps
-      // (renames, no recompute in between); load() cross-checks the
-      // postings partitioning against meta numBuckets as the loud
-      // backstop for a crash landing inside it.
-      val tables = Seq("postings", "doclens", "termvecs", "meta")
-      tables.foreach { t => // refuse crashed state BEFORE the corpus pass
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-          s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-            "crashed mid-swap; recover it manually before rebuilding")
-      }
-      val tmp = s"$dir/rebuild_tmp"
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      val (postings, doclens) = statFrames(corpus, idCol, fields, numBuckets)
-      postings.repartition(col("term_bucket")).sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$tmp/postings")
-      doclens.write.mode("overwrite").parquet(s"$tmp/doclens")
-      writeTermvecs(
-        termvecsOf(spark.read.parquet(s"$tmp/postings"), idCol), idCol,
-        s"$tmp/termvecs", "overwrite")
-      val (n, total, perField) =
-        statsOf(spark.read.parquet(s"$tmp/doclens"), idCol, fields)
-      writeMeta(spark, tmp, idCol, numBuckets, n, total, fields, perField)
-      tables.zipWithIndex.foreach { case (t, i) =>
-        // a LEGACY index has no live termvecs to swap aside — the
-        // rebuilt table simply lands (rebuild IS the upgrade path)
-        swapOrLand(fs, dir, tmp, t,
-          if (i == 0) beforeSwap else () => ())
-      }
-      // the rebuilt state IS canonical for the post-delete corpus
-      fs.delete(Tombstones.path(dir), true)
-      // wholesale replace: invalidate any pre-swap shadow sidecar
-      Maintenance.bumpPurgeEpoch(fs, root)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      Handle(dir, idCol, fields.head, numBuckets, n, total,
-        CurrentVersion, fields, perField)
-    } finally Maintenance.releaseCompactLock(fs, root)
+    requireLayout(fields, numBuckets)
+    Maintenance.rebuildSwap(Maintenance.fsOf(corpus.sparkSession), dir, Tables,
+        waitForAppendsMs, beforeSwap)(
+      writeFull(corpus, idCol, dir, fields, numBuckets, _))
   }
 
   /** NON-BLOCKING re-tokenize-and-migrate — the 100 TB form of
-    * [[rebuild]] ([[AnnIndex.rebuildShadow]] is the vector twin):
-    * rebuild holds the lock for its WHOLE corpus-write span, and a
+    * [[rebuild]] ([[AnnIndex.rebuildShadow]] is the vector twin): a
     * 100 TB postings write IS a span of hours even though BM25 has no
-    * model to retrain; shadow rebuild tokenizes into a SIDECAR
-    * directory while the live index keeps serving AND accepting
-    * appends, then takes the lock only for a bounded catch-up window
-    * — ids that landed in the live doclens after the sidecar pass
-    * (the append delta) are re-tokenized from `source` under the NEW
-    * layout and appended to the sidecar, stats recount from the final
-    * sidecar doclens (tombstoned ids excluded — meta describes the
-    * remainder, the [[delete]] contract), and the three tables
-    * (postings, doclens, meta) swap. The ingest-refusal window is the
-    * delta tokenize + the stats recount + three renames — the recount
-    * scans the sidecar DOCLENS (a narrow (id, field, n_tok_f) table,
-    * docs×fields rows), never the corpus text: at 100 TB that is
-    * minutes of narrow-scan against the hours of tokenize the lock no
-    * longer covers. BM25's catch-up is strictly easier than ANN's:
-    * tokenization is deterministic, so there is no frozen-model
-    * staleness — the delta rows' posting rows are bit-identical to
-    * what a clean build would write.
-    *
-    * `source` is a THUNK producing the corpus source of truth,
-    * invoked once for the sidecar pass and ONCE MORE under the lock
-    * for the delta fetch — a thunk because a parquet read lists its
-    * files at DataFrame creation (an `InMemoryFileIndex` snapshot), so
-    * a plan built before the pass would never see rows appended during
-    * it. A delta id the re-read source cannot resolve fails loudly
-    * rather than silently dropping the row from the new index.
-    *
-    * Tombstones are NOT cleared (unlike [[rebuild]], whose corpus is
-    * post-delete by contract): a delete racing the pass keeps its
-    * tombstone, probes keep hiding the row even if the sidecar saw
-    * it, and the next [[compact]] purges physically. A delete+COMPACT
-    * racing the pass — the purge removes the rows AND the tombstones
-    * that hid them while the sidecar may still carry them — is
-    * refused at the lock by the purge-epoch check
-    * ([[Maintenance.requireNoPurgeSince]]); a pure no-tombstone
-    * compact never invalidates a shadow.
+    * model to retrain, so shadow rebuild tokenizes into a sidecar
+    * while the live index keeps serving AND accepting appends, and
+    * takes the lock only for the catch-up — ids that landed in the
+    * live doclens after the sidecar pass are re-tokenized from
+    * `source` under the NEW layout — the stats recount and the renames
+    * ([[Maintenance]]'s shadow protocol: `source` is a thunk re-invoked
+    * under the lock, a delta id it cannot resolve refuses, tombstones
+    * stay, and a purge during the pass discards the sidecar). The
+    * recount scans the sidecar DOCLENS (a narrow (id, field, n_tok_f)
+    * table), never the corpus text. The delta reads one id column of
+    * the live doclens, so v1 and v2 layouts alike: the shadow IS the
+    * v1→v2 upgrade path with ingest running. Tokenization is
+    * deterministic, so the delta rows are bit-identical to what a
+    * clean build would write.
     *
     * End state: postings/doclens row-identical to [[buildFields]]
     * over source-at-swap-time (the q198 rebuild-equals-build
     * equality, extended to mid-pass appends), meta counting the
-    * non-tombstoned remainder. Crash posture: before the lock — live
-    * tables untouched, inert `shadow_tmp` (cleared on the next
-    * attempt); inside the swap — a `<table>_precompact` aside, the
-    * [[rebuild]] recovery. `beforeLock` is a test seam between the
+    * non-tombstoned remainder. `beforeLock` is a test seam between the
     * sidecar pass and the lock; `beforeSwap` between the first
     * table's two renames; production leaves both default. */
   def rebuildShadow(
@@ -624,99 +571,28 @@ object Bm25Index {
       waitForAppendsMs: Long = 60000L,
       beforeLock: () => Unit = () => (),
       beforeSwap: () => Unit = () => ()): Handle = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    require(fields.nonEmpty && fields.distinct.size == fields.size,
-      s"fields must be non-empty and distinct: $fields")
-    // The purge epoch must be read BEFORE the thunk's file listing: a
-    // compact purge completing between the listing and the epoch read
-    // would be invisible to requireNoPurgeSince, and at 100 TB a parquet
-    // listing takes minutes. The first invocation only supplies the
-    // session (the thunk is re-invoked under the lock anyway, so an
-    // extra pre-pass call is within its contract); the sidecar pass
-    // re-invokes it so its InMemoryFileIndex snapshot postdates epoch0.
-    val spark = source().sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val epoch0 = Maintenance.purgeEpoch(fs, root)
-    val snapshot0 = source()
-    val tables = Seq("postings", "doclens", "termvecs", "meta")
-    tables.foreach { t => // refuse crashed state BEFORE the corpus pass
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-        s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-          "crashed mid-swap; recover it manually before rebuilding")
-    }
-    val tmp = s"$dir/shadow_tmp"
-    // a leftover sidecar from a pre-lock crash is inert — start over
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // ---- phase 1, UNLOCKED: tokenize beside the live index
-    val (postings0, doclens0) = statFrames(snapshot0, idCol, fields, numBuckets)
-    postings0.repartition(col("term_bucket")).sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$tmp/postings")
-    doclens0.write.mode("overwrite").parquet(s"$tmp/doclens")
-    writeTermvecs(
-      termvecsOf(spark.read.parquet(s"$tmp/postings"), idCol), idCol,
-      s"$tmp/termvecs", "overwrite")
-    beforeLock()
-    // ---- phase 2, LOCKED: bounded catch-up + swap
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try {
-      Maintenance.requireNoPurgeSince(fs, root, epoch0, "rebuildShadow")
-      val id = col(idCol)
-      // the append delta: live non-tombstoned ids the sidecar pass
-      // never saw (appends that landed during it). The live doclens
-      // projects to ONE column, so this reads v1 and v2 layouts alike
-      // — the shadow IS the v1→v2 upgrade path with ingest running.
-      val delta = Tombstones.liveOnly(spark, dir, idCol,
-          spark.read.parquet(s"$dir/doclens").select(id).distinct())
-        .join(spark.read.parquet(s"$tmp/doclens").select(id).distinct(),
-          Seq(idCol), "left_anti")
-        .localCheckpoint(false) // feeds the count AND the semi-join
-      val nDelta = delta.count()
-      if (nDelta > 0L) {
-        // re-invoke the thunk: the delta rows landed AFTER snapshot0's
-        // file listing, so only a fresh read can resolve them
-        val rows = source().join(delta, Seq(idCol), "left_semi")
-          .localCheckpoint(false) // feeds the resolve check AND the pass
-        val nRows = rows.select(id).distinct().count()
-        require(nRows == nDelta,
-          s"rebuildShadow: ${nDelta - nRows} ids appended to the live " +
-            "index during the sidecar pass are missing from `source` — " +
-            "the postings are derived state and every appended row must " +
-            "reach the source of truth; refusing to swap a table that " +
-            "would silently drop them")
-        val (dPostings, dDoclens) = statFrames(rows, idCol, fields, numBuckets)
-        dPostings.repartition(col("term_bucket")).sortWithinPartitions("term")
-          .write.mode("append").partitionBy("term_bucket")
-          .parquet(s"$tmp/postings")
-        dDoclens.write.mode("append").parquet(s"$tmp/doclens")
-        writeTermvecs(termvecsOf(dPostings, idCol), idCol,
-          s"$tmp/termvecs", "append")
-      }
-      // meta describes the NON-TOMBSTONED remainder (the delete
-      // contract: N/avgdl/df cover what probes can return) — the
-      // sidecar may carry tombstoned rows (hidden by the anti-join
-      // until the next compact purges them)
-      val tombstones = Tombstones.read(spark, dir)
-      val liveDoclens = tombstones.foldLeft(
-          spark.read.parquet(s"$tmp/doclens")) {
-        (df, ts) => df.join(ts.select(idCol), Seq(idCol), "left_anti")
-      }
-      val (n, total, perField) = statsOf(liveDoclens, idCol, fields)
-      val nTombstones = tombstones.map(_.count()).getOrElse(0L)
-      writeMeta(spark, tmp, idCol, numBuckets, n, total, fields, perField,
-        nTombstones)
-      tables.zipWithIndex.foreach { case (t, i) =>
-        // a LEGACY index has no live termvecs to swap aside — the
-        // rebuilt table simply lands (the shadow IS the live upgrade)
-        swapOrLand(fs, dir, tmp, t,
-          if (i == 0) beforeSwap else () => ())
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      Handle(dir, idCol, fields.head, numBuckets, n, total,
-        CurrentVersion, fields, perField, nTombstones)
-    } finally Maintenance.releaseCompactLock(fs, root)
+    requireLayout(fields, numBuckets)
+    Maintenance.shadowRebuild(source, dir, Tables, idCol, "doclens",
+        waitForAppendsMs, beforeLock, beforeSwap)(_.sparkSession)(
+      write = (_, rows, base, mode) => {
+        val (postings, doclens) = statFrames(rows, idCol, fields, numBuckets)
+        writeState(postings, doclens, idCol, base, mode)
+      },
+      finish = (spark, tmp) => {
+        // meta describes the NON-TOMBSTONED remainder (the delete
+        // contract: N/avgdl/df cover what probes can return) — the
+        // sidecar may carry tombstoned rows (hidden by the anti-join
+        // until the next compact purges them)
+        val tombstones = Tombstones.read(spark, dir)
+        val liveDoclens = tombstones.foldLeft(spark.read.parquet(s"$tmp/doclens")) {
+          (df, ts) => df.join(ts.select(idCol), Seq(idCol), "left_anti")
+        }
+        val h = handleOf(dir, idCol, fields, numBuckets,
+          statsOf(liveDoclens, idCol, fields),
+          tombstones.map(_.count()).getOrElse(0L))
+        writeMeta(spark, tmp, h)
+        h
+      })
   }
 
   /** Tombstone-delete documents from the index — the
@@ -724,15 +600,16 @@ object Bm25Index {
     * the postings table (that is [[compact]]'s job). `ids` is a
     * DataFrame holding the handle's id column (deletion lists are
     * corpus-scaled — never a driver Seq). Ids land in a small
-    * `tombstones/` side table; every probe anti-joins it (skipped
-    * entirely while `nTombstones == 0`) and the collection statistics
-    * in `meta` are decremented here from the doclens rows of the
-    * newly-tombstoned ids, so probe-time N / avgdl / df all describe
-    * the REMAINDER — [[topK]] after a delete is bit-identical to
-    * [[Retrieval.bm25TopK]] over the filtered corpus (OpsSpec asserts
-    * it). Idempotent against replays: ids already tombstoned or
-    * absent from the index contribute nothing. The physical purge —
-    * and re-addability of a deleted id — comes with the next
+    * `tombstones/` side table; every probe anti-joins it, and the
+    * collection statistics in `meta` are decremented from the doclens
+    * rows of the newly-tombstoned ids, so probe-time N / avgdl / df
+    * all describe the REMAINDER — [[topK]] after a delete is
+    * bit-identical to [[Retrieval.bm25TopK]] over the filtered corpus
+    * (OpsSpec asserts it). Idempotent against replays: ids already
+    * tombstoned or absent from the index contribute nothing, and
+    * [[Tombstones.record]] takes the one snapshot of the new ids that
+    * both the stats and the tombstone write read. The physical purge
+    * — and re-addability of a deleted id — comes with the next
     * [[compact]]. Crash between the tombstone write and the meta
     * rewrite leaves stats at their pre-delete values — and a replayed
     * delete is a no-op against the already-written tombstones, so the
@@ -744,160 +621,65 @@ object Bm25Index {
     require(ids.columns.contains(handle.idCol),
       s"delete: the ids frame must carry '${handle.idCol}', " +
         s"has ${ids.columns.mkString(", ")}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
+    Maintenance.withAppendMarker(Maintenance.fsOf(spark), new Path(handle.dir)) {
       val cur = load(spark, handle.dir)
       require(cur.version == CurrentVersion,
         s"delete: ${handle.dir} is a v${cur.version} (legacy) index — " +
           "rebuild the index to upgrade before deleting from it")
-      val idOnly = ids.select(col(cur.idCol)).na.drop().distinct()
-      val inIndex = idOnly.join(
-        spark.read.parquet(s"${handle.dir}/doclens").select(col(cur.idCol)),
-        Seq(cur.idCol), "left_semi")
-      // replay-idempotence vs the LIVE side table (not the meta
-      // snapshot: a crashed delete leaves tombstones with no meta
-      // update — its retry must not double-write them)
-      val fresh = Tombstones.liveOnly(spark, handle.dir, cur.idCol, inIndex)
-        .localCheckpoint(false) // one materialization feeds write + delta
-      val doomed = spark.read.parquet(s"${handle.dir}/doclens")
-        .join(fresh, Seq(cur.idCol), "left_semi")
-      val (dn, dtotal, dPerField) = statsOf(doomed, cur.idCol, cur.fields)
-      if (dn == 0L) cur
-      else {
-        fresh.write.mode("append").parquet(s"${handle.dir}/tombstones")
-        writeMeta(spark, handle.dir, cur.idCol, cur.numBuckets,
-          cur.nDocs - dn, cur.totalTokens - dtotal,
-          cur.fields,
-          cur.fieldTokens.zip(dPerField).map { case (a, b) => a - b },
-          cur.nTombstones + dn)
-        cur.copy(nDocs = cur.nDocs - dn, totalTokens = cur.totalTokens - dtotal,
-          fieldTokens =
-            cur.fieldTokens.zip(dPerField).map { case (a, b) => a - b },
-          nTombstones = cur.nTombstones + dn)
+      val id = cur.idCol
+      val doclens = spark.read.parquet(s"${handle.dir}/doclens")
+      val inIndex = ids.select(col(id)).na.drop().distinct()
+        .join(doclens.select(col(id)), Seq(id), "left_semi")
+      Tombstones.record(spark, handle.dir, id, inIndex) { fresh =>
+        Some(statsOf(doclens.join(fresh, Seq(id), "left_semi"), id, cur.fields))
+          .filter(_._1 > 0L)
+      } match {
+        case None => cur
+        case Some(doomed) =>
+          val upd = shifted(cur, doomed, -1L)
+            .copy(nTombstones = cur.nTombstones + doomed._1)
+          writeMeta(spark, handle.dir, upd)
+          upd
       }
-    }
-  }
-
-  /** The probe-side tombstone filter: anti-join the id column against
-    * `tombstones/` — no read and no join node while none exist. The
-    * gate is a LIVE filesystem check, not the handle's
-    * `nTombstones` snapshot: a long-lived query service holds its
-    * handle across concurrent deletes, and a stale no-tombstone flag
-    * would silently keep serving deleted docs — the one thing a
-    * right-to-be-forgotten tombstone must never do. A handle that
-    * pre-dates the delete does still score with ITS meta snapshot
-    * (yesterday's N / avgdl — the documented stale-stats posture);
-    * re-load for remainder-exact scores. */
-  private def liveOnly(
-      spark: SparkSession, handle: Handle, rows: DataFrame): DataFrame =
-    Tombstones.liveOnly(spark, handle.dir, handle.idCol, rows)
-
-  /** Swap a rebuilt table into place, or — when no live table of that
-    * name exists (a legacy index gaining `termvecs`: rebuild IS the
-    * upgrade path) — land it with one checked rename. */
-  private def swapOrLand(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, tmp: String,
-      t: String, beforeSwap: () => Unit): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
-    if (!fs.exists(live))
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$t"), live),
-        s"rename $tmp/$t -> $live failed; the rebuilt table is intact " +
-          "under the tmp dir")
-    else {
-      // snapshot under the held lock — appends are excluded, so the
-      // swap's fold-in set is provably empty
-      val snapshot = Maintenance.dataFiles(fs, live).toSet
-      Maintenance.swapCompacted(fs, live,
-        new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshot, beforeSwap)
     }
   }
 
   /** Rewrite the index state deduplicated and re-sorted — the
     * maintenance pass for the append loop: posting rows collapse to
     * distinct (a replayed append re-derives identical rows under the
-    * frozen tokenizer), doclens to one row per id, and the collection
-    * stats are recounted from the deduplicated doclens, healing any
-    * replay drift in `meta`. Runs under the compaction lock; see
-    * [[Maintenance]] for the crash/concurrency contract. */
+    * frozen tokenizer), doclens to one row per id, tombstoned docs are
+    * purged, and the collection stats are recounted from the
+    * deduplicated doclens, healing any replay drift in `meta`. Lock,
+    * snapshot, swap and crash posture are [[Maintenance]]'s compact
+    * protocol. */
   def compact(handle: Handle, waitForAppendsMs: Long = 60000L): Handle = {
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(handle.dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try compactLocked(spark, handle, fs)
-    finally Maintenance.releaseCompactLock(fs, root)
+    val fs = Maintenance.fsOf(spark)
+    Maintenance.withCompactLock(fs, new Path(handle.dir), waitForAppendsMs)(
+      compactLocked(spark, handle, fs))
   }
 
   private[ops] def compactLocked(
-      spark: SparkSession, handle: Handle,
-      fs: org.apache.hadoop.fs.FileSystem): Handle = {
+      spark: SparkSession, handle: Handle, fs: FileSystem): Handle = {
     val dir = handle.dir
-    val tmp = s"$dir/compact_tmp"
-    val hasTv = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/termvecs"))
-    val tables = Seq("postings", "doclens") ++
-      (if (hasTv) Seq("termvecs") else Nil)
-    tables.foreach { t => // refuse crashed state BEFORE the expensive writes
-      val aside = new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")
-      require(!fs.exists(aside),
-        s"$aside already exists — a prior compact crashed mid-swap; " +
-          "recover it manually before compacting again")
-    }
-    val snapshots: Map[String, Seq[String]] = tables.map { t =>
-      val files = Maintenance.dataFiles(
-        fs, new org.apache.hadoop.fs.Path(s"$dir/$t"))
-      require(files.nonEmpty, s"$dir/$t holds no data files — nothing to compact")
-      t -> files
-    }.toMap
-    def snap(t: String): DataFrame =
-      spark.read.option("basePath", s"$dir/$t")
-        .parquet(snapshots(t).map(rel => s"$dir/$t/$rel"): _*)
     val cur = load(spark, dir)
     require(cur.version == CurrentVersion,
       s"compact: $dir is a v${cur.version} (legacy) index — rewriting it " +
         s"would mix schemas; rebuild the index to upgrade")
-    // the physical purge for delete(): tombstoned rows drop from the
-    // compacted postings/doclens, then the tombstones themselves are
-    // cleared (the lock excludes concurrent delete()s, so the dir
-    // read here is the complete set; crash after the swaps leaves
-    // stale tombstones anti-joining already-purged ids — harmless,
-    // cleared by the next compact)
-    val tombs = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val hadTombs = fs.exists(tombs)
-    val purge: DataFrame => DataFrame =
-      if (hadTombs) {
-        val ts = spark.read.parquet(tombs.toString)
-        df => df.join(ts, Seq(cur.idCol), "left_anti")
-      } else identity
-    purge(snap("postings")).distinct()
-      .repartition(col("term_bucket")).sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(s"$tmp/postings")
-    purge(snap("doclens"))
-      .groupBy(col(handle.idCol), col("field"))
-      .agg(max(col("n_tok_f")).as("n_tok_f"))
-      .write.mode("overwrite").parquet(s"$tmp/doclens")
-    if (hasTv) // replay duplicates collapse; tombstoned rows purge
-      writeTermvecs(purge(snap("termvecs")).distinct(), cur.idCol,
-        s"$tmp/termvecs", "overwrite")
-    tables.foreach { t =>
-      Maintenance.swapCompacted(
-        fs, new org.apache.hadoop.fs.Path(s"$dir/$t"),
-        new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshots(t).toSet)
+    val tables = Seq("postings", "doclens") ++
+      (if (fs.exists(new Path(s"$dir/termvecs"))) Seq("termvecs") else Nil)
+    Maintenance.compactTables(spark, fs, dir, tables) {
+      case ("postings", rows, out) => writePostings(rows.distinct(), out, "overwrite")
+      case ("doclens", rows, out) =>
+        rows.groupBy(col(handle.idCol), col("field"))
+          .agg(max(col("n_tok_f")).as("n_tok_f"))
+          .write.mode("overwrite").parquet(out)
+      case (_, rows, out) => writeTermvecs(rows.distinct(), cur.idCol, out, "overwrite")
     }
-    fs.delete(tombs, true)
-    // the purge invalidates any shadow sidecar encoded pre-purge — see
-    // Maintenance.requireNoPurgeSince
-    if (hadTombs)
-      Maintenance.bumpPurgeEpoch(fs, new org.apache.hadoop.fs.Path(dir))
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val (n, total, perField) =
-      statsOf(spark.read.parquet(s"$dir/doclens"), cur.idCol, cur.fields)
-    writeMeta(spark, dir, cur.idCol, cur.numBuckets, n, total,
-      cur.fields, perField)
-    cur.copy(nDocs = n, totalTokens = total, fieldTokens = perField,
-      nTombstones = 0L)
+    val h = handleOf(dir, cur.idCol, cur.fields, cur.numBuckets,
+      statsOf(spark.read.parquet(s"$dir/doclens"), cur.idCol, cur.fields))
+    writeMeta(spark, dir, h)
+    h
   }
 
   /** Re-open a persisted index: one tiny JSON read, no data touched —
@@ -928,9 +710,8 @@ object Bm25Index {
     // would then prune with the WRONG bucket mod (silent misses). A
     // partition value >= numBuckets is proof of the torn state in the
     // upgrade direction — one directory listing, no data read.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val postingsRoot = new org.apache.hadoop.fs.Path(s"$dir/postings")
+    val fs = Maintenance.fsOf(spark)
+    val postingsRoot = new Path(s"$dir/postings")
     if (fs.exists(postingsRoot)) {
       val badBucket = fs.listStatus(postingsRoot).iterator
         .map(_.getPath.getName)
@@ -989,7 +770,7 @@ object Bm25Index {
       s"query terms must be distinct: $queryTerms")
     require(handle.nDocs > 0, "topK over an empty index")
     val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val raw = liveOnly(spark, handle,
+    val raw = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(queryTerms: _*)))
@@ -1132,7 +913,7 @@ object Bm25Index {
     val buckets = qt
       .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = collapseTf(handle, liveOnly(spark, handle,
+    val pruned = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
         spark.read.parquet(s"${handle.dir}/postings")
           .filter(col("term_bucket").isin(buckets: _*))
           .join(qt.select("term").distinct(), Seq("term"), "left_semi")))
@@ -1258,7 +1039,7 @@ object Bm25Index {
     val fi = handle.fields.indexOf(fld)
     require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
     val buckets = bucketsFor(spark, distinctTerms, handle.numBuckets).distinct
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(distinctTerms: _*) && col("field") === fld))
@@ -1350,7 +1131,7 @@ object Bm25Index {
     val fi = handle.fields.indexOf(fld)
     require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
     val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(queryTerms: _*) && col("field") === fld))
@@ -1487,7 +1268,7 @@ object Bm25Index {
     // (see phraseTopKBatch) instead of via an extra wide shuffle of
     // the positions-carrying slice: distinct-doc df, max-before-sum
     // scoring, and a SET collect for the window arrays
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
         spark.read.parquet(s"${handle.dir}/postings")
           .filter(col("term_bucket").isin(buckets: _*) && col("field") === fld)
           .join(qt.select("term").distinct(), Seq("term"), "left_semi"))
@@ -1641,10 +1422,9 @@ object Bm25Index {
     //    partition key drifting from its hash silently breaks the
     //    probe's pruning — the DedupIndex band0 rule). One tagged-union
     //    groupBy carries all four checks.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Maintenance.fsOf(spark)
     val tvChecks =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/termvecs")))
+      if (!fs.exists(new Path(s"$dir/termvecs")))
         Seq.empty[(String, Long)]
       else {
         val tv = spark.read.parquet(s"$dir/termvecs")
@@ -1733,7 +1513,7 @@ object Bm25Index {
     val fi = handle.fields.indexOf(fld)
     require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
     val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(queryTerms: _*) && col("field") === fld))
@@ -1868,7 +1648,7 @@ object Bm25Index {
     // base grouping below collapses duplicate (slot, base) rows by
     // construction — on a clean index every level degenerates to the
     // plain single-row case
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
         spark.read.parquet(s"${handle.dir}/postings")
           .filter(col("term_bucket").isin(buckets: _*) && col("field") === fld)
           .join(slots.select("term").distinct(), Seq("term"), "left_semi"))
@@ -1950,8 +1730,10 @@ object Bm25Index {
     // weight as a literal-map lookup — four fewer Spark jobs per probe
     // (no weights checkpoint, no bucket collect, no weights-side
     // exchange for the score join). Distributed weight frames keep the
-    // old in-plan validation path. Scores are bit-identical: the same
-    // Long weight multiplies the same per-term double.
+    // in-plan validation path; both reject the same inputs (a NULL
+    // term, a non-lowercase or duplicate term, a NULL weight_q, or one
+    // whose long cast is <= 0, such as 0.5). Scores are bit-identical:
+    // the same Long weight multiplies the same per-term double.
     val isLocal = weights.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val (pruned, attachWeight: (DataFrame => DataFrame)) =
@@ -1973,7 +1755,7 @@ object Bm25Index {
         val terms = rows.map(_.getString(0)).toSeq
         val wmap = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
         val buckets = terms.map(engineBucketOf(_, handle.numBuckets)).distinct
-        val slice = collapseTf(handle, liveOnly(spark, handle,
+        val slice = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
           spark.read.parquet(s"${handle.dir}/postings")
             .filter(col("term_bucket").isin(buckets: _*) &&
               col("term").isin(terms: _*))))
@@ -1992,14 +1774,16 @@ object Bm25Index {
               .when(col("__n") > 1, raise_error(concat(
                 lit("topKWeighted: duplicate term "), col("term"))))
               .otherwise(col("term")).as("term"),
-            when(col("weight_q") <= 0L, raise_error(concat(
-                lit("topKWeighted: weight_q must be positive for "), col("term"))))
+            // the fast path's rule: NULL, or a long cast <= 0 (0.5 is 0)
+            when(col("weight_q").isNull || col("weight_q").cast("long") <= 0L,
+                raise_error(concat(
+                  lit("topKWeighted: weight_q must be positive for "), col("term"))))
               .otherwise(col("weight_q").cast("long")).as("weight_q"))
           .localCheckpoint(false) // feeds bucket collect AND the score join
         val buckets = wt
           .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
           .distinct().collect().map(_.getInt(0)).toSeq
-        val slice = collapseTf(handle, liveOnly(spark, handle,
+        val slice = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
           spark.read.parquet(s"${handle.dir}/postings")
             .filter(col("term_bucket").isin(buckets: _*))
             .join(wt.select("term"), Seq("term"), "left_semi")))
@@ -2087,7 +1871,8 @@ object Bm25Index {
     // df attached IN-PLAN ([[withDfColumn]]) — this probe now costs
     // ZERO actions of its own; the caller's one collect executes the
     // whole chain
-    val pruned = withDfColumn(collapseTf(handle, liveOnly(spark, handle,
+    val pruned = withDfColumn(collapseTf(handle,
+      Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(queryTerms: _*)))), handle.idCol)
@@ -2158,10 +1943,9 @@ object Bm25Index {
     // bit-identical) — else the legacy corpus re-fetch+re-tokenize.
     // This was the measured cost dominator of the RM3 chain: the
     // corpus pass paid a full scan + tokenize per query.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Maintenance.fsOf(spark)
     val hasTv = fs.exists(
-        new org.apache.hadoop.fs.Path(s"${handle.dir}/termvecs")) &&
+        new Path(s"${handle.dir}/termvecs")) &&
       handle.fields.contains(textCol)
     val termFreqs =
       if (hasTv) {
@@ -2267,7 +2051,7 @@ object Bm25Index {
     }
     val wFields = weights.map(_._1)
     val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = liveOnly(spark, handle,
+    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
       spark.read.parquet(s"${handle.dir}/postings")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("term").isin(queryTerms: _*) && col("field").isin(wFields: _*)))

@@ -169,7 +169,7 @@ object BpeTrain {
     * merge-for-merge equality across the crossover). The per-round
     * `count()` is one job over the already-checkpointed piece table —
     * noise against the round's aggregate, and it makes the switch
-    * exact. `switchProbe` is instrumentation (tests, ProfileBpe):
+    * exact. `switchProbe` is instrumentation (tests, profiling):
     * called once with (merges done distributed, pieces collected) iff
     * the driver phase starts. */
   def trainHybrid(

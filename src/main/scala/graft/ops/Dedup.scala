@@ -85,7 +85,7 @@ object Dedup {
     * Computed by the native [[graft.plans.MinhashSignature]]
     * expression: the previous `array_min(transform(transform(...)))`
     * formulation ran every lambda interpreted (higher-order functions
-    * don't codegen — the effect tools/ProfileMinhash measured), and
+    * don't codegen — the effect a minhash A/B measured), and
     * materialized the shingle + digest arrays per row. The signature
     * array is projected in its own step so the one-pass expression
     * runs once, not once per mh column. */

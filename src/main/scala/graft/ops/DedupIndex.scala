@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,18 +54,44 @@ object DedupIndex {
     pmod(hash((0 until math.min(bandSize, numHashes)).map(i => col(s"mh$i")): _*),
       lit(NumBandPartitions))
 
-  private def stateFrames(
-      corpus: DataFrame, idCol: String, numHashes: Int, bandSize: Int):
-      (DataFrame, DataFrame, DataFrame) = {
-    val fps = corpus.filter(col("text").isNotNull)
+  private def requireLayout(numHashes: Int, bandSize: Int): Unit =
+    require(bandSize >= 1 && numHashes >= bandSize && numHashes % bandSize == 0,
+      s"numHashes ($numHashes) must be a positive multiple of bandSize ($bandSize)")
+
+  /** The state tables, in swap order (meta swaps after them). */
+  private val Tables = Seq("fingerprints", "signatures", "words")
+
+  /** The one table-set write: build, append, rebuild and the shadow's
+    * sidecar and delta all land a slice's state through it. */
+  private def writeState(
+      slice: DataFrame, idCol: String, numHashes: Int, bandSize: Int,
+      base: String, mode: String): Unit = {
+    val fps = slice.filter(col("text").isNotNull)
       .select(md5(col("text")).as("fp")).distinct()
-    val sigs = Dedup.minhashSignatures(corpus, numHashes)
+    val sigs = Dedup.minhashSignatures(slice, numHashes)
       .filter(col("mh0").isNotNull)
       .select(col(idCol) +: (0 until numHashes).map(i => col(s"mh$i")): _*)
       .withColumn("band0", bandKey(numHashes, bandSize))
-    val words = corpus.filter(col("text").isNotNull)
+    val words = slice.filter(col("text").isNotNull)
       .select(col(idCol), array_distinct(Dedup.tokens(col("text"))).as("words"))
-    (fps, sigs, words)
+    fps.write.mode(mode).parquet(s"$base/fingerprints")
+    writeSigs(sigs, s"$base/signatures", mode)
+    // r17: the r16 "sized write" repartition(idCol) is reverted here —
+    // see Bm25Index doclens (same file count either way, the exchange
+    // was pure cost)
+    words.write.mode(mode).parquet(s"$base/words")
+  }
+
+  private def writeSigs(sigs: DataFrame, path: String, mode: String): Unit =
+    sigs.repartition(col("band0")) // one writer wave per bucket
+      .write.mode(mode).partitionBy("band0").parquet(path)
+
+  private def writeMeta(
+      spark: SparkSession, base: String, idCol: String, numHashes: Int,
+      bandSize: Int): Unit = {
+    import spark.implicits._
+    Seq((idCol, numHashes, bandSize)).toDF("idCol", "numHashes", "bandSize")
+      .coalesce(1).write.mode("overwrite").json(s"$base/meta")
   }
 
   /** One corpus pass -> persisted state. `bandSize` fixes the band
@@ -73,20 +100,9 @@ object DedupIndex {
   def build(
       corpus: DataFrame, idCol: String, dir: String,
       numHashes: Int = 8, bandSize: Int = 4): Handle = {
-    require(bandSize >= 1 && numHashes >= bandSize && numHashes % bandSize == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bandSize ($bandSize)")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val (fps, sigs, words) = stateFrames(corpus, idCol, numHashes, bandSize)
-    fps.write.mode("overwrite").parquet(s"$dir/fingerprints")
-    sigs.repartition(col("band0")) // one writer wave per bucket
-      .write.mode("overwrite").partitionBy("band0").parquet(s"$dir/signatures")
-    // r17: the r16 "sized write" repartition(idCol) is reverted here —
-    // see Bm25Index doclens (ProfileSizedWrite: same file count either
-    // way, the exchange was pure cost)
-    words.write.mode("overwrite").parquet(s"$dir/words")
-    Seq((idCol, numHashes, bandSize)).toDF("idCol", "numHashes", "bandSize")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/meta")
+    requireLayout(numHashes, bandSize)
+    writeState(corpus, idCol, numHashes, bandSize, dir, "overwrite")
+    writeMeta(corpus.sparkSession, dir, idCol, numHashes, bandSize)
     Handle(dir, idCol, numHashes, bandSize)
   }
 
@@ -94,24 +110,15 @@ object DedupIndex {
     * bookkeeping step after its batch has been screened: parquet
     * appends only, no rebuild. (Fingerprints may accumulate
     * duplicates across appends; the probe is a semi-join, so
-    * duplicates cost bytes, never correctness.) */
-  def append(handle: Handle, slice: DataFrame): Unit = {
-    val (fps, sigs, words) =
-      stateFrames(slice, handle.idCol, handle.numHashes, handle.bandSize)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      slice.sparkSession.sparkContext.hadoopConfiguration)
-    // marker/lock handshake with a concurrent compact — see Maintenance
+    * duplicates cost bytes, never correctness.) Runs under an append
+    * marker and refuses a tombstoned id (see [[Maintenance]]). */
+  def append(handle: Handle, slice: DataFrame): Unit =
     Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
-      // a tombstoned id must not be re-added before compact — the
-      // shared live-gated guard (see Tombstones)
+        Maintenance.fsOf(slice.sparkSession), new Path(handle.dir)) {
       Tombstones.refuseReAdd(slice.sparkSession, handle.dir, handle.idCol, slice)
-      fps.write.mode("append").parquet(s"${handle.dir}/fingerprints")
-      sigs.repartition(col("band0"))
-        .write.mode("append").partitionBy("band0").parquet(s"${handle.dir}/signatures")
-      words.write.mode("append").parquet(s"${handle.dir}/words")
+      writeState(slice, handle.idCol, handle.numHashes, handle.bandSize,
+        handle.dir, "append")
     }
-  }
 
   /** Merge independently-built shard states into one — the
     * federated-ingest shape ([[Bm25Index.merge]] is the lexical
@@ -132,7 +139,7 @@ object DedupIndex {
   def merge(
       spark: SparkSession, shardDirs: Seq[String], outDir: String): Handle = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+    val fs = FileSystem.get(conf)
     Maintenance.requireMergeable(fs, shardDirs, outDir, "docs")
     val hs = shardDirs.map(load(spark, _))
     val h0 = hs.head
@@ -146,16 +153,12 @@ object DedupIndex {
     Maintenance.requireDisjointShardIds(spark, shardDirs, "signatures",
       h0.idCol, "id sets must be disjoint")
     shardDirs.zipWithIndex.foreach { case (d, i) =>
-      Seq("fingerprints", "signatures", "words").foreach { t =>
+      Tables.foreach { t =>
         Maintenance.copyDataFiles(fs,
-          new org.apache.hadoop.fs.Path(s"$d/$t"),
-          new org.apache.hadoop.fs.Path(s"$outDir/$t"), s"s$i", conf)
+          new Path(s"$d/$t"), new Path(s"$outDir/$t"), s"s$i", conf)
       }
     }
-    import spark.implicits._
-    Seq((h0.idCol, h0.numHashes, h0.bandSize))
-      .toDF("idCol", "numHashes", "bandSize")
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/meta")
+    writeMeta(spark, outDir, h0.idCol, h0.numHashes, h0.bandSize)
     Handle(outDir, h0.idCol, h0.numHashes, h0.bandSize)
   }
 
@@ -176,125 +179,59 @@ object DedupIndex {
     * ambiguous under the one-id-one-text contract (the [[compact]]
     * scaladoc's rule); rebuild from the source of truth if that
     * state matters. Idempotent against replays (already-tombstoned
-    * ids are skipped); the physical purge and re-addability come
-    * with the next [[compact]]. */
+    * ids are skipped, see [[Tombstones.record]]); the physical purge
+    * and re-addability come with the next [[compact]]. */
   def delete(handle: Handle, docs: DataFrame): Handle = {
     val spark = docs.sparkSession
     require(docs.columns.contains(handle.idCol) && docs.columns.contains("text"),
       s"delete: the docs frame must carry '${handle.idCol}' and 'text', " +
         s"has ${docs.columns.mkString(", ")}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Maintenance.withAppendMarker(
-        fs, new org.apache.hadoop.fs.Path(handle.dir)) {
-      val rows = docs.select(col(handle.idCol), md5(col("text")).as("fp"))
-        .na.drop(Seq(handle.idCol)).dropDuplicates(handle.idCol)
-      val fresh = Tombstones.liveOnly(spark, handle.dir, handle.idCol, rows)
-        .localCheckpoint(true) // one materialization: emptiness + write
-      // an all-replayed request must not create an empty side table —
-      // that would flip every probe's exists() gate on for nothing
-      if (fresh.isEmpty) handle.copy(
-        hasTombstones = fs.exists(Tombstones.path(handle.dir)))
-      else {
-        fresh.write.mode("append").parquet(Tombstones.path(handle.dir).toString)
-        handle.copy(hasTombstones = true)
-      }
+    val fs = Maintenance.fsOf(spark)
+    Maintenance.withAppendMarker(fs, new Path(handle.dir)) {
+      Tombstones.record(spark, handle.dir, handle.idCol,
+        docs.select(col(handle.idCol), md5(col("text")).as("fp"))
+          .na.drop(Seq(handle.idCol)).dropDuplicates(handle.idCol))(
+        Tombstones.nonEmpty)
+      handle.copy(hasTombstones = fs.exists(Tombstones.path(handle.dir)))
     }
   }
 
   /** Rewrite the index state deduplicated — the maintenance pass for a
     * long-running append loop: fingerprints collapse to distinct
     * (appends re-add shared hashes), signature and word rows collapse
-    * to one per id. Assumes the library-wide contract that an id maps
-    * to ONE document text: a replayed ingest re-appends identical
-    * derived rows, so any survivor is THE row (the `max`/`max(struct)`
-    * picks make the survivor deterministic regardless). If a caller
+    * to one per id, tombstoned fingerprints and ids are purged.
+    * Assumes the library-wide contract that an id maps to ONE
+    * document text: a replayed ingest re-appends identical derived
+    * rows, so any survivor is THE row (the `max`/`max(struct)` picks
+    * make the survivor deterministic regardless). If a caller
     * re-appended the same id with DIFFERENT text, per-id state was
     * already ambiguous before compaction (both versions were being
     * probed); compaction keeps one deterministic version of each
-    * table — rebuild from the source of truth if that happened.
-    *
-    * Crash / concurrency behavior: each table is written complete to
-    * `compact_tmp` from a SNAPSHOT of the table's file list, then
-    * swapped in by [[Maintenance.swapCompacted]] — renames are
-    * checked before anything is deleted, a leftover `<t>_precompact`
-    * from a prior crash aborts the whole pass before any mutation,
-    * and files a concurrent [[graft.streaming.StreamingDedup]] append
-    * laid down after the snapshot are folded back into the compacted
-    * table. The whole pass runs under the index-wide `_compact.lock`
-    * ([[Maintenance.acquireCompactLock]]): in-flight appends drain
-    * first (up to `waitForAppendsMs`), and appends arriving during
-    * the pass refuse loudly instead of racing the swap. See
-    * [[Maintenance]] for the exact contract. */
+    * table — rebuild from the source of truth if that happened. Lock,
+    * snapshot, swap, late-append fold-in and crash posture are
+    * [[Maintenance]]'s compact protocol. */
   def compact(handle: Handle, waitForAppendsMs: Long = 60000L): Unit = {
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(handle.dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try compactLocked(spark, handle, fs)
-    finally Maintenance.releaseCompactLock(fs, root)
+    val fs = Maintenance.fsOf(spark)
+    Maintenance.withCompactLock(fs, new Path(handle.dir), waitForAppendsMs)(
+      compactLocked(spark, handle, fs))
   }
 
   private[ops] def compactLocked(
-      spark: SparkSession, handle: Handle,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val dir = handle.dir
-    val tmp = s"$dir/compact_tmp"
+      spark: SparkSession, handle: Handle, fs: FileSystem): Unit = {
     val idc = col(handle.idCol)
-    val tables = Seq("fingerprints", "signatures", "words")
-    tables.foreach { t => // refuse crashed state BEFORE the expensive writes
-      val aside = new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")
-      require(!fs.exists(aside),
-        s"$aside already exists — a prior compact crashed mid-swap; " +
-          "recover it manually before compacting again")
+    val mhCols = (0 until handle.numHashes).map(i => s"mh$i") :+ "band0"
+    Maintenance.compactTables(spark, fs, handle.dir, Tables) {
+      case ("fingerprints", rows, out) =>
+        rows.distinct().write.mode("overwrite").parquet(out)
+      case ("signatures", rows, out) =>
+        writeSigs(rows.groupBy(idc).agg(max(struct(mhCols.map(col): _*)).as("__s"))
+          .select(idc +: mhCols.map(c => col(s"__s.$c").as(c)): _*), out, "overwrite")
+      case (_, rows, out) =>
+        rows.groupBy(idc).agg(max(struct(col("words"))).as("__w"))
+          .select(idc, col("__w.words").as("words"))
+          .write.mode("overwrite").parquet(out)
     }
-    val snapshots: Map[String, Seq[String]] = tables.map { t =>
-      val files = Maintenance.dataFiles(
-        fs, new org.apache.hadoop.fs.Path(s"$dir/$t"))
-      require(files.nonEmpty, s"$dir/$t holds no data files — nothing to compact")
-      t -> files
-    }.toMap
-    def snap(t: String): DataFrame =
-      spark.read.option("basePath", s"$dir/$t")
-        .parquet(snapshots(t).map(rel => s"$dir/$t/$rel"): _*)
-    // the physical purge for delete(): tombstoned fingerprints/ids
-    // drop from the compacted tables, then the tombstones clear (the
-    // lock excludes concurrent delete()s; crash after the swaps
-    // leaves stale tombstones anti-joining already-purged state —
-    // harmless, cleared by the next compact)
-    val tombs = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val hadTombs = fs.exists(tombs)
-    val (purgeFp, purgeId): (DataFrame => DataFrame, DataFrame => DataFrame) =
-      if (hadTombs) {
-        val ts = spark.read.parquet(tombs.toString)
-        (df => df.join(ts.select("fp").na.drop(), Seq("fp"), "left_anti"),
-         df => df.join(ts.select(handle.idCol), Seq(handle.idCol), "left_anti"))
-      } else (identity, identity)
-    purgeFp(snap("fingerprints")).distinct()
-      .write.mode("overwrite").parquet(s"$tmp/fingerprints")
-    val mhCols = (0 until handle.numHashes).map(i => s"mh$i")
-    purgeId(snap("signatures"))
-      .groupBy(idc).agg(
-        max(struct(mhCols.map(col) :+ col("band0"): _*)).as("__s"))
-      .select(idc +: (mhCols :+ "band0").map(c => col(s"__s.$c").as(c)): _*)
-      .repartition(col("band0"))
-      .write.mode("overwrite").partitionBy("band0").parquet(s"$tmp/signatures")
-    purgeId(snap("words"))
-      .groupBy(idc).agg(max(struct(col("words"))).as("__w"))
-      .select(idc, col("__w.words").as("words"))
-      .write.mode("overwrite").parquet(s"$tmp/words")
-    tables.foreach { t =>
-      Maintenance.swapCompacted(
-        fs, new org.apache.hadoop.fs.Path(s"$dir/$t"),
-        new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshots(t).toSet)
-    }
-    fs.delete(tombs, true)
-    // the purge invalidates any shadow sidecar encoded pre-purge — see
-    // Maintenance.requireNoPurgeSince
-    if (hadTombs)
-      Maintenance.bumpPurgeEpoch(fs, new org.apache.hadoop.fs.Path(dir))
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
   /** Re-signature-and-swap — the dedup member of the rebuild family
@@ -312,88 +249,37 @@ object DedupIndex {
     * row-identical to what [[build]] writes for it at these parameters
     * — tombstones are obsolete and clear with the swap. The new layout
     * REPLACES the old wholesale; nothing is inherited from the
-    * possibly-corrupt old meta. The lock is held for the whole corpus
-    * pass (appends refuse — signature state has no retrain span, but
-    * at 100 TB schedule rebuilds in ingest gaps). Crash posture:
-    * before the first swap the live tables are untouched (an inert
-    * `rebuild_tmp` clears on the next attempt); mid-swap leaves a
-    * `<table>_precompact` aside, the [[compact]] recovery. Meta is
-    * written into the tmp dir and swapped as the FOURTH table, so a
-    * crash between swaps cannot serve new-bandSize signatures under a
-    * fully-committed stale meta for longer than the rename instants.
-    * `beforeSwap` is a test seam on the first table's swap. */
+    * possibly-corrupt old meta. Lock, swap and crash posture are
+    * [[Maintenance]]'s rebuild protocol; meta swaps last, and [[load]]
+    * refuses new-layout signatures beside a stale meta. `beforeSwap`
+    * is a test seam on the first table's swap. */
   def rebuild(
       corpus: DataFrame, idCol: String, dir: String,
       numHashes: Int = 8, bandSize: Int = 4,
       waitForAppendsMs: Long = 60000L,
       beforeSwap: () => Unit = () => ()): Handle = {
-    require(bandSize >= 1 && numHashes >= bandSize && numHashes % bandSize == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bandSize ($bandSize)")
+    requireLayout(numHashes, bandSize)
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try {
-      val tables = Seq("fingerprints", "signatures", "words", "meta")
-      tables.foreach { t => // refuse crashed state BEFORE the corpus pass
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-          s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-            "crashed mid-swap; recover it manually before rebuilding")
-      }
-      val tmp = s"$dir/rebuild_tmp"
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      val (fps, sigs, words) = stateFrames(corpus, idCol, numHashes, bandSize)
-      fps.write.mode("overwrite").parquet(s"$tmp/fingerprints")
-      sigs.repartition(col("band0"))
-        .write.mode("overwrite").partitionBy("band0").parquet(s"$tmp/signatures")
-      words.write.mode("overwrite").parquet(s"$tmp/words")
-      Seq((idCol, numHashes, bandSize)).toDF("idCol", "numHashes", "bandSize")
-        .coalesce(1).write.mode("overwrite").json(s"$tmp/meta")
-      tables.zipWithIndex.foreach { case (t, i) =>
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        // snapshot under the held lock — appends are excluded, so the
-        // swap's fold-in set is provably empty
-        val snapshot = Maintenance.dataFiles(fs, live).toSet
-        Maintenance.swapCompacted(fs, live,
-          new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshot,
-          if (i == 0) beforeSwap else () => ())
-      }
-      // the rebuilt state IS canonical for the post-delete corpus
-      fs.delete(Tombstones.path(dir), true)
-      // wholesale replace: invalidate any pre-swap shadow sidecar
-      Maintenance.bumpPurgeEpoch(fs, root)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    Maintenance.rebuildSwap(Maintenance.fsOf(spark), dir, Tables :+ "meta",
+        waitForAppendsMs, beforeSwap) { tmp =>
+      writeState(corpus, idCol, numHashes, bandSize, tmp, "overwrite")
+      writeMeta(spark, tmp, idCol, numHashes, bandSize)
       Handle(dir, idCol, numHashes, bandSize)
-    } finally Maintenance.releaseCompactLock(fs, root)
+    }
   }
 
   /** NON-BLOCKING re-signature-and-migrate — the 100 TB form of
-    * [[rebuild]], completing the shadow family across the trio
-    * ([[AnnIndex.rebuildShadow]] retrains, [[Bm25Index.rebuildShadow]]
-    * re-tokenizes, this re-fingerprints/re-minhashes): rebuild holds
-    * the lock for the whole corpus pass, and a 100 TB
+    * [[rebuild]] ([[AnnIndex.rebuildShadow]] retrains,
+    * [[Bm25Index.rebuildShadow]] re-tokenizes): a 100 TB
     * fingerprint+minhash pass IS a span of hours even with no model to
-    * retrain; the shadow form signs into a SIDECAR while the live
-    * index keeps screening AND accepting appends, then takes the lock
-    * only for the delta catch-up + four renames. Minhash/fingerprint
-    * derivation is deterministic, so caught-up rows are bit-identical
-    * to a clean [[build]]'s.
-    *
-    * `source` is a THUNK (the [[Bm25Index.rebuildShadow]]
-    * InMemoryFileIndex rule): re-invoked under the lock so appends
-    * that landed during the pass are visible. The delta is computed on
-    * SIGNATURE ids (null-text docs leave no dedup state at all, so
-    * they neither need nor trip the catch-up); a delta id the re-read
-    * source cannot resolve refuses loudly. Tombstones are NOT cleared
-    * (a delete racing the pass keeps its tombstone; the next
-    * [[compact]] purges) and a delete+COMPACT racing the pass is
-    * refused at the lock by the purge-epoch check
-    * ([[Maintenance.requireNoPurgeSince]]). Crash posture: before the
-    * lock — live tables untouched, inert `shadow_tmp`; inside the
-    * swap — a `<table>_precompact` aside, the [[compact]] recovery.
-    * Meta swaps as the FOURTH table (the [[rebuild]] rule).
+    * retrain, so the shadow form signs into a sidecar while the live
+    * index keeps screening AND accepting appends, and takes the lock
+    * only for the delta catch-up and the renames ([[Maintenance]]'s
+    * shadow protocol; `source` is a thunk, re-invoked under the lock).
+    * Minhash/fingerprint derivation is deterministic, so caught-up rows
+    * are bit-identical to a clean [[build]]'s. The delta is computed
+    * on SIGNATURE ids (null-text docs leave no dedup state at all, so
+    * they neither need nor trip the catch-up). Meta swaps last.
     * `beforeLock`/`beforeSwap` are the usual test seams. */
   def rebuildShadow(
       source: () => DataFrame, idCol: String, dir: String,
@@ -401,80 +287,16 @@ object DedupIndex {
       waitForAppendsMs: Long = 60000L,
       beforeLock: () => Unit = () => (),
       beforeSwap: () => Unit = () => ()): Handle = {
-    require(bandSize >= 1 && numHashes >= bandSize && numHashes % bandSize == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bandSize ($bandSize)")
-    // Epoch BEFORE the listing (the Bm25Index.rebuildShadow rule): a
-    // purge landing between the thunk's file listing and the epoch
-    // read would be invisible to requireNoPurgeSince. First call
-    // supplies the session only; the sidecar pass re-invokes the
-    // thunk so its listing postdates epoch0.
-    val spark = source().sparkSession
-    import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val epoch0 = Maintenance.purgeEpoch(fs, root)
-    val snapshot0 = source()
-    val tables = Seq("fingerprints", "signatures", "words", "meta")
-    tables.foreach { t => // refuse crashed state BEFORE the corpus pass
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${t}_precompact")),
-        s"$dir/${t}_precompact already exists — a prior rebuild/compact " +
-          "crashed mid-swap; recover it manually before rebuilding")
-    }
-    val tmp = s"$dir/shadow_tmp"
-    // a leftover sidecar from a pre-lock crash is inert — start over
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // ---- phase 1, UNLOCKED: sign beside the live index
-    val (fps0, sigs0, words0) =
-      stateFrames(snapshot0, idCol, numHashes, bandSize)
-    fps0.write.mode("overwrite").parquet(s"$tmp/fingerprints")
-    sigs0.repartition(col("band0"))
-      .write.mode("overwrite").partitionBy("band0").parquet(s"$tmp/signatures")
-    words0.write.mode("overwrite").parquet(s"$tmp/words")
-    beforeLock()
-    // ---- phase 2, LOCKED: bounded catch-up + swap
-    Maintenance.acquireCompactLock(fs, root, waitForAppendsMs)
-    try {
-      Maintenance.requireNoPurgeSince(fs, root, epoch0, "rebuildShadow")
-      val id = col(idCol)
-      val delta = Tombstones.liveOnly(spark, dir, idCol,
-          spark.read.parquet(s"$dir/signatures").select(id).distinct())
-        .join(spark.read.parquet(s"$tmp/signatures").select(id).distinct(),
-          Seq(idCol), "left_anti")
-        .localCheckpoint(false) // feeds the count AND the semi-join
-      val nDelta = delta.count()
-      if (nDelta > 0L) {
-        val rows = source().join(delta, Seq(idCol), "left_semi")
-          .localCheckpoint(false) // feeds the resolve check AND the pass
-        val nRows = rows.select(id).distinct().count()
-        require(nRows == nDelta,
-          s"rebuildShadow: ${nDelta - nRows} ids appended to the live " +
-            "index during the sidecar pass are missing from `source` — " +
-            "the signature state is derived and every appended row must " +
-            "reach the source of truth; refusing to swap a table that " +
-            "would silently drop them")
-        val (dFps, dSigs, dWords) =
-          stateFrames(rows, idCol, numHashes, bandSize)
-        dFps.write.mode("append").parquet(s"$tmp/fingerprints")
-        dSigs.repartition(col("band0"))
-          .write.mode("append").partitionBy("band0").parquet(s"$tmp/signatures")
-        dWords.write.mode("append").parquet(s"$tmp/words")
-      }
-      Seq((idCol, numHashes, bandSize)).toDF("idCol", "numHashes", "bandSize")
-        .coalesce(1).write.mode("overwrite").json(s"$tmp/meta")
-      tables.zipWithIndex.foreach { case (t, i) =>
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        // snapshot under the held lock — appends are excluded, so the
-        // swap's fold-in set is provably empty
-        val snapshot = Maintenance.dataFiles(fs, live).toSet
-        Maintenance.swapCompacted(fs, live,
-          new org.apache.hadoop.fs.Path(s"$tmp/$t"), snapshot,
-          if (i == 0) beforeSwap else () => ())
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      Handle(dir, idCol, numHashes, bandSize,
-        fs.exists(Tombstones.path(dir)))
-    } finally Maintenance.releaseCompactLock(fs, root)
+    requireLayout(numHashes, bandSize)
+    Maintenance.shadowRebuild(source, dir, Tables :+ "meta", idCol,
+        "signatures", waitForAppendsMs, beforeLock, beforeSwap)(_.sparkSession)(
+      write = (_, rows, base, mode) =>
+        writeState(rows, idCol, numHashes, bandSize, base, mode),
+      finish = (spark, tmp) => {
+        writeMeta(spark, tmp, idCol, numHashes, bandSize)
+        Handle(dir, idCol, numHashes, bandSize,
+          Maintenance.fsOf(spark).exists(Tombstones.path(dir)))
+      })
   }
 
   def load(spark: SparkSession, dir: String): Handle = {
@@ -485,8 +307,7 @@ object DedupIndex {
     // 4-hash partition key — that is their effective build bandSize
     val bandSize = if (meta.has("bandSize")) meta.get("bandSize").asInt else 4
     val numHashes = meta.get("numHashes").asInt
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Maintenance.fsOf(spark)
     // torn-swap gate (the [[AnnIndex]] `_model_gen` twin): meta swaps
     // FOURTH (the rebuild rule), so a crash between the signatures
     // swap and the meta swap leaves NEW-layout signatures beside OLD
@@ -506,7 +327,7 @@ object DedupIndex {
     // (`band0_hash_mismatch` reports the precise count). Pre-band0
     // legacy layouts carry no partition column and skip the recompute.
     val sigDir = s"$dir/signatures"
-    if (fs.exists(new org.apache.hadoop.fs.Path(sigDir))) {
+    if (fs.exists(new Path(sigDir))) {
       val sigs = spark.read.parquet(sigDir)
       val mhOnDisk = sigs.schema.fieldNames
         .filter(_.matches("mh\\d+")).toSet
@@ -533,7 +354,7 @@ object DedupIndex {
     }
     Handle(dir, meta.get("idCol").asText,
       numHashes, bandSize,
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
+      fs.exists(Tombstones.path(dir)))
   }
 
 
@@ -615,8 +436,7 @@ object DedupIndex {
     val bs = if (bandSize == 0) handle.bandSize else bandSize
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    require(bs >= 1 && numHashes >= bs && numHashes % bs == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bandSize ($bs)")
+    requireLayout(numHashes, bs)
     // the delete() filters: a tombstoned doc's fingerprint, bands and
     // word set all stand down. The gate is a LIVE filesystem check
     // (the shared Tombstones contract), not the handle's snapshot

@@ -1,13 +1,42 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Shared crash-safe machinery for the index compaction passes
-  * ([[AnnIndex.compact]], [[DedupIndex.compact]]). Both follow the
-  * same protocol: snapshot the live table's data files, write a
-  * compacted copy to a temp dir FROM THAT SNAPSHOT ONLY, then swap.
+/** The crash-safe lifecycle protocol of the three persistent indexes
+  * ([[DedupIndex]], [[Bm25Index]], [[AnnIndex]]), stated and coded
+  * once here. Each index supplies only hooks: its one table-set write,
+  * its layout checks and meta, and one rewrite per table for compact.
+  *
+  *  - '''compact''' ([[compactTables]], under [[withCompactLock]]):
+  *    snapshot each table's data files, write a compacted copy to
+  *    `compact_tmp` FROM THAT SNAPSHOT ONLY (tombstoned rows purged),
+  *    then swap every table, clear the tombstones and, if there were
+  *    any, bump the purge epoch.
+  *  - '''rebuild''' ([[rebuildSwap]]): under the lock for the whole
+  *    corpus pass, write every table (meta last) to `rebuild_tmp`, swap
+  *    them all, clear the tombstones (the corpus is the post-delete
+  *    source of truth) and bump the purge epoch.
+  *  - '''shadow rebuild''' ([[shadowRebuild]]): write the sidecar
+  *    `shadow_tmp` UNLOCKED while the live index serves and ingests,
+  *    then under the lock catch up the append delta from a re-read
+  *    `source` and swap. Tombstones are kept; a purge in between
+  *    refuses the swap ([[requireNoPurgeSince]]).
+  *  - '''delete''' ([[Tombstones.record]], under [[withAppendMarker]]):
+  *    ids land in a small `tombstones/` side table; a replayed delete
+  *    records nothing and writes nothing.
+  *
+  * Crash posture, the same for every op and index: before the first
+  * swap the live tables are untouched (an inert tmp dir clears on the
+  * next attempt; a crashed holder's lock is removed by hand). A crash
+  * inside the swaps leaves a `<table>_precompact` aside, which every
+  * op refuses up front ([[refuseCrashed]]) until it is recovered by
+  * hand (rename the aside, or the tmp copy, back). Meta and model
+  * tables swap last, and each index's `load` refuses the torn
+  * between-swaps states its layout can show.
   *
   * The swap is defensive on every filesystem edge Hadoop exposes:
   *
@@ -16,10 +45,6 @@ import scala.collection.mutable.ArrayBuffer
   *    deleted until both renames succeeded, so a failed rename leaves
   *    the original table intact (possibly under its `_precompact`
   *    name, which [[swapCompacted]] refuses to overwrite).
-  *  - A leftover `<table>_precompact` dir from a prior crash aborts
-  *    the swap BEFORE any mutation — a crashed compact is recovered
-  *    by hand (rename the precompact or compact_tmp copy back), never
-  *    silently renamed over.
   *  - Files that appeared under the live table AFTER the snapshot
   *    (a concurrent ingest append) are folded into the compacted tree
   *    at their original relative paths before the old copy is
@@ -38,10 +63,11 @@ import scala.collection.mutable.ArrayBuffer
   *    append that sees the lock refuses loudly (retry after the
   *    compact — its natural cadence is between ingest micro-batches
   *    anyway).
-  *  - An append announces itself with an `_appending.<uuid>` marker
-  *    via [[withAppendMarker]], created BEFORE it checks the lock and
-  *    deleted after its writes commit. Compaction, AFTER taking the
-  *    lock, waits for all markers to drain before touching anything.
+  *  - An append or delete announces itself with an `_appending.<uuid>`
+  *    marker via [[withAppendMarker]], created BEFORE it checks the
+  *    lock and deleted after its writes commit. Compaction, AFTER
+  *    taking the lock, waits for all markers to drain before touching
+  *    anything.
   *
   * The ordering closes the race under sequential FS metadata ops:
   * an append either (a) creates its marker before the lock exists —
@@ -197,9 +223,8 @@ private[graft] object Maintenance {
     * column-pruned to the single id column, and it short-circuits at
     * the first duplicate. */
   private[ops] def requireDisjointShardIds(
-      spark: org.apache.spark.sql.SparkSession, shardDirs: Seq[String],
+      spark: SparkSession, shardDirs: Seq[String],
       table: String, idCol: String, why: String): Unit = {
-    import org.apache.spark.sql.functions.{col, countDistinct, lit}
     val dup = shardDirs.zipWithIndex.map { case (d, i) =>
         spark.read.parquet(s"$d/$table").select(col(idCol)).distinct()
           .withColumn("__shard", lit(i))
@@ -350,6 +375,167 @@ private[graft] object Maintenance {
     require(fs.delete(aside, true), s"delete $aside failed")
   }
 
+  private[ops] def fsOf(spark: SparkSession): FileSystem =
+    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
+  /** Run `body` holding `root`'s compaction lock, released either way. */
+  private[ops] def withCompactLock[T](
+      fs: FileSystem, root: Path, waitMs: Long)(body: => T): T = {
+    acquireCompactLock(fs, root, waitMs)
+    try body
+    finally releaseCompactLock(fs, root)
+  }
+
+  /** Refuse a crashed prior swap BEFORE any expensive write. */
+  private[ops] def refuseCrashed(
+      fs: FileSystem, dir: String, tables: Seq[String], op: String): Unit =
+    tables.foreach { t =>
+      val aside = new Path(s"$dir/${t}_precompact")
+      require(!fs.exists(aside),
+        s"$aside already exists — a prior rebuild/compact crashed " +
+          s"mid-swap; recover it manually before the $op")
+    }
+
+  /** Swap each table from `tmp` into `dir`, in order, `beforeSwap`
+    * between the first table's renames. A table's snapshot is the file
+    * list in `snapshots` (what a compaction read) or else listed here,
+    * under the held lock, where no append can land. A table with no
+    * live copy (a legacy index gaining one: rebuild is the upgrade
+    * path) lands with one checked rename. */
+  private[ops] def swapAll(
+      fs: FileSystem, dir: String, tmp: String, tables: Seq[String],
+      beforeSwap: () => Unit = () => (),
+      snapshots: Map[String, Seq[String]] = Map.empty): Unit =
+    tables.zipWithIndex.foreach { case (t, i) =>
+      val live = new Path(s"$dir/$t")
+      val built = new Path(s"$tmp/$t")
+      if (!fs.exists(live))
+        require(fs.rename(built, live),
+          s"rename $built -> $live failed; the rebuilt table is intact " +
+            "under the tmp dir")
+      else swapCompacted(fs, live, built,
+        snapshots.getOrElse(t, dataFiles(fs, live)).toSet,
+        if (i == 0) beforeSwap else () => ())
+    }
+
+  /** The compaction body, run under the held lock: refuse a crashed
+    * swap, snapshot every table's data files, give `rewrite` each
+    * table's snapshot rows (tombstoned rows purged) and the path to
+    * write its compacted copy to, swap every table against its
+    * snapshot, clear the tombstones, and bump the purge epoch if there
+    * were any. A table is purged on the tombstone column it carries:
+    * the id, or dedup's `fp` for its fingerprints. */
+  private[ops] def compactTables(
+      spark: SparkSession, fs: FileSystem, dir: String, tables: Seq[String])(
+      rewrite: (String, DataFrame, String) => Unit): Unit = {
+    refuseCrashed(fs, dir, tables, "compact")
+    val snapshots = tables.map { t =>
+      val files = dataFiles(fs, new Path(s"$dir/$t"))
+      require(files.nonEmpty, s"$dir/$t holds no data files — nothing to compact")
+      t -> files
+    }.toMap
+    val tombs = Tombstones.read(spark, dir)
+    val tmp = s"$dir/compact_tmp"
+    tables.foreach { t =>
+      val rows = spark.read.option("basePath", s"$dir/$t")
+        .parquet(snapshots(t).map(rel => s"$dir/$t/$rel"): _*)
+      val live = tombs.fold(rows) { ts =>
+        val key = ts.columns.filter(rows.columns.contains).toSeq match {
+          case Seq(k) => k
+          case ks => throw new IllegalStateException(
+            s"$dir/$t shares ${ks.size} columns with the tombstones " +
+              s"(${ks.mkString(", ")}); it must share exactly one")
+        }
+        rows.join(ts.select(key).na.drop(), Seq(key), "left_anti")
+      }
+      rewrite(t, live, s"$tmp/$t")
+    }
+    swapAll(fs, dir, tmp, tables, snapshots = snapshots)
+    fs.delete(Tombstones.path(dir), true)
+    if (tombs.isDefined) bumpPurgeEpoch(fs, new Path(dir))
+    fs.delete(new Path(tmp), true)
+  }
+
+  /** A wholesale rebuild: under the lock, `write` every table of
+    * `tables` (meta last) into the tmp dir it is given, then swap them
+    * all. The rebuilt state is canonical for the post-delete corpus,
+    * so the tombstones clear and the purge epoch is bumped (any shadow
+    * sidecar in flight is now stale). */
+  private[ops] def rebuildSwap[H](
+      fs: FileSystem, dir: String, tables: Seq[String], waitMs: Long,
+      beforeSwap: () => Unit)(write: String => H): H = {
+    val root = new Path(dir)
+    withCompactLock(fs, root, waitMs) {
+      refuseCrashed(fs, dir, tables, "rebuild")
+      val tmp = s"$dir/rebuild_tmp"
+      fs.delete(new Path(tmp), true)
+      val out = write(tmp)
+      swapAll(fs, dir, tmp, tables, beforeSwap)
+      fs.delete(Tombstones.path(dir), true)
+      bumpPurgeEpoch(fs, root)
+      fs.delete(new Path(tmp), true)
+      out
+    }
+  }
+
+  /** A non-blocking rebuild. The purge epoch is read BEFORE `source`'s
+    * file listing (a purge between the two would escape
+    * [[requireNoPurgeSince]]; the first call only supplies the
+    * session). Phase 1, UNLOCKED: `prepare` the snapshot (train models,
+    * if any) and `write` the full sidecar. Phase 2, LOCKED: the append
+    * delta — live, non-tombstoned ids of `idTable` the sidecar lacks —
+    * is resolved against a fresh `source()` (a thunk: a parquet read
+    * lists its files when created, so only a new read sees rows
+    * appended during phase 1), refused if any id is missing there,
+    * appended to the sidecar through the same `write`, `finish`ed
+    * (meta), and swapped. Tombstones are not cleared: a delete racing
+    * the pass keeps hiding its rows until the next compact. */
+  private[ops] def shadowRebuild[S, H](
+      source: () => DataFrame, dir: String, tables: Seq[String],
+      idCol: String, idTable: String, waitMs: Long,
+      beforeLock: () => Unit, beforeSwap: () => Unit)(
+      prepare: DataFrame => S)(
+      write: (S, DataFrame, String, String) => Unit,
+      finish: (S, String) => H): H = {
+    val spark = source().sparkSession
+    val fs = fsOf(spark)
+    val root = new Path(dir)
+    val epoch0 = purgeEpoch(fs, root)
+    val snapshot0 = source()
+    refuseCrashed(fs, dir, tables, "rebuild")
+    val tmp = s"$dir/shadow_tmp"
+    fs.delete(new Path(tmp), true) // a pre-lock crash's sidecar is inert
+    val state = prepare(snapshot0)
+    write(state, snapshot0, tmp, "overwrite")
+    beforeLock()
+    withCompactLock(fs, root, waitMs) {
+      requireNoPurgeSince(fs, root, epoch0, "rebuildShadow")
+      val id = col(idCol)
+      val delta = Tombstones.liveOnly(spark, dir, idCol,
+          spark.read.parquet(s"$dir/$idTable").select(id).distinct())
+        .join(spark.read.parquet(s"$tmp/$idTable").select(id).distinct(),
+          Seq(idCol), "left_anti")
+        .localCheckpoint(false) // feeds the count AND the semi-join
+      val nDelta = delta.count()
+      if (nDelta > 0L) {
+        val rows = source().join(delta, Seq(idCol), "left_semi")
+          .localCheckpoint(false) // feeds the resolve check AND the write
+        val nRows = rows.select(id).distinct().count()
+        require(nRows == nDelta,
+          s"rebuildShadow: ${nDelta - nRows} ids appended to the live " +
+            "index during the sidecar pass are missing from `source` — " +
+            "the index is derived state and every appended row must " +
+            "reach the source of truth; refusing to swap a table that " +
+            "would silently drop them")
+        write(state, rows, tmp, "append")
+      }
+      val out = finish(state, tmp)
+      swapAll(fs, dir, tmp, tables, beforeSwap)
+      fs.delete(new Path(tmp), true)
+      out
+    }
+  }
+
   /** Copy a table's committed data files into `dst` preserving the
     * relative layout (partition directories included), each leaf
     * prefixed so files from different sources never collide — the
@@ -368,6 +554,64 @@ private[graft] object Maintenance {
       require(org.apache.hadoop.fs.FileUtil.copy(fs, from, fs, to, false, conf),
         s"copy $from -> $to failed")
     }
+
+  /** Shared prologue for the cross-index operators
+    * ([[crossFsck]]/[[reconcileTombstones]]): load the handles,
+    * derive the ANN code table's id column (its first non-layout
+    * field — the AnnIndex write contract: id first, then
+    * cell/codes/attrs), and require the three indexes agree on it
+    * (a co-written trio screens and forgets ONE key). Returns the id
+    * column plus BOTH loaded handles, so callers never pay a second
+    * meta read for state this prologue already opened. */
+  private def loadTrioIdCol(
+      spark: SparkSession,
+      dedupDir: String, bm25Dir: String, annDir: String, what: String)
+      : (String, DedupIndex.Handle, Bm25Index.Handle) = {
+    val dedupH = DedupIndex.load(spark, dedupDir)
+    val bm25H = Bm25Index.load(spark, bm25Dir)
+    val annId = spark.read.parquet(s"$annDir/codes").schema.fieldNames
+      .filterNot(f => f == "cell" || f.startsWith("code_")).head
+    require(dedupH.idCol == bm25H.idCol && bm25H.idCol == annId,
+      s"$what: the indexes disagree on the id column " +
+        s"(dedup '${dedupH.idCol}', bm25 '${bm25H.idCol}', ann '$annId') " +
+        "— a co-written trio screens and forgets one key")
+    (dedupH.idCol, dedupH, bm25H)
+  }
+
+  /** Driver-side read of a ONE-ROW Spark-written JSON meta directory
+    * (`coalesce(1).write.json(dir)` layout: one `part-*` line file +
+    * `_SUCCESS`). The metas are ~100-byte single-line files; reading
+    * them through `spark.read.json` costs TWO cluster jobs per load
+    * (schema inference + collect), which every probe/audit pays on its
+    * handle open — at any scale this is driver metadata, not data.
+    * Returns the row as a Jackson node; callers check field presence
+    * for the back-compat defaults exactly as they did on the inferred
+    * schema. */
+  private[ops] def readMetaRow(
+      spark: SparkSession, dir: String): com.fasterxml.jackson.databind.JsonNode = {
+    val fs = fsOf(spark)
+    val files = fs.listStatus(new Path(dir)).iterator
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(_.getPath).toSeq
+    val lines = files.flatMap { f =>
+      val in = fs.open(f)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.trim).filter(_.nonEmpty).toList
+      finally in.close()
+    }
+    require(lines.length == 1, s"$dir must hold exactly one row")
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+  }
+
+  /** One index's tombstoned ids (NOT distinct'd — every consumer is a
+    * [[membershipFlags]] groupBy, which dedupes as part of its one
+    * exchange), or an id-typed EMPTY frame (from `proto`) when no side
+    * table exists. */
+  private def tombstoneIdsOf(
+      spark: SparkSession, dir: String, idc: String, proto: DataFrame): DataFrame =
+    Tombstones.read(spark, dir)
+      .map(_.select(col(idc)))
+      .getOrElse(proto.select(col(idc)).limit(0))
 
   /** Cross-index lifecycle audit over the three standing indexes a
     * unified ingest co-writes ([[graft.streaming.CurationIngest]]:
@@ -396,80 +640,15 @@ private[graft] object Maintenance {
     *
     * All three indexes must agree on the id column name — co-written
     * indexes screen and forget the same key. */
-  /** Shared prologue for the cross-index operators
-    * ([[crossFsck]]/[[reconcileTombstones]]): load the handles,
-    * derive the ANN code table's id column (its first non-layout
-    * field — the AnnIndex write contract: id first, then
-    * cell/codes/attrs), and require the three indexes agree on it
-    * (a co-written trio screens and forgets ONE key). Returns the id
-    * column plus BOTH loaded handles, so callers never pay a second
-    * meta read for state this prologue already opened. */
-  private def loadTrioIdCol(
-      spark: org.apache.spark.sql.SparkSession,
-      dedupDir: String, bm25Dir: String, annDir: String, what: String)
-      : (String, DedupIndex.Handle, Bm25Index.Handle) = {
-    val dedupH = DedupIndex.load(spark, dedupDir)
-    val bm25H = Bm25Index.load(spark, bm25Dir)
-    val annId = spark.read.parquet(s"$annDir/codes").schema.fieldNames
-      .filterNot(f => f == "cell" || f.startsWith("code_")).head
-    require(dedupH.idCol == bm25H.idCol && bm25H.idCol == annId,
-      s"$what: the indexes disagree on the id column " +
-        s"(dedup '${dedupH.idCol}', bm25 '${bm25H.idCol}', ann '$annId') " +
-        "— a co-written trio screens and forgets one key")
-    (dedupH.idCol, dedupH, bm25H)
-  }
-
-  /** Driver-side read of a ONE-ROW Spark-written JSON meta directory
-    * (`coalesce(1).write.json(dir)` layout: one `part-*` line file +
-    * `_SUCCESS`). The metas are ~100-byte single-line files; reading
-    * them through `spark.read.json` costs TWO cluster jobs per load
-    * (schema inference + collect), which every probe/audit pays on its
-    * handle open — at any scale this is driver metadata, not data.
-    * Returns the row as a Jackson node; callers check field presence
-    * for the back-compat defaults exactly as they did on the inferred
-    * schema. */
-  private[ops] def readMetaRow(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : com.fasterxml.jackson.databind.JsonNode = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new Path(dir)).iterator
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath).toSeq
-    val lines = files.flatMap { f =>
-      val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    }
-    require(lines.length == 1, s"$dir must hold exactly one row")
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
-  }
-
-  /** One index's tombstoned ids (NOT distinct'd — every consumer is a
-    * [[membershipFlags]] groupBy, which dedupes as part of its one
-    * exchange), or an id-typed EMPTY frame (from `proto`) when no side
-    * table exists. */
-  private def tombstoneIdsOf(
-      spark: org.apache.spark.sql.SparkSession, dir: String, idc: String,
-      proto: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    Tombstones.read(spark, dir)
-      .map(_.select(col(idc)))
-      .getOrElse(proto.select(col(idc)).limit(0))
-  }
-
   def crossFsck(
-      spark: org.apache.spark.sql.SparkSession,
-      dedupDir: String, bm25Dir: String, annDir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+      spark: SparkSession,
+      dedupDir: String, bm25Dir: String, annDir: String): DataFrame = {
     import spark.implicits._
     val (idc, _, bm25H) = loadTrioIdCol(spark, dedupDir, bm25Dir, annDir,
       "crossFsck")
     // NOT distinct'd here: the membership groupBy below dedupes each
     // stream as part of its one exchange
-    def liveIds(raw: org.apache.spark.sql.DataFrame, dir: String) =
+    def liveIds(raw: DataFrame, dir: String) =
       Tombstones.liveOnly(spark, dir, idc, raw.select(col(idc)))
     val dedupIds = liveIds(
       spark.read.parquet(s"$dedupDir/signatures"), dedupDir)
@@ -483,7 +662,7 @@ private[graft] object Maintenance {
     // unchanged: a live count is a flag sum, an A-not-B count is a
     // flag-pair sum over the same distinct id sets.
     val m = membershipFlags(idc, Seq(dedupIds, bm25Ids, annIds))
-    def cnt(c: org.apache.spark.sql.Column) =
+    def cnt(c: Column) =
       coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     val d = col("__m0"); val b = col("__m1"); val a = col("__m2")
     val live = m.agg(
@@ -520,16 +699,57 @@ private[graft] object Maintenance {
     * itself is ONE exchange (tagged union + groupBy, which also
     * subsumes each input's distinct) instead of n distincts + n−1
     * full-outer joins. */
-  private def membershipFlags(
-      idc: String, sets: Seq[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, max, when}
+  private def membershipFlags(idc: String, sets: Seq[DataFrame]): DataFrame = {
     val tagged = sets.zipWithIndex
       .map { case (df, i) => df.select(col(idc), lit(i).as("__src")) }
       .reduce(_ unionByName _)
     val aggs = sets.indices.map(i =>
       max(when(col("__src") === i, true).otherwise(false)).as(s"__m$i"))
     tagged.groupBy(col(idc)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Trio compaction under ONE handshake — the deployment loop's
+    * maintenance pass (the LifecycleDemo sequence, productized): all
+    * THREE compaction locks are taken up front (dedup → bm25 → ann,
+    * a fixed order so two trio compactors can never deadlock), a
+    * [[crossFsck]] snapshots the pre-compact state, each index's
+    * compact body runs under its already-held lock, and a second
+    * [[crossFsck]] verifies the healed trio BEFORE any lock releases
+    * — no ingest or forget trigger can interleave between the three
+    * compacts, so the post report describes the compacted trio, not
+    * a moving target (three separate `compact()` calls leave two
+    * windows where a trigger lands in some indexes but not others,
+    * and the closing audit chases a moving id set). Emits the two
+    * reports as one `(check, value)` frame with `pre_`/`post_`
+    * prefixes; on a healthy trio every `post_*_drift`/`*_not_*`/
+    * `post_tombstone_disagreements` row is 0 and the live counts
+    * equal the metas. Crash/lock posture per index is unchanged —
+    * each body is the same code `compact()` runs. */
+  def compactTrio(
+      spark: SparkSession,
+      dedupDir: String, bm25Dir: String, annDir: String,
+      waitForAppendsMs: Long = 60000L): DataFrame = {
+    import spark.implicits._
+    val (_, dedupH, bm25H) = loadTrioIdCol(spark, dedupDir, bm25Dir, annDir,
+      "compactTrio")
+    val annH = AnnIndex.load(spark, annDir)
+    val fs = fsOf(spark)
+    // the three locks nest in a fixed order, so two trio compactors
+    // can never deadlock; the report is taken before any releases
+    def underLocks(dirs: List[String]): (Array[Row], Array[Row]) = dirs match {
+      case d :: rest =>
+        withCompactLock(fs, new Path(d), waitForAppendsMs)(underLocks(rest))
+      case Nil =>
+        val pre = crossFsck(spark, dedupDir, bm25Dir, annDir).collect()
+        DedupIndex.compactLocked(spark, dedupH, fs)
+        Bm25Index.compactLocked(spark, bm25H, fs)
+        AnnIndex.compactLocked(spark, annH, fs)
+        (pre, crossFsck(spark, dedupDir, bm25Dir, annDir).collect())
+    }
+    val (pre, post) = underLocks(List(dedupDir, bm25Dir, annDir))
+    (pre.map(r => ("pre_" + r.getString(0), r.getLong(1))) ++
+      post.map(r => ("post_" + r.getString(0), r.getLong(1))))
+      .toSeq.toDF("check", "value")
   }
 
   /** The repair half of [[crossFsck]]'s `tombstone_disagreements`:
@@ -557,68 +777,20 @@ private[graft] object Maintenance {
     * gap). Cost shape: three tombstone-table reads + id-keyed
     * anti-joins + three deletes over the MISSING ids only — deletion
     * lists, never corpus-scaled. */
-  /** Trio compaction under ONE handshake — the deployment loop's
-    * maintenance pass (the LifecycleDemo sequence, productized): all
-    * THREE compaction locks are taken up front (dedup → bm25 → ann,
-    * a fixed order so two trio compactors can never deadlock), a
-    * [[crossFsck]] snapshots the pre-compact state, each index's
-    * compact body runs under its already-held lock, and a second
-    * [[crossFsck]] verifies the healed trio BEFORE any lock releases
-    * — no ingest or forget trigger can interleave between the three
-    * compacts, so the post report describes the compacted trio, not
-    * a moving target (three separate `compact()` calls leave two
-    * windows where a trigger lands in some indexes but not others,
-    * and the closing audit chases a moving id set). Emits the two
-    * reports as one `(check, value)` frame with `pre_`/`post_`
-    * prefixes; on a healthy trio every `post_*_drift`/`*_not_*`/
-    * `post_tombstone_disagreements` row is 0 and the live counts
-    * equal the metas. Crash/lock posture per index is unchanged —
-    * each body is the same code `compact()` runs. */
-  def compactTrio(
-      spark: org.apache.spark.sql.SparkSession,
-      dedupDir: String, bm25Dir: String, annDir: String,
-      waitForAppendsMs: Long = 60000L): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val (_, dedupH, bm25H) = loadTrioIdCol(spark, dedupDir, bm25Dir, annDir,
-      "compactTrio")
-    val annH = AnnIndex.load(spark, annDir)
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val roots = Seq(dedupDir, bm25Dir, annDir).map(new Path(_))
-    var held: List[Path] = Nil
-    val (pre, post) = try {
-      roots.foreach { p =>
-        acquireCompactLock(fs, p, waitForAppendsMs)
-        held ::= p
-      }
-      val pre = crossFsck(spark, dedupDir, bm25Dir, annDir).collect()
-      DedupIndex.compactLocked(spark, dedupH, fs)
-      Bm25Index.compactLocked(spark, bm25H, fs)
-      AnnIndex.compactLocked(spark, annH, fs)
-      val post = crossFsck(spark, dedupDir, bm25Dir, annDir).collect()
-      (pre, post)
-    } finally held.foreach(releaseCompactLock(fs, _))
-    (pre.map(r => ("pre_" + r.getString(0), r.getLong(1))) ++
-      post.map(r => ("post_" + r.getString(0), r.getLong(1))))
-      .toSeq.toDF("check", "value")
-  }
-
   def reconcileTombstones(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       dedupDir: String, bm25Dir: String, annDir: String,
-      docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+      docs: DataFrame): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{coalesce, count, countDistinct, lit, sum, when}
     val (idc, dedupH, bm25H) = loadTrioIdCol(spark, dedupDir, bm25Dir, annDir,
       "reconcileTombstones")
     require(docs.columns.contains(idc) && docs.columns.contains("text"),
       s"reconcileTombstones: docs must carry '$idc' and 'text', " +
         s"has ${docs.columns.mkString(", ")}")
     val proto = spark.read.parquet(s"$dedupDir/signatures")
-    def flags(): org.apache.spark.sql.DataFrame = membershipFlags(idc,
+    def flags(): DataFrame = membershipFlags(idc,
       Seq(dedupDir, bm25Dir, annDir).map(tombstoneIdsOf(spark, _, idc, proto)))
-    def cnt(c: org.apache.spark.sql.Column) =
+    def cnt(c: Column) =
       coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     // ONE flagged union frame (checkpointed: it feeds the report
     // aggregate, all three delete inputs, and the added-per-index
@@ -638,7 +810,10 @@ private[graft] object Maintenance {
     // (added_* = 0, unresolvable = 0, post_disagreements = union −
     // all-three) instead of re-deriving it through three no-op delete
     // chains and a second membership aggregate — the reconcile loop is
-    // idempotent by contract and its steady state IS this branch.
+    // idempotent by contract and its steady state IS this branch. Every
+    // delete records through Tombstones.record, which writes nothing
+    // for an already-tombstoned id; CurationIngestSpec's reconcile test
+    // replays all three deletes on a reconciled trio and pins that.
     if (pre.getLong(1) == 0L && pre.getLong(2) == 0L && pre.getLong(3) == 0L)
       return Seq(
         ("union_tombstones", nUnion),
@@ -702,9 +877,8 @@ private[ops] object Tombstones {
   def path(indexDir: String): Path = new Path(s"$indexDir/tombstones")
 
   /** The tombstone frame if the side table exists RIGHT NOW. */
-  def read(spark: org.apache.spark.sql.SparkSession, indexDir: String)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  def read(spark: SparkSession, indexDir: String): Option[DataFrame] = {
+    val fs = Maintenance.fsOf(spark)
     if (fs.exists(path(indexDir))) Some(spark.read.parquet(path(indexDir).toString))
     else None
   }
@@ -712,27 +886,44 @@ private[ops] object Tombstones {
   /** The probe-side filter: anti-join `idCol` against the live
     * tombstones — no read and no join node while none exist. */
   def liveOnly(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      idCol: String, rows: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+      spark: SparkSession, indexDir: String,
+      idCol: String, rows: DataFrame): DataFrame =
     read(spark, indexDir) match {
       case None => rows
-      case Some(ts) =>
-        rows.join(ts.select(org.apache.spark.sql.functions.col(idCol)),
-          Seq(idCol), "left_anti")
+      case Some(ts) => rows.join(ts.select(col(idCol)), Seq(idCol), "left_anti")
     }
+
+  /** The delete-side write, run inside the caller's append marker:
+    * the rows of `rows` whose `idCol` is not tombstoned yet are
+    * materialized ONCE, eagerly, so every later read of them — the
+    * caller's `decide` (an emptiness check, or stats over them) and the
+    * append — sees one snapshot. `decide` returning `None` records
+    * nothing: a replayed (or empty) request writes no file, so it never
+    * creates an empty side table that would switch every probe's
+    * anti-join on for nothing. */
+  def record[T](
+      spark: SparkSession, indexDir: String, idCol: String, rows: DataFrame)(
+      decide: DataFrame => Option[T]): Option[T] = {
+    val fresh = liveOnly(spark, indexDir, idCol, rows).localCheckpoint(true)
+    val out = decide(fresh)
+    if (out.isDefined) fresh.write.mode("append").parquet(path(indexDir).toString)
+    out
+  }
+
+  /** `record`'s decision for an index without tombstone-dependent stats. */
+  def nonEmpty(fresh: DataFrame): Option[Unit] =
+    if (fresh.isEmpty) None else Some(())
 
   /** The append-side guard: a tombstoned id must not be re-added
     * before compact — its new rows would be hidden from every probe
     * by the anti-join and then PURGED by the next compact; refuse
     * loudly instead of losing the doc silently. */
   def refuseReAdd(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      idCol: String, slice: org.apache.spark.sql.DataFrame): Unit =
+      spark: SparkSession, indexDir: String,
+      idCol: String, slice: DataFrame): Unit =
     read(spark, indexDir).foreach { ts =>
-      val hit = slice.select(org.apache.spark.sql.functions.col(idCol))
-        .join(ts.select(org.apache.spark.sql.functions.col(idCol)),
-          Seq(idCol), "left_semi")
+      val hit = slice.select(col(idCol))
+        .join(ts.select(col(idCol)), Seq(idCol), "left_semi")
         .limit(1).collect()
       require(hit.isEmpty,
         s"append: the slice re-adds id '${hit.head.get(0)}' which is " +

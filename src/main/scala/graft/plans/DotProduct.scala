@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * runs INTERPRETED: Spark's higher-order array functions don't take
   * part in whole-stage codegen, so each of the 64 elements pays lambda
   * dispatch and boxing per row (the same effect measured in the
-  * minhash A/B — tools/ProfileMinhash). This expression generates a
+  * minhash A/B). This expression generates a
   * straight `for` loop over the unsafe array data.
   *
   * Semantics match the fold bit for bit: left-to-right accumulation

@@ -1,12 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.{SparkSpec, TestSpark}
 import graft.io.LoadGtfs
 
@@ -15,32 +8,6 @@ import graft.io.LoadGtfs
   * does not depend on the host, so a budget catches an overhead
   * regression that a noisy timing would hide. */
 class JobBudgetSpec extends SparkSpec {
-
-  /** `f`'s result and the description of every Spark job it launched.
-    * Jobs are told apart by a local property set on this thread only,
-    * which Spark SQL carries into its broadcast and subquery threads, so
-    * jobs of other threads are not counted. */
-  private def jobsDuring[T](f: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobBudget"
-    val token = java.util.UUID.randomUUID().toString
-    val descriptions = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == token)
-          descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, token)
-    try {
-      val out = f
-      ListenerBusAccess.drain(sc)
-      (out, descriptions.asScala.toSeq)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Measured 26 jobs on Spark 4.1.2 with 4 shuffle partitions (seven key-frame checkpoints and the broadcast
     * and shuffle stages Spark runs as jobs of their own); the seven

@@ -5195,6 +5195,17 @@ class OpsSpec extends SparkSpec {
       assert(intercept[Exception](Bm25Index.topKWeighted(spark, h,
           Seq(("alpha", 0L)).toDF("term", "weight_q"), k = 3)
         .collect()).getMessage.contains("positive"))
+      // the LocalRelation fast path and the in-plan path reject the same
+      // weights: a NULL weight_q, and a fractional one whose long cast is 0
+      Seq(Seq(("alpha", null: java.lang.Double)), Seq(("alpha", 0.5: java.lang.Double)))
+        .foreach { w =>
+          val local = w.toDF("term", "weight_q")
+          Seq(local, local.repartition(2)).foreach { df =>
+            val e = intercept[Exception](
+              Bm25Index.topKWeighted(spark, h, df, k = 3).collect())
+            assert(e.getMessage.contains("positive"), s"$w: ${e.getMessage}")
+          }
+        }
     } finally {
       val root = java.nio.file.Path.of(dir)
       java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -438,6 +440,28 @@ class CurationIngestSpec extends SparkSpec {
     assert(r4 == Map("union_tombstones" -> 2L, "added_dedup" -> 0L,
       "added_bm25" -> 0L, "added_ann" -> 0L, "dedup_unresolvable" -> 0L,
       "post_disagreements" -> 0L), r4.toString)
+    // the short-circuit's contract: on a reconciled trio every index's
+    // delete is a strict no-op. Replaying each one with the full union
+    // writes no tombstone file and no meta byte, and the report stays
+    // the short-circuit's
+    def written(): Map[String, Seq[Byte]] = Seq("dedup/tombstones",
+        "bm25/tombstones", "ann/tombstones", "dedup/meta", "bm25/meta")
+      .flatMap { d =>
+        scala.util.Using.resource(java.nio.file.Files.walk(
+            java.nio.file.Path.of(s"$root/$d"))) { paths =>
+          paths.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+            .map(p => p.toString -> java.nio.file.Files.readAllBytes(p).toSeq)
+            .toList
+        }
+      }.toMap
+    val before = written()
+    val union = docs.filter(col("doc_id").isin(1L, 2L))
+    DedupIndex.delete(DedupIndex.load(spark, s"$root/dedup"), union)
+    Bm25Index.delete(Bm25Index.load(spark, s"$root/bm25"), union.select("doc_id"))
+    AnnIndex.delete(AnnIndex.load(spark, s"$root/ann"), union.select("doc_id"),
+      "doc_id")
+    assert(written() == before, "a replayed delete wrote to an index")
+    assert(reconcile(docs) == r4)
   }
 
   test("rebuildShadow x live ingest: REPEATED triggers across the retrain/catch-up/swap timeline keep the clean-build equality") {

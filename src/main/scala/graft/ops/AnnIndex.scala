@@ -738,8 +738,9 @@ object AnnIndex {
     * [[query]]'s. Ranking is a query-partitioned window over
     * candidate rows only. Emits `(query_id, neighbor_id, pq_dist,
     * rank)`, ranks 1..k by (pq_dist asc, id); a query row present in
-    * the corpus ranks itself (vector semantics, as [[query]] does). */
-  /** `attrEquals = Some((attrCol, queryCol))` is the PER-QUERY
+    * the corpus ranks itself (vector semantics, as [[query]] does).
+    *
+    * `attrEquals = Some((attrCol, queryCol))` is the PER-QUERY
     * metadata filter of multi-tenant batched retrieval (the shared
     * `filter` predicate applies one condition to the whole batch;
     * this one lets every query row carry its own): a candidate

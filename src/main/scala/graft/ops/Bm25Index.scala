@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent lexical (BM25) retrieval index: the production form of
@@ -45,6 +46,57 @@ import org.apache.spark.sql.functions._
   *    never maintain a df table and df is always in sync with the
   *    postings actually scored.
   *
+  * ==Probes==
+  * Ten probes read the postings: [[topK]], [[phraseTopK]],
+  * [[snippetTopK]], [[proximityTopK]], [[bm25fTopK]] and [[rm3Expand]]
+  * take one query; [[topKBatch]], [[phraseTopKBatch]] and
+  * [[snippetTopKBatch]] take a query table; [[topKWeighted]] takes a
+  * weight table of either kind. Each probe is its input guards plus
+  * scorer parameters over one of two cores:
+  *
+  *  - the '''single-query core''' serves driver-resident terms (at most
+  *    [[MaxQueryTerms]]): bucket ids hash on the driver
+  *    ([[engineBucketOf]]), one pruned read takes the terms' (and
+  *    fields') postings minus tombstoned docs, df rides the same plan,
+  *    one pivot lays the per-term tf, positions and df out as columns
+  *    in query-term order, and the plan ends in one
+  *    TakeOrderedAndProject;
+  *  - the '''batch core''' serves a query table with an unbounded term
+  *    universe: the NULL/lowercase term guards run in-plan, bucket ids
+  *    are one collect bounded by `numBuckets`, the terms semi-join the
+  *    postings, the slice is checkpointed once for df and the
+  *    candidates, df stays a DataFrame, and a qid-partitioned window
+  *    ranks each query's candidates — no global sort.
+  *
+  * A single query is not run as a batch of one: that adds a
+  * query-table checkpoint, a bucket collect and a window — three more
+  * Spark jobs per probe, and at probe latency the job count is the
+  * cost — and it would lose [[topK]]'s raw-double parity with
+  * [[Retrieval.bm25TopK]].
+  *
+  * Conventions every probe shares:
+  *  - `docFilter` is a frame carrying the handle's id column whose rows
+  *    are the QUALIFYING docs (the caller applies arbitrary predicates
+  *    to their attribute table and passes the id projection). It
+  *    restricts the CANDIDATES only, as a semi-join on the pruned
+  *    slice: N, avgdl and df stay corpus-wide, so a qualifying doc's
+  *    score is bit-identical to its unfiltered score and pagination and
+  *    cross-filter comparison stay coherent. Catalyst broadcasts
+  *    whichever join side is small.
+  *  - df(term) counts DISTINCT documents over the unrestricted slice: a
+  *    multi-field doc matching in two fields counts once.
+  *  - Replay duplicates collapse. An at-least-once replayed [[append]]
+  *    lays bit-identical posting rows; every probe collapses them (max
+  *    or set, never a plain sum), so until [[compact]] reclaims the rows
+  *    no probe's answer changes.
+  *  - Scores are raw doubles where [[topK]]'s parity with
+  *    [[Retrieval.bm25TopK]] reaches ([[topK]], [[phraseTopK]],
+  *    [[snippetTopK]], and [[bm25fTopK]]'s cross-term sum); elsewhere
+  *    each per-term score is quantized to `round(s·2²⁰)` and summed as
+  *    exact BIGINTs — order-free and bit-identical on any partitioning
+  *    (a float sum across a query's terms would re-associate by row
+  *    layout).
+  *
   * Scoring is bit-identical to [[Retrieval.scoreWith]]: the same
   * Robertson idf spelled over the same integers, the same polynomial
   * in the same association order, per-term columns added left-to-right
@@ -55,8 +107,8 @@ import org.apache.spark.sql.functions._
   * Concurrency: appends and compaction coordinate through the
   * `_compact.lock` / `_appending.*` handshake ([[Maintenance]]).
   * Appends are the single-ingest-driver loop (the [[DedupIndex]]
-  * contract): a REPLAYED append re-adds identical posting rows —
-  * duplicates inflate that term's derived df and double-count the
+  * contract): a REPLAYED append re-adds identical posting rows — the
+  * probes collapse them, but they cost bytes and double-count the
   * replayed docs in `meta` until [[compact]] collapses the rows and
   * recounts the stats from the deduplicated doclens (the same
   * "cost bytes and slots until compact" posture as the other two
@@ -136,89 +188,6 @@ object Bm25Index {
     tv.repartition(col("doc_bucket")).sortWithinPartitions(idCol)
       .write.mode(mode).partitionBy("doc_bucket").parquet(path)
 
-  /** Collapse a pruned postings slice to one `(term, doc, n_tok, tf)`
-    * row per key — the classic-BM25 "concatenated document" view
-    * shared by [[topK]]/[[topKBatch]]/[[topKWeighted]], and the ONE
-    * place the pre-compact duplicate-row semantics of an
-    * at-least-once replayed [[append]] are decided for that family: a
-    * replayed append lays bit-identical posting rows, so duplicates
-    * must collapse (never a plain `sum`, which would double the doc's
-    * tf until [[compact]]) while the real v2 across-FIELDS total still
-    * sums. ONE shuffle either way: single-field slices (and v1) take
-    * `max` per (term, doc); multi-field slices collect the (field, tf)
-    * pairs as a SET — bit-identical replayed rows collapse in the set,
-    * two distinct fields always form distinct structs — and fold the
-    * across-field sum per-row (exact long addition, order-free). On a
-    * clean index both shapes aggregate the same rows the old two-level
-    * max-then-sum did — values, and therefore scores, bit-identical.
-    * Neither shape reads `positions`, so the scan stays narrow. */
-  private def collapseTf(handle: Handle, raw: DataFrame): DataFrame = {
-    val nFields =
-      if (handle.fields.nonEmpty) handle.fields.size else 1
-    if (handle.version >= 2 && nFields > 1)
-      raw.groupBy(col("term"), col(handle.idCol), col("n_tok"))
-        .agg(collect_set(struct(col("field"), col("tf"))).as("__fs"))
-        .select(col("term"), col(handle.idCol), col("n_tok"),
-          aggregate(col("__fs"), lit(0L),
-            (acc, x) => acc + x.getField("tf")).as("tf"))
-    else
-      // one row per (term, doc) on a clean index — max collapses
-      // replay duplicates and equals the row's tf
-      raw.groupBy(col("term"), col(handle.idCol), col("n_tok"))
-        .agg(max(col("tf")).as("tf"))
-  }
-
-  /** The metadata-filter convention EVERY probe shares (see [[topK]]'s
-    * scaladoc for the full rationale): `docFilter` is a frame of
-    * QUALIFYING doc ids — the caller applies arbitrary predicates to
-    * their attribute table and passes the id projection — and it
-    * restricts the CANDIDATE set only, as a semi-join on the
-    * already-pruned slice. Collection statistics (N, avgdl, df)
-    * deliberately stay corpus-wide, so a qualifying doc's score is
-    * bit-identical to its unfiltered score; callers compute df BEFORE
-    * applying this. */
-  private def restrict(
-      handle: Handle, rows: DataFrame,
-      docFilter: Option[DataFrame]): DataFrame =
-    docFilter match {
-      case None => rows
-      case Some(f) =>
-        require(f.columns.contains(handle.idCol),
-          s"docFilter must carry '${handle.idCol}', " +
-            s"has ${f.columns.mkString(", ")}")
-        rows.join(f.select(col(handle.idCol)), Seq(handle.idCol), "left_semi")
-    }
-
-  /** Per-term document frequency attached IN-PLAN: `rows` gains a
-    * pivotable `__df` column — the distinct-doc count of its term over
-    * the (unrestricted) pruned slice, the [[collapseTf]] pre-compact
-    * convention. Replaces the probes' separate driver `.collect()` of
-    * a df map: one Spark action and one slice re-scan fewer per probe
-    * (the df aggregate rides the SAME plan and AQE reuses the slice's
-    * exchange), and the per-term idf literals become per-term pivoted
-    * columns carrying the identical BIGINT df — scores are
-    * bit-identical (same Long df, same double arithmetic in the same
-    * order). */
-  private def withDfColumn(rows: DataFrame, idCol: String): DataFrame =
-    rows.join(
-      rows.groupBy("term").agg(countDistinct(col(idCol)).as("__df")),
-      Seq("term"))
-
-  /** The Robertson idf over an in-plan per-term df column — the exact
-    * column form of the old driver literal
-    * `log(1 + (N - df + 0.5)/(df + 0.5))` (Long subtraction, then the
-    * double cast, then + 0.5, matching Scala's left-to-right literal
-    * evaluation bit-for-bit). `dfI` NULL (term absent from the pruned
-    * slice, or absent from THIS doc's pivot group) coalesces to 0 —
-    * those rows' tf is 0/NULL so the term contributes exactly 0 either
-    * way, as with the old global literal. */
-  private def idfOf(nDocs: Long, dfI: Column): Column = {
-    val dfc = coalesce(dfI, lit(0L))
-    val num = (lit(nDocs) - dfc).cast("double") + lit(0.5)
-    val den = dfc.cast("double") + lit(0.5)
-    log(lit(1.0) + num / den)
-  }
-
   /** Driver-side bucket ids for the query's terms, computed by the
     * ENGINE's own murmur3 so the probe's pruning predicate can never
     * drift from the hash the build wrote. Evaluates the SAME catalyst
@@ -233,10 +202,6 @@ object Bm25Index {
     val m = h % numBuckets
     if (m < 0) m + numBuckets else m
   }
-
-  private def bucketsFor(
-      spark: SparkSession, terms: Seq[String], numBuckets: Int): Seq[Int] =
-    terms.map(engineBucketOf(_, numBuckets))
 
   /** v2 stat frames. Postings: one row per (term, field, doc) with
     * `tf`, sorted 0-based `positions`, the doc's field length
@@ -730,603 +695,6 @@ object Bm25Index {
       version, fields, fieldTokens, nTombstones)
   }
 
-  /** Index-backed BM25 top-k — result-identical to
-    * [[Retrieval.bm25TopK]] over the same corpus, but the work is
-    * proportional to the QUERY TERMS' postings, never the corpus:
-    * one partition-pruned scan for the per-term document frequencies
-    * (a term-count-sized collect under [[MaxQueryTerms]]), one more
-    * for the candidate rows, a doc-keyed pivot aggregate over the
-    * candidates only, and TakeOrderedAndProject.
-    *
-    * `docFilter` is the metadata predicate of production retrieval
-    * ("top-k where lang = 'en'" — [[AnnIndex.query]]'s `filter` is the
-    * vector twin): a frame carrying the handle's id column whose rows
-    * are the QUALIFYING docs (the caller applies arbitrary predicates
-    * to their attribute table and passes the id projection). The k
-    * results are the k best qualifying docs — post-filtering an
-    * unfiltered top-k would surface fewer. Collection statistics
-    * (N, avgdl, df) deliberately stay CORPUS-wide: idf describes the
-    * collection, not the filtered slice (the IR convention — scores of
-    * qualifying docs are bit-identical to their unfiltered scores, so
-    * pagination and cross-filter score comparison stay coherent). The
-    * join is candidate-slice × id-projected filter scan: the filter
-    * side's predicate and projection push down to ITS source, and the
-    * slice side is query-term-bounded — Catalyst broadcasts whichever
-    * side is small (an allowlist broadcasts; a corpus-scaled attribute
-    * scan shuffles only the slice's ids against it). */
-  def topK(
-      spark: SparkSession, handle: Handle, queryTerms: Seq[String],
-      k: Int = 10, k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB,
-      docFilter: Option[DataFrame] = None): DataFrame = {
-    require(queryTerms.nonEmpty, "topK needs at least one query term")
-    require(queryTerms.size <= MaxQueryTerms,
-      s"at most $MaxQueryTerms query terms (driver-resident per-term stats), " +
-        s"got ${queryTerms.size}")
-    require(queryTerms.forall(t => t == t.toLowerCase),
-      s"query terms must be lowercase (documents are lowercased before matching): " +
-        queryTerms.filterNot(t => t == t.toLowerCase).mkString(", "))
-    require(queryTerms.distinct.size == queryTerms.size,
-      s"query terms must be distinct: $queryTerms")
-    require(handle.nDocs > 0, "topK over an empty index")
-    val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val raw = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(queryTerms: _*)))
-    // df(term) == distinct docs in the pruned slice (== posting-row
-    // count on v1/single-field; a multi-field doc matching in two
-    // fields must still count once) — the [[collapseTf]] pre-compact
-    // convention (see phraseTopK), attached IN-PLAN ([[withDfColumn]])
-    // instead of a per-probe driver collect
-    val pruned = withDfColumn(collapseTf(handle, raw), handle.idCol)
-    val avgdl = handle.totalTokens.toDouble / handle.nDocs.toDouble
-    val id = col(handle.idCol)
-    // the metadata predicate restricts CANDIDATES only — df above is
-    // deliberately computed over the unfiltered slice (see scaladoc)
-    val candidates = restrict(handle, pruned, docFilter)
-    // pivot each term's tf (and its df) to its own column so the
-    // per-term scores add LEFT-TO-RIGHT in query-term order —
-    // bit-identical to Retrieval.scoreWith's column reduce,
-    // independent of row layout
-    val pivoted = candidates.groupBy(id, col("n_tok")).agg(
-      max(when(col("term") === queryTerms.head, col("tf"))).as("__tf0"),
-      (queryTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("tf"))).as(s"__tf$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val perTerm = queryTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tf = coalesce(col(s"__tf$i").cast("double"), lit(0.0))
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("n_tok").cast("double") / lit(avgdl)))
-    }
-    pivoted.select(id, col("n_tok"), perTerm.reduce(_ + _).as("score"))
-      .filter(col("score") > 0.0)
-      .orderBy(col("score").desc, id)
-      .limit(k)
-  }
-
-  /** Batched BM25 top-k — the RAG evaluation shape: thousands of
-    * queries amortize ONE pruned pass over the index instead of one
-    * probe each. `queries` carries `(qidCol, termsCol: array<string>)`
-    * with no bound on the query count or the term universe:
-    * bucket pruning comes from the DISTINCT BUCKETS of the batch's
-    * terms (a collect bounded by `numBuckets`, never by the terms),
-    * the term restriction is a semi-join (broadcast when the batch is
-    * small), per-term df stays a DataFrame (never collected), and the
-    * per-query ranking is a qid-PARTITIONED window over candidate
-    * rows only — no global sort, no driver-resident query state.
-    *
-    * Scores are emitted in the library's exact-integer convention:
-    * each (query, doc, term) score quantizes to `round(s·2²⁰)` and
-    * `score_q` is their BIGINT sum — order-free, bit-identical on any
-    * partitioning (a float sum across a query's terms would
-    * re-associate by row layout). [[topK]] keeps raw doubles for
-    * bit-parity with [[Retrieval.bm25TopK]]; the two conventions
-    * agree on ranking to 2⁻²⁰ resolution. Duplicate terms collapse
-    * per qid — within an array AND across rows sharing the qid (BM25
-    * scores term presence once per term). The single-query probe's
-    * input guards hold here too, enforced IN-PLAN because the term
-    * universe is unbounded: a NULL term element or a non-lowercase
-    * term raises row-wise instead of silently matching nothing.
-    * `docFilter` restricts CANDIDATES for the whole batch to the
-    * qualifying-id frame while df/N/avgdl stay corpus-wide — exactly
-    * [[topK]]'s metadata-filter convention.
-    *
-    * `attrEquals = Some((attrs, attrCol, queryCol))` is the PER-QUERY
-    * metadata filter ([[AnnIndex.queryBatch]]'s `attrEquals`, on the
-    * lexical side): `attrs` is the caller's `(idCol, attrCol, …)`
-    * attribute table — the postings are term-partitioned and store no
-    * attributes, so per-query filters resolve through a doc-keyed
-    * side table — and a candidate qualifies for a query only when its
-    * `attrCol` equals THAT query's `queryCol` value. Each query ranks
-    * the k best docs in ITS slice; a doc with no attribute row (or a
-    * NULL on either side — SQL equality) qualifies for nothing. Rows
-    * sharing a qid must agree on the attribute value (conflicting
-    * values would silently merge two different filters into one
-    * query's scores — raises in-plan, NULL counted as a value); on
-    * the doc side, bit-identical duplicate attribute rows collapse
-    * and an id carrying conflicting rows raises in-plan (duplicates
-    * would otherwise multiply candidate rows through the join and
-    * silently double score_q). Statistics stay corpus-wide.
-    * Emits `(qidCol, idCol, n_tok, score_q, rank)`, ranks 1..k by
-    * (score_q desc, id). */
-  def topKBatch(
-      spark: SparkSession, handle: Handle, queries: DataFrame,
-      qidCol: String, termsCol: String, k: Int = 10,
-      k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB,
-      docFilter: Option[DataFrame] = None,
-      attrEquals: Option[(DataFrame, String, String)] = None): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "topKBatch over an empty index")
-    docFilter.foreach(f => require(f.columns.contains(handle.idCol),
-      s"docFilter must carry '${handle.idCol}', " +
-        s"has ${f.columns.mkString(", ")}"))
-    attrEquals.foreach { case (attrs, ac, qc) =>
-      require(queries.columns.contains(qc),
-        s"topKBatch: queries must carry the per-query attribute column " +
-          s"'$qc', has ${queries.columns.mkString(", ")}")
-      require(attrs.columns.contains(handle.idCol) && attrs.columns.contains(ac),
-        s"topKBatch: the attribute table must carry '${handle.idCol}' and " +
-          s"'$ac', has ${attrs.columns.mkString(", ")}")
-      require(ac != "term" && ac != handle.idCol && ac != "n_tok" &&
-          ac != "tf" && ac != qidCol && ac != "__qattr",
-        s"topKBatch: attribute column '$ac' collides with a probe column — " +
-          "alias it in the attribute table first")
-    }
-    val qattr = attrEquals.toSeq.map { case (_, _, qc) => col(qc).as("__qattr") }
-    val qtRaw = queries
-      .select(col(qidCol) +: explode(col(termsCol)).as("__t") +: qattr: _*)
-      .select(col(qidCol) +:
-        when(col("__t").isNull, raise_error(lit(
-          "topKBatch: NULL term element in the query terms array")))
-          .when(col("__t") =!= lower(col("__t")), raise_error(concat(
-            lit("topKBatch: query terms must be lowercase (documents are " +
-              "lowercased before matching): "), col("__t"))))
-          .otherwise(col("__t")).as("term") +:
-        attrEquals.toSeq.map(_ => col("__qattr")): _*)
-      .distinct()
-    val qt = attrEquals match {
-      case None => qtRaw
-      case Some(_) =>
-        // two rows sharing a qid but carrying different attribute
-        // values would merge two filters into one query — raise
-        // row-wise (the query table is unbounded, so in-plan). The
-        // value is struct-wrapped because collect_set drops bare
-        // NULLs: a qid carrying both NULL and 'x' must count as TWO
-        // conflicting values (the NULL rows would match nothing while
-        // the 'x' rows filter — a silently half-filtered query), and
-        // struct(NULL) is a non-null element the set keeps.
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(qidCol)
-        qtRaw
-          .withColumn("__na", size(collect_set(struct(col("__qattr"))).over(w)))
-          .select(col(qidCol),
-            when(col("__na") > 1, raise_error(concat(
-                lit("topKBatch: query id "), col(qidCol).cast("string"),
-                lit(" carries conflicting attribute values"))))
-              .otherwise(col("term")).as("term"),
-            col("__qattr"))
-    }
-    // distinct buckets of the batch's terms: a <= numBuckets collect
-    val buckets = qt
-      .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-        spark.read.parquet(s"${handle.dir}/postings")
-          .filter(col("term_bucket").isin(buckets: _*))
-          .join(qt.select("term").distinct(), Seq("term"), "left_semi")))
-      .localCheckpoint(false) // feeds df counts AND candidates
-    val dfs = pruned.groupBy("term").agg(count(lit(1)).as("__df"))
-    val avgdl = handle.totalTokens.toDouble / handle.nDocs.toDouble
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) +
-      (lit(handle.nDocs.toDouble) - col("__df").cast("double") + lit(0.5)) /
-        (col("__df").cast("double") + lit(0.5)))
-    val termScore = idf * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("n_tok").cast("double") / lit(avgdl)))
-    val id = col(handle.idCol)
-    // [[topK]]'s docFilter convention: candidates restricted, df from
-    // the UNFILTERED slice (collection statistics describe the corpus)
-    val candidates = restrict(handle, pruned, docFilter)
-    // the PER-QUERY metadata equality ([[AnnIndex.queryBatch]]'s
-    // `attrEquals` on the lexical side): candidates join the caller's
-    // attribute table on the doc id, and each query keeps only the
-    // docs whose attribute equals ITS value — tenant isolation, "each
-    // query ranks k docs in ITS language". The attribute table is a
-    // caller-side projection (the postings are term-partitioned and
-    // carry no attributes), its predicate and projection push to ITS
-    // scan, and only the term-bounded candidate slice's ids join
-    // against it. Statistics stay corpus-wide, as always.
-    val candAttr = attrEquals match {
-      case None => candidates
-      case Some((attrs, ac, _)) =>
-        // duplicate attribute rows per doc id — even bit-identical
-        // ones — would multiply candidate rows through this join and
-        // silently double score_q (AnnIndex stores attrs one-per-row;
-        // this table is the caller's). Exact duplicates collapse via
-        // distinct() on the candidate-bounded projection; an id still
-        // carrying >1 row after that holds CONFLICTING values and
-        // raises in-plan (the loud-failure posture — the attr table
-        // is unbounded, so no driver-side check). The semi-join
-        // bounds the distinct+window to the term-pruned candidate
-        // slice, never the corpus-scaled attribute table.
-        val proj = attrs.select(id, col(ac))
-          .join(candidates.select(id).distinct(), Seq(handle.idCol),
-            "left_semi")
-          .distinct()
-        val wA = org.apache.spark.sql.expressions.Window
-          .partitionBy(handle.idCol)
-        val guarded = proj
-          .withColumn("__nav", count(lit(1)).over(wA))
-          .select(id,
-            when(col("__nav") > 1, raise_error(concat(
-                lit("topKBatch: doc id "), id.cast("string"),
-                lit(" carries conflicting attribute rows in the " +
-                  "attribute table"))))
-              .otherwise(col(ac)).as(ac))
-        candidates.join(guarded, Seq(handle.idCol))
-    }
-    val scored0 = qt.join(candAttr, Seq("term"))
-    val scored = (attrEquals match {
-        case None => scored0
-        case Some((_, ac, _)) => scored0.filter(col(ac) === col("__qattr"))
-      }).join(dfs, Seq("term"))
-      .withColumn("__sq", round(termScore * lit(1048576.0d)).cast("long"))
-      .groupBy(col(qidCol), id, col("n_tok"))
-      .agg(sum(col("__sq")).as("score_q"))
-      .filter(col("score_q") > 0L)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qidCol).orderBy(col("score_q").desc, id)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  private def requirePositional(handle: Handle, op: String): Unit =
-    require(handle.version >= CurrentVersion,
-      s"$op needs the positional v$CurrentVersion layout; ${handle.dir} is " +
-        s"v${handle.version} (no positions/fields on its posting rows) — " +
-        s"rebuild the index to upgrade")
-
-  private def requireQueryTerms(terms: Seq[String], op: String): Unit = {
-    require(terms.nonEmpty, s"$op needs at least one query term")
-    require(terms.forall(t => t != null && t.nonEmpty && t == t.toLowerCase),
-      s"$op: query terms must be non-empty and lowercase (documents are " +
-        s"lowercased before matching): $terms")
-  }
-
-  /** Phrase top-k over the positional postings (v2 layout): candidates
-    * are the docs containing every DISTINCT phrase term in `field`
-    * (one pruned pass, the [[topK]] discipline), then the adjacency
-    * check verifies the exact token sequence from the sorted
-    * `positions` arrays IN the pruned slice — a bag-of-words doc that
-    * merely contains the terms is rejected; `phrase_tf` counts the
-    * phrase's occurrences. Matching docs rank by the classic BM25
-    * polynomial over the distinct terms RESTRICTED to the field
-    * (field length, field avgdl from the meta sidecar, field df from
-    * the slice): for a phrase probe the field is the document. Work
-    * is proportional to the phrase terms' postings — the corpus is
-    * never re-tokenized (the oracle re-derives positions from raw
-    * text and must agree with the index's). `docFilter` is [[topK]]'s
-    * metadata-filter convention — "this exact phrase, where
-    * lang = 'en'": candidates restricted, df/N/avgdl corpus-wide, a
-    * qualifying doc's score bit-identical to its unfiltered one.
-    * Emits `(id, n_tok, phrase_tf, score)`, top `k` by
-    * (score desc, id). */
-  def phraseTopK(
-      spark: SparkSession, handle: Handle, phrase: Seq[String],
-      k: Int = 10, field: Option[String] = None,
-      k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB,
-      docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "phraseTopK")
-    requireQueryTerms(phrase, "phraseTopK")
-    require(phrase.size >= 2,
-      "a phrase needs at least two terms — use topK for a single term")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "phraseTopK over an empty index")
-    val distinctTerms = phrase.distinct
-    require(distinctTerms.size <= MaxQueryTerms,
-      s"at most $MaxQueryTerms distinct phrase terms, got ${distinctTerms.size}")
-    val fld = field.getOrElse {
-      require(handle.fields.size == 1,
-        s"multi-field index (${handle.fields.mkString(", ")}): name the " +
-          "field to run the phrase against")
-      handle.fields.head
-    }
-    val fi = handle.fields.indexOf(fld)
-    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
-    val buckets = bucketsFor(spark, distinctTerms, handle.numBuckets).distinct
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(distinctTerms: _*) && col("field") === fld))
-    // df counts DISTINCT docs, the [[collapseTf]] pre-compact
-    // convention: an at-least-once replayed append lays bit-identical
-    // posting rows, and a raw row count here would inflate df in the
-    // positional probes only — the same index must score consistently
-    // across probe families until compact reclaims the duplicates.
-    // Attached IN-PLAN ([[withDfColumn]]) instead of a driver collect.
-    val prunedDf = withDfColumn(pruned, handle.idCol)
-    val id = col(handle.idCol)
-    // candidates restricted AFTER the df derivation — stats corpus-wide
-    val pivoted = restrict(handle, prunedDf, docFilter)
-      .groupBy(id, col("n_tok_f")).agg(
-      max(when(col("term") === distinctTerms.head, col("tf"))).as("__tf0"),
-      (distinctTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("tf"))).as(s"__tf$i") } ++
-        distinctTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("positions"))).as(s"__pos$i") } ++
-        distinctTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val present = distinctTerms.indices
-      .map(i => col(s"__pos$i").isNotNull).reduce(_ && _)
-    // an occurrence at position p needs slot j's term at p + j for all j
-    val slot = phrase.map(distinctTerms.indexOf)
-    val phraseTf = size(filter(col(s"__pos${slot.head}"),
-      p => slot.zipWithIndex.drop(1)
-        .map { case (d, j) => array_contains(col(s"__pos$d"), p + j) }
-        .reduce(_ && _)))
-    val avgdlF = handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble
-    val perTerm = distinctTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tf = coalesce(col(s"__tf$i").cast("double"), lit(0.0))
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("n_tok_f").cast("double") / lit(avgdlF)))
-    }
-    pivoted.filter(present)
-      .withColumn("phrase_tf", phraseTf.cast("long"))
-      .filter(col("phrase_tf") >= 1)
-      .select(id, col("n_tok_f").as("n_tok"), col("phrase_tf"),
-        perTerm.reduce(_ + _).as("score"))
-      .orderBy(col("score").desc, id)
-      .limit(k)
-  }
-
-  /** Snippet extraction from the positional postings — the
-    * presentation step a RAG pipeline runs after ranking: for each of
-    * the query's top-`k` docs, the best `width`-token window
-    * (maximizing DISTINCT query terms covered, then total term hits,
-    * then the smallest start) computed entirely from the index's
-    * sorted `positions` arrays — the raw text is NEVER re-read or
-    * re-tokenized (the caller slices the snippet out of the stored
-    * doc by token offset). Candidate windows are anchored at term
-    * occurrences: any window slides right to its first hit without
-    * losing one, so the hit-anchored set contains an optimal window
-    * and the tie-break makes the answer unique. The whole
-    * window-scan is per-row array arithmetic on the pivoted
-    * positions (one `transform` over the candidate starts, an
-    * `array_max` over lexicographic (n_terms, n_hits, −start)
-    * structs) — no explode, no self-join, codegen-friendly; work is
-    * proportional to the top docs' occurrence counts. Scoring and
-    * ranking are [[phraseTopK]]'s field-restricted polynomial over
-    * the same pruned slice; `docFilter` is [[topK]]'s metadata-filter
-    * convention (candidates restricted, stats corpus-wide). Emits
-    * `(id, n_tok, score, win_start, win_n_terms, win_n_hits)`, top
-    * `k` by (score desc, id). */
-  def snippetTopK(
-      spark: SparkSession, handle: Handle, queryTerms: Seq[String],
-      width: Int = 16, k: Int = 10, field: Option[String] = None,
-      k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB,
-      docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "snippetTopK")
-    requireQueryTerms(queryTerms, "snippetTopK")
-    require(queryTerms.distinct.size == queryTerms.size,
-      s"query terms must be distinct: $queryTerms")
-    require(queryTerms.size <= MaxQueryTerms,
-      s"at most $MaxQueryTerms query terms, got ${queryTerms.size}")
-    require(width >= 1, s"width must be >= 1, got $width")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "snippetTopK over an empty index")
-    val fld = field.getOrElse {
-      require(handle.fields.size == 1,
-        s"multi-field index (${handle.fields.mkString(", ")}): name the " +
-          "field to snippet against")
-      handle.fields.head
-    }
-    val fi = handle.fields.indexOf(fld)
-    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
-    val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(queryTerms: _*) && col("field") === fld))
-    // distinct-doc df — the [[collapseTf]] pre-compact convention
-    // (see phraseTopK): replayed-append duplicate rows must not
-    // inflate df in the positional probes only. Attached IN-PLAN
-    // ([[withDfColumn]]) instead of a driver collect.
-    val prunedDf = withDfColumn(pruned, handle.idCol)
-    val id = col(handle.idCol)
-    // candidates restricted AFTER the df derivation — stats corpus-wide
-    val pivoted = restrict(handle, prunedDf, docFilter)
-      .groupBy(id, col("n_tok_f")).agg(
-      max(when(col("term") === queryTerms.head, col("tf"))).as("__tf0"),
-      (queryTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("tf"))).as(s"__tf$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t,
-            col("positions"))).as(s"__pos$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val avgdlF = handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble
-    val perTerm = queryTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tf = coalesce(col(s"__tf$i").cast("double"), lit(0.0))
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("n_tok_f").cast("double") / lit(avgdlF)))
-    }
-    // per-row window scan: candidate starts are every term occurrence;
-    // score each start by (distinct terms covered, total hits, −start)
-    // and take the lexicographic array_max — integer-only, unique
-    val starts = array_distinct(flatten(
-      array(queryTerms.indices.map(i => col(s"__pos$i")): _*)))
-    def inWin(i: Int, p: org.apache.spark.sql.Column) =
-      filter(col(s"__pos$i"), x => x >= p && x < p + lit(width))
-    val winStructs = transform(starts, p => struct(
-      queryTerms.indices
-        .map(i => when(exists(col(s"__pos$i"), x => x >= p && x < p + lit(width)),
-          lit(1)).otherwise(lit(0)))
-        .reduce(_ + _).as("nt"),
-      queryTerms.indices.map(i => size(inWin(i, p))).reduce(_ + _).as("nh"),
-      (-p).as("negstart")))
-    val best = array_max(winStructs)
-    // orderBy → select → limit is the Limit(Project(Sort)) shape that
-    // plans as ONE TakeOrderedAndProject: the top k surface through a
-    // partial per-partition take (no global sort exchange), and the
-    // window-scan projection runs on the K SURVIVORS only — a project
-    // placed above the limit instead would break the pattern into
-    // Sort + single-partition Exchange + GlobalLimit (a mid-plan
-    // funnel) and scan windows for every candidate
-    pivoted
-      .select((id +: col("n_tok_f").as("n_tok") +:
-        perTerm.reduce(_ + _).as("score") +:
-        queryTerms.indices.map(i =>
-          coalesce(col(s"__pos$i"), array().cast("array<int>"))
-            .as(s"__pos$i"))): _*)
-      .filter(col("score") > 0.0)
-      .orderBy(col("score").desc, id)
-      .select(id, col("n_tok"), col("score"),
-        (-best.getField("negstart")).cast("long").as("win_start"),
-        best.getField("nt").cast("long").as("win_n_terms"),
-        best.getField("nh").cast("long").as("win_n_hits"))
-      .limit(k)
-  }
-
-  /** Batched snippet extraction — [[snippetTopK]] for a query TABLE
-    * (the RAG-presentation step at evaluation scale, completing the
-    * batch family: [[topKBatch]] scores, [[phraseTopKBatch]] matches
-    * phrases, this one also returns each hit's best window): one
-    * pruned positional pass serves every query, scoring is the
-    * exact-integer `score_q = Σ round(s·2²⁰)` batch convention,
-    * ranking a qid-partitioned window, and the window-scan arithmetic
-    * (distinct terms covered, total hits, smallest start — computed
-    * from the stored `positions` arrays, the text never re-read) runs
-    * over the k SURVIVORS per query only: survivors join back to the
-    * pruned slice, positions collect per (query, doc), and the scan
-    * is per-row higher-order-function arithmetic — no explode, no
-    * self-join. `docFilter` restricts CANDIDATES for the whole batch
-    * ([[topK]]'s metadata-filter convention: stats corpus-wide).
-    * Emits `(qid, id, n_tok, score_q, rank, win_start,
-    * win_n_terms, win_n_hits)`, ranks 1..k by (score_q desc, id). */
-  def snippetTopKBatch(
-      spark: SparkSession, handle: Handle, queries: DataFrame,
-      qidCol: String, termsCol: String, width: Int = 16, k: Int = 10,
-      field: Option[String] = None, k1: Double = Retrieval.DefaultK1,
-      b: Double = Retrieval.DefaultB,
-      docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "snippetTopKBatch")
-    require(width >= 1, s"width must be >= 1, got $width")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "snippetTopKBatch over an empty index")
-    val fld = field.getOrElse {
-      require(handle.fields.size == 1,
-        s"multi-field index (${handle.fields.mkString(", ")}): name the " +
-          "field to snippet against")
-      handle.fields.head
-    }
-    val fi = handle.fields.indexOf(fld)
-    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
-    // in-plan guards (the topKBatch posture — the query table is
-    // unbounded): duplicate qids, empty term arrays, duplicate terms
-    // within a query, NULL / non-lowercase terms all raise row-wise
-    val dupW = org.apache.spark.sql.expressions.Window.partitionBy(qidCol)
-    val qv = queries
-      .withColumn("__n", count(lit(1)).over(dupW))
-      .select(
-        when(col("__n") > 1, raise_error(concat(
-            lit("snippetTopKBatch: duplicate query id "),
-            col(qidCol).cast("string"))))
-          .otherwise(col(qidCol)).as(qidCol),
-        when(size(col(termsCol)) < 1, raise_error(concat(
-            lit("snippetTopKBatch: empty terms for query "),
-            col(qidCol).cast("string"))))
-          .when(size(array_distinct(col(termsCol))) =!= size(col(termsCol)),
-            raise_error(concat(
-              lit("snippetTopKBatch: duplicate terms for query "),
-              col(qidCol).cast("string"))))
-          .otherwise(col(termsCol)).as("__terms"))
-    val qt = qv
-      .select(col(qidCol), explode(col("__terms")).as("__t"))
-      .select(col(qidCol),
-        when(col("__t").isNull, raise_error(lit(
-          "snippetTopKBatch: NULL term element in the query terms array")))
-          .when(col("__t") =!= lower(col("__t")), raise_error(concat(
-            lit("snippetTopKBatch: query terms must be lowercase " +
-              "(documents are lowercased before matching): "), col("__t"))))
-          .otherwise(col("__t")).as("term"))
-      .localCheckpoint(false) // feeds buckets, the score join, the window join
-    val buckets = qt
-      .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val id = col(handle.idCol)
-    // the collapseTf pre-compact convention, enforced at each consumer
-    // (see phraseTopKBatch) instead of via an extra wide shuffle of
-    // the positions-carrying slice: distinct-doc df, max-before-sum
-    // scoring, and a SET collect for the window arrays
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-        spark.read.parquet(s"${handle.dir}/postings")
-          .filter(col("term_bucket").isin(buckets: _*) && col("field") === fld)
-          .join(qt.select("term").distinct(), Seq("term"), "left_semi"))
-      .localCheckpoint(false) // feeds df counts, the score join, the window join
-    val dfs = pruned.groupBy("term").agg(countDistinct(id).as("__df"))
-    val avgdlF = handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) +
-      (lit(handle.nDocs.toDouble) - col("__df").cast("double") + lit(0.5)) /
-        (col("__df").cast("double") + lit(0.5)))
-    val termScore = idf * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("n_tok_f").cast("double") / lit(avgdlF)))
-    // candidates restricted AFTER the df derivation — stats corpus-wide
-    val cand = qt.join(restrict(handle, pruned, docFilter), Seq("term"))
-    // per-(query, term, doc) max collapses replay-duplicate rows
-    // before the across-terms sum — narrow rows, map-side combine
-    val scored = cand.join(dfs, Seq("term"))
-      .withColumn("__sq", round(termScore * lit(1048576.0d)).cast("long"))
-      .groupBy(col(qidCol), id, col("n_tok_f"), col("term"))
-      .agg(max(col("__sq")).as("__sq"))
-      .groupBy(col(qidCol), id, col("n_tok_f"))
-      .agg(sum(col("__sq")).as("score_q"))
-      .filter(col("score_q") > 0L)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qidCol).orderBy(col("score_q").desc, id)
-    val surv = scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    // window arithmetic on the survivors only: one positions array per
-    // (query, DISTINCT term, doc) row collects per hit, then the scan
-    // is order-free per-row arithmetic (nt/nh are sums over the
-    // arrays, array_max picks the lexicographic best). collect_SET:
-    // replay-duplicate posting rows carry bit-identical arrays and
-    // must count once, while two distinct terms can never collide —
-    // a position holds exactly one term, so their position sets are
-    // disjoint and their arrays always differ
-    val ps = surv
-      .join(cand.select(col(qidCol), id, col("positions")),
-        Seq(qidCol, handle.idCol))
-      .groupBy(col(qidCol), id, col("n_tok_f"), col("score_q"), col("rank"))
-      .agg(collect_set(col("positions")).as("__ps"))
-    val starts = array_distinct(flatten(col("__ps")))
-    val winStructs = transform(starts, p => struct(
-      aggregate(col("__ps"), lit(0), (acc, ar) =>
-        acc + when(exists(ar, x => x >= p && x < p + lit(width)), lit(1))
-          .otherwise(lit(0))).as("nt"),
-      aggregate(col("__ps"), lit(0), (acc, ar) =>
-        acc + size(filter(ar, x => x >= p && x < p + lit(width)))).as("nh"),
-      (-p).as("negstart")))
-    val best = array_max(winStructs)
-    ps.select(col(qidCol), id, col("n_tok_f").as("n_tok"),
-      col("score_q"), col("rank"),
-      (-best.getField("negstart")).cast("long").as("win_start"),
-      best.getField("nt").cast("long").as("win_n_terms"),
-      best.getField("nh").cast("long").as("win_n_hits"))
-  }
-
   /** Index consistency check — the fsck every long-lived on-disk
     * state needs after enough appends, deletes, compactions and
     * crash recoveries: one pass over the index's own tables (never
@@ -1465,137 +833,641 @@ object Bm25Index {
       .toDF("check", "value")
   }
 
+  // ---- the probe cores (conventions: see the object scaladoc) ----
+
+  /** Collapse a pruned postings slice to one `(term, doc, n_tok, tf)`
+    * row per key — the classic-BM25 "concatenated document" view the
+    * whole-document probes score, and the ONE place the pre-compact
+    * duplicate-row semantics of an at-least-once replayed [[append]]
+    * are decided for them: a replayed append lays bit-identical posting
+    * rows, so duplicates must collapse (never a plain `sum`, which
+    * would double the doc's tf until [[compact]]) while the real v2
+    * across-FIELDS total still sums. ONE shuffle either way: single-field slices (and v1) take
+    * `max` per (term, doc); multi-field slices collect the (field, tf)
+    * pairs as a SET — bit-identical replayed rows collapse in the set,
+    * two distinct fields always form distinct structs — and fold the
+    * across-field sum per-row (exact long addition, order-free). On a
+    * clean index both shapes aggregate the same rows the old two-level
+    * max-then-sum did — values, and therefore scores, bit-identical.
+    * Neither shape reads `positions`, so the scan stays narrow. */
+  private def collapseTf(handle: Handle, raw: DataFrame): DataFrame = {
+    val nFields =
+      if (handle.fields.nonEmpty) handle.fields.size else 1
+    if (handle.version >= 2 && nFields > 1)
+      raw.groupBy(col("term"), col(handle.idCol), col("n_tok"))
+        .agg(collect_set(struct(col("field"), col("tf"))).as("__fs"))
+        .select(col("term"), col(handle.idCol), col("n_tok"),
+          aggregate(col("__fs"), lit(0L),
+            (acc, x) => acc + x.getField("tf")).as("tf"))
+    else
+      // one row per (term, doc) on a clean index — max collapses
+      // replay duplicates and equals the row's tf
+      raw.groupBy(col("term"), col(handle.idCol), col("n_tok"))
+        .agg(max(col("tf")).as("tf"))
+  }
+
+  /** The `docFilter` convention every probe shares (see the object
+    * scaladoc): a semi-join of the already-pruned slice against the
+    * qualifying ids. Callers attach df BEFORE applying it, so the
+    * collection statistics stay corpus-wide. */
+  private def restrict(
+      handle: Handle, rows: DataFrame,
+      docFilter: Option[DataFrame]): DataFrame =
+    docFilter match {
+      case None => rows
+      case Some(f) =>
+        require(f.columns.contains(handle.idCol),
+          s"docFilter must carry '${handle.idCol}', " +
+            s"has ${f.columns.mkString(", ")}")
+        rows.join(f.select(col(handle.idCol)), Seq(handle.idCol), "left_semi")
+    }
+
+  /** Per-term document frequency attached IN-PLAN: `rows` gains a
+    * pivotable `__df` column — the distinct-doc count of its term over
+    * the (unrestricted) pruned slice, the [[collapseTf]] pre-compact
+    * convention. Replaces the probes' separate driver `.collect()` of
+    * a df map: one Spark action and one slice re-scan fewer per probe
+    * (the df aggregate rides the SAME plan and AQE reuses the slice's
+    * exchange), and the per-term idf literals become per-term pivoted
+    * columns carrying the identical BIGINT df — scores are
+    * bit-identical (same Long df, same double arithmetic in the same
+    * order). */
+  private def withDfColumn(rows: DataFrame, idCol: String): DataFrame =
+    rows.join(
+      rows.groupBy("term").agg(countDistinct(col(idCol)).as("__df")),
+      Seq("term"))
+
+  /** The Robertson idf over an in-plan per-term df column — the exact
+    * column form of the old driver literal
+    * `log(1 + (N - df + 0.5)/(df + 0.5))` (Long subtraction, then the
+    * double cast, then + 0.5, matching Scala's left-to-right literal
+    * evaluation bit-for-bit). `dfI` NULL (term absent from the pruned
+    * slice, or absent from THIS doc's pivot group) coalesces to 0 —
+    * those rows' tf is 0/NULL so the term contributes exactly 0 either
+    * way, as with the old global literal. The batch probes' non-NULL
+    * df gives the same doubles their old `N.toDouble − df.toDouble`
+    * spelling did: both are exact for every count below 2⁵³. */
+  private def idfOf(nDocs: Long, dfI: Column): Column = {
+    val dfc = coalesce(dfI, lit(0L))
+    val num = (lit(nDocs) - dfc).cast("double") + lit(0.5)
+    val den = dfc.cast("double") + lit(0.5)
+    log(lit(1.0) + num / den)
+  }
+
+  /** The BM25 term polynomial `idf·tf(k1+1)/(tf + k1(1−b+b·len/avgdl))`
+    * over double `tf` and `len`, in [[Retrieval.scoreWith]]'s
+    * association order — every probe scores with this one spelling. */
+  private def bm25Term(
+      tf: Column, len: Column, avgdl: Double, idf: Column,
+      k1: Double, b: Double): Column =
+    idf * (tf * lit(k1 + 1.0)) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * len / lit(avgdl)))
+
+  /** The exact-integer score convention: `round(c·2²⁰)` as a BIGINT. */
+  private def quantize(c: Column): Column =
+    round(c * lit(1048576.0d)).cast("long")
+
+  /** The guards every probe but [[topK]] and [[rm3Expand]] shares. */
+  private def requireProbe(
+      handle: Handle, op: String, k: Int, positional: Boolean = false): Unit = {
+    require(!positional || handle.version >= CurrentVersion,
+      s"$op needs the positional v$CurrentVersion layout; ${handle.dir} is " +
+        s"v${handle.version} (no positions/fields on its posting rows) — " +
+        s"rebuild the index to upgrade")
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(handle.nDocs > 0, s"$op over an empty index")
+  }
+
+  /** The single-query term guards: at least `min` terms, none NULL, all
+    * lowercase (documents are lowercased before matching) and non-empty
+    * unless `emptyOk`, distinct when `distinct`, and at most
+    * [[MaxQueryTerms]] distinct terms when `capped` (the per-term
+    * columns are a driver-resident model). */
+  private def requireTerms(
+      terms: Seq[String], op: String, min: Int = 1, emptyOk: Boolean = false,
+      distinct: Boolean = true, capped: Boolean = true): Unit = {
+    require(terms.size >= min,
+      s"$op needs at least ${if (min > 1) "two query terms" else "one query term"}")
+    require(!terms.contains(null), s"$op: NULL query term in $terms")
+    require(terms.forall(t => (emptyOk || t.nonEmpty) && t == t.toLowerCase),
+      s"$op: query terms must be ${if (emptyOk) "" else "non-empty and "}" +
+        s"lowercase (documents are lowercased before matching): $terms")
+    require(!distinct || terms.distinct.size == terms.size,
+      s"$op: query terms must be distinct, got duplicates in $terms")
+    require(!capped || terms.distinct.size <= MaxQueryTerms,
+      s"$op: at most $MaxQueryTerms query terms (driver-resident per-term " +
+        s"stats), got ${terms.distinct.size}")
+  }
+
+  /** The field a field-restricted probe runs against — `field`, or the
+    * index's only field — and that field's average length. */
+  private def fieldOf(
+      handle: Handle, field: Option[String], op: String): (String, Double) = {
+    val fld = field.getOrElse {
+      require(handle.fields.size == 1,
+        s"$op: multi-field index (${handle.fields.mkString(", ")}): name " +
+          "the field to probe")
+      handle.fields.head
+    }
+    val fi = handle.fields.indexOf(fld)
+    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
+    (fld, handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble)
+  }
+
+  private def avgdlOf(handle: Handle): Double =
+    handle.totalTokens.toDouble / handle.nDocs.toDouble
+
+  /** Single-query core: the query terms' postings, pruned to their
+    * buckets (hashed on the driver, [[engineBucketOf]]) and terms —
+    * and to `fields` unless empty — with tombstoned docs dropped. */
+  private def termSlice(
+      spark: SparkSession, handle: Handle, terms: Seq[String],
+      fields: Seq[String]): DataFrame = {
+    val buckets = terms.map(engineBucketOf(_, handle.numBuckets)).distinct
+    val hit = col("term_bucket").isin(buckets: _*) && col("term").isin(terms: _*)
+    Tombstones.liveOnly(spark, handle.dir, handle.idCol,
+      spark.read.parquet(s"${handle.dir}/postings")
+        .filter(if (fields.isEmpty) hit else hit && col("field").isin(fields: _*)))
+  }
+
+  /** Single-query core: one row per `keys` group carrying `__tf$i`,
+    * `__pos$i` (when `positions`) and `__df$i` for each term, in
+    * query-term order, so per-term scores add left to right whatever
+    * the row layout. */
+  private def pivot(
+      rows: DataFrame, keys: Seq[Column], terms: Seq[String],
+      positions: Boolean): DataFrame = {
+    val srcs = Seq("tf" -> "__tf") ++
+      (if (positions) Seq("positions" -> "__pos") else Nil) :+ ("__df" -> "__df")
+    val aggs = for ((src, to) <- srcs; (t, i) <- terms.zipWithIndex)
+      yield max(when(col("term") === t, col(src))).as(s"$to$i")
+    rows.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Single-query core up to the scorer: the [[termSlice]] — collapsed
+    * per (term, doc) for a whole-document probe (`field` None), or
+    * narrowed to `field` with its positions — with df attached in-plan,
+    * then `docFilter`, then the [[pivot]] keyed by (id, `n_tok` or
+    * `n_tok_f`). */
+  private def pivotedSlice(
+      spark: SparkSession, handle: Handle, terms: Seq[String],
+      field: Option[String], docFilter: Option[DataFrame]): DataFrame = {
+    val slice = termSlice(spark, handle, terms, field.toSeq)
+    val rows = if (field.isEmpty) collapseTf(handle, slice) else slice
+    pivot(restrict(handle, withDfColumn(rows, handle.idCol), docFilter),
+      Seq(col(handle.idCol), col(if (field.isEmpty) "n_tok" else "n_tok_f")),
+      terms, positions = field.nonEmpty)
+  }
+
+  /** Term `i`'s BM25 score on a [[pivot]]ed row; an absent term has
+    * tf 0. */
+  private def pivotTerm(
+      handle: Handle, i: Int, len: String, avgdl: Double,
+      k1: Double, b: Double): Column =
+    bm25Term(coalesce(col(s"__tf$i").cast("double"), lit(0.0)),
+      col(len).cast("double"), avgdl, idfOf(handle.nDocs, col(s"__df$i")), k1, b)
+
+  /** The best `width`-token window of a doc given its per-term
+    * positions arrays `ps` (an array of arrays, one per query term):
+    * windows anchor at each occurrence — any window slides right to its
+    * first hit without losing one — and the best maximizes (distinct
+    * terms covered, total hits, −start), an integer-only lexicographic
+    * `array_max` with a unique answer. Per-row array arithmetic: no
+    * explode, no self-join. Emits `win_start`, `win_n_terms`,
+    * `win_n_hits`. */
+  private def bestWindow(ps: Column, width: Int): Seq[Column] = {
+    def inWin(p: Column): Column => Column = x => x >= p && x < p + lit(width)
+    val best = array_max(transform(array_distinct(flatten(ps)), p => struct(
+      aggregate(ps, lit(0), (acc, ar) =>
+        acc + when(exists(ar, inWin(p)), lit(1)).otherwise(lit(0))).as("nt"),
+      aggregate(ps, lit(0), (acc, ar) => acc + size(filter(ar, inWin(p)))).as("nh"),
+      (-p).as("negstart"))))
+    Seq((-best.getField("negstart")).cast("long").as("win_start"),
+      best.getField("nt").cast("long").as("win_n_terms"),
+      best.getField("nh").cast("long").as("win_n_hits"))
+  }
+
+  /** The single-query tail: positive scores, top `k` by (score desc,
+    * id) — one TakeOrderedAndProject. */
+  private def topOf(handle: Handle, scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.filter(col(score) > 0).orderBy(col(score).desc, col(handle.idCol)).limit(k)
+
+  /** Batch core: the in-plan term guard for an unbounded query table —
+    * a NULL or non-lowercase term raises row-wise instead of silently
+    * matching nothing. */
+  private def checkedTerm(c: Column, op: String): Column =
+    when(c.isNull, raise_error(lit(s"$op: NULL term element in the query terms")))
+      .when(c =!= lower(c), raise_error(concat(lit(s"$op: query terms must be " +
+        "lowercase (documents are lowercased before matching): "), c)))
+      .otherwise(c)
+
+  /** Batch core: the postings of a term table's terms. Buckets are one
+    * collect bounded by `numBuckets` (never by the terms), the term
+    * restriction a semi-join, tombstoned docs dropped, the rows
+    * collapsed per (term, doc) when `collapse` ([[collapseTf]]), and the
+    * slice checkpointed once — it feeds both df and the candidates. */
+  private def batchSlice(
+      spark: SparkSession, handle: Handle, terms: DataFrame,
+      fields: Seq[String], collapse: Boolean): DataFrame = {
+    val buckets = terms
+      .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val inBuckets = col("term_bucket").isin(buckets: _*)
+    val rows = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
+      spark.read.parquet(s"${handle.dir}/postings")
+        .filter(if (fields.isEmpty) inBuckets else inBuckets && col("field").isin(fields: _*))
+        .join(terms.select("term").distinct(), Seq("term"), "left_semi"))
+    (if (collapse) collapseTf(handle, rows) else rows).localCheckpoint(false)
+  }
+
+  /** Batch core: the query table with a duplicate qid raising in-plan
+    * and its terms array, passed through `guard`, as `__terms`. */
+  private def oneRowPerQid(
+      queries: DataFrame, qidCol: String, termsCol: String, op: String)(
+      guard: Column => Column): DataFrame =
+    queries.withColumn("__n", count(lit(1)).over(Window.partitionBy(qidCol)))
+      .select(when(col("__n") > 1, raise_error(concat(
+          lit(s"$op: duplicate query id "), col(qidCol).cast("string"))))
+        .otherwise(col(qidCol)).as(qidCol), guard(col(termsCol)).as("__terms"))
+
+  /** Batch core: a batch row's BM25 score from its own `tf` and `__df`. */
+  private def rowTerm(
+      handle: Handle, len: String, avgdl: Double, k1: Double, b: Double): Column =
+    bm25Term(col("tf").cast("double"), col(len).cast("double"), avgdl,
+      idfOf(handle.nDocs, col("__df")), k1, b)
+
+  /** Batch core: ranks 1..k per query by (score_q desc, id), a
+    * qid-partitioned window — no global sort. */
+  private def rankPerQuery(
+      scored: DataFrame, qidCol: String, idCol: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(qidCol)
+        .orderBy(col("score_q").desc, col(idCol))))
+      .filter(col("rank") <= k)
+
+  // ---- the probes ----
+
+  /** Index-backed BM25 top-k — result-identical to
+    * [[Retrieval.bm25TopK]] over the same corpus (raw doubles, bit for
+    * bit), but the work is proportional to the query terms' postings,
+    * never the corpus: the single-query core and one
+    * TakeOrderedAndProject. `docFilter` is the metadata predicate of
+    * production retrieval ("top-k where lang = 'en'" —
+    * [[AnnIndex.query]]'s `filter` is the vector twin): the k results
+    * are the k best qualifying docs, where post-filtering an unfiltered
+    * top-k would surface fewer. Emits `(id, n_tok, score)`.
+    * Probe conventions: [[Bm25Index]]. */
+  def topK(
+      spark: SparkSession, handle: Handle, queryTerms: Seq[String],
+      k: Int = 10, k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB,
+      docFilter: Option[DataFrame] = None): DataFrame = {
+    requireTerms(queryTerms, "topK", emptyOk = true)
+    require(handle.nDocs > 0, "topK over an empty index")
+    val score = queryTerms.indices
+      .map(pivotTerm(handle, _, "n_tok", avgdlOf(handle), k1, b)).reduce(_ + _)
+    topOf(handle, pivotedSlice(spark, handle, queryTerms, None, docFilter)
+      .select(col(handle.idCol), col("n_tok"), score.as("score")), "score", k)
+  }
+
+  /** Batched BM25 top-k — the RAG evaluation shape: thousands of
+    * queries amortize ONE pruned pass over the index (the batch core).
+    * `queries` carries `(qidCol, termsCol: array<string>)` with no
+    * bound on the query count or the term universe. Scores are
+    * quantized ([[topK]] keeps raw doubles; the two agree on ranking to
+    * 2⁻²⁰ resolution). Duplicate terms collapse per qid — within an
+    * array AND across rows sharing the qid (BM25 scores term presence
+    * once per term).
+    *
+    * `attrEquals = Some((attrs, attrCol, queryCol))` is the PER-QUERY
+    * metadata filter ([[AnnIndex.queryBatch]]'s `attrEquals`, on the
+    * lexical side): `attrs` is the caller's `(idCol, attrCol, …)`
+    * attribute table — the postings are term-partitioned and store no
+    * attributes, so per-query filters resolve through a doc-keyed
+    * side table — and a candidate qualifies for a query only when its
+    * `attrCol` equals THAT query's `queryCol` value. Each query ranks
+    * the k best docs in ITS slice; a doc with no attribute row (or a
+    * NULL on either side — SQL equality) qualifies for nothing. Rows
+    * sharing a qid must agree on the attribute value (conflicting
+    * values would silently merge two different filters into one
+    * query's scores — raises in-plan, NULL counted as a value); on
+    * the doc side, bit-identical duplicate attribute rows collapse
+    * and an id carrying conflicting rows raises in-plan (duplicates
+    * would otherwise multiply candidate rows through the join and
+    * silently double score_q). Statistics stay corpus-wide.
+    * Emits `(qidCol, idCol, n_tok, score_q, rank)`, ranks 1..k by
+    * (score_q desc, id). Probe conventions: [[Bm25Index]]. */
+  def topKBatch(
+      spark: SparkSession, handle: Handle, queries: DataFrame,
+      qidCol: String, termsCol: String, k: Int = 10,
+      k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB,
+      docFilter: Option[DataFrame] = None,
+      attrEquals: Option[(DataFrame, String, String)] = None): DataFrame = {
+    requireProbe(handle, "topKBatch", k)
+    attrEquals.foreach { case (attrs, ac, qc) =>
+      require(queries.columns.contains(qc),
+        s"topKBatch: queries must carry the per-query attribute column " +
+          s"'$qc', has ${queries.columns.mkString(", ")}")
+      require(attrs.columns.contains(handle.idCol) && attrs.columns.contains(ac),
+        s"topKBatch: the attribute table must carry '${handle.idCol}' and " +
+          s"'$ac', has ${attrs.columns.mkString(", ")}")
+      require(ac != "term" && ac != handle.idCol && ac != "n_tok" &&
+          ac != "tf" && ac != qidCol && ac != "__qattr",
+        s"topKBatch: attribute column '$ac' collides with a probe column — " +
+          "alias it in the attribute table first")
+    }
+    val qattr = attrEquals.toSeq.map { case (_, _, qc) => col(qc).as("__qattr") }
+    val qtRaw = queries
+      .select(col(qidCol) +: explode(col(termsCol)).as("__t") +: qattr: _*)
+      .select(col(qidCol) +: checkedTerm(col("__t"), "topKBatch").as("term") +:
+        attrEquals.toSeq.map(_ => col("__qattr")): _*)
+      .distinct()
+    val qt = attrEquals match {
+      case None => qtRaw
+      case Some(_) =>
+        // two rows sharing a qid but carrying different attribute
+        // values would merge two filters into one query — raise
+        // row-wise (the query table is unbounded, so in-plan). The
+        // value is struct-wrapped because collect_set drops bare
+        // NULLs: a qid carrying both NULL and 'x' must count as TWO
+        // conflicting values (the NULL rows would match nothing while
+        // the 'x' rows filter — a silently half-filtered query), and
+        // struct(NULL) is a non-null element the set keeps.
+        qtRaw
+          .withColumn("__na", size(collect_set(struct(col("__qattr")))
+            .over(Window.partitionBy(qidCol))))
+          .select(col(qidCol),
+            when(col("__na") > 1, raise_error(concat(
+                lit("topKBatch: query id "), col(qidCol).cast("string"),
+                lit(" carries conflicting attribute values"))))
+              .otherwise(col("term")).as("term"),
+            col("__qattr"))
+    }
+    val pruned = batchSlice(spark, handle, qt, Nil, collapse = true)
+    val dfs = pruned.groupBy("term").agg(count(lit(1)).as("__df"))
+    val id = col(handle.idCol)
+    val candidates = restrict(handle, pruned, docFilter)
+    // the per-query attribute equality: candidates join the caller's
+    // attribute table on the doc id (its predicate and projection push
+    // to ITS scan; only the term-bounded candidate ids join against it)
+    val candAttr = attrEquals match {
+      case None => candidates
+      case Some((attrs, ac, _)) =>
+        // duplicate attribute rows per doc id — even bit-identical
+        // ones — would multiply candidate rows through this join and
+        // silently double score_q (AnnIndex stores attrs one-per-row;
+        // this table is the caller's). Exact duplicates collapse via
+        // distinct() on the candidate-bounded projection; an id still
+        // carrying >1 row after that holds CONFLICTING values and
+        // raises in-plan (the loud-failure posture — the attr table
+        // is unbounded, so no driver-side check). The semi-join
+        // bounds the distinct+window to the term-pruned candidate
+        // slice, never the corpus-scaled attribute table.
+        val guarded = attrs.select(id, col(ac))
+          .join(candidates.select(id).distinct(), Seq(handle.idCol), "left_semi")
+          .distinct()
+          .withColumn("__nav", count(lit(1)).over(Window.partitionBy(handle.idCol)))
+          .select(id,
+            when(col("__nav") > 1, raise_error(concat(
+                lit("topKBatch: doc id "), id.cast("string"),
+                lit(" carries conflicting attribute rows in the " +
+                  "attribute table"))))
+              .otherwise(col(ac)).as(ac))
+        candidates.join(guarded, Seq(handle.idCol))
+    }
+    val scored0 = qt.join(candAttr, Seq("term"))
+    val scored = (attrEquals match {
+        case None => scored0
+        case Some((_, ac, _)) => scored0.filter(col(ac) === col("__qattr"))
+      }).join(dfs, Seq("term"))
+      .withColumn("__sq", quantize(rowTerm(handle, "n_tok", avgdlOf(handle), k1, b)))
+      .groupBy(col(qidCol), id, col("n_tok"))
+      .agg(sum(col("__sq")).as("score_q"))
+      .filter(col("score_q") > 0L)
+    rankPerQuery(scored, qidCol, handle.idCol, k)
+  }
+
+  /** Phrase top-k over the positional postings (v2 layout): candidates
+    * are the docs containing every DISTINCT phrase term in `field`,
+    * then the adjacency check verifies the exact token sequence from
+    * the sorted `positions` arrays in the pruned slice — a
+    * bag-of-words doc that merely contains the terms is rejected;
+    * `phrase_tf` counts the phrase's occurrences. Matching docs rank by
+    * the BM25 polynomial over the distinct terms restricted to the
+    * field (field length, field avgdl, field df): for a phrase probe
+    * the field is the document. The corpus is never re-tokenized.
+    * Emits `(id, n_tok, phrase_tf, score)`, top `k` by
+    * (score desc, id). Probe conventions: [[Bm25Index]]. */
+  def phraseTopK(
+      spark: SparkSession, handle: Handle, phrase: Seq[String],
+      k: Int = 10, field: Option[String] = None,
+      k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB,
+      docFilter: Option[DataFrame] = None): DataFrame = {
+    requireProbe(handle, "phraseTopK", k, positional = true)
+    requireTerms(phrase, "phraseTopK", min = 2, distinct = false)
+    val (fld, avgdlF) = fieldOf(handle, field, "phraseTopK")
+    val terms = phrase.distinct
+    val id = col(handle.idCol)
+    val present = terms.indices.map(i => col(s"__pos$i").isNotNull).reduce(_ && _)
+    // an occurrence at position p needs slot j's term at p + j for all j
+    val slot = phrase.map(terms.indexOf)
+    val phraseTf = size(filter(col(s"__pos${slot.head}"),
+      p => slot.zipWithIndex.drop(1)
+        .map { case (d, j) => array_contains(col(s"__pos$d"), p + j) }
+        .reduce(_ && _)))
+    val score = terms.indices
+      .map(pivotTerm(handle, _, "n_tok_f", avgdlF, k1, b)).reduce(_ + _)
+    pivotedSlice(spark, handle, terms, Some(fld), docFilter).filter(present)
+      .withColumn("phrase_tf", phraseTf.cast("long"))
+      .filter(col("phrase_tf") >= 1)
+      .select(id, col("n_tok_f").as("n_tok"), col("phrase_tf"), score.as("score"))
+      .orderBy(col("score").desc, id)
+      .limit(k)
+  }
+
+  /** Snippet extraction from the positional postings — the
+    * presentation step a RAG pipeline runs after ranking: for each of
+    * the query's top-`k` docs, the best `width`-token window
+    * (maximizing DISTINCT query terms covered, then total term hits,
+    * then the smallest start) computed entirely from the index's
+    * sorted `positions` arrays — the raw text is NEVER re-read or
+    * re-tokenized (the caller slices the snippet out of the stored
+    * doc by token offset). Candidate windows are anchored at term
+    * occurrences: any window slides right to its first hit without
+    * losing one, so the hit-anchored set contains an optimal window
+    * and the tie-break makes the answer unique. The window scan is
+    * per-row array arithmetic on the pivoted positions (one
+    * `transform` over the candidate starts, an `array_max` over
+    * lexicographic (n_terms, n_hits, −start) structs) — no explode, no
+    * self-join. Scoring is [[phraseTopK]]'s field-restricted
+    * polynomial. Emits `(id, n_tok, score, win_start, win_n_terms,
+    * win_n_hits)`, top `k` by (score desc, id).
+    * Probe conventions: [[Bm25Index]]. */
+  def snippetTopK(
+      spark: SparkSession, handle: Handle, queryTerms: Seq[String],
+      width: Int = 16, k: Int = 10, field: Option[String] = None,
+      k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB,
+      docFilter: Option[DataFrame] = None): DataFrame = {
+    requireProbe(handle, "snippetTopK", k, positional = true)
+    requireTerms(queryTerms, "snippetTopK")
+    require(width >= 1, s"width must be >= 1, got $width")
+    val (fld, avgdlF) = fieldOf(handle, field, "snippetTopK")
+    val id = col(handle.idCol)
+    val score = queryTerms.indices
+      .map(pivotTerm(handle, _, "n_tok_f", avgdlF, k1, b)).reduce(_ + _)
+    // orderBy → select → limit is the Limit(Project(Sort)) shape that
+    // plans as ONE TakeOrderedAndProject: the top k surface through a
+    // partial per-partition take (no global sort exchange), and the
+    // window-scan projection runs on the K SURVIVORS only — a project
+    // placed above the limit instead would break the pattern into
+    // Sort + single-partition Exchange + GlobalLimit (a mid-plan
+    // funnel) and scan windows for every candidate
+    pivotedSlice(spark, handle, queryTerms, Some(fld), docFilter)
+      .select((id +: col("n_tok_f").as("n_tok") +: score.as("score") +:
+        queryTerms.indices.map(i =>
+          coalesce(col(s"__pos$i"), array().cast("array<int>"))
+            .as(s"__pos$i"))): _*)
+      .filter(col("score") > 0.0)
+      .orderBy(col("score").desc, id)
+      .select(Seq(id, col("n_tok"), col("score")) ++
+        bestWindow(array(queryTerms.indices.map(i => col(s"__pos$i")): _*), width): _*)
+      .limit(k)
+  }
+
+  /** Batched snippet extraction — [[snippetTopK]] for a query TABLE
+    * (completing the batch family: [[topKBatch]] scores,
+    * [[phraseTopKBatch]] matches phrases, this one also returns each
+    * hit's best window): one pruned positional pass serves every query
+    * (the batch core), and the window-scan arithmetic runs over the k
+    * SURVIVORS per query only: survivors join back to the pruned slice,
+    * positions collect per (query, doc), and the scan is per-row
+    * higher-order-function arithmetic — no explode, no self-join.
+    * Duplicate qids, empty term arrays and duplicate terms within a
+    * query raise in-plan. Emits `(qid, id, n_tok, score_q, rank,
+    * win_start, win_n_terms, win_n_hits)`, ranks 1..k by
+    * (score_q desc, id). Probe conventions: [[Bm25Index]]. */
+  def snippetTopKBatch(
+      spark: SparkSession, handle: Handle, queries: DataFrame,
+      qidCol: String, termsCol: String, width: Int = 16, k: Int = 10,
+      field: Option[String] = None, k1: Double = Retrieval.DefaultK1,
+      b: Double = Retrieval.DefaultB,
+      docFilter: Option[DataFrame] = None): DataFrame = {
+    requireProbe(handle, "snippetTopKBatch", k, positional = true)
+    require(width >= 1, s"width must be >= 1, got $width")
+    val (fld, avgdlF) = fieldOf(handle, field, "snippetTopKBatch")
+    val qt = oneRowPerQid(queries, qidCol, termsCol, "snippetTopKBatch") { ts =>
+        when(size(ts) < 1, raise_error(concat(
+            lit("snippetTopKBatch: empty terms for query "), col(qidCol).cast("string"))))
+          .when(size(array_distinct(ts)) =!= size(ts), raise_error(concat(
+            lit("snippetTopKBatch: duplicate terms for query "),
+            col(qidCol).cast("string"))))
+          .otherwise(ts)
+      }
+      .select(col(qidCol), explode(col("__terms")).as("__t"))
+      .select(col(qidCol), checkedTerm(col("__t"), "snippetTopKBatch").as("term"))
+      .localCheckpoint(false) // feeds buckets, the score join, the window join
+    val id = col(handle.idCol)
+    // replay duplicates are handled at each consumer instead of by an
+    // extra wide shuffle of the positions-carrying slice: distinct-doc
+    // df, max-before-sum scoring, and a SET collect for the windows
+    val pruned = batchSlice(spark, handle, qt, Seq(fld), collapse = false)
+    val dfs = pruned.groupBy("term").agg(countDistinct(id).as("__df"))
+    val cand = qt.join(restrict(handle, pruned, docFilter), Seq("term"))
+    // per-(query, term, doc) max collapses replay-duplicate rows
+    // before the across-terms sum — narrow rows, map-side combine
+    val scored = cand.join(dfs, Seq("term"))
+      .withColumn("__sq", quantize(rowTerm(handle, "n_tok_f", avgdlF, k1, b)))
+      .groupBy(col(qidCol), id, col("n_tok_f"), col("term"))
+      .agg(max(col("__sq")).as("__sq"))
+      .groupBy(col(qidCol), id, col("n_tok_f"))
+      .agg(sum(col("__sq")).as("score_q"))
+      .filter(col("score_q") > 0L)
+    // window arithmetic on the survivors only: one positions array per
+    // (query, DISTINCT term, doc) row collects per hit. collect_SET:
+    // replay-duplicate posting rows carry bit-identical arrays and
+    // must count once, while two distinct terms can never collide —
+    // a position holds exactly one term, so their position sets are
+    // disjoint and their arrays always differ
+    rankPerQuery(scored, qidCol, handle.idCol, k)
+      .join(cand.select(col(qidCol), id, col("positions")),
+        Seq(qidCol, handle.idCol))
+      .groupBy(col(qidCol), id, col("n_tok_f"), col("score_q"), col("rank"))
+      .agg(collect_set(col("positions")).as("__ps"))
+      .select(Seq(col(qidCol), id, col("n_tok_f").as("n_tok"), col("score_q"),
+        col("rank")) ++ bestWindow(col("__ps"), width): _*)
+  }
+
   /** Proximity-weighted BM25 top-k over the positional postings —
     * between bag-of-words [[topK]] and exact-sequence [[phraseTopK]]:
     * documents where the query terms cluster TOGETHER outrank
     * bag-of-words matches without requiring exact adjacency (minimal
     * span weighting — Tao & Zhai's finding that the best proximity
     * signal is the smallest window covering all terms). Scoring is
-    * the exact-integer convention: `score_q = Σ_t round(s_t·2²⁰)`
-    * (the field-restricted polynomial per term) plus, for docs
-    * containing EVERY distinct query term, a bonus
-    * `round(proxWeight·2²⁰·|Q| / minwin)` where `minwin` is the
-    * smallest token window containing all terms (minwin ≥ |Q|, so
-    * the bonus caps at `proxWeight·2²⁰` for perfectly-packed terms
-    * and decays with spread). `minwin` is computed per candidate row
-    * from the index's sorted positions arrays with array arithmetic
-    * (for each occurrence position s, the window must stretch to
+    * quantized: `score_q = Σ_t round(s_t·2²⁰)` (the field-restricted
+    * polynomial per term) plus, for docs containing EVERY distinct
+    * query term, a bonus `round(proxWeight·2²⁰·|Q| / minwin)` where
+    * `minwin` is the smallest token window containing all terms
+    * (minwin ≥ |Q|, so the bonus caps at `proxWeight·2²⁰` for
+    * perfectly-packed terms and decays with spread). `minwin` is
+    * computed per candidate row from the sorted positions arrays (for
+    * each occurrence position s, the window must stretch to
     * `max_t min{p ∈ pos_t : p ≥ s}`; the minimum over starts is the
     * answer — no explode, no self-join), emitted as a column for
-    * auditing (NULL when a term is missing). One pruned pass; work
-    * proportional to the query terms' postings; `docFilter` is
-    * [[topK]]'s metadata-filter convention (candidates restricted,
-    * stats corpus-wide). Emits `(id, n_tok, minwin, score_q)`, top
-    * `k` by (score_q desc, id). */
+    * auditing (NULL when a term is missing). Emits
+    * `(id, n_tok, minwin, score_q)`, top `k` by (score_q desc, id).
+    * Probe conventions: [[Bm25Index]]. */
   def proximityTopK(
       spark: SparkSession, handle: Handle, queryTerms: Seq[String],
       k: Int = 10, proxWeight: Double = 1.0, field: Option[String] = None,
       k1: Double = Retrieval.DefaultK1,
       b: Double = Retrieval.DefaultB,
       docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "proximityTopK")
-    requireQueryTerms(queryTerms, "proximityTopK")
-    require(queryTerms.distinct.size == queryTerms.size,
-      s"query terms must be distinct: $queryTerms")
-    require(queryTerms.size >= 2,
-      "proximity needs at least two terms — use topK for one")
-    require(queryTerms.size <= MaxQueryTerms,
-      s"at most $MaxQueryTerms query terms, got ${queryTerms.size}")
+    requireProbe(handle, "proximityTopK", k, positional = true)
+    requireTerms(queryTerms, "proximityTopK", min = 2)
     require(proxWeight > 0.0, s"proxWeight must be positive, got $proxWeight")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "proximityTopK over an empty index")
-    val fld = field.getOrElse {
-      require(handle.fields.size == 1,
-        s"multi-field index (${handle.fields.mkString(", ")}): name the " +
-          "field to probe")
-      handle.fields.head
-    }
-    val fi = handle.fields.indexOf(fld)
-    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
-    val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(queryTerms: _*) && col("field") === fld))
-    // distinct-doc df — the [[collapseTf]] pre-compact convention
-    // (see phraseTopK): replayed-append duplicate rows must not
-    // inflate df in the positional probes only. Attached IN-PLAN
-    // ([[withDfColumn]]) instead of a driver collect.
-    val prunedDf = withDfColumn(pruned, handle.idCol)
-    val id = col(handle.idCol)
-    // candidates restricted AFTER the df derivation — stats corpus-wide
-    val pivoted = restrict(handle, prunedDf, docFilter)
-      .groupBy(id, col("n_tok_f")).agg(
-      max(when(col("term") === queryTerms.head, col("tf"))).as("__tf0"),
-      (queryTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("tf"))).as(s"__tf$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t,
-            col("positions"))).as(s"__pos$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val avgdlF = handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble
-    val perTermQ = queryTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tf = coalesce(col(s"__tf$i").cast("double"), lit(0.0))
-      round(idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("n_tok_f").cast("double") / lit(avgdlF)))
-        * lit(1048576.0d)).cast("long")
-    }
+    val (fld, avgdlF) = fieldOf(handle, field, "proximityTopK")
+    val scoreQ = queryTerms.indices
+      .map(i => quantize(pivotTerm(handle, i, "n_tok_f", avgdlF, k1, b))).reduce(_ + _)
     // minwin from the positions arrays: candidate window starts are
     // every occurrence; per start the window stretches to each term's
     // NEXT occurrence at-or-after it — the greatest of those minus
     // the start (+1) is that start's width, the minimum over starts
     // the doc's minimal span
-    val starts = array_distinct(flatten(
-      array(queryTerms.indices.map(i =>
-        coalesce(col(s"__pos$i"), array().cast("array<int>"))): _*)))
-    def nextGE(i: Int, s: org.apache.spark.sql.Column) =
-      array_min(filter(coalesce(col(s"__pos$i"), array().cast("array<int>")),
-        p => p >= s))
+    def pos(i: Int) = coalesce(col(s"__pos$i"), array().cast("array<int>"))
+    val starts = array_distinct(flatten(array(queryTerms.indices.map(pos): _*)))
+    def nextGE(i: Int, s: Column) = array_min(filter(pos(i), p => p >= s))
     val widths = transform(starts, s =>
-      when(queryTerms.indices.map(i => nextGE(i, s).isNotNull).reduce(_ && _), {
-        val nexts = queryTerms.indices.map(i => nextGE(i, s))
-        greatest(nexts: _*) - s + lit(1)
-      }))
+      when(queryTerms.indices.map(i => nextGE(i, s).isNotNull).reduce(_ && _),
+        greatest(queryTerms.indices.map(i => nextGE(i, s)): _*) - s + lit(1)))
     val minwin = array_min(filter(widths, w => w.isNotNull)).cast("long")
     val bonus = when(col("minwin").isNotNull,
         round(lit(proxWeight) * lit(1048576.0d) *
           lit(queryTerms.size.toDouble) / col("minwin").cast("double"))
           .cast("long"))
       .otherwise(lit(0L))
-    pivoted
+    topOf(handle, pivotedSlice(spark, handle, queryTerms, Some(fld), docFilter)
       .withColumn("minwin", minwin)
-      .select(id, col("n_tok_f").as("n_tok"), col("minwin"),
-        (perTermQ.reduce(_ + _) + bonus).as("score_q"))
-      .filter(col("score_q") > 0L)
-      .orderBy(col("score_q").desc, id)
-      .limit(k)
+      .select(col(handle.idCol), col("n_tok_f").as("n_tok"), col("minwin"),
+        (scoreQ + bonus).as("score_q")), "score_q", k)
   }
 
-  /** Batched phrase probe — [[phraseTopK]]'s table form and the
-    * phrase member of the amortized-probe family
-    * ([[topKBatch]]/[[graft.ops.AnnIndex.queryBatch]]): a TABLE of
-    * phrases shares ONE pruned pass over the positional postings.
-    * `queries` carries `(qidCol, phraseCol: array<string>)`, no bound
-    * on the query count or term universe — guards are IN-PLAN
-    * (duplicate qid, sub-2-term phrase, NULL or non-lowercase element
-    * all raise row-wise). Adjacency is fully relational so it
-    * composes at any phrase length per row: each phrase SLOT's
-    * postings explode to `(qid, doc, base = position − slot)` rows
-    * and a base where ALL slots are present is one phrase occurrence
-    * — repeated-term phrases work because every slot joins the term's
-    * posting row independently. Scoring is the field-restricted BM25
-    * polynomial over each phrase's DISTINCT terms in the exact-integer
-    * `score_q` convention (per-(query, doc, term) `round(s·2²⁰)`
-    * BIGINT-summed — order-free), df stays a DataFrame (never
-    * collected), ranking a qid-partitioned window over adjacency
-    * survivors only. `docFilter` restricts CANDIDATES for the whole
-    * batch ([[topK]]'s metadata-filter convention: df/N/avgdl stay
-    * corpus-wide). Emits `(qidCol, idCol, n_tok, phrase_tf,
-    * score_q, rank)`, ranks 1..k by (score_q desc, id); a phrase with
-    * no matching doc simply emits nothing. */
+  /** Batched phrase probe — [[phraseTopK]]'s table form: a TABLE of
+    * phrases shares ONE pruned pass over the positional postings (the
+    * batch core). `queries` carries `(qidCol, phraseCol:
+    * array<string>)`; a duplicate qid or a sub-2-term phrase raises
+    * in-plan. Adjacency is fully relational so it composes at any
+    * phrase length per row: each phrase SLOT's postings explode to
+    * `(qid, doc, base = position − slot)` rows and a base where ALL
+    * slots are present is one phrase occurrence — repeated-term
+    * phrases work because every slot joins the term's posting row
+    * independently. Scoring is the field-restricted polynomial over
+    * each phrase's DISTINCT terms, quantized; ranking runs over
+    * adjacency survivors only. Emits `(qidCol, idCol, n_tok,
+    * phrase_tf, score_q, rank)`, ranks 1..k by (score_q desc, id); a
+    * phrase with no matching doc emits nothing.
+    * Probe conventions: [[Bm25Index]]. */
   def phraseTopKBatch(
       spark: SparkSession, handle: Handle, queries: DataFrame,
       qidCol: String, phraseCol: String, k: Int = 10,
@@ -1603,67 +1475,32 @@ object Bm25Index {
       k1: Double = Retrieval.DefaultK1,
       b: Double = Retrieval.DefaultB,
       docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "phraseTopKBatch")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "phraseTopKBatch over an empty index")
-    val fld = field.getOrElse {
-      require(handle.fields.size == 1,
-        s"multi-field index (${handle.fields.mkString(", ")}): name the " +
-          "field to run the phrases against")
-      handle.fields.head
-    }
-    val fi = handle.fields.indexOf(fld)
-    require(fi >= 0, s"unknown field '$fld' — index has ${handle.fields}")
-    val dupW = org.apache.spark.sql.expressions.Window.partitionBy(qidCol)
-    val qv = queries
-      .withColumn("__n", count(lit(1)).over(dupW))
-      .select(
-        when(col("__n") > 1, raise_error(concat(
-            lit("phraseTopKBatch: duplicate query id "), col(qidCol))))
-          .otherwise(col(qidCol)).as(qidCol),
-        when(size(col(phraseCol)) < 2, raise_error(concat(
-            lit("phraseTopKBatch: a phrase needs at least two terms, query "),
-            col(qidCol))))
-          .otherwise(col(phraseCol)).as("__phrase"))
-    val slots = qv
-      .select(col(qidCol), size(col("__phrase")).as("__plen"),
-        posexplode(col("__phrase")).as(Seq("__slot", "__t")))
+    requireProbe(handle, "phraseTopKBatch", k, positional = true)
+    val (fld, avgdlF) = fieldOf(handle, field, "phraseTopKBatch")
+    val slots = oneRowPerQid(queries, qidCol, phraseCol, "phraseTopKBatch") { ts =>
+        when(size(ts) < 2, raise_error(concat(lit("phraseTopKBatch: a phrase " +
+          "needs at least two terms, query "), col(qidCol).cast("string")))).otherwise(ts)
+      }
+      .select(col(qidCol), size(col("__terms")).as("__plen"),
+        posexplode(col("__terms")).as(Seq("__slot", "__t")))
       .select(col(qidCol), col("__plen"), col("__slot"),
-        when(col("__t").isNull, raise_error(lit(
-          "phraseTopKBatch: NULL term element in a phrase")))
-          .when(col("__t") =!= lower(col("__t")), raise_error(concat(
-            lit("phraseTopKBatch: phrase terms must be lowercase " +
-              "(documents are lowercased before matching): "), col("__t"))))
-          .otherwise(col("__t")).as("term"))
+        checkedTerm(col("__t"), "phraseTopKBatch").as("term"))
       .localCheckpoint(false) // feeds buckets, the slot join, the score join
-    val buckets = slots
-      .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
     val id = col(handle.idCol)
-    // the [[collapseTf]] pre-compact convention, enforced WITHOUT the
-    // old wide shuffle of the positions-carrying slice: an
-    // at-least-once replayed append lays bit-identical posting rows,
-    // so ONE narrow collapse (term/doc/length/tf — positions never
-    // shuffle) feeds both the df count and the scoring join, and the
-    // base grouping below collapses duplicate (slot, base) rows by
-    // construction — on a clean index every level degenerates to the
-    // plain single-row case
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-        spark.read.parquet(s"${handle.dir}/postings")
-          .filter(col("term_bucket").isin(buckets: _*) && col("field") === fld)
-          .join(slots.select("term").distinct(), Seq("term"), "left_semi"))
-      .localCheckpoint(false) // feeds df counts, the slot join, the score join
+    // replay duplicates collapse WITHOUT a wide shuffle of the
+    // positions-carrying slice: ONE narrow collapse (term/doc/length/tf
+    // — positions never shuffle) feeds both the df count and the
+    // scoring join, and the base grouping below collapses duplicate
+    // (slot, base) rows by construction
+    val pruned = batchSlice(spark, handle, slots, Seq(fld), collapse = false)
     val narrow = pruned
       .groupBy(col("term"), id, col("n_tok_f")).agg(max(col("tf")).as("tf"))
     // rows unique per (term, doc) within the fixed field: count == df
     val dfs = narrow.groupBy("term").agg(count(lit(1)).as("__df"))
-    // candidates restricted AFTER the df derivation — stats stay
-    // corpus-wide ([[topK]]'s docFilter convention)
-    val candSlice = restrict(handle, pruned, docFilter)
     // one row per (query, slot, matching doc), exploded to the base
     // position each slot's occurrences would anchor: base where every
     // slot appears == one occurrence of the full phrase
-    val bases = slots.join(candSlice, Seq("term"))
+    val bases = slots.join(restrict(handle, pruned, docFilter), Seq("term"))
       .select(col(qidCol), col("__plen"), col("__slot"), id,
         explode(expr("transform(positions, x -> x - __slot)")).as("__base"))
     val matched = bases
@@ -1672,145 +1509,80 @@ object Bm25Index {
       .filter(col("__nslots") === col("__plen"))
       .groupBy(col(qidCol), id)
       .agg(count(lit(1)).as("phrase_tf"))
-    val avgdlF = handle.fieldTokens(fi).toDouble / handle.nDocs.toDouble
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) +
-      (lit(handle.nDocs.toDouble) - col("__df").cast("double") + lit(0.5)) /
-        (col("__df").cast("double") + lit(0.5)))
-    val termScore = idf * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("n_tok_f").cast("double") / lit(avgdlF)))
     // scoring joins the already-collapsed narrow frame — one sum per
     // (query, doc), no duplicate rows to guard against here
     val scored = slots.select(col(qidCol), col("term")).distinct()
       .join(restrict(handle, narrow, docFilter), Seq("term"))
       .join(dfs, Seq("term"))
-      .withColumn("__sq", round(termScore * lit(1048576.0d)).cast("long"))
+      .withColumn("__sq", quantize(rowTerm(handle, "n_tok_f", avgdlF, k1, b)))
       .groupBy(col(qidCol), id, col("n_tok_f"))
       .agg(sum(col("__sq")).as("score_q"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(qidCol).orderBy(col("score_q").desc, id)
-    matched.join(scored, Seq(qidCol, handle.idCol))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankPerQuery(matched.join(scored, Seq(qidCol, handle.idCol)), qidCol, handle.idCol, k)
       .select(col(qidCol), id, col("n_tok_f").as("n_tok"),
         col("phrase_tf"), col("score_q"), col("rank"))
   }
 
   /** Weighted-term BM25 top-k — the second pass of relevance-feedback
     * retrieval ([[rm3Expand]] produces the weights; any caller-built
-    * `(term, weight_q)` table works). The term set is DATA-DERIVED
-    * (an expansion model's output), so nothing here is
-    * driver-resident: guards are in-plan, bucket pruning comes from
-    * the distinct buckets of the weight table's terms (a
-    * ≤ numBuckets collect), df stays a DataFrame, and the score is
-    * the exact-integer convention composed with the weights —
-    * per (term, doc) `round(weight_q · s)` where `s` is the classic
-    * per-term BM25 double and `weight_q` the term's 2²⁰-quantized
-    * weight, BIGINT-summed per doc (order-free; `score_q2` is thus in
-    * units of 2⁻⁴⁰ of a weighted score). `docFilter` is [[topK]]'s
-    * metadata-filter convention — the expanded second pass of a
-    * filtered RM3 retrieval ranks only qualifying docs while
-    * df/N/avgdl stay corpus-wide. Emits `(id, n_tok, score_q2)`,
-    * top `k` by (score_q2 desc, id). */
+    * `(term, weight_q)` table works). The score composes the exact
+    * integer convention with the weights: per (term, doc)
+    * `round(weight_q · s)` where `s` is the classic per-term BM25
+    * double and `weight_q` the term's 2²⁰-quantized weight,
+    * BIGINT-summed per doc (`score_q2` is thus in units of 2⁻⁴⁰ of a
+    * weighted score). A weight table that is a LocalRelation (as
+    * [[rm3Expand]]'s output is) takes the single-query core: it is
+    * collected without a job, validated on the driver, and the weight
+    * attaches as a literal-map lookup. Any other weight table takes
+    * the batch core with in-plan guards. Both reject the same inputs —
+    * a NULL term, a non-lowercase or duplicate term, a NULL weight_q,
+    * or one whose long cast is <= 0, such as 0.5 — and score
+    * bit-identically. Emits `(id, n_tok, score_q2)`, top `k` by
+    * (score_q2 desc, id). Probe conventions: [[Bm25Index]]. */
   def topKWeighted(
       spark: SparkSession, handle: Handle, weights: DataFrame,
       k: Int = 10, k1: Double = Retrieval.DefaultK1,
       b: Double = Retrieval.DefaultB,
       docFilter: Option[DataFrame] = None): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "topKWeighted over an empty index")
+    requireProbe(handle, "topKWeighted", k)
     require(weights.columns.contains("term") && weights.columns.contains("weight_q"),
       s"weights must carry (term, weight_q), has ${weights.columns.mkString(", ")}")
-    // Weights are a TERM TABLE — |Q| + fbTerms rows by the rm3Expand
-    // contract, and a LocalRelation whenever they come from rm3Expand
-    // (built on the driver). The fast path collects them WITHOUT a job
-    // (LocalTableScan.executeCollect is driver-side), validates on the
-    // driver, derives buckets via [[engineBucketOf]], and attaches the
-    // weight as a literal-map lookup — four fewer Spark jobs per probe
-    // (no weights checkpoint, no bucket collect, no weights-side
-    // exchange for the score join). Distributed weight frames keep the
-    // in-plan validation path; both reject the same inputs (a NULL
-    // term, a non-lowercase or duplicate term, a NULL weight_q, or one
-    // whose long cast is <= 0, such as 0.5). Scores are bit-identical:
-    // the same Long weight multiplies the same per-term double.
     val isLocal = weights.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val (pruned, attachWeight: (DataFrame => DataFrame)) =
       if (isLocal) {
         // LocalTableScan.executeCollect is driver-side — no job
         val rows = weights.select(col("term"), col("weight_q").cast("long")).collect()
-        rows.foreach { r =>
-          require(!r.isNullAt(0), "topKWeighted: NULL term")
-          val t = r.getString(0)
-          require(t == t.toLowerCase,
-            s"topKWeighted: terms must be lowercase (documents are " +
-              s"lowercased before matching): $t")
-          require(!r.isNullAt(1) && r.getLong(1) > 0L,
-            s"topKWeighted: weight_q must be positive for $t")
-        }
-        val dup = rows.groupBy(_.getString(0))
-          .collectFirst { case (t, g) if g.size > 1 => t }
-        require(dup.isEmpty, s"topKWeighted: duplicate term ${dup.getOrElse("")}")
         val terms = rows.map(_.getString(0)).toSeq
+        requireTerms(terms, "topKWeighted", min = 0, emptyOk = true, capped = false)
+        rows.foreach(r => require(!r.isNullAt(1) && r.getLong(1) > 0L,
+          s"topKWeighted: weight_q must be positive for ${r.getString(0)}"))
         val wmap = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val buckets = terms.map(engineBucketOf(_, handle.numBuckets)).distinct
-        val slice = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-          spark.read.parquet(s"${handle.dir}/postings")
-            .filter(col("term_bucket").isin(buckets: _*) &&
-              col("term").isin(terms: _*))))
-        (slice, (df: DataFrame) =>
-          df.withColumn("weight_q", element_at(typedLit(wmap), col("term"))))
+        (collapseTf(handle, termSlice(spark, handle, terms, Nil)),
+          (df: DataFrame) =>
+            df.withColumn("weight_q", element_at(typedLit(wmap), col("term"))))
       } else {
-        val dupW = org.apache.spark.sql.expressions.Window.partitionBy("term")
         val wt = weights
-          .withColumn("__n", count(lit(1)).over(dupW))
-          .select(
-            when(col("term").isNull, raise_error(lit(
-                "topKWeighted: NULL term")))
-              .when(col("term") =!= lower(col("term")), raise_error(concat(
-                lit("topKWeighted: terms must be lowercase (documents are " +
-                  "lowercased before matching): "), col("term"))))
-              .when(col("__n") > 1, raise_error(concat(
-                lit("topKWeighted: duplicate term "), col("term"))))
-              .otherwise(col("term")).as("term"),
-            // the fast path's rule: NULL, or a long cast <= 0 (0.5 is 0)
+          .select(checkedTerm(col("term"), "topKWeighted").as("term"),
+            // the driver path's rule: NULL, or a long cast <= 0 (0.5 is 0)
             when(col("weight_q").isNull || col("weight_q").cast("long") <= 0L,
                 raise_error(concat(
                   lit("topKWeighted: weight_q must be positive for "), col("term"))))
               .otherwise(col("weight_q").cast("long")).as("weight_q"))
-          .localCheckpoint(false) // feeds bucket collect AND the score join
-        val buckets = wt
-          .select(pmod(hash(col("term")), lit(handle.numBuckets)).cast("int").as("__b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val slice = collapseTf(handle, Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-          spark.read.parquet(s"${handle.dir}/postings")
-            .filter(col("term_bucket").isin(buckets: _*))
-            .join(wt.select("term"), Seq("term"), "left_semi")))
-        (slice, (df: DataFrame) => df.join(wt, Seq("term")))
+          .withColumn("__n", count(lit(1)).over(Window.partitionBy("term")))
+          .select(when(col("__n") > 1, raise_error(concat(
+              lit("topKWeighted: duplicate term "), col("term"))))
+            .otherwise(col("term")).as("term"), col("weight_q"))
+          .localCheckpoint(false) // feeds the bucket collect AND the score join
+        (batchSlice(spark, handle, wt, Nil, collapse = true),
+          (df: DataFrame) => df.join(wt, Seq("term")))
       }
-    // one in-plan df per term over the UNRESTRICTED slice (count of
-    // collapsed rows — the original convention here); candidates
-    // restricted AFTER — stats corpus-wide
     val dfs = pruned.groupBy("term").agg(count(lit(1)).as("__df"))
-    val avgdl = handle.totalTokens.toDouble / handle.nDocs.toDouble
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) +
-      (lit(handle.nDocs.toDouble) - col("__df").cast("double") + lit(0.5)) /
-        (col("__df").cast("double") + lit(0.5)))
-    val termScore = idf * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("n_tok").cast("double") / lit(avgdl)))
-    val id = col(handle.idCol)
-    attachWeight(restrict(handle, pruned, docFilter))
+    val termScore = rowTerm(handle, "n_tok", avgdlOf(handle), k1, b)
+    topOf(handle, attachWeight(restrict(handle, pruned, docFilter))
       .join(dfs, Seq("term"))
-      .withColumn("__sq",
-        round(col("weight_q").cast("double") * termScore).cast("long"))
-      .groupBy(id, col("n_tok"))
-      .agg(sum(col("__sq")).as("score_q2"))
-      .filter(col("score_q2") > 0L)
-      .orderBy(col("score_q2").desc, id)
-      .limit(k)
+      .withColumn("__sq", round(col("weight_q").cast("double") * termScore).cast("long"))
+      .groupBy(col(handle.idCol), col("n_tok"))
+      .agg(sum(col("__sq")).as("score_q2")), "score_q2", k)
   }
 
   /** RM3 pseudo-relevance-feedback query expansion over the standing
@@ -1818,91 +1590,36 @@ object Bm25Index {
     * relevant, build a relevance model from their term statistics,
     * and interpolate it with the original query into a weighted term
     * table for [[topKWeighted]] — retrieval quality's classic
-    * no-supervision lever (Lavrenko & Croft's relevance models; the
-    * reference pipeline has no retrieval feedback loop — this is
-    * engine-side infrastructure for the RAG stack).
+    * no-supervision lever (Lavrenko & Croft's relevance models).
     *
     * Every weight is derived in exact integer arithmetic so the
     * chain is order-free and oracle-replayable:
-    *  - first pass: [[topK]]'s candidates in the [[topKBatch]]
-    *    convention — doc score `s_q = Σ_t round(s_t·2²⁰)` (BIGINT),
-    *    top `fbDocs` by (s_q desc, id);
+    *  - first pass: [[topK]]'s single-query core with the quantized
+    *    per-term combiner — doc score `s_q = Σ_t round(s_t·2²⁰)`
+    *    (BIGINT, a term absent from the doc contributes 0), top
+    *    `fbDocs` by (s_q desc, id): the same scores and selection
+    *    [[topKBatch]] gives a one-row query table;
     *  - relevance model: for every term t of feedback doc d — term
-    *    frequencies fetched from the INDEX-RESIDENT forward table
+    *    frequencies fetched from the index-resident forward table
     *    (`termvecs/`, fbDocs point lookups pruned to the ids'
-    *    doc_buckets; the postings table is term-partitioned and a
-    *    by-doc read of it would scan every bucket) when the index
-    *    carries it and `textCol` is one of its fields, else
-    *    re-tokenized from `corpus` (the pre-forward-index path,
-    *    kept for legacy indexes; both produce the same statFrames
-    *    tf/length values, so weights are bit-identical) — the
-    *    contribution
-    *    `round(tf_td · s_q(d) / len_d)` — P(t|d) times the doc's
-    *    (quantized) query likelihood — BIGINT-summed over the
-    *    feedback set into `w_q(t)`;
+    *    doc_buckets) when the index carries it and `textCol` is one of
+    *    its fields, else re-tokenized from `corpus` (the legacy path;
+    *    both produce the same tf/length values, so weights are
+    *    bit-identical) — the contribution `round(tf_td · s_q(d) /
+    *    len_d)` — P(t|d) times the doc's (quantized) query likelihood
+    *    — BIGINT-summed over the feedback set into `w_q(t)`;
     *  - expansion: top `fbTerms` candidates by (w_q desc, term);
     *  - interpolation: original terms get `round(λ·2²⁰/|Q|)` each
     *    (uniform query model), selected terms add
     *    `round((1−λ)·2²⁰·w_q/Σw_q)` (the relevance model normalized
     *    over the selected set) — both exact given the integer
     *    inputs.
-    * `docFilter` restricts the FEEDBACK pool ([[topK]]'s metadata
-    * convention, applied to the first pass): the fbDocs relevant
-    * exemplars are the best QUALIFYING docs, so the relevance model
-    * is built from the caller's slice ("expand from English docs
-    * only") while df/N/avgdl stay corpus-wide — compose with
-    * [[topKWeighted]]'s own `docFilter` for a fully-filtered RM3
-    * retrieval. Emits `(term, weight_q, in_query, w_q)` — ready for
-    * [[topKWeighted]], with the provenance columns for auditing. */
-  /** Single-query top-k in the BATCH quantized convention —
-    * [[rm3Expand]]'s first pass: score_q values and selection
-    * BIT-IDENTICAL to [[topKBatch]] for a one-row query table (same
-    * per-(doc, term) `round(s·2²⁰)` quantization, same integer sum,
-    * same (score_q desc, id) order), but in [[topK]]'s plan shape —
-    * driver-resident per-term df (one collect), no query-table
-    * distinct, no checkpoint, no window: TakeOrderedAndProject
-    * instead. At probe latency the chain's JOB COUNT is the cost;
-    * this is three fewer jobs than the batch machinery pays for one
-    * query. Terms are assumed validated by the caller. */
-  private def topKQuantizedSingle(
-      spark: SparkSession, handle: Handle, queryTerms: Seq[String], k: Int,
-      k1: Double, b: Double, docFilter: Option[DataFrame]): DataFrame = {
-    val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    // df attached IN-PLAN ([[withDfColumn]]) — this probe now costs
-    // ZERO actions of its own; the caller's one collect executes the
-    // whole chain
-    val pruned = withDfColumn(collapseTf(handle,
-      Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(queryTerms: _*)))), handle.idCol)
-    val avgdl = handle.totalTokens.toDouble / handle.nDocs.toDouble
-    val id = col(handle.idCol)
-    val candidates = restrict(handle, pruned, docFilter)
-    val pivoted = candidates.groupBy(id, col("n_tok")).agg(
-      max(when(col("term") === queryTerms.head, col("tf"))).as("__tf0"),
-      (queryTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("tf"))).as(s"__tf$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val perTerm = queryTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tf = col(s"__tf$i").cast("double")
-      val termScore = idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("n_tok").cast("double") / lit(avgdl)))
-      // a term absent from the doc has NO (query, doc, term) row in
-      // the batch convention — it contributes exactly 0, not a
-      // quantized 0-tf score
-      when(col(s"__tf$i").isNull, lit(0L))
-        .otherwise(round(termScore * lit(1048576.0d)).cast("long"))
-    }
-    pivoted.select(id, perTerm.reduce(_ + _).as("score_q"))
-      .filter(col("score_q") > 0L)
-      .orderBy(col("score_q").desc, id)
-      .limit(k)
-  }
-
+    * `docFilter` restricts the FEEDBACK pool: the fbDocs exemplars are
+    * the best qualifying docs ("expand from English docs only") —
+    * compose with [[topKWeighted]]'s own `docFilter` for a
+    * fully-filtered RM3 retrieval. Emits `(term, weight_q, in_query,
+    * w_q)` — ready for [[topKWeighted]], with the provenance columns
+    * for auditing. Probe conventions: [[Bm25Index]]. */
   def rm3Expand(
       spark: SparkSession, handle: Handle, corpus: DataFrame,
       queryTerms: Seq[String], fbDocs: Int = 5, fbTerms: Int = 5,
@@ -1915,20 +1632,21 @@ object Bm25Index {
     require(lambda > 0.0 && lambda < 1.0,
       s"lambda must be in (0, 1) — 1 disables feedback, 0 discards the query; " +
         s"got $lambda")
-    require(queryTerms.nonEmpty && queryTerms.distinct.size == queryTerms.size,
-      s"query terms must be non-empty and distinct: $queryTerms")
-    require(queryTerms.forall(t => t == t.toLowerCase),
-      s"query terms must be lowercase: $queryTerms")
+    requireTerms(queryTerms, "rm3Expand", emptyOk = true, capped = false)
     import spark.implicits._
-    // first pass in the quantized convention (one row per query);
-    // id-type-agnostic: the id column stays whatever the index was
-    // built with (long, string, …). The feedback frame is fbDocs rows
-    // by contract — collected ONCE and re-entered as a local relation
-    // (one Spark job; the old localCheckpoint-then-collect shape paid
-    // an extra eager materialization, and at probe latencies the
-    // chain's job count IS the cost)
-    val first = topKQuantizedSingle(spark, handle, queryTerms,
-        k = fbDocs, k1 = k1, b = b, docFilter = docFilter)
+    // first pass; id-type-agnostic: the id column stays whatever the
+    // index was built with (long, string, …). The feedback frame is
+    // fbDocs rows by contract — collected ONCE and re-entered as a
+    // local relation (one Spark job; at probe latencies the chain's
+    // job count IS the cost)
+    val sq = queryTerms.indices.map { i =>
+      // a term absent from the doc contributes exactly 0, not a
+      // quantized 0-tf score (the batch convention has no such row)
+      when(col(s"__tf$i").isNull, lit(0L))
+        .otherwise(quantize(pivotTerm(handle, i, "n_tok", avgdlOf(handle), k1, b)))
+    }.reduce(_ + _)
+    val first = topOf(handle, pivotedSlice(spark, handle, queryTerms, None, docFilter)
+        .select(col(handle.idCol), sq.as("score_q")), "score_q", fbDocs)
       .select(col(handle.idCol), col("score_q").as("__sq_doc"))
     val firstRows = first.collect()
     require(firstRows.nonEmpty, s"rm3Expand: the query $queryTerms matched nothing")
@@ -1938,14 +1656,9 @@ object Bm25Index {
     // feedback term frequencies: INDEX-RESIDENT when the forward index
     // exists (fbDocs point lookups into the doc-bucket-partitioned
     // termvecs — partition pruning on the ids' buckets plus an id
-    // filter into id-sorted row groups; tf/length are the same
-    // statFrames values re-tokenizing would compute, so weights are
-    // bit-identical) — else the legacy corpus re-fetch+re-tokenize.
-    // This was the measured cost dominator of the RM3 chain: the
-    // corpus pass paid a full scan + tokenize per query.
-    val fs = Maintenance.fsOf(spark)
-    val hasTv = fs.exists(
-        new Path(s"${handle.dir}/termvecs")) &&
+    // filter into id-sorted row groups) — else the legacy corpus
+    // re-fetch+re-tokenize, which paid a full scan + tokenize per query
+    val hasTv = Maintenance.fsOf(spark).exists(new Path(s"${handle.dir}/termvecs")) &&
       handle.fields.contains(textCol)
     val termFreqs =
       if (hasTv) {
@@ -1955,15 +1668,14 @@ object Bm25Index {
         spark.read.parquet(s"${handle.dir}/termvecs")
           .filter(col("doc_bucket").isin(buckets: _*) &&
             col(handle.idCol).isin(fbIds: _*) && col("field") === textCol)
-          // replayed-append duplicates collapse (the collapseTf
-          // pre-compact convention); a clean index has one row per key
+          // replayed-append duplicates collapse; a clean index has one
+          // row per key
           .groupBy(col(handle.idCol), col("n_tok_f").cast("long").as("__len"),
             col("term"))
           .agg(max(col("tf")).as("__tf"))
       } else {
-        val toksOf = split(trim(lower(col(textCol))), "\\s+")
         corpus.filter(col(handle.idCol).isin(fbIds: _*))
-          .select(col(handle.idCol), toksOf.as("__toks"))
+          .select(col(handle.idCol), toks(textCol).as("__toks"))
           .select(col(handle.idCol), size(col("__toks")).cast("long").as("__len"),
             explode(col("__toks")).as("term"))
           .groupBy(col(handle.idCol), col("__len"), col("term"))
@@ -1976,9 +1688,7 @@ object Bm25Index {
       .groupBy("term").agg(sum(col("__c")).as("w_q"))
     // the selected set is fbTerms rows by contract: ONE
     // TakeOrderedAndProject job collects it, and the normalization +
-    // interpolation tail runs in exact DRIVER arithmetic — the old
-    // shape paid three more jobs (checkpoint, Σw_q aggregate, the
-    // full_outer join) to compute a |Q|+fbTerms-row table
+    // interpolation tail runs in exact DRIVER arithmetic
     val selRows = wq
       .orderBy(col("w_q").desc, col("term"))
       .limit(fbTerms)
@@ -2020,27 +1730,18 @@ object Bm25Index {
     * `score(d) = Σ_t idf_t · tf̃_t / (k1 + tf̃_t)` with idf over docs
     * matching in ANY weighted field. Index once, tune `weights` per
     * query — a title hit can outrank a body hit without re-indexing.
-    * The cross-FIELD sum quantizes each component to `round(x·2²⁰)`
-    * and integer-sums (order-free on any partitioning — the
-    * [[topKBatch]] convention); cross-term addition is a
-    * left-to-right column reduce. One pruned pass; work proportional
-    * to the query terms' postings; `docFilter` is [[topK]]'s
-    * metadata-filter convention (candidates restricted, idf/df
-    * corpus-wide). Emits `(id, score)`, top `k` by (score desc, id). */
+    * The cross-FIELD sum quantizes each component and integer-sums
+    * (order-free on any partitioning); cross-term addition is a
+    * left-to-right column reduce. Emits `(id, score)`, top `k` by
+    * (score desc, id). Probe conventions: [[Bm25Index]]. */
   def bm25fTopK(
       spark: SparkSession, handle: Handle, queryTerms: Seq[String],
       weights: Seq[(String, Double)], k: Int = 10,
       k1: Double = Retrieval.DefaultK1,
       b: Double = Retrieval.DefaultB,
       docFilter: Option[DataFrame] = None): DataFrame = {
-    requirePositional(handle, "bm25fTopK")
-    requireQueryTerms(queryTerms, "bm25fTopK")
-    require(queryTerms.distinct.size == queryTerms.size,
-      s"query terms must be distinct: $queryTerms")
-    require(queryTerms.size <= MaxQueryTerms,
-      s"at most $MaxQueryTerms query terms, got ${queryTerms.size}")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(handle.nDocs > 0, "bm25fTopK over an empty index")
+    requireProbe(handle, "bm25fTopK", k, positional = true)
+    requireTerms(queryTerms, "bm25fTopK")
     require(weights.nonEmpty &&
         weights.map(_._1).distinct.size == weights.size,
       s"weights must be non-empty with distinct fields: $weights")
@@ -2050,15 +1751,7 @@ object Bm25Index {
       require(w > 0.0, s"field weight must be positive: $f -> $w")
     }
     val wFields = weights.map(_._1)
-    val buckets = bucketsFor(spark, queryTerms, handle.numBuckets).distinct
-    val pruned = Tombstones.liveOnly(spark, handle.dir, handle.idCol,
-      spark.read.parquet(s"${handle.dir}/postings")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(queryTerms: _*) && col("field").isin(wFields: _*)))
     val id = col(handle.idCol)
-    // a doc matching the term in TWO fields still counts once —
-    // attached IN-PLAN ([[withDfColumn]]) instead of a driver collect
-    val prunedDf = withDfColumn(pruned, handle.idCol)
     val avgdlF: Map[String, Double] = handle.fields.zip(handle.fieldTokens)
       .map { case (f, t) => f -> t.toDouble / handle.nDocs.toDouble }.toMap
     def fieldChain(value: String => Double) =
@@ -2069,31 +1762,22 @@ object Bm25Index {
     val bF = lit(1.0 - b) + lit(b) * col("n_tok_f").cast("double") /
       fieldChain(avgdlF)
     val wtf = fieldChain(weights.toMap) * col("tf").cast("double") / bF
-    // candidates restricted AFTER the df derivation — stats corpus-wide
-    val perTermDoc = restrict(handle, prunedDf, docFilter)
-      .withColumn("__wq", round(wtf * lit(1048576.0d)).cast("long"))
-      // inner max collapses bit-identical replayed-append rows (the
-      // [[collapseTf]] pre-compact convention), outer sum is the real
-      // across-fields total; on a clean index both aggregate one row
-      // per key — values unchanged
+    // a doc matching the term in TWO fields still counts once in df;
+    // the inner max collapses replay duplicates, the outer sum is the
+    // real across-fields total
+    val perTermDoc = restrict(handle,
+        withDfColumn(termSlice(spark, handle, queryTerms, wFields), handle.idCol),
+        docFilter)
+      .withColumn("__wq", quantize(wtf))
       .groupBy(id, col("term"), col("field"))
       .agg(max(col("__wq")).as("__wq"), max(col("__df")).as("__df"))
       .groupBy(id, col("term"))
-      .agg(sum(col("__wq")).as("__twq"), max(col("__df")).as("__df"))
-    val pivoted = perTermDoc.groupBy(id).agg(
-      max(when(col("term") === queryTerms.head, col("__twq"))).as("__tw0"),
-      (queryTerms.zipWithIndex.drop(1).map { case (t, i) =>
-        max(when(col("term") === t, col("__twq"))).as(s"__tw$i") } ++
-        queryTerms.zipWithIndex.map { case (t, i) =>
-          max(when(col("term") === t, col("__df"))).as(s"__df$i") }): _*)
-    val perTerm = queryTerms.zipWithIndex.map { case (_, i) =>
-      val idf = idfOf(handle.nDocs, col(s"__df$i"))
-      val tft = coalesce(col(s"__tw$i"), lit(0L)).cast("double") / lit(1048576.0d)
-      idf * tft / (lit(k1) + tft)
-    }
-    pivoted.select(id, perTerm.reduce(_ + _).as("score"))
-      .filter(col("score") > 0.0)
-      .orderBy(col("score").desc, id)
-      .limit(k)
+      .agg(sum(col("__wq")).as("tf"), max(col("__df")).as("__df"))
+    val score = queryTerms.indices.map { i =>
+      val tft = coalesce(col(s"__tf$i"), lit(0L)).cast("double") / lit(1048576.0d)
+      idfOf(handle.nDocs, col(s"__df$i")) * tft / (lit(k1) + tft)
+    }.reduce(_ + _)
+    topOf(handle, pivot(perTermDoc, Seq(id), queryTerms, positions = false)
+      .select(id, score.as("score")), "score", k)
   }
 }

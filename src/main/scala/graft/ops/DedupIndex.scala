@@ -42,8 +42,9 @@ object DedupIndex {
     * minhashes, so the probe's band-0 equality implies the partition
     * key's equality exactly when the probe uses a band at least that
     * wide ([[dedupBatch]] checks; probing narrower is still correct —
-    * the partition-pruning equality is simply not stated). */
-  /** `hasTombstones` — whether a `tombstones/` side table exists
+    * the partition-pruning equality is simply not stated).
+    *
+    * `hasTombstones` — whether a `tombstones/` side table exists
     * ([[delete]] since the last [[compact]]): when false every probe
     * skips the tombstone anti-joins entirely. */
   final case class Handle(

@@ -64,6 +64,7 @@ object Retrieval {
       queryTerms: Seq[String], k: Int = 10,
       k1: Double = DefaultK1, b: Double = DefaultB): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
+    require(!queryTerms.contains(null), s"bm25TopK: NULL query term in $queryTerms")
     // documents are tokenized LOWERCASED, so a mixed-case query term
     // would silently match nothing — reject it rather than return an
     // empty result that reads as "no documents mention it"

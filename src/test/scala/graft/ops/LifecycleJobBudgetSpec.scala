@@ -11,7 +11,8 @@ import graft.SparkSpec
   * the shared lock / swap / tombstone / shadow catch-up code that adds a
   * job fails here. Each budget is the count the op launched before that
   * protocol moved into [[Maintenance]] (Spark 4.1.2, 4 shuffle
-  * partitions); none may rise. */
+  * partitions); none may rise. The second test does the same for every
+  * BM25 probe on a 20-doc index built the same way. */
 class LifecycleJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -97,10 +98,76 @@ class LifecycleJobBudgetSpec extends SparkSpec {
       report("post_ann_live_codes") == 19L &&
       report("post_tombstone_disagreements") == 0L, report.toString)
 
+    assertWithin(counts, Budgets)
+  }
+
+  private def assertWithin(
+      counts: collection.Map[String, Int], budgets: Map[String, Int]): Unit = {
     info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
-    assert(counts.keySet == Budgets.keySet)
-    val over = counts.filter { case (op, n) => n > Budgets(op) }
+    assert(counts.keySet == budgets.keySet)
+    val over = counts.filter { case (op, n) => n > budgets(op) }
     assert(over.isEmpty, over.map { case (op, n) =>
-      s"$op: $n jobs, budget ${Budgets(op)}" }.mkString("; "))
+      s"$op: $n jobs, budget ${budgets(op)}" }.mkString("; "))
+  }
+
+  /** Jobs of each BM25 probe's `collect()`, construction included (the
+    * batch probes collect their bucket ids and checkpoint while
+    * building the plan). Each budget is the count the probe launched
+    * before the probes were rebuilt on the shared single-query and
+    * batch cores (Spark 4.1.2, 4 shuffle partitions); none may rise. */
+  private val ProbeBudgets: Map[String, Int] = Map(
+    "topK" -> 7, "topK.docFilter" -> 8, "topKBatch" -> 13,
+    "topKBatch.docFilter" -> 14, "topKBatch.attrEquals" -> 23,
+    "phraseTopK" -> 6, "phraseTopKBatch" -> 20,
+    "snippetTopK" -> 6, "snippetTopKBatch" -> 15,
+    "proximityTopK" -> 6, "bm25fTopK" -> 8, "rm3Expand" -> 12,
+    "topKWeighted.local" -> 7, "topKWeighted.distributed" -> 13,
+    "topK.deleted" -> 9, "topKBatch.deleted" -> 15)
+
+  test("each BM25 probe, filtered and after a delete, stays within its job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("probe_jobs_").toString
+    val corpus = docs(20).localCheckpoint(true)
+    val h0 = Bm25Index.build(corpus, "doc_id", dir, numBuckets = 8)
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def count(op: String)(f: => DataFrame): Unit =
+      counts(op) = jobsDuring(f.collect())._2.size
+    val terms = Seq("topic", "shared", "w3")
+    val queries = Seq((1L, Seq("topic", "w3"), 1L), (2L, Seq("shared"), 0L))
+      .toDF("qid", "terms", "parity")
+    val allow = corpus.filter(col("doc_id") < 10L).select("doc_id")
+    val attrs = corpus.select(col("doc_id"), (col("doc_id") % 2L).as("doc_parity"))
+    val weights = Seq(("topic", 1048576L), ("w3", 2097152L)).toDF("term", "weight_q")
+
+    count("topK")(Bm25Index.topK(spark, h0, terms, k = 5))
+    count("topK.docFilter")(Bm25Index.topK(spark, h0, terms, k = 5,
+      docFilter = Some(allow)))
+    count("topKBatch")(Bm25Index.topKBatch(spark, h0, queries, "qid", "terms", k = 5))
+    count("topKBatch.docFilter")(Bm25Index.topKBatch(spark, h0, queries,
+      "qid", "terms", k = 5, docFilter = Some(allow)))
+    count("topKBatch.attrEquals")(Bm25Index.topKBatch(spark, h0, queries,
+      "qid", "terms", k = 5, attrEquals = Some((attrs, "doc_parity", "parity"))))
+    count("phraseTopK")(Bm25Index.phraseTopK(spark, h0, Seq("about", "topic"), k = 5))
+    count("phraseTopKBatch")(Bm25Index.phraseTopKBatch(spark, h0,
+      Seq((1L, Seq("about", "topic")), (2L, Seq("words", "w3"))).toDF("qid", "phrase"),
+      "qid", "phrase", k = 5))
+    count("snippetTopK")(Bm25Index.snippetTopK(spark, h0, Seq("topic", "w3"),
+      width = 4, k = 5))
+    count("snippetTopKBatch")(Bm25Index.snippetTopKBatch(spark, h0,
+      queries.select("qid", "terms"), "qid", "terms", width = 4, k = 5))
+    count("proximityTopK")(Bm25Index.proximityTopK(spark, h0,
+      Seq("document", "shared"), k = 5))
+    count("bm25fTopK")(Bm25Index.bm25fTopK(spark, h0, terms, Seq("text" -> 1.0), k = 5))
+    count("rm3Expand")(Bm25Index.rm3Expand(spark, h0, corpus, Seq("topic", "w3"),
+      fbDocs = 2, fbTerms = 3))
+    count("topKWeighted.local")(Bm25Index.topKWeighted(spark, h0, weights, k = 5))
+    count("topKWeighted.distributed")(Bm25Index.topKWeighted(spark, h0,
+      weights.repartition(2), k = 5))
+    // a tombstone turns on the probes' anti-join
+    val h1 = Bm25Index.delete(h0, corpus.filter(col("doc_id") === 3L))
+    assert(h1.nTombstones == 1L)
+    count("topK.deleted")(Bm25Index.topK(spark, h1, terms, k = 5))
+    count("topKBatch.deleted")(Bm25Index.topKBatch(spark, h1, queries,
+      "qid", "terms", k = 5))
+    assertWithin(counts, ProbeBudgets)
   }
 }

@@ -1663,6 +1663,8 @@ class OpsSpec extends SparkSpec {
     // match nothing, so it is rejected up front
     intercept[IllegalArgumentException](
       Retrieval.bm25TopK(corpus, "doc_id", "text", Seq("Spark"), k = 5))
+    intercept[IllegalArgumentException](
+      Retrieval.bm25TopK(corpus, "doc_id", "text", Seq("spark", null), k = 5))
     // scoring is narrow: scan -> project -> TakeOrdered, no Exchange.
     // k must be BELOW the matching row count or EliminateLimits drops
     // the limit (maxRows <= k) and plans a full range-partitioned sort
@@ -3302,28 +3304,42 @@ class OpsSpec extends SparkSpec {
   }
 
   test("Bm25Index.engineBucketOf == the in-plan pmod(hash(col), n) for strings and longs") {
-    // r17: probe bucket pruning moved driver-side — the driver hash
-    // must equal the catalyst murmur3 the BUILD wrote, for every id
-    // type the indexes key on, or probes silently read the wrong
-    // partition directories
-    val terms = Seq("alpha", "the", "データ", "", "a b", "zz9")
-    val inPlan = spark.range(1).select(terms.zipWithIndex.map { case (t, i) =>
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.hash(org.apache.spark.sql.functions.lit(t)),
-          org.apache.spark.sql.functions.lit(64)).cast("int").as(s"b$i") }: _*)
-      .head()
-    terms.zipWithIndex.foreach { case (t, i) =>
-      assert(Bm25Index.engineBucketOf(t, 64) == inPlan.getInt(i), t)
+    // the single-query probes hash bucket ids on the driver, the batch
+    // probes in-plan; both must equal the catalyst murmur3 the BUILD
+    // wrote, for every id type the indexes key on, or probes silently
+    // read the wrong partition directories
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val codePoint = Gen.frequency(
+      4 -> Gen.choose(0x20, 0x7e), 2 -> Gen.oneOf(0x09, 0x0a, 0x0d, 0x3000),
+      2 -> Gen.choose(0xa0, 0xd7ff), 2 -> Gen.choose(0x10000, 0x10ffff))
+    val str: Gen[Any] = Gen.oneOf(
+      Gen.oneOf("", " ", "\t\n", "a b", "データ", "😀 𝄞"),
+      Gen.alphaNumStr,
+      Gen.listOf(codePoint).map(cps => new String(cps.toArray, 0, cps.size)))
+    val long: Gen[Any] = Gen.oneOf(
+      Gen.oneOf(0L, 1L, -1L, -17L, 123456789012L, Long.MinValue, Long.MaxValue),
+      Gen.choose(-1000L, 1000L), Gen.choose(Long.MinValue, Long.MaxValue))
+    val oneCase = for { v <- Gen.oneOf(str, long); n <- Gen.choose(1, 128) } yield (v, n)
+    // one generated sample is the whole case list, so the property costs
+    // one collect; on a failure scalacheck shrinks the list
+    val prop = Prop.forAll(Gen.listOfN(256, oneCase)) { cases =>
+      val inPlan = cases.zipWithIndex
+        .map { case ((v, n), i) =>
+          (i, Option(v).collect { case s: String => s },
+            Option(v).collect { case l: Long => l }, n) }
+        .toDF("i", "s", "l", "n")
+        // a repartitioned frame: executor codegen computes the hash (a
+        // literal or a local relation is constant-folded on the driver)
+        .repartition(2)
+        .select(col("i"), when(col("s").isNotNull, pmod(hash(col("s")), col("n")))
+          .otherwise(pmod(hash(col("l")), col("n"))).as("b"))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      cases.zipWithIndex.forall { case ((v, n), i) =>
+        Bm25Index.engineBucketOf(v, n) == inPlan(i) }
     }
-    val ids = Seq(0L, 1L, -17L, 123456789012L)
-    val inPlanL = spark.range(1).select(ids.zipWithIndex.map { case (v, i) =>
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.hash(org.apache.spark.sql.functions.lit(v)),
-          org.apache.spark.sql.functions.lit(32)).cast("int").as(s"b$i") }: _*)
-      .head()
-    ids.zipWithIndex.foreach { case (v, i) =>
-      assert(Bm25Index.engineBucketOf(v, 32) == inPlanL.getInt(i), v.toString)
-    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(1).withInitialSeed(17L), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("Bm25Index.topK docFilter: k qualifying docs, corpus-wide stats, scores unchanged") {
@@ -4528,6 +4544,11 @@ class OpsSpec extends SparkSpec {
       assert(plan.contains("PartitionFilters"), plan)
       assert(plan.contains("term_bucket"), plan)
       assert(!plan.contains("text#"), plan)
+      // a NULL query term is refused up front, as bm25TopK refuses it
+      intercept[IllegalArgumentException](
+        Bm25Index.topK(spark, loaded, Seq("data", null), k = 4))
+      intercept[IllegalArgumentException](
+        Bm25Index.rm3Expand(spark, loaded, corpus, Seq(null, "data")))
     } finally {
       val root = java.nio.file.Path.of(dir)
       java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())

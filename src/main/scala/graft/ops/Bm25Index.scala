@@ -98,8 +98,8 @@ import org.apache.spark.sql.functions._
   *    layout).
   *
   * Scoring is bit-identical to [[Retrieval.scoreWith]]: the same
-  * Robertson idf spelled over the same integers, the same polynomial
-  * in the same association order, per-term columns added left-to-right
+  * Robertson idf spelled over the same integers, the one polynomial
+  * [[Retrieval.bm25Term]], per-term columns added left-to-right
   * in query-term order (a float `sum()` aggregate would re-associate
   * by partition layout). OpsSpec asserts result equality with
   * [[Retrieval.bm25TopK]] row-for-row, score-for-score.
@@ -914,15 +914,6 @@ object Bm25Index {
     log(lit(1.0) + num / den)
   }
 
-  /** The BM25 term polynomial `idf·tf(k1+1)/(tf + k1(1−b+b·len/avgdl))`
-    * over double `tf` and `len`, in [[Retrieval.scoreWith]]'s
-    * association order — every probe scores with this one spelling. */
-  private def bm25Term(
-      tf: Column, len: Column, avgdl: Double, idf: Column,
-      k1: Double, b: Double): Column =
-    idf * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * len / lit(avgdl)))
-
   /** The exact-integer score convention: `round(c·2²⁰)` as a BIGINT. */
   private def quantize(c: Column): Column =
     round(c * lit(1048576.0d)).cast("long")
@@ -1024,7 +1015,7 @@ object Bm25Index {
   private def pivotTerm(
       handle: Handle, i: Int, len: String, avgdl: Double,
       k1: Double, b: Double): Column =
-    bm25Term(coalesce(col(s"__tf$i").cast("double"), lit(0.0)),
+    Retrieval.bm25Term(coalesce(col(s"__tf$i").cast("double"), lit(0.0)),
       col(len).cast("double"), avgdl, idfOf(handle.nDocs, col(s"__df$i")), k1, b)
 
   /** The best `width`-token window of a doc given its per-term
@@ -1093,7 +1084,7 @@ object Bm25Index {
   /** Batch core: a batch row's BM25 score from its own `tf` and `__df`. */
   private def rowTerm(
       handle: Handle, len: String, avgdl: Double, k1: Double, b: Double): Column =
-    bm25Term(col("tf").cast("double"), col(len).cast("double"), avgdl,
+    Retrieval.bm25Term(col("tf").cast("double"), col(len).cast("double"), avgdl,
       idfOf(handle.nDocs, col("__df")), k1, b)
 
   /** Batch core: ranks 1..k per query by (score_q desc, id), a
@@ -1775,7 +1766,9 @@ object Bm25Index {
       .agg(sum(col("__wq")).as("tf"), max(col("__df")).as("__df"))
     val score = queryTerms.indices.map { i =>
       val tft = coalesce(col(s"__tf$i"), lit(0L)).cast("double") / lit(1048576.0d)
-      idfOf(handle.nDocs, col(s"__df$i")) * tft / (lit(k1) + tft)
+      // total like Retrieval.bm25Term: an absent term is 0/0 at k1 = 0
+      when(tft === 0.0, lit(0.0))
+        .otherwise(idfOf(handle.nDocs, col(s"__df$i")) * tft / (lit(k1) + tft))
     }.reduce(_ + _)
     topOf(handle, pivot(perTermDoc, Seq(id), queryTerms, positions = false)
       .select(id, score.as("score")), "score", k)

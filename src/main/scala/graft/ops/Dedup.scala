@@ -365,6 +365,15 @@ object Dedup {
       lit(nCand).as("n_cand_pairs"))
   }
 
+  /** Driver-resident edge ceiling for [[connectedComponents]]'s
+    * union-find fast path — the explicit-guard discipline every
+    * driver-resident model in this library follows
+    * ([[BpeTrain.MaxPieces]], [[UnigramTokenizer.MaxVocab]]): 2M
+    * (id, id) pairs is tens of MB on the driver; a corpus whose
+    * verified near-dup EDGE LIST exceeds it runs the distributed
+    * label-propagation loop instead. */
+  val MaxDriverEdges: Int = 1 << 21
+
   /** Connected components over an undirected (doc_a, doc_b) edge list
     * by min-label propagation WITH label doubling: every node adopts
     * the minimum of its own label, its neighbors' labels, and its
@@ -377,15 +386,6 @@ object Dedup {
     * linear.
     * Returns (id, comp) where comp = the minimum id in the component.
     */
-  /** Driver-resident edge ceiling for [[connectedComponents]]'s
-    * union-find fast path — the explicit-guard discipline every
-    * driver-resident model in this library follows
-    * ([[BpeTrain.MaxPieces]], [[UnigramTokenizer.MaxVocab]]): 2M
-    * (id, id) pairs is tens of MB on the driver; a corpus whose
-    * verified near-dup EDGE LIST exceeds it runs the distributed
-    * label-propagation loop instead. */
-  val MaxDriverEdges: Int = 1 << 21
-
   def connectedComponents(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     // The seed below IS propagation round 1, and certifying convergence
     // requires observing one further round with zero label changes —

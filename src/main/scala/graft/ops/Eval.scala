@@ -74,6 +74,18 @@ object Eval {
     * the per-column distinct aggregates expand the scan `k`-fold. */
   val MaxHealthColumns: Int = 64
 
+  /** The ONE-pass aggregation [[tableHealth]] reshapes — exposed so
+    * the scale profiler audits the REAL expanded-scan plan
+    * (tableHealth itself returns a LocalRelation after the driver
+    * reshape, which would make a plan-shape check vacuous). */
+  private[graft] def healthAgg(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = count(lit(1)).as("__n") +:
+      cols.flatMap(c => Seq(
+        count(col(c)).as(s"__nn_$c"),
+        countDistinct(col(c)).as(s"__nd_$c")))
+    df.agg(aggs.head, aggs.tail: _*)
+  }
+
   /** Declarative table-health report — the data-contract check (the
     * deequ / Great-Expectations move) an ingest pipeline runs before
     * a snapshot is allowed downstream: per profiled column, the row
@@ -90,18 +102,6 @@ object Eval {
     * dimension-sized row and re-shaped driver-side into the k-row
     * report. Returns `(column, n_rows, n_null, null_frac,
     * n_distinct, n_dup)` sorted by column name. */
-  /** The ONE-pass aggregation [[tableHealth]] reshapes — exposed so
-    * the scale profiler audits the REAL expanded-scan plan
-    * (tableHealth itself returns a LocalRelation after the driver
-    * reshape, which would make a plan-shape check vacuous). */
-  private[graft] def healthAgg(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("__n") +:
-      cols.flatMap(c => Seq(
-        count(col(c)).as(s"__nn_$c"),
-        countDistinct(col(c)).as(s"__nd_$c")))
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
   def tableHealth(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "tableHealth needs at least one column")
     require(cols.distinct.size == cols.size, s"duplicate columns in $cols")

@@ -448,7 +448,16 @@ private[graft] object Maintenance {
         }
         rows.join(ts.select(key).na.drop(), Seq(key), "left_anti")
       }
-      rewrite(t, live, s"$tmp/$t")
+      val out = s"$tmp/$t"
+      rewrite(t, live, out)
+      // a purge of every row writes no data file, and with it goes the
+      // schema that load and append read: keep one empty file in the
+      // partition dir of the first snapshot file
+      if (dataFiles(fs, new Path(out)).isEmpty) {
+        val parts = snapshots(t).head.split('/').init.toSeq
+        live.drop(parts.map(_.takeWhile(_ != '=')): _*).limit(0)
+          .write.mode("append").parquet((out +: parts).mkString("/"))
+      }
     }
     swapAll(fs, dir, tmp, tables, snapshots = snapshots)
     fs.delete(Tombstones.path(dir), true)

@@ -100,12 +100,22 @@ object Retrieval {
       // identical value from the same integers
       val idf = log(lit(1.0) + lit(nDocs - dft + 0.5) / lit(dft + 0.5))
       val tf = size(filter(col("__toks"), x => x === term)).cast("double")
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("n_tok").cast("double") / lit(avgdl)))
+      bm25Term(tf, col("n_tok").cast("double"), avgdl, idf, k1, b)
     }
     withToks.select(col(idCol), col("n_tok"),
       perTerm.reduce(_ + _).as("score"))
   }
+
+  /** The BM25 term `idf·tf(k1+1)/(tf + k1(1−b+b·len/avgdl))` over
+    * double `tf` and `len` — the one spelling every BM25 scorer uses
+    * (this map and every `Bm25Index` probe). Total: a term the document
+    * lacks (`tf = 0`) scores exactly 0.0 without evaluating the
+    * quotient, which is 0/0 when `k1 = 0`. */
+  private[ops] def bm25Term(
+      tf: Column, len: Column, avgdl: Double, idf: Column,
+      k1: Double, b: Double): Column =
+    when(tf === 0.0, lit(0.0)).otherwise(idf * (tf * lit(k1 + 1.0)) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * len / lit(avgdl))))
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR 2009) of N ranked
     * result lists — the standard hybrid-retrieval combiner (e.g. BM25

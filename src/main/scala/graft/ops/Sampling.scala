@@ -150,12 +150,6 @@ object Sampling {
     ranked.unionByName(rest)
   }
 
-  /** Deterministic split assignment (train/val/test): cumulative
-    * thresholds over the unit hash; every row gets exactly one label
-    * and membership never changes as the corpus grows. Weights must be
-    * positive and sum to 1 (within 1e-9). Prefer dyadic weights
-    * (0.75/0.125/0.125) — the cumulative bounds are then exact in
-    * binary and identical in any engine's float parser. */
   /** UniMax budget allocation (Chung et al. 2023, arXiv:2304.09151 —
     * the multilingual mixing rule): distribute a total token `budget`
     * across strata so every stratum gets an EQUAL share of what
@@ -304,6 +298,12 @@ object Sampling {
     }.toDF(strataCol, "n_tokens", "weight_q", "alloc_tokens", "epochs")
   }
 
+  /** Deterministic split assignment (train/val/test): cumulative
+    * thresholds over the unit hash; every row gets exactly one label
+    * and membership never changes as the corpus grows. Weights must be
+    * positive and sum to 1 (within 1e-9). Prefer dyadic weights
+    * (0.75/0.125/0.125) — the cumulative bounds are then exact in
+    * binary and identical in any engine's float parser. */
   def assignSplit(
       df: DataFrame, idCol: String,
       splits: Seq[(String, Double)], outCol: String = "split"): DataFrame = {

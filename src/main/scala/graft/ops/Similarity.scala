@@ -607,17 +607,6 @@ object Similarity {
     codebooks
   }
 
-  /** PQ asymmetric-distance top-k (ADC) over an ALREADY-ENCODED code
-    * table (`code_0..code_{m-1}` columns, as produced by [[pqEncode]]):
-    * the query vector stays exact; every data row is scored from its
-    * CODES ALONE by summing per-subspace lookup tables
-    * dist(query_sub, centroid[code]) built driver-side (m × k doubles).
-    * The scan touches only the m code columns — at 100 TB this is the
-    * point of PQ: codes are precomputed at ingest and the raw vectors
-    * are never read at query time. Scoring is a narrow sum of m CASE
-    * lookups; top-k is orderBy+limit (TakeOrdered per-partition heaps).
-    * Lookup distances fold left-to-right like [[pqEncode]]'s, so
-    * results stay oracle-checkable. */
   /** LUT-size ceiling for the when-chain ADC formulation: past ~1k
     * total entries the single generated expression approaches janino's
     * 64 KB method limit and falls back to interpreted eval — exactly
@@ -629,6 +618,17 @@ object Similarity {
     * per-subspace columns add in the same left-to-right order. */
   val MaxWhenChainLutEntries: Int = 1024
 
+  /** PQ asymmetric-distance top-k (ADC) over an ALREADY-ENCODED code
+    * table (`code_0..code_{m-1}` columns, as produced by [[pqEncode]]):
+    * the query vector stays exact; every data row is scored from its
+    * CODES ALONE by summing per-subspace lookup tables
+    * dist(query_sub, centroid[code]) built driver-side (m × k doubles).
+    * The scan touches only the m code columns — at 100 TB this is the
+    * point of PQ: codes are precomputed at ingest and the raw vectors
+    * are never read at query time. Scoring is a narrow sum of m CASE
+    * lookups; top-k is orderBy+limit (TakeOrdered per-partition heaps).
+    * Lookup distances fold left-to-right like [[pqEncode]]'s, so
+    * results stay oracle-checkable. */
   def pqTopKFromCodes(
       encoded: DataFrame, idCol: String,
       codebooks: Seq[Seq[(Long, Seq[Double])]],

@@ -28,14 +28,6 @@ object UnigramTokenizer {
   /** Ceiling on a collectable vocabulary (driver-resident model). */
   val MaxVocab: Int = 1 << 18
 
-  /** Frequency seed vocabulary: all substrings of length 1..
-    * `maxPieceLen` of every whitespace word (≤ `maxWordLen` chars,
-    * weighted by word occurrences), keeping EVERY single-character
-    * piece (full coverage) plus the `vocabSize` most frequent
-    * multi-character pieces (count desc, piece asc — deterministic).
-    * `lp_q = round(ln(cnt / total_selected) · 2²⁰)` where the
-    * normalizer is the selected pieces' count mass.
-    * Returns `(piece, cnt, lp_q)`. */
   /** The weighted distinct-word table every corpus pass in this module
     * derives — factored out so [[train]] (and [[shrinkToTarget]]) can
     * tokenize the corpus ONCE and feed the same checkpointed table to
@@ -49,6 +41,14 @@ object UnigramTokenizer {
       .filter(length(col("w")) > 0 && length(col("w")) <= maxWordLen)
       .groupBy("w").agg(count(lit(1)).as("wc"))
 
+  /** Frequency seed vocabulary: all substrings of length 1..
+    * `maxPieceLen` of every whitespace word (≤ `maxWordLen` chars,
+    * weighted by word occurrences), keeping EVERY single-character
+    * piece (full coverage) plus the `vocabSize` most frequent
+    * multi-character pieces (count desc, piece asc — deterministic).
+    * `lp_q = round(ln(cnt / total_selected) · 2²⁰)` where the
+    * normalizer is the selected pieces' count mass.
+    * Returns `(piece, cnt, lp_q)`. */
   def seedVocab(
       docs: DataFrame, textCol: String,
       maxPieceLen: Int = 4, vocabSize: Int = 256,

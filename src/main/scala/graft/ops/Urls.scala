@@ -145,13 +145,6 @@ object Urls {
       .groupBy("canonical_url")
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("keep_id"))
 
-  /** Registrable-domain approximation into `outCol`: the canonical
-    * host (lowercased, `www.` and ANY port dropped) reduced to its
-    * last two dot-labels. Deliberately public-suffix-list-free —
-    * `shop.example.co.uk` yields `co.uk`, which under-merges nothing
-    * and over-merges ccSLD sites; thread a PSL-backed column in place
-    * of this one when exactness matters. Narrow, staged like
-    * [[withCanonicalUrl]]. */
   /** The staged helpers build (and then drop) `__`-prefixed
     * intermediates — an input already carrying such a column would be
     * silently overwritten and removed, so fail loudly instead. */
@@ -184,6 +177,13 @@ object Urls {
       .withColumn("__labels", split(col("__host"), "\\."))
   }
 
+  /** Registrable-domain approximation into `outCol`: the canonical
+    * host (lowercased, `www.` and ANY port dropped) reduced to its
+    * last two dot-labels. Deliberately public-suffix-list-free —
+    * `shop.example.co.uk` yields `co.uk`, which under-merges nothing
+    * and over-merges ccSLD sites; thread a PSL-backed column in place
+    * of this one when exactness matters. Narrow, staged like
+    * [[withCanonicalUrl]]. */
   def withDomain(df: DataFrame, urlCol: String, outCol: String = "domain"): DataFrame = {
     val staged = withHostLabels(df, urlCol)
       .withColumn(outCol,

@@ -116,13 +116,6 @@ object CurationQueries {
     Some(bm25TopkOracleDuck),
     bench = true)
 
-  /** URL canonicalization + URL-keyed dedup (library
-    * `Urls.canonicalizeUrl` / `dedupByUrl`): each doc gets a messy
-    * synthetic URL — even ids the upper-case/www/default-port/
-    * tracking-params/fragment variant, odd ids an already-clean
-    * spelling — and the two parities collapse onto the same canonical
-    * key. The oracle replicates the whole normalization chain with the
-    * same instr/substr/regexp/list primitives. */
   /** q71's synthetic input: each doc gets a messy URL. An ODD path
     * modulus: with an even one every %-residue class has a single
     * parity and the messy (even-id) and clean (odd-id) variants could
@@ -163,6 +156,13 @@ object CurationQueries {
     sys.props("java.io.tmpdir") + "/graft_bench_q132_" +
       dir.replaceAll("[^A-Za-z0-9]", "_")
 
+  /** URL canonicalization + URL-keyed dedup (library
+    * `Urls.canonicalizeUrl` / `dedupByUrl`): each doc gets a messy
+    * synthetic URL — even ids the upper-case/www/default-port/
+    * tracking-params/fragment variant, odd ids an already-clean
+    * spelling — and the two parities collapse onto the same canonical
+    * key. The oracle replicates the whole normalization chain with the
+    * same instr/substr/regexp/list primitives. */
   val q71 = QueryDef(
     "q71_url_canonical_dedup",
     (s, dir) => q71Op(q71Input(s, dir)),
@@ -1015,13 +1015,6 @@ object CurationQueries {
       s"(instr('0123456789abcdef', substr(md5($x), ${1 + j}, 1)) - 1) * CAST(${1L << (4 * (6 - j))} AS BIGINT)")
       .mkString(" + ")
 
-  /** Shared CTE prefix for q78/q79: hashed unigram+bigram features of
-    * every document, the two bucket models (raw = doc_id >= 10, target
-    * = doc_id < 10), and the quantized per-bucket log-ratio table —
-    * the relational re-derivation of `Dsir.dsirWeights` with
-    * numBuckets = 4096, delta = 1. Both engines feed `ln` the same
-    * exact (count + 1.0) / (total + 4096.0) ratios and round once per
-    * bucket, so per-doc sums are exact integers. */
   /** Hashed unigram+bigram feature buckets of every document
     * (numBuckets = 4096) — the `Dsir.featureBuckets` re-derivation
     * shared by the DSIR (q78/q79) and Naive Bayes (q81) oracles. */
@@ -1042,6 +1035,13 @@ object CurationQueries {
         SELECT doc_id, (${md5PolyDuck("g")}) % 4096 AS bucket FROM grams)"""
   }
 
+  /** Shared CTE prefix for q78/q79: hashed unigram+bigram features of
+    * every document, the two bucket models (raw = doc_id >= 10, target
+    * = doc_id < 10), and the quantized per-bucket log-ratio table —
+    * the relational re-derivation of `Dsir.dsirWeights` with
+    * numBuckets = 4096, delta = 1. Both engines feed `ln` the same
+    * exact (count + 1.0) / (total + 4096.0) ratios and round once per
+    * bucket, so per-doc sums are exact integers. */
   private val dsirCtesDuck = {
     s"""$featCtesDuck,
       braw AS (SELECT bucket, count(*) AS c_raw FROM feats
@@ -3174,16 +3174,6 @@ object CurationQueries {
       benchFn = Some(probe))
   }
 
-  /** Batched BM25 over the persistent index (library
-    * `Bm25Index.topKBatch` — the RAG-evaluation shape: a query TABLE
-    * amortizes one pruned index pass; q145's `topK` is the
-    * single-query form): three queries incl. a duplicate term (scored
-    * once) and a term absent from the corpus (contributes nothing),
-    * scores in the exact-integer `score_q = Σ round(s·2²⁰)`
-    * convention so the per-query sums are order-free, ranking a
-    * qid-partitioned window. The oracle re-derives the postings,
-    * df per term, the identical double polynomial quantized per
-    * (query, doc, term), the integer sums and the ranks. */
   /** The q148/q186 shared query table — ONE definition because q186's
     * oracle is spliced from q148's text: the VALUES rows there and
     * this Seq must stay in lockstep, and two hand-maintained copies
@@ -3196,6 +3186,16 @@ object CurationQueries {
       (3L, Seq("the"))).toDF("qid", "terms")
   }
 
+  /** Batched BM25 over the persistent index (library
+    * `Bm25Index.topKBatch` — the RAG-evaluation shape: a query TABLE
+    * amortizes one pruned index pass; q145's `topK` is the
+    * single-query form): three queries incl. a duplicate term (scored
+    * once) and a term absent from the corpus (contributes nothing),
+    * scores in the exact-integer `score_q = Σ round(s·2²⁰)`
+    * convention so the per-query sums are order-free, ranking a
+    * qid-partitioned window. The oracle re-derives the postings,
+    * df per term, the identical double polynomial quantized per
+    * (query, doc, term), the integer sums and the ranks. */
   val q148 = {
     def probe(s: SparkSession, dir: String): DataFrame = {
       graft.ops.Bm25Index.topKBatch(

@@ -749,16 +749,6 @@ object EmbeddingQueries {
     },
     bench = true)
 
-  /** Nearest-class-mean classification (library
-    * `Similarity.centroidClassify` — the cheap embedding-space
-    * domain/quality gate; q81's NB classifier is its text-feature
-    * sibling): per-label EXACT-integer-mean prototypes trained on the
-    * `vec_id % 5 <> 0` split (the q63 `exactMean` discipline, so the
-    * model is re-derivable relationally), every held-out vector
-    * assigned its argmax-cosine prototype, ties to the lowest label.
-    * The oracle rebuilds the 10 prototypes from the same quantized
-    * sums and replays the cosine argmax — every held-out vector's
-    * prediction, cosine and correctness flag are hash-checked. */
   /** Shared q135/q137 oracle CTE block: exact-integer-mean prototypes
     * from the `vec_id % 5 <> 0` split, cosine argmax over the held-out
     * rows, ending in a `pr` CTE of per-vector (label, pred). */
@@ -791,6 +781,16 @@ object EmbeddingQueries {
         FROM rk WHERE rn = 1)"""
   }
 
+  /** Nearest-class-mean classification (library
+    * `Similarity.centroidClassify` — the cheap embedding-space
+    * domain/quality gate; q81's NB classifier is its text-feature
+    * sibling): per-label EXACT-integer-mean prototypes trained on the
+    * `vec_id % 5 <> 0` split (the q63 `exactMean` discipline, so the
+    * model is re-derivable relationally), every held-out vector
+    * assigned its argmax-cosine prototype, ties to the lowest label.
+    * The oracle rebuilds the 10 prototypes from the same quantized
+    * sums and replays the cosine argmax — every held-out vector's
+    * prediction, cosine and correctness flag are hash-checked. */
   val q135 = QueryDef(
     "q135_centroid_classify",
     (s, dir) => {
@@ -896,15 +896,6 @@ object EmbeddingQueries {
         .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
         .collect().head.getSeq[Double](0).toSeq)
 
-  /** The q149/q150 shared DuckDB replay of `AnnIndex.build` + `query`
-    * for vec 0 at nProbe = 2: both training chains (the q63/q64 IVF
-    * machinery AND the q92/q93 per-subspace machinery — CTE families
-    * name-disjoint), the corpus cell assignment, the driver's
-    * nProbe-cell rule ((-sim, -cid) = sim DESC, cid DESC), the
-    * encoder-rule code assignment, the ADC lookup tables, and the
-    * probed-cells-only scores. Ends with `annscored(vec_id, pq_dist)`
-    * — NOT yet ranked or limited, so q149 can top-k it and q150 can
-    * rank it for fusion. */
   /** The index-state replay every ANN-index oracle shares: both
     * training chains (IVF Lloyd's + per-subspace PQ Lloyd's, CTE
     * families name-disjoint), the corpus cell assignment, and the
@@ -938,6 +929,15 @@ object EmbeddingQueries {
       $fas"""
   }
 
+  /** The q149/q150 shared DuckDB replay of `AnnIndex.build` + `query`
+    * for vec 0 at nProbe = 2: both training chains (the q63/q64 IVF
+    * machinery AND the q92/q93 per-subspace machinery — CTE families
+    * name-disjoint), the corpus cell assignment, the driver's
+    * nProbe-cell rule ((-sim, -cid) = sim DESC, cid DESC), the
+    * encoder-rule code assignment, the ADC lookup tables, and the
+    * probed-cells-only scores. Ends with `annscored(vec_id, pq_dist)`
+    * — NOT yet ranked or limited, so q149 can top-k it and q150 can
+    * rank it for fusion. */
   private[queries] def annProbeCtesDuck: String = {
     val elem: (String, Int) => String = duckElem
     val sub = Dim / PqM
@@ -1010,14 +1010,6 @@ object EmbeddingQueries {
       benchFn = Some(probe))
   }
 
-  /** Batched ANN index probe (library `AnnIndex.queryBatch` — the
-    * vector-side twin of q148's batched BM25: a query TABLE amortizes
-    * one pruned pass over the persisted code table; q149 is the
-    * single-vector form): 8 query rows, each probing its own 2 best
-    * cells, ADC-scored and ranked per query. The oracle layers the
-    * per-query probe rule and per-(query, sub-centroid) lookup tables
-    * over the shared index-state replay — every query's candidate
-    * set, distance and rank hash-checked. */
   /** The q151/q166 shared batched-probe replay: the full index-state
     * derivation ([[annIndexStateCtesDuck]]) plus, for the query set
     * `qsetWhere` selects from `embeddings`, the per-query probe rule,
@@ -1066,6 +1058,14 @@ object EmbeddingQueries {
           FROM bscored)"""
   }
 
+  /** Batched ANN index probe (library `AnnIndex.queryBatch` — the
+    * vector-side twin of q148's batched BM25: a query TABLE amortizes
+    * one pruned pass over the persisted code table; q149 is the
+    * single-vector form): 8 query rows, each probing its own 2 best
+    * cells, ADC-scored and ranked per query. The oracle layers the
+    * per-query probe rule and per-(query, sub-centroid) lookup tables
+    * over the shared index-state replay — every query's candidate
+    * set, distance and rank hash-checked. */
   val q151 = {
     def probe(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame = {

@@ -214,13 +214,6 @@ object OpsQueries {
     },
     bench = true)
 
-  /** Dedup.dedupAgainst — INCREMENTAL dedup of a new batch (odd ids)
-    * against an already-curated corpus (even ids): exact md5 probe +
-    * batch-x-corpus-only LSH band joins + word-set jaccard verify,
-    * the append-only ingestion shape (the corpus is never re-banded
-    * against itself). The oracle splits the shared signature CTEs by
-    * parity and re-derives both screens; the hash covers every batch
-    * doc's exact/near flags and smallest matched corpus id. */
   /** The q95/q159 shared incremental-screen replay: batch = odd ids.
     * `bandPred` filters the SIGNATURE side (near-dup candidates —
     * per-id state, so a deleted id drops out entirely); `exPred`
@@ -280,6 +273,13 @@ object OpsQueries {
       WHERE d.doc_id % 2 = 1
       ORDER BY d.doc_id"""
 
+  /** Dedup.dedupAgainst — INCREMENTAL dedup of a new batch (odd ids)
+    * against an already-curated corpus (even ids): exact md5 probe +
+    * batch-x-corpus-only LSH band joins + word-set jaccard verify,
+    * the append-only ingestion shape (the corpus is never re-banded
+    * against itself). The oracle splits the shared signature CTEs by
+    * parity and re-derives both screens; the hash covers every batch
+    * doc's exact/near flags and smallest matched corpus id. */
   val q95 = QueryDef(
     "q95_dedup_incremental",
     (s, dir) => {
@@ -320,16 +320,6 @@ object OpsQueries {
     graft.ops.DedupIndex.load(s, d)
   }
 
-  /** Tombstone deletion on the persistent dedup index (library
-    * `DedupIndex.delete` — the dedup-side right-to-be-forgotten path:
-    * a deleted doc's fingerprint, minhash bands and word set all
-    * stand down without rewriting any of the three corpus-scaled
-    * tables). Build q95's corpus state as a PERSISTED index, delete
-    * every `doc_id % 3 = 0` member, screen the odd batch through
-    * `dedupBatch`. The oracle is q95's derivation with the remainder
-    * predicate spliced into both screens — a deleted doc still
-    * producing an exact or near verdict breaks the hash (and so does
-    * a tombstone leaking into the batch side). */
   /** q174's merged dedup state — the even half built as two disjoint
     * shards (`%4 = 0` and `%4 = 2`), unified by `DedupIndex.merge`
     * (file-level copy, no re-fingerprinting). Per-JVM memo. */
@@ -378,6 +368,16 @@ object OpsQueries {
     bench = true,
     benchPrepare = Some((s, dir) => { ensureDedupMergedIdx(s, dir); () }))
 
+  /** Tombstone deletion on the persistent dedup index (library
+    * `DedupIndex.delete` — the dedup-side right-to-be-forgotten path:
+    * a deleted doc's fingerprint, minhash bands and word set all
+    * stand down without rewriting any of the three corpus-scaled
+    * tables). Build q95's corpus state as a PERSISTED index, delete
+    * every `doc_id % 3 = 0` member, screen the odd batch through
+    * `dedupBatch`. The oracle is q95's derivation with the remainder
+    * predicate spliced into both screens — a deleted doc still
+    * producing an exact or near verdict breaks the hash (and so does
+    * a tombstone leaking into the batch side). */
   val q159 = QueryDef(
     "q159_dedup_index_delete",
     (s, dir) => {

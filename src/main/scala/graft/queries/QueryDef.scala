@@ -6,14 +6,12 @@ import org.apache.spark.sql.functions.col
 /** One verifiable operator demonstration: a Spark query over the
   * driver's synthetic tables plus (where SQL-expressible) an equivalent
   * DuckDB oracle query. `bench = true` marks headline queries timed by
-  * `graft.Bench`.
-  */
-/** One verifiable operator demonstration. `benchPrepare`/`benchFn` let a
-  * query whose correctness form synthesizes its own input (e.g. q71's
-  * messy-URL variants) move that synthesis OUT of the timed region: the
-  * bench harness runs `benchPrepare` once untimed (materialize input),
-  * then times `benchFn` (the operator alone). Verify always uses `fn`,
-  * so the oracle hash is untouched by the split. */
+  * `graft.Bench`. `benchPrepare`/`benchFn` let a query whose correctness
+  * form synthesizes its own input (e.g. q71's messy-URL variants) move
+  * that synthesis OUT of the timed region: the bench harness runs
+  * `benchPrepare` once untimed (materialize input), then times `benchFn`
+  * (the operator alone). Verify always uses `fn`, so the oracle hash is
+  * untouched by the split. */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,

@@ -147,11 +147,6 @@ object TextQueries {
               FROM (SELECT doc_id, md5(sh) AS m FROM ($shinglesSqlDuck)))
         GROUP BY doc_id"""
 
-  /** MinHash signatures over 3-token shingles (near-dup dedup): ONE
-    * md5 per shingle, 8 hash families by double hashing h_i = a + i*b
-    * over two 28-bit digest halves (Kirsch–Mitzenmacher) — pure
-    * integer math, bit-identical across engines, and min over the
-    * doc's shingles is order-free under any parallelism. */
   /** MinHash signatures WITHOUT the presentation sort — q30's band
     * joins must see the naturally-partitioned signatures, not a
     * repartition(1) output (PlanAuditSpec guards this). Drives the
@@ -162,6 +157,11 @@ object TextQueries {
       .filter(col("mh0").isNotNull)
       .select(col("doc_id") +: (0 until 8).map(i => col(s"mh$i")): _*)
 
+  /** MinHash signatures over 3-token shingles (near-dup dedup): ONE
+    * md5 per shingle, 8 hash families by double hashing h_i = a + i*b
+    * over two 28-bit digest halves (Kirsch–Mitzenmacher) — pure
+    * integer math, bit-identical across engines, and min over the
+    * doc's shingles is order-free under any parallelism. */
   val q29 = QueryDef(
     "q29_minhash_signature",
     (s, dir) => sigSpark(s, dir).oracleOrderBy("doc_id"),

@@ -134,42 +134,6 @@ object CurationIngest {
       }
   }
 
-  /** The forget half of the curation lifecycle: a stream of deletion
-    * requests (right-to-be-forgotten, takedowns, retractions) applied
-    * to ALL THREE standing indexes in the same trigger — the
-    * tombstone [[DedupIndex.delete]]/[[Bm25Index.delete]]/
-    * [[AnnIndex.delete]] path, so a trigger's cost is proportional to
-    * the batch, never the indexes. Requests carry the id AND the
-    * text ([[DedupIndex.delete]] retires `md5(text)` — the caller is
-    * the source of truth for what the doc said). After the trigger
-    * commits, the doc answers no retrieval probe, names no dedup
-    * match, and its exact text screens as NEW again; the physical
-    * purge is the compact pass's job, and re-INGESTING a deleted id
-    * stays refused until then (the append contract). A small audit
-    * row `(id, fp, batch_id)` lands in `auditDir` per request.
-    *
-    * At-least-once: all three deletes are idempotent against replays
-    * (already-tombstoned ids are skipped), so a crash between them
-    * heals on the replayed trigger — the [[curationSink]] posture.
-    * Closure handles may go stale across triggers; every delete
-    * re-reads the on-disk state under its marker, so staleness never
-    * rewinds a tombstone.
-    *
-    * '''One metadata writer.''' [[Bm25Index]]'s collection stats are
-    * a read-modify-write of `meta/`, and `_appending.*` markers are
-    * not mutually exclusive among writers — running this sink
-    * CONCURRENTLY with [[curationSink]] (or any other appender)
-    * against the same BM25 index can lose one side's stats update
-    * (last meta write wins) until a compact recounts. Drive ingest
-    * and deletion from one serialized driver (alternate triggers, or
-    * one upstream stream carrying an op column). The SAFETY
-    * properties never depend on this: tombstone filtering, the
-    * re-add refusal and dedup screening all gate on the live side
-    * tables, not on meta — only N/avgdl exactness is at stake.
-    *
-    * Use as `deletes.writeStream.foreachBatch(
-    * CurationIngest.deletionSink(...)).start()` with rows carrying
-    * the id and text columns. */
   /** The full curation lifecycle in ONE stream: rows carry an `op`
     * column (`"upsert"` or `"delete"`) and each trigger applies the
     * deletes, then screens-and-folds the upserts — [[curationSink]]
@@ -224,6 +188,42 @@ object CurationIngest {
       }
   }
 
+  /** The forget half of the curation lifecycle: a stream of deletion
+    * requests (right-to-be-forgotten, takedowns, retractions) applied
+    * to ALL THREE standing indexes in the same trigger — the
+    * tombstone [[DedupIndex.delete]]/[[Bm25Index.delete]]/
+    * [[AnnIndex.delete]] path, so a trigger's cost is proportional to
+    * the batch, never the indexes. Requests carry the id AND the
+    * text ([[DedupIndex.delete]] retires `md5(text)` — the caller is
+    * the source of truth for what the doc said). After the trigger
+    * commits, the doc answers no retrieval probe, names no dedup
+    * match, and its exact text screens as NEW again; the physical
+    * purge is the compact pass's job, and re-INGESTING a deleted id
+    * stays refused until then (the append contract). A small audit
+    * row `(id, fp, batch_id)` lands in `auditDir` per request.
+    *
+    * At-least-once: all three deletes are idempotent against replays
+    * (already-tombstoned ids are skipped), so a crash between them
+    * heals on the replayed trigger — the [[curationSink]] posture.
+    * Closure handles may go stale across triggers; every delete
+    * re-reads the on-disk state under its marker, so staleness never
+    * rewinds a tombstone.
+    *
+    * '''One metadata writer.''' [[Bm25Index]]'s collection stats are
+    * a read-modify-write of `meta/`, and `_appending.*` markers are
+    * not mutually exclusive among writers — running this sink
+    * CONCURRENTLY with [[curationSink]] (or any other appender)
+    * against the same BM25 index can lose one side's stats update
+    * (last meta write wins) until a compact recounts. Drive ingest
+    * and deletion from one serialized driver (alternate triggers, or
+    * one upstream stream carrying an op column). The SAFETY
+    * properties never depend on this: tombstone filtering, the
+    * re-add refusal and dedup screening all gate on the live side
+    * tables, not on meta — only N/avgdl exactness is at stake.
+    *
+    * Use as `deletes.writeStream.foreachBatch(
+    * CurationIngest.deletionSink(...)).start()` with rows carrying
+    * the id and text columns. */
   def deletionSink(
       dedup: DedupIndex.Handle,
       bm25: Bm25Index.Handle,

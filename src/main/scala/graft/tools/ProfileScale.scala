@@ -2,904 +2,121 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Similarity, TextAnalysis}
+import graft.SparkEntry
+import graft.ops.{AnnIndex, Bm25Index, CurationRefresh, DedupIndex}
+import graft.queries.EmbeddingQueries.Dim
+import graft.queries.QueryDef
 
-/** x10 scale profile for the flagship LLM-data queries (round-4
-  * verdict item 6): blow the sf0.1 corpus up 10x, re-run the q46
-  * near-dup pipeline and the q47/q48 ANN/IVF retrievals, and assert
-  * the EXECUTED (post-AQE) plans keep their shape — no equi-join
-  * flipping to a nested loop, no cartesian, no mid-plan
-  * single-partition funnel — while wall time scales sub-linearly in
-  * input size for the bucketed operators.
+/** Scale profile: runs the [[Declared]] queries on an sf-layout corpus
+  * and on the same corpus blown up `SPARK_GRAFT_SCALE` times (default
+  * 10), prints each entry's x1 and xN wall time, and checks every
+  * EXECUTED (post-AQE) plan with [[PlanShape.violations]] — no equi-join
+  * flipping to a nested loop, no cartesian, no mid-plan single-partition
+  * funnel.
   *
-  * The 10x corpus replicates each document with a distinct id space
-  * and a per-copy marker token appended to the text (so short docs'
-  * cross-copy jaccard drops below the 0.8 threshold while every
-  * copy's INTERNAL near-dup structure is preserved — components get
-  * denser without degenerating into one giant cluster). Embeddings
-  * replicate with shifted ids only: identical vectors stress the
-  * tie-handling and bucket-size paths.
+  * The ×N corpus is an sf-layout directory: `documents` and `embeddings`
+  * replicated with distinct id spaces, every other table copied
+  * unchanged. Each document copy gets a ` copymarkerI` token, so short
+  * docs' cross-copy jaccard drops below the 0.8 threshold while every
+  * copy's own near-dup structure is kept; embeddings copy with shifted
+  * ids only, so identical vectors stress the tie and bucket-size paths.
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.ProfileScale"
+  * A declared query runs its bench form as `graft.Bench` does:
+  * `benchPrepare` once, untimed, on each directory, then
+  * `benchFn.getOrElse(fn)` into the noop sink — x1 warm-up, x1, xN. The
+  * other thirteen entries have no query form and run on hand-built
+  * handles: the query-axis batch probes (corpus fixed, query table ×10),
+  * a synthetic 256×16-codebook probe, and the index lifecycle spans
+  * (shadow rebuild, locked window, refresh, streaming ingest).
+  *
+  *   SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_SCALE=10 sbt "runMain graft.tools.ProfileScale"
+  *
+  * `SPARK_GRAFT_SCALE_ONLY=q82,q112` restricts the sweep to entries whose
+  * label starts with one of those q-numbers. Nothing is caught: a
+  * prepare or run that throws ends the sweep with a non-zero exit.
   */
 object ProfileScale {
+
+  /** The declared queries profiled, by [[SparkEntry.allQueries]] name. */
+  val Declared: Seq[String] = Seq(
+    "q46_near_dup_pipeline", "q47_ann_topk", "q48_ivf_topk",
+    "q56_repeated_bigrams", "q57_tf_idf", "q59_pq_adc_topk",
+    "q61_decontaminate", "q62_boilerplate_ngrams", "q67_paragraph_dedup",
+    "q69_char_lm_score", "q70_bm25_topk", "q71_url_canonical_dedup",
+    "q72_sequence_packing", "q73_domain_cap", "q74_corpus_stats",
+    "q75_bpe_tokenize", "q76_exact_substr_dedup", "q77_bloom_decontaminate",
+    "q78_dsir_weights", "q80_bpe_train", "q81_nb_classify",
+    "q82_minlen_dup_spans", "q83_char_lm_interp", "q84_fuzzy_decontaminate",
+    "q85_semdedup", "q86_ppl_buckets", "q87_ann_recall", "q88_sq_codes",
+    "q90_mixture_sample", "q91_line_dedup", "q92_pq_train", "q94_rrf_hybrid",
+    "q95_dedup_incremental", "q96_cluster_keeper", "q99_word_lm",
+    "q100_cms_frequency", "q101_word_lm_kn", "q102_chunk_overlap",
+    "q103_containment", "q104_script_profile", "q105_materialize_chunks",
+    "q109_unimax_alloc", "q110_vocab_drift", "q112_minlen_refine",
+    "q113_bpe_token_ids", "q114_materialize_eos", "q115_pii_stats",
+    "q116_temperature_alloc", "q121_lsh_plan_band", "q123_unigram_segment",
+    "q126_attention_layout", "q127_unigram_em_round",
+    "q129_random_projection", "q130_topk_per_stratum", "q131_sketch_topk",
+    "q132_bpe_decode", "q133_pmi_collocations", "q134_char_entropy",
+    "q135_centroid_classify", "q136_token_budget_select",
+    "q137_confusion_matrix", "q138_lm_rollout", "q139_corpus_diff",
+    "q140_table_health", "q141_packing_efficiency",
+    "q142_similarity_histogram", "q143_pack_nosplit", "q144_sft_loss_mask",
+    "q145_bm25_index_topk", "q146_unigram_shrink", "q147_sft_sequences",
+    "q148_bm25_batch", "q149_ann_index_topk", "q150_hybrid_index_rag",
+    "q151_ann_batch", "q152_embedding_drift", "q153_ann_rebuild",
+    "q154_bm25_phrase", "q155_bm25f_fields", "q156_bm25_phrase_batch",
+    "q157_bm25_delete_probe", "q158_ann_delete_probe",
+    "q159_dedup_index_delete", "q161_rm3_topk", "q163_bm25_snippets",
+    "q165_bm25_proximity", "q166_hybrid_batch_rag", "q167_bm25_fsck",
+    "q168_dedup_fsck", "q169_ann_fsck", "q170_ann_filtered_probe",
+    "q171_lifecycle_cross_fsck", "q172_imported_vocab_tokenize",
+    "q173_bm25_shard_merge", "q175_ann_refined_probe",
+    "q176_imported_vocab_ids", "q177_ann_batch_refined",
+    "q178_bm25_snippet_batch", "q179_ann_shard_merge", "q180_ann_cell_stats",
+    "q181_refine_recall", "q182_tombstone_reconcile", "q183_id_decontaminate",
+    "q184_bm25_filtered_topk", "q185_ann_batch_filtered",
+    "q186_bm25_batch_filtered", "q187_bm25_phrase_filtered",
+    "q188_bm25_proximity_filtered", "q189_rm3_filtered_topk",
+    "q190_bm25_batch_attr", "q191_unigram_token_ids",
+    "q192_unigram_decode_roundtrip", "q193_unigram_pack_ids",
+    "q194_unigram_id_decontaminate", "q195_hybrid_filtered_rag",
+    "q196_rm3_filtered_feedback", "q198_bm25_rebuild", "q199_dedup_rebuild",
+    "q200_bm25_shadow_rebuild", "q201_dedup_shadow_rebuild")
+
   def main(args: Array[String]): Unit = {
+    val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
+    val unknown = Declared.filterNot(byName.contains)
+    require(unknown.isEmpty, s"no declared query named ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master("local[*]")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.queries.QueryDef.NanosConf, "true")
+      .config(QueryDef.NanosConf, "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Logs.initialize(verbose = true) // surface the components-rounds line
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val scratch = Files.createTempDirectory("graft_scale_").toString
+    val dirs = Seq(sfDir, s"$scratch/sf_x$factor")
+    val scales = Seq(1, factor)
+    writeScaled(spark, fs, sfDir, dirs(1), factor)
 
-    val scratch = Files.createTempDirectory("graft_scale_")
-
-    // ---- blown-up corpora, written to parquet so scans are real ----
-    val docs = graft.queries.QueryDef.t(spark, sfDir, "documents")
-    val docIdSpan = docs.agg(max("doc_id")).collect().head.getLong(0) + 1
-    (0 until factor).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i * docIdSpan)).as("doc_id"),
-        concat(col("text"), lit(s" copymarker$i")).as("text"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$scratch/documents10")
-
-    val emb = graft.queries.QueryDef.t(spark, sfDir, "embeddings")
-    val vecIdSpan = emb.agg(max("vec_id")).collect().head.getLong(0) + 1
-    (0 until factor).map { i =>
-      emb.select((col("vec_id") + lit(i * vecIdSpan)).as("vec_id"), col("embedding"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$scratch/embeddings10")
-
-    val docs10 = spark.read.parquet(s"$scratch/documents10")
-    val emb10 = spark.read.parquet(s"$scratch/embeddings10")
-    val dim = graft.queries.EmbeddingQueries.Dim
-
-    // round-11: the persistent BM25 index is built ONCE per scale
-    // outside the timed region (its operator shape is a standing index
-    // probed repeatedly) so the sweep times the probe alone — whose
-    // work must track the query terms' postings, never the corpus.
-    // lazy so the builds only run when a bm25 entry survives
-    // SPARK_GRAFT_SCALE_ONLY filtering — but they are FORCED before
-    // the timed loop (below), never inside a measured thunk: the
-    // first sweep recorded q145 x10 at 9.18x because the lazy x10
-    // build ran inside the probe's timing window.
-    lazy val bm25H1 = graft.ops.Bm25Index.build(
-      docs, "doc_id", s"$scratch/bm25idx1")
-    lazy val bm25H10 = graft.ops.Bm25Index.build(
-      docs10, "doc_id", s"$scratch/bm25idx10")
-    def q145probe(h: => graft.ops.Bm25Index.Handle) = graft.ops.Bm25Index.topK(
-      spark, h, Seq("data", "the", "query"), k = 25)
-    lazy val batchQueries = {
-      import spark.implicits._
-      Seq((1L, Seq("data", "the")), (2L, Seq("query")),
-        (3L, Seq("the", "query", "data"))).toDF("qid", "terms")
-    }
-    // the persistent ANN index, same discipline: nCells scales with
-    // the corpus (the q85 rule) so cells stay constant-size — with
-    // nProbe fixed the probe reads ~constant ABSOLUTE work (nProbe
-    // cells) at any scale, so the expected ratio is ~flat; readings
-    // above ~2x reflect fixed overheads (more cell files listed, the
-    // 10x-wider partition pruning) and noise, not corpus-linear work
-    lazy val annH1 = graft.ops.AnnIndex.build(emb, "embedding", "vec_id",
-      s"$scratch/annidx1", nCells = 4, m = 4, k = 4, dim = dim, iters = 2)
-    lazy val annH10 = graft.ops.AnnIndex.build(emb10, "embedding", "vec_id",
-      s"$scratch/annidx10", nCells = 4 * factor, m = 4, k = 4, dim = dim, iters = 2)
-    lazy val qv1 = emb.filter(col("vec_id") === 0)
-      .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .collect().head.getSeq[Double](0).toSeq
-    lazy val qv10 = emb10.filter(col("vec_id") === 0)
-      .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .collect().head.getSeq[Double](0).toSeq
-    def q150hybrid(bm: => graft.ops.Bm25Index.Handle,
-        ann: => graft.ops.AnnIndex.Handle, qv: => Seq[Double]) = {
-      val lex = graft.util.Ids.withRowIndex(
-        graft.ops.Bm25Index.topK(spark, bm, Seq("data", "the", "query"), k = 50),
-        "rank")
-      val sem = graft.util.Ids.withRowIndex(
-          graft.ops.AnnIndex.query(spark, ann, "vec_id", qv, k = 50, nProbe = 2),
-          "rank")
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      graft.ops.Retrieval.rrfFuse(Seq(lex, sem), "doc_id", rrfK = 60, k = 10)
-    }
-
-    // round-12 batched-probe fixtures: the x10 QUERY tables and the
-    // synthetic 256x16-codebook index (see the q148/q151 -10q/-bigcb
-    // entries below for why)
-    def bm25BatchQs(n: Int): DataFrame = {
-      import spark.implicits._
-      (0 until n).flatMap { i =>
-        Seq((1L + 3 * i, Seq("data", "the")), (2L + 3 * i, Seq("query")),
-          (3L + 3 * i, Seq("the", "query", "data")))
-      }.toDF("qid", "terms")
-    }
-    def phraseBatchQs(n: Int): DataFrame = {
-      import spark.implicits._
-      (0 until n).flatMap { i =>
-        Seq((1L + 3 * i, Seq("the", "data")), (2L + 3 * i, Seq("data", "the")),
-          (3L + 3 * i, Seq("and", "the", "data")))
-      }.toDF("qid", "phrase")
-    }
-    // round-12 deleted-index twins (q157/q158/q159): the tombstone
-    // anti-join's probe overhead is what these measure, so each is a
-    // FILE COPY of its pristine sibling (no second corpus pass) plus
-    // a delete — the shared indexes stay tombstone-free for every
-    // other entry
-    def copyDir(src: String, dst: String): Unit = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(src), fs,
-        new org.apache.hadoop.fs.Path(dst), false, conf)
-      ()
-    }
-    lazy val bm25DelH1 = {
-      copyDir(bm25H1.dir, s"$scratch/bm25del1")
-      graft.ops.Bm25Index.delete(
-        graft.ops.Bm25Index.load(spark, s"$scratch/bm25del1"),
-        docs.filter(col("doc_id") % 7 === 3).select("doc_id"))
-    }
-    lazy val bm25DelH10 = {
-      copyDir(bm25H10.dir, s"$scratch/bm25del10")
-      graft.ops.Bm25Index.delete(
-        graft.ops.Bm25Index.load(spark, s"$scratch/bm25del10"),
-        docs10.filter(col("doc_id") % 7 === 3).select("doc_id"))
-    }
-    lazy val annDelH1 = {
-      copyDir(annH1.dir, s"$scratch/anndel1")
-      graft.ops.AnnIndex.delete(annH1.copy(dir = s"$scratch/anndel1"),
-        emb.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id")
-    }
-    lazy val annDelH10 = {
-      copyDir(annH10.dir, s"$scratch/anndel10")
-      graft.ops.AnnIndex.delete(annH10.copy(dir = s"$scratch/anndel10"),
-        emb10.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id")
-    }
-    lazy val dedupDelH1 = {
-      val h = graft.ops.DedupIndex.build(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", s"$scratch/dedupdel1")
-      graft.ops.DedupIndex.delete(
-        h, docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 3 === 0))
-    }
-    lazy val dedupDelH10 = {
-      val h = graft.ops.DedupIndex.build(
-        docs10.filter(col("doc_id") % 2 === 0), "doc_id", s"$scratch/dedupdel10")
-      graft.ops.DedupIndex.delete(
-        h, docs10.filter(col("doc_id") % 2 === 0 && col("doc_id") % 3 === 0))
-    }
-    lazy val dedupProbeBatch = docs.filter(col("doc_id") % 2 === 1)
-      .limit(500).localCheckpoint(true)
-    // round-13: rebuild arm state — rebuild RETRAINS and RE-ENCODES,
-    // so its own dirs (copies) keep the shared indexes' models frozen
-    // for every other arm; each timed run re-runs the full rebuild
-    lazy val annRebDir1 = { copyDir(annH1.dir, s"$scratch/annreb1"); s"$scratch/annreb1" }
-    lazy val annRebDir10 = { copyDir(annH10.dir, s"$scratch/annreb10"); s"$scratch/annreb10" }
-    lazy val annShadowDir1 = { copyDir(annH1.dir, s"$scratch/annshadow1"); s"$scratch/annshadow1" }
-    lazy val annShadowDir10 = { copyDir(annH10.dir, s"$scratch/annshadow10"); s"$scratch/annshadow10" }
-    lazy val bm25RebArmDir1 = { copyDir(bm25H1.dir, s"$scratch/bm25reb1"); s"$scratch/bm25reb1" }
-    lazy val bm25RebArmDir10 = { copyDir(bm25H10.dir, s"$scratch/bm25reb10"); s"$scratch/bm25reb10" }
-    // round-15: the bm25 SHADOW rebuild and the dedup rebuild arms get
-    // their own mutable state, same copy discipline
-    lazy val bm25ShadowDir1 = { copyDir(bm25H1.dir, s"$scratch/bm25shadow1"); s"$scratch/bm25shadow1" }
-    lazy val bm25ShadowDir10 = { copyDir(bm25H10.dir, s"$scratch/bm25shadow10"); s"$scratch/bm25shadow10" }
-    lazy val dedupRebArmDir1 = {
-      graft.ops.DedupIndex.build(docs, "doc_id", s"$scratch/dedupreb1")
-      s"$scratch/dedupreb1"
-    }
-    lazy val dedupRebArmDir10 = {
-      graft.ops.DedupIndex.build(docs10, "doc_id", s"$scratch/dedupreb10")
-      s"$scratch/dedupreb10"
-    }
-    lazy val dedupShadowArmDir1 = {
-      graft.ops.DedupIndex.build(docs, "doc_id", s"$scratch/dedupshadow1")
-      s"$scratch/dedupshadow1"
-    }
-    lazy val dedupShadowArmDir10 = {
-      graft.ops.DedupIndex.build(docs10, "doc_id", s"$scratch/dedupshadow10")
-      s"$scratch/dedupshadow10"
-    }
-    // round-16: LOCKED-WINDOW scale arms (r15 verdict #3). The shadow
-    // family's design claim is "refusal window ∝ delta, never corpus" —
-    // previously measured only at sf0.1 (LifecycleDemo, 1.8–4.2 s).
-    // Each arm restores pristine index state, starts the unlocked
-    // sidecar pass, lands a FIXED 200-row ingest delta through the
-    // live append path right before the lock (the beforeLock seam, the
-    // OpsSpec interleaving), and prints the LOCKED span — delta
-    // catch-up + swap, measured from just before the lock acquisition —
-    // as its own `locked-span` line. The arm's wall line still tracks
-    // the corpus-linear unlocked pass (plus the untimed-in-spirit state
-    // restore); the locked-span line is the scaling claim and must stay
-    // ~flat from x1 to x10 to x100.
-    def rmThenCopy(src: String, dst: String): Unit = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      copyDir(src, dst)
-    }
-    lazy val lockDeltaDocs = docs.filter(col("doc_id") < 200)
-      .select((col("doc_id") + lit(50000000L)).as("doc_id"), col("text"))
-      .localCheckpoint(true)
-    lazy val lockDeltaEmb = emb.filter(col("vec_id") < 200)
-      .select((col("vec_id") + lit(50000000L)).as("vec_id"), col("embedding"))
-      .localCheckpoint(true)
-    def lockspanLine(tag: String, t0: Long): org.apache.spark.sql.DataFrame = {
-      println(f"[scale] $tag%-24s locked-span ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      spark.range(1).toDF()
-    }
-    def bm25Lockspan(src: org.apache.spark.sql.DataFrame, pristine: String,
-        dest: String, tag: String): org.apache.spark.sql.DataFrame = {
-      rmThenCopy(pristine, dest)
-      var t0 = 0L
-      graft.ops.Bm25Index.rebuildShadow(
-        () => src.unionByName(lockDeltaDocs), "doc_id", dest,
-        beforeLock = () => {
-          graft.ops.Bm25Index.append(
-            graft.ops.Bm25Index.load(spark, dest), lockDeltaDocs)
-          t0 = System.nanoTime()
-        })
-      lockspanLine(tag, t0)
-    }
-    def dedupLockspan(src: org.apache.spark.sql.DataFrame, pristine: String,
-        dest: String, tag: String): org.apache.spark.sql.DataFrame = {
-      rmThenCopy(pristine, dest)
-      var t0 = 0L
-      graft.ops.DedupIndex.rebuildShadow(
-        () => src.unionByName(lockDeltaDocs), "doc_id", dest,
-        beforeLock = () => {
-          graft.ops.DedupIndex.append(
-            graft.ops.DedupIndex.load(spark, dest), lockDeltaDocs)
-          t0 = System.nanoTime()
-        })
-      lockspanLine(tag, t0)
-    }
-    def annLockspan(src: org.apache.spark.sql.DataFrame, pristine: String,
-        dest: String, cells: Int, tag: String): org.apache.spark.sql.DataFrame = {
-      rmThenCopy(pristine, dest)
-      var t0 = 0L
-      graft.ops.AnnIndex.rebuildShadow(
-        () => src.unionByName(lockDeltaEmb), "embedding", "vec_id", dest,
-        nCells = cells, m = 4, k = 4, dim = dim, iters = 2,
-        beforeLock = () => {
-          graft.ops.AnnIndex.append(
-            graft.ops.AnnIndex.load(spark, dest), lockDeltaEmb,
-            "embedding", "vec_id")
-          t0 = System.nanoTime()
-        })
-      lockspanLine(tag, t0)
-    }
-    // round-16: CurationRefresh scale arms (the in-round x10 invariant
-    // for the new corpus-scaled operator). Fixed ABSOLUTE delta at
-    // every scale — ids <200 added, [200,400) changed, [400,600)
-    // removed; the replicated copies never touch those ranges — so the
-    // two arms separate the operator's two cost regimes:
-    //   refresh add  — pure-add delta (no deletes → no compact): the
-    //                  span must stay ~flat across scales (delta-sized
-    //                  diff-join probe + 200-row appends);
-    //   refresh full — removes+changes present → the three compact
-    //                  purges run: corpus-linear BY CONTRACT, the
-    //                  honest comparator is the trio-build line printed
-    //                  at prep (refresh must stay well under a clean
-    //                  rebuild at the same scale — no re-tokenize of
-    //                  the bulk, no retrain, no re-encode).
-    // Each run restores pristine trio+snapshot state (inside the wall,
-    // like the lockspan arms) and prints the refresh span separately.
-    def refrOldOf(corpus: org.apache.spark.sql.DataFrame) = corpus
-      .filter(col("doc_id") >= 200)
-      .withColumn("text",
-        when(col("doc_id") >= 200 && col("doc_id") < 400,
-          concat(col("text"), lit(" [old]"))).otherwise(col("text")))
-    lazy val refrCorpus1 = {
-      docs.select(col("doc_id"), col("text"))
-        .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"))
-        .write.mode("overwrite").parquet(s"$scratch/refrcorpus1")
-      spark.read.parquet(s"$scratch/refrcorpus1")
-    }
-    lazy val refrCorpus10 = {
-      val rc = refrCorpus1
-      val span = rc.agg(max("doc_id")).collect().head.getLong(0) + 1
-      (0 until factor).map { i =>
-        rc.select((col("doc_id") + lit(i * span)).as("doc_id"),
-          concat(col("text"), lit(s" copymarker$i")).as("text"),
-          col("embedding"))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$scratch/refrcorpus10")
-      spark.read.parquet(s"$scratch/refrcorpus10")
-    }
-    def mkRefrPristine(corpus: org.apache.spark.sql.DataFrame, root: String,
-        cells: Int, tag: String): String = {
-      val old = refrOldOf(corpus)
+    // Time CONSTRUCTION + execution: several operators materialize
+    // stage boundaries eagerly (localCheckpoint) while the plan is
+    // built, so timing only the final action would miss that work.
+    def run(label: String, mk: => DataFrame): Double = {
       val t0 = System.nanoTime()
-      graft.ops.DedupIndex.build(old, "doc_id", s"$root/dedup")
-      graft.ops.Bm25Index.build(old, "doc_id", s"$root/bm25")
-      graft.ops.AnnIndex.build(old, "embedding", "doc_id", s"$root/ann",
-        nCells = cells, m = 4, k = 4, dim = dim, iters = 2)
-      println(f"[scale] $tag%-24s trio-build ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      graft.ops.CurationRefresh.snapshot(old, s"$root/state")
-      root
-    }
-    lazy val refrPristine1 =
-      mkRefrPristine(refrCorpus1, s"$scratch/refrpris1", 4, "refresh x1")
-    lazy val refrPristine10 =
-      mkRefrPristine(refrCorpus10, s"$scratch/refrpris10", 4 * factor,
-        s"refresh x$factor")
-    def refreshArm(corpus: org.apache.spark.sql.DataFrame, pristine: String,
-        work: String, pureAdd: Boolean, tag: String): org.apache.spark.sql.DataFrame = {
-      Seq("dedup", "bm25", "ann", "state")
-        .foreach(t => rmThenCopy(s"$pristine/$t", s"$work/$t"))
-      val neu =
-        if (pureAdd) corpus.withColumn("text", // adds only: revisions stay
-          when(col("doc_id") >= 200 && col("doc_id") < 400,
-            concat(col("text"), lit(" [old]"))).otherwise(col("text")))
-        else corpus.filter(col("doc_id") < 400 || col("doc_id") >= 600)
-      val t0 = System.nanoTime()
-      val rep = graft.ops.CurationRefresh.refresh(
-        spark, neu, s"$work/state", s"$work/dedup", s"$work/bm25",
-        s"$work/ann", "embedding")
-      println(f"[scale] $tag%-24s refresh-span ${(System.nanoTime() - t0) / 1e9}%7.3f s " +
-        s"(+${rep.added} ~${rep.changed} -${rep.removed} =${rep.unchanged})")
-      spark.range(1).toDF()
-    }
-    // q190's per-query attr fixture: docs10 carries no lang column, so
-    // both scales derive the SAME synthetic attribute (plan shape is
-    // what the arm measures — the oracle proves values)
-    def attrTableOf(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id"),
-      concat(lit("l"), (col("doc_id") % 5).cast("string")).as("lang"))
-    lazy val attrBatchQueries = {
-      import spark.implicits._
-      Seq((1L, Seq("data", "the"), "l1"), (2L, Seq("query"), "l2"),
-        (3L, Seq("the", "query", "data"), "l3")).toDF("qid", "terms", "ql")
-    }
-    // round-13: filtered-probe indexes — the attribute column stored
-    // with the codes; nCells scales like annH so cells stay
-    // constant-size and the filtered probe's expected ratio is ~flat
-    lazy val annAttrH1 = graft.ops.AnnIndex.build(
-      emb.withColumn("lang",
-        when(col("vec_id") % 3 === 0, "en").otherwise("pl")),
-      "embedding", "vec_id", s"$scratch/annattr1",
-      nCells = 4, m = 4, k = 4, dim = dim, iters = 2,
-      attrCols = Seq("lang"))
-    lazy val annAttrH10 = graft.ops.AnnIndex.build(
-      emb10.withColumn("lang",
-        when(col("vec_id") % 3 === 0, "en").otherwise("pl")),
-      "embedding", "vec_id", s"$scratch/annattr10",
-      nCells = 4 * factor, m = 4, k = 4, dim = dim, iters = 2,
-      attrCols = Seq("lang"))
-    // round-13: merge-arm shards — built once untimed; the timed
-    // region is the merge itself (guards + file copy + meta sum)
-    lazy val mergeShards1 = {
-      graft.ops.Bm25Index.build(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", s"$scratch/mg_ba")
-      graft.ops.Bm25Index.build(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", s"$scratch/mg_bb")
-    }
-    lazy val mergeShards10 = {
-      graft.ops.Bm25Index.build(
-        docs10.filter(col("doc_id") % 2 === 0), "doc_id", s"$scratch/mg_ba10")
-      graft.ops.Bm25Index.build(
-        docs10.filter(col("doc_id") % 2 === 1), "doc_id", s"$scratch/mg_bb10")
-    }
-    // round-13: ANN merge-arm shards — per-site encodes under the
-    // shared models, built once untimed
-    lazy val annMergeShards1 = {
-      graft.ops.AnnIndex.buildWith(emb.filter(col("vec_id") % 2 === 0),
-        "embedding", "vec_id", s"$scratch/mg_aa", annH1.centroids, annH1.codebooks)
-      graft.ops.AnnIndex.buildWith(emb.filter(col("vec_id") % 2 === 1),
-        "embedding", "vec_id", s"$scratch/mg_ab", annH1.centroids, annH1.codebooks)
-    }
-    lazy val annMergeShards10 = {
-      graft.ops.AnnIndex.buildWith(emb10.filter(col("vec_id") % 2 === 0),
-        "embedding", "vec_id", s"$scratch/mg_aa10", annH10.centroids, annH10.codebooks)
-      graft.ops.AnnIndex.buildWith(emb10.filter(col("vec_id") % 2 === 1),
-        "embedding", "vec_id", s"$scratch/mg_ab10", annH10.centroids, annH10.codebooks)
-    }
-    // round-13: the crossFsck trio — one shared doc_id key (the ANN
-    // side re-keys the vector ids), pristine tombstone-free state;
-    // the audit is index-table-linear by contract
-    lazy val trioDedupDir1 = {
-      graft.ops.DedupIndex.build(docs, "doc_id", s"$scratch/triodedup1").dir
-    }
-    lazy val trioDedupDir10 = {
-      graft.ops.DedupIndex.build(docs10, "doc_id", s"$scratch/triodedup10").dir
-    }
-    lazy val trioAnnDir1 = graft.ops.AnnIndex.build(
-      emb.select(col("vec_id").as("doc_id"), col("embedding")),
-      "embedding", "doc_id", s"$scratch/trioann1",
-      nCells = 4, m = 4, k = 4, dim = dim, iters = 2).dir
-    lazy val trioAnnDir10 = graft.ops.AnnIndex.build(
-      emb10.select(col("vec_id").as("doc_id"), col("embedding")),
-      "embedding", "doc_id", s"$scratch/trioann10",
-      nCells = 4 * factor, m = 4, k = 4, dim = dim, iters = 2).dir
-    // round-13: q182's reconcile trio — the partial-deletion
-    // construction (co-written %7 delete, %11 delete reaching BM25
-    // only — mirrors CurationQueries.buildPartialDeleteTrio, the
-    // canonical copy whose predicates the q171/q182 oracles pin; this
-    // arm has no oracle, only the timing), REPAIRED once untimed; the
-    // idempotent steady-state pass (three tombstone reads + union +
-    // id-keyed anti-joins + three no-op deletes — the q182 benchFn
-    // shape). Deletion-list-sized by contract: corpus size enters
-    // only through the tombstone tables (%-predicates ⇒ ~linear).
-    def buildRecTrio(
-        d: DataFrame, e: DataFrame, tag: String, cells: Int)
-        : (String, String, String) = {
-      val dd = graft.ops.DedupIndex.build(d, "doc_id", s"$scratch/${tag}_dedup")
-      val bb = graft.ops.Bm25Index.build(d, "doc_id", s"$scratch/${tag}_bm25")
-      val aa = graft.ops.AnnIndex.build(
-        e.select(col("vec_id").as("doc_id"), col("embedding")),
-        "embedding", "doc_id", s"$scratch/${tag}_ann",
-        nCells = cells, m = 4, k = 4, dim = dim, iters = 2)
-      val del7 = col("doc_id") % 7 === 3
-      val b2 = graft.ops.Bm25Index.delete(
-        bb, d.filter(del7).select(col("doc_id")))
-      graft.ops.AnnIndex.delete(aa,
-        e.select(col("vec_id").as("doc_id")).filter(del7), "doc_id")
-      graft.ops.DedupIndex.delete(dd, d.filter(del7))
-      graft.ops.Bm25Index.delete(b2,
-        d.filter(col("doc_id") % 11 === 5 && !del7).select(col("doc_id")))
-      graft.ops.Maintenance.reconcileTombstones(
-        spark, dd.dir, bb.dir, aa.dir, d).collect()
-      (dd.dir, bb.dir, aa.dir)
-    }
-    lazy val recTrio1 = buildRecTrio(docs, emb, "rec1", 4)
-    lazy val recTrio10 = buildRecTrio(docs10, emb10, "rec10", 4 * factor)
-    lazy val bigCbCodebooks: Seq[Seq[(Long, Seq[Double])]] =
-      (0 until 16).map { mi =>
-        (0L until 256L).map(cid =>
-          cid -> Seq.tabulate(4)(j => ((mi * 31 + cid * 7 + j) % 97).toDouble)).toSeq
-      }
-    lazy val bigCbCentroids: Seq[(Long, Seq[Double])] =
-      (0L until 8L).map(c =>
-        c -> Seq.tabulate(dim)(j => ((c * 13 + j * 7) % 29 - 14.0) / 7.0))
-    def writeBigCbCodes(src: DataFrame, dest: String): graft.ops.AnnIndex.Handle = {
-      src.select(col("vec_id") +: pmod(col("vec_id"), lit(8)).as("cell") +:
-          (0 until 16).map(mi =>
-            pmod(col("vec_id") * (mi + 1), lit(256)).as(s"code_$mi")): _*)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/codes")
-      graft.ops.AnnIndex.Handle(dest, bigCbCentroids, bigCbCodebooks)
-    }
-    lazy val bigCbH1 = writeBigCbCodes(emb, s"$scratch/bigcb1")
-    lazy val bigCbH10 = writeBigCbCodes(emb10, s"$scratch/bigcb10")
-    // round-12 multi-field (BM25F) indexes: a synthetic short title
-    // alongside the body — the field mix is what the probe pays for
-    def withTitle(d: DataFrame): DataFrame = d.withColumn("title",
-      concat(lit("doc "), (col("doc_id") % 100).cast("string")))
-    lazy val bm25fH1 = graft.ops.Bm25Index.buildFields(
-      withTitle(docs), "doc_id", s"$scratch/bm25fidx1", Seq("title", "text"))
-    lazy val bm25fH10 = graft.ops.Bm25Index.buildFields(
-      withTitle(docs10), "doc_id", s"$scratch/bm25fidx10", Seq("title", "text"))
-
-    def q46(d: DataFrame) = Dedup.nearDuplicates(d, "doc_id", threshold = 0.8)
-      .select(col("doc_id"), col("dup_of"), col("is_near_duplicate"))
-    def q47(e: DataFrame) = Similarity.annTopK(e, e.filter(col("vec_id") < 20),
-      "embedding", "vec_id", dim = dim, k = 5, numPlanes = 8)
-    def q48(e: DataFrame) = {
-      val centroids = Similarity.deterministicCentroids(e, "embedding", "vec_id", 4)
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 20),
-        "embedding", "vec_id", centroids, k = 5, nProbe = 2)
-    }
-    // round-5 additions: the two heaviest new text filters + PQ ADC
-    def q56(d: DataFrame) = TextAnalysis.repeatedNgramStats(d, "text", 2)
-      .filter(col("n_ngrams") > 0)
-      .select(col("doc_id"), col("n_ngrams"), col("n_distinct"), col("repeated_frac"))
-    def q57(d: DataFrame) = TextAnalysis.tfIdf(d, "doc_id", "text")
-    def q59(e: DataFrame) = {
-      val cbs = Similarity.pqSubCodebooks(e, "embedding", "vec_id", m = 4, k = 4)
-      val qv = e.filter(col("vec_id") === 0)
-        .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .collect().head.getSeq[Double](0).toSeq
-      Similarity.pqTopK(e, "embedding", "vec_id", cbs, qv, k = 10)
-    }
-    // round-6 additions: the two remaining shuffle-bearing text ops.
-    // q61's eval side stays FIXED as the corpus grows (ids < 10 exist
-    // only in copy 0) — exactly the production shape where a held-out
-    // benchmark set is scanned against an ever-larger corpus.
-    def q61(d: DataFrame) = TextAnalysis.decontaminate(
-      d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-      "doc_id", "text", n = 3, minOverlap = 5L)
-      .select(col("doc_id"), col("n_overlap"), col("contaminated"))
-    def q62(d: DataFrame) = TextAnalysis.boilerplateStats(
-      d, "doc_id", "text", n = 3, minDocFreq = 3L)
-      .filter(col("n_grams") > 0)
-      .select(col("doc_id"), col("n_grams"), col("n_boiler"), col("boiler_frac"))
-    // q67 at x10 is a dedup stress test: the per-copy marker lands in
-    // the LAST '. '-paragraph only, so almost every paragraph is a
-    // cross-copy duplicate and the first-occurrence rule does real work
-    def q67(d: DataFrame) = TextAnalysis.paragraphDedup(d, "doc_id", "text", sep = ". ")
-    // round-6 curation ops: the char-LM (vocabulary-keyed model shuffle
-    // + per-doc score sum), the URL dedup (one hash-keyed shuffle) and
-    // sequence packing (per-shard window). BM25 is a narrow map +
-    // TakeOrdered — flat by construction — but profiled anyway to catch
-    // a regression into a sort.
-    def q69(d: DataFrame) = {
-      val model = TextAnalysis.charLmTrain(d, "text", n = 3)
-      TextAnalysis.charLmScore(d, model, "doc_id", "text", n = 3)
-        .select(col("doc_id"), col("n_grams"), col("n_unseen"), col("avg_nll"))
-    }
-    def q70(d: DataFrame) = graft.ops.Retrieval.bm25TopK(
-      d, "doc_id", "text", Seq("data", "the", "query"), k = 25)
-    def q71(d: DataFrame) = {
-      val messy = concat(lit("HTTP://WWW.Example.COM:80/docs/"),
-        (col("doc_id") % 5000).cast("string"), lit("/?utm_source=feed&b=2&a=1#frag"))
-      graft.ops.Urls.dedupByUrl(d.withColumn("url", messy), "url", "doc_id")
-    }
-    def q72(d: DataFrame) = graft.ops.Packing.packChunks(
-      d.select(col("doc_id"), (col("doc_id") % 64).cast("string").as("shard"),
-        TextAnalysis.tokenCount(col("text")).as("n_tok")),
-      "doc_id", "n_tok", 512L, "shard")
-    // domain cap: the spam domain holds half the corpus at ANY scale —
-    // the window input is exactly the over-cap rows, which is the
-    // skew the count-split is meant to bound
-    def q73(d: DataFrame) = {
-      val url = concat(lit("https://"),
-        when(col("doc_id") % 4 < 2, lit("WWW.Spam-Farm.COM:443"))
-          .when(col("doc_id") % 4 === 2,
-            concat(lit("host"), (col("doc_id") % 25).cast("string"), lit(".Example.org")))
-          .otherwise(concat(lit("uniq"), (col("doc_id") % 4999).cast("string"), lit(".net"))),
-        lit("/page/"), col("doc_id").cast("string"))
-      graft.ops.Urls.capPerDomain(
-        d.withColumn("url", url), "url", "doc_id", maxPerDomain = 100L)
-        .select(col("doc_id"), col("domain"), col("domain_count"), col("domain_kept"))
-    }
-    // corpus stats in the HLL form — the sketch keeps the vocab agg
-    // mergeable, so the x10 growth is all in the token explode
-    def q74(d: DataFrame) = TextAnalysis.corpusStats(
-      d.withColumn("source", (col("doc_id") % 20).cast("string")),
-      "text", "source", approxVocab = true)
-    // real BPE tokenization: narrow zero-shuffle projection; the vocab
-    // rides in the expression and the per-thread piece LRU makes the
-    // x10 copies near-free (same word distribution = cache hits)
-    val bpeVocab = graft.plans.BpeVocab(Seq(
-      "t" -> "h", "Ġ" -> "t", "Ġ" -> "a", "e" -> "r", "Ġ" -> "s",
-      "a" -> "t", "r" -> "o", "Ġ" -> "th", "Ġth" -> "e", "l" -> "e",
-      "Ġs" -> "t", "a" -> "b", "ab" -> "le", "Ġt" -> "able"))
-    def q75(d: DataFrame) = d.select(col("doc_id"),
-      TextAnalysis.bpeTokenCount(col("text"), bpeVocab).as("n_bpe"))
-    // round-13: the streaming-ingest claim — "index size never enters
-    // the trigger cost" (CurationIngest scaladoc). Dedicated COPIES of
-    // the trio at both scales (the sink appends; shared arm state must
-    // never mutate), and every call folds FRESH ids so each timed run
-    // exercises the full screen -> gate -> three-append trigger.
-    lazy val ingTrio1 = {
-      copyDir(trioDedupDir1, s"$scratch/ing1_dedup")
-      copyDir(bm25H1.dir, s"$scratch/ing1_bm25")
-      copyDir(trioAnnDir1, s"$scratch/ing1_ann")
-      (graft.ops.DedupIndex.load(spark, s"$scratch/ing1_dedup"),
-        graft.ops.Bm25Index.load(spark, s"$scratch/ing1_bm25"),
-        graft.ops.AnnIndex.load(spark, s"$scratch/ing1_ann"))
-    }
-    lazy val ingTrio10 = {
-      copyDir(trioDedupDir10, s"$scratch/ing10_dedup")
-      copyDir(bm25H10.dir, s"$scratch/ing10_bm25")
-      copyDir(trioAnnDir10, s"$scratch/ing10_ann")
-      (graft.ops.DedupIndex.load(spark, s"$scratch/ing10_dedup"),
-        graft.ops.Bm25Index.load(spark, s"$scratch/ing10_bm25"),
-        graft.ops.AnnIndex.load(spark, s"$scratch/ing10_ann"))
-    }
-    var ingestEpoch = 0L
-    def ingestBatch(): DataFrame = {
-      ingestEpoch += 1
-      val base = 10000000L * ingestEpoch
-      spark.range(200)
-        .select((col("id") + lit(base)).as("doc_id"))
-        .withColumn("text", concat(lit("fresh ingest document number "),
-          col("doc_id").cast("string"),
-          lit(" with a deterministic tail of filler words")))
-        .withColumn("embedding", transform(sequence(lit(0), lit(63)),
-          j => ((col("doc_id") % 89 + j * 17) % 37).cast("double") / lit(37.0)))
-    }
-    def ingestRun(
-        trio: (graft.ops.DedupIndex.Handle, graft.ops.Bm25Index.Handle,
-          graft.ops.AnnIndex.Handle), tag: Int): DataFrame = {
-      val (dh, bh, ah) = trio
-      graft.streaming.CurationIngest.curationSink(
-        dh, bh, ah, s"$scratch/ing_verdicts$tag", "embedding",
-        qualityGate = length(col("text")) > 20)(ingestBatch(), ingestEpoch)
-      spark.range(1).toDF() // the sink does its own writes
-    }
-    // round-13: the imported-vocab arm — same merge table as the q75
-    // arm, round-tripped through a CRLF merges.txt (the import itself
-    // is driver-side and untimed; the arm proves the tokenize pass
-    // under an imported table keeps q75's corpus-linear shape)
-    lazy val importedArmVocab = {
-      val p = java.nio.file.Path.of(s"$scratch/merges.txt")
-      java.nio.file.Files.writeString(p,
-        graft.plans.BpeVocab.toGpt2Lines(bpeVocab).mkString("", "\r\n", "\r\n"))
-      graft.plans.BpeVocab.fromGpt2File(spark, p.toString)
-    }
-    def q172(d: DataFrame) = d.select(col("doc_id"),
-      TextAnalysis.bpeTokenCount(col("text"), importedArmVocab).as("n_bpe"))
-    // round-13: the foreign-ID variant — same segmentation, ids from a
-    // written-and-reloaded vocab.json (shifted, so a silent fallback to
-    // the deterministic table would be visible in the output)
-    lazy val importedIdsArmVocab = {
-      val shifted = bpeVocab.idTableRows.map { case (t, i) => (t, i + 1000) }
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(s"$scratch/arm_merges.txt"),
-        graft.plans.BpeVocab.toGpt2Lines(bpeVocab).mkString("", "\n", "\n"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(s"$scratch/arm_vocab.json"),
-        graft.plans.BpeVocab.toVocabJsonString(
-          bpeVocab.copy(explicitIds = Some(shifted))))
-      graft.plans.BpeVocab.fromVocabJsonFile(
-        spark, s"$scratch/arm_merges.txt", s"$scratch/arm_vocab.json")
-    }
-    def q176(d: DataFrame) = d.select(col("doc_id"),
-      TextAnalysis.bpeTokenIds(col("text"), importedIdsArmVocab).as("ids"))
-    // round-13: id-level decontamination over the imported ids — the
-    // eval gram set is a fixed corpus slice (grows with the corpus
-    // here, broadcast by contract at benchmark scale); the train side
-    // pays one tokenize + explode + doc-keyed count
-    def q183(d: DataFrame) = {
-      val ids = q176(d)
-      TextAnalysis.decontaminateIds(
-          ids.filter(col("doc_id") % 10 =!= 7),
-          ids.filter(col("doc_id") % 10 === 7),
-          "doc_id", "ids", n = 20)
-        .select(col("doc_id"), col("n_overlap"), col("contaminated"))
-    }
-    // exact-substring spans: at x10 the copy marker sits at text END,
-    // so all but the last k-1 windows of every document duplicate
-    // across copies — flagged occurrences ~ the whole corpus's window
-    // count, the worst case for the per-doc span merge
-    def q76(d: DataFrame) = Dedup.exactSubstrSpans(d, "doc_id", "text", k = 5)
-      .select(col("doc_id"), col("n_dup_windows"), col("n_spans"),
-        col("n_dup_tokens"), col("clean_text"))
-    // Bloom decontamination under the same fixed-eval shape as q61:
-    // the sketch build cost is constant in corpus size, the probe is
-    // narrow — only the candidate sliver should grow with the corpus
-    def q77(d: DataFrame) = TextAnalysis.bloomDecontaminate(
-      d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-      "doc_id", "text", n = 3, minOverlap = 5L,
-      expectedEvalGrams = 1L << 12, numBits = 1L << 16)
-      .select(col("doc_id"), col("n_overlap"), col("contaminated"))
-    // DSIR under the q61/q77 fixed-target shape: the raw model and the
-    // scoring pass grow with the corpus, the target model and the
-    // bucket-ratio broadcast stay constant-size
-    def q78(d: DataFrame) = graft.ops.Dsir.dsirWeights(
-      d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-      "doc_id", "text", numBuckets = 4096)
-      .select(col("doc_id"), col("n_feats"), col("log_weight"))
-
-    // round-8 additions. BPE training: the corpus is touched once
-    // (piece counting); all 24 greedy rounds run on the DISTINCT-piece
-    // table, which barely grows at x10 (same Zipf vocabulary + ten
-    // marker words) — training cost should be nearly FLAT in corpus
-    // size, the whole point of the weighted-piece formulation
-    def q80(d: DataFrame) = {
-      val merges = graft.ops.BpeTrain.train(d, "text", numMerges = 24)
-      import spark.implicits._
-      merges.map(m => (m.rank, m.left, m.right, m.pairCount))
-        .toDF("merge_rank", "lhs", "rhs", "c")
-    }
-    // NB classifier under a fixed bucket space: model fit + broadcast
-    // probe both corpus-linear, the model itself constant-size
-    def q81(d: DataFrame) = {
-      val lab = d.withColumn("label",
-        concat(lit("g"), (col("doc_id") % 3).cast("string")))
-      graft.ops.NbClassifier.classify(
-        lab, lab.filter(col("doc_id") >= 50), "doc_id", "text", "label",
-        numBuckets = 4096)
-        .select(col("doc_id"), col("n_feats"), col("pred_label"))
-    }
-    // min-length spans at x10 are the DELIBERATE worst case: the copy
-    // marker sits at text end, so nearly every seed window duplicates
-    // across copies — the flagged set approaches the corpus's whole
-    // window count and every pair extends to near-full documents. A
-    // real pipeline runs exact-dedup first (CurationDemo does); this
-    // profiles the operator without that mercy.
-    def q82(d: DataFrame) = Dedup.minLenDupSpans(
-      d, "doc_id", "text", minLen = 8, seedK = 4)
-      .select(col("doc_id"), col("n_seed_hits"), col("n_spans"),
-        col("n_dup_tokens"), col("clean_text"))
-
-    // interpolated LM: three vocabulary-bounded model broadcasts, one
-    // doc-keyed sum — only the scored corpus scales
-    def q83(d: DataFrame) = TextAnalysis.charLmScoreInterp(
-      d, d.filter(col("doc_id") >= 10), "doc_id", "text", n = 3)
-      .filter(col("n_grams") > 0)
-      .select(col("doc_id"), col("n_grams"), col("n_unseen_top"), col("avg_nll"))
-    // fuzzy decontamination under the fixed-eval shape: eval-side
-    // signatures constant, train side grows — the band joins should
-    // scale with the train corpus, never all-pairs
-    def q84(d: DataFrame) = graft.ops.Dedup.fuzzyDecontaminate(
-      d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-      "doc_id", threshold = 0.8)
-      .select(col("doc_id"), col("n_fuzzy_matches"), col("fuzzy_contaminated"))
-    // SemDeDup with k SCALED to the corpus (the paper's own recipe —
-    // cells keep roughly constant membership, so total within-cell
-    // pairwise work grows linearly; holding k fixed at x10 would make
-    // it quadratic in the copy count, exactly the documented
-    // k-too-small failure mode). The measured ratio (~5x for 10x) is
-    // the k*N literal-codebook assignment pass — the exact-assignment
-    // cost model Lloyd's has by definition; production SemDeDup runs
-    // approximate assignment for exactly this reason.
-    def q85(e: DataFrame, k: Int) = Similarity.semDeDup(
-      e, "embedding", "vec_id", k = k, dim = dim, iters = 2, threshold = 0.95)
-      .select(col("vec_id"), col("dup_of"), col("is_semantic_duplicate"))
-
-    // perplexity tiering: the scored plan executes twice (bounded bin
-    // histogram, then assignment) — both passes corpus-linear, the
-    // histogram/threshold model driver-sized at any scale
-    def q86(d: DataFrame) = {
-      val model = TextAnalysis.charLmTrain(d, "text", n = 3)
-      val scored = TextAnalysis.charLmScore(d, model, "doc_id", "text", n = 3)
-        .filter(col("n_grams") > 0)
-        .select(col("doc_id"), col("n_grams"), col("avg_nll"))
-      TextAnalysis.quantileBuckets(scored, "avg_nll",
-        numBuckets = 3, binScale = 1024.0, outCol = "ppl_tier")
-    }
-    // ANN recall eval: the approx side is q47's band join; the exact
-    // side is the DELIBERATE panel x corpus ground-truth scan (fixed
-    // 20-query panel, windows partitioned by query) — cost grows
-    // linearly with the corpus, which is the honest price of exact
-    // ground truth and why it runs on a sampled panel
-    def q87(e: DataFrame) = {
-      val panel = e.filter(col("vec_id") < 20)
-      Similarity.recallAtK(
-        Similarity.annTopK(e, panel, "embedding", "vec_id",
-          dim = dim, k = 5, numPlanes = 8),
-        Similarity.bruteForceTopK(e, panel, "embedding", "vec_id", k = 5))
-    }
-    // SQ8 encode: one bounded min/max aggregate + a narrow literal
-    // projection — should scale like the scan
-    def q88(e: DataFrame) = {
-      val stats = Similarity.sqFit(e, "embedding", dim)
-      Similarity.sqEncode(e, "embedding", stats)
-        .select(col("vec_id"), col("codes"), col("recon_err"))
-    }
-    // mixture sampling with k FIXED as the corpus grows: the
-    // pre-filter keeps each stratum's ranking window at ~2x its quota
-    // regardless of corpus size — only the count passes scale
-    def q90(d: DataFrame) = graft.ops.Sampling.mixtureSample(
-      d.withColumn("lang", concat(lit("l"), (col("doc_id") % 5).cast("string"))),
-      "doc_id", "lang",
-      Seq("l0" -> 0.4, "l1" -> 0.2, "l2" -> 0.2, "l3" -> 0.1, "l4" -> 0.1),
-      k = 101, preFilterFactor = Some(2.0))
-      .select(col("doc_id"), col("lang"), col("mix_kept"))
-    // line dedup: narrow zero-shuffle projection (lineified on the fly
-    // by turning ' the ' into newlines — natural duplicate lines)
-    def q92(e: DataFrame) = {
-      // training is collect-based (bounded m x k model) — the timed
-      // work happens inside mk(); the returned frame is the tiny
-      // codebook table
-      import spark.implicits._
-      val cbs = Similarity.trainPqCodebooks(
-        e, "embedding", "vec_id", m = 4, k = 4, dim = dim, iters = 2)
-      cbs.zipWithIndex.flatMap { case (cb, mi) =>
-        cb.map { case (cid, v) => (mi, cid, v) }
-      }.toDF("mi", "cid", "cv")
-    }
-    def q94(d: DataFrame, e: DataFrame) = {
-      val lex = graft.util.Ids.withRowIndex(
-        graft.ops.Retrieval.bm25TopK(d, "doc_id", "text",
-          Seq("data", "the", "query"), k = 50), "rank")
-      val sem = Similarity.bruteForceTopK(
-          e, e.filter(col("vec_id") === 0), "embedding", "vec_id", k = 50)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.ops.Retrieval.rrfFuse(Seq(lex, sem), "doc_id", rrfK = 60, k = 10)
-    }
-    def q95(d: DataFrame) = Dedup.dedupAgainst(
-        d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1),
-        "doc_id", threshold = 0.8)
-      .select("doc_id", "exact_dup", "near_dup", "near_dup_of", "is_new")
-    def q96(d: DataFrame) = {
-      val clustered = Dedup.nearDuplicates(d, "doc_id", threshold = 0.8)
-        .select(col("doc_id"), coalesce(col("dup_of"), col("doc_id")).as("cluster"))
-      val scored = TextAnalysis.qualityMetrics(d, "text")
-        .select(col("doc_id"), col("alpha_ratio"))
-      Dedup.keepBest(clustered.join(scored, Seq("doc_id")),
-        "doc_id", "cluster", "alpha_ratio")
-    }
-    def q99(d: DataFrame) = TextAnalysis.wordLmScore(
-        d, d, "doc_id", "text", maxVocab = 100, lambda2 = 0.5, lambda1 = 0.25)
-      .filter(col("n_grams") > 0)
-      .select("doc_id", "n_grams", "n_unseen_bi", "avg_nll")
-    def q100(d: DataFrame) = {
-      val cnt = d.select(explode(TextAnalysis.ngramsOf(col("text"), 2)).as("g"))
-        .filter(length(col("g")) > 0).groupBy("g").agg(count(lit(1)).as("c"))
-      val top = cnt.orderBy(col("c").desc, col("g")).limit(40).select(col("g").as("w"))
-      graft.ops.Sketches.cmsFrequencyAudit(d, "text", top, "w",
-        gram = 2, depth = 4, width = 256)
-    }
-    def q101(d: DataFrame) = TextAnalysis.wordLmScoreKN(
-        d, d, "doc_id", "text", maxVocab = 100, discount = 0.75)
-      .filter(col("n_grams") > 0)
-      .select("doc_id", "n_grams", "n_unseen_bi", "avg_nll")
-    def q102(d: DataFrame) = graft.ops.Packing.chunkWithOverlap(
-      d, "doc_id", "text", ctxLen = 32, stride = 24)
-    def q103(d: DataFrame) = TextAnalysis.containmentScore(
-      d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-      "doc_id", "text", n = 3)
-    def q104(d: DataFrame) = TextAnalysis.scriptProfile(
-      d.withColumn("text",
-        when(col("doc_id") % 7 === 3,
-          translate(col("text"), "aeioutnsrhl", "аеіоутнсрхл"))
-          .otherwise(col("text"))), "text")
-    def q105(d: DataFrame) = {
-      // the x10 corpus has no `source`: shard by an id-hash prefix (the
-      // documented scale pattern for bounding window parallelism)
-      val sharded = d.withColumn("shard_key",
-        (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-      graft.ops.Packing.materializeChunks(sharded, "doc_id", "text",
-        ctxLen = 128L, shardCol = "shard_key")
-    }
-    def q109(d: DataFrame) = graft.ops.Sampling.uniMaxAllocation(
-      d, "text", "shard_key_s", budget = 500000L, maxEpochs = 2L)
-    def q110(d: DataFrame) = TextAnalysis.vocabDrift(
-      d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1),
-      "text", numBuckets = 4096)
-    def q91(d: DataFrame) = TextAnalysis.dedupLines(
-      d.withColumn("text", regexp_replace(col("text"), " the ", "\n")), "text")
-      .select(col("doc_id"), col("n_lines"), col("n_dup_lines"), col("clean_text"))
-    def q112(d: DataFrame) = Dedup.minLenDupSpans(
-      d, "doc_id", "text", minLen = 8, seedK = 4, refine = true)
-    val profileVocab = graft.plans.BpeVocab(Seq(
-      "t" -> "h", "Ġ" -> "t", "Ġ" -> "a", "e" -> "r", "Ġ" -> "s",
-      "a" -> "t", "r" -> "o", "Ġ" -> "th", "Ġth" -> "e", "l" -> "e",
-      "Ġs" -> "t", "a" -> "b", "ab" -> "le", "Ġt" -> "able"), byteLevel = true)
-    def q113(d: DataFrame) = d.select(col("doc_id"),
-      TextAnalysis.bpeTokenIds(col("text"), profileVocab).as("ids"))
-    def q114(d: DataFrame) = {
-      val sharded = d.withColumn("shard_key",
-        (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-      graft.ops.Packing.materializeChunksEos(sharded, "doc_id", "text",
-        ctxLen = 128L, shardCol = "shard_key")
-    }
-    def q115(d: DataFrame) = TextAnalysis.piiStats(d, "doc_id", "text")
-    def q132(d: DataFrame) = d.select(col("doc_id"),
-      TextAnalysis.bpeDecodeIds(
-        TextAnalysis.bpeTokenIds(col("text"), profileVocab), profileVocab)
-        .as("decoded"))
-    def q135(e: DataFrame) = {
-      val lab = e.withColumn("label", pmod(col("vec_id"), lit(10)).cast("int"))
-      Similarity.centroidClassify(
-        lab.filter(col("vec_id") % 5 =!= 0), lab.filter(col("vec_id") % 5 === 0),
-        "embedding", "vec_id", "label", dim = 64)
-    }
-    def q136(d: DataFrame) = graft.ops.Sampling.tokenBudgetSelect(
-      d.withColumn("tokens", TextAnalysis.wsTokenCount(col("text")))
-        .withColumn("quality", TextAnalysis.alphaFraction(col("text"))),
-      "doc_id", "quality", "tokens", budget = 12000L, bins = 256)
-    def q139(d: DataFrame) = Dedup.corpusDiff(
-      d.filter(col("doc_id") % 7 =!= 0).select("doc_id", "text"),
-      d.filter(col("doc_id") % 11 =!= 3)
-        .withColumn("text", when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" [rev2]"))).otherwise(col("text")))
-        .select("doc_id", "text"),
-      "doc_id", "text")
-    def q144mask(d: DataFrame) = graft.ops.Packing.sftLossMask(
-      graft.ops.Packing.packGreedyNoSplit(
-        d.withColumn("tok", TextAnalysis.wsTokenCount(col("text")))
-          .withColumn("shard",
-            (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int")),
-        "doc_id", "tok", "shard", ctxLen = 64L)
-        .withColumn("prompt", expr("n_tok div 3")),
-      "prompt", ctxLen = 64L)
-    def q141(d: DataFrame) = graft.ops.Packing.packingEfficiency(
-      d.filter(col("text").isNotNull)
-        .withColumn("tok", TextAnalysis.wsTokenCount(col("text")))
-        .withColumn("shard",
-          (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int")),
-      "doc_id", "tok", "shard", Seq(128L, 256L, 512L, 1024L))
-    def q116(d: DataFrame) = graft.ops.Sampling.temperatureAllocation(
-      d, "text", "shard_key_s", budget = 500000L, tau = 0.7)
-
-    // Time CONSTRUCTION + execution: the dedup pipeline materializes
-    // its stage boundaries eagerly (localCheckpoint) while the plan is
-    // being built, so timing only the final action would miss most of
-    // the work.
-    def run(label: String, mk: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val df = mk()
+      val df = mk
       df.write.mode("overwrite").format("noop").save()
       val secs = (System.nanoTime() - t0) / 1e9
       val bad = PlanShape.violations(df.queryExecution.executedPlan, banNestedLoop = true)
@@ -907,862 +124,231 @@ object ProfileScale {
       println(f"[scale] $label%-12s $secs%8.3f s   $shape")
       secs
     }
-
-    println(s"[scale] corpus x$factor: documents ${docs10.count()}, embeddings ${emb10.count()}")
-    val results = Seq(
-      ("q46 near-dup", () => q46(docs), () => q46(docs10)),
-      ("q47 ann", () => q47(emb), () => q47(emb10)),
-      ("q48 ivf", () => q48(emb), () => q48(emb10)),
-      ("q56 repetition", () => q56(docs), () => q56(docs10)),
-      ("q57 tfidf", () => q57(docs), () => q57(docs10)),
-      ("q59 pq-adc", () => q59(emb), () => q59(emb10)),
-      ("q61 decontam", () => q61(docs), () => q61(docs10)),
-      ("q62 boiler", () => q62(docs), () => q62(docs10)),
-      ("q67 par-dedup", () => q67(docs), () => q67(docs10)),
-      ("q69 char-lm", () => q69(docs), () => q69(docs10)),
-      ("q70 bm25", () => q70(docs), () => q70(docs10)),
-      ("q71 url-dedup", () => q71(docs), () => q71(docs10)),
-      ("q72 packing", () => q72(docs), () => q72(docs10)),
-      ("q73 domain-cap", () => q73(docs), () => q73(docs10)),
-      ("q74 corpus-stats", () => q74(docs), () => q74(docs10)),
-      ("q75 bpe", () => q75(docs), () => q75(docs10)),
-      ("q76 exact-substr", () => q76(docs), () => q76(docs10)),
-      ("q77 bloom-decon", () => q77(docs), () => q77(docs10)),
-      ("q78 dsir", () => q78(docs), () => q78(docs10)),
-      ("q80 bpe-train", () => q80(docs), () => q80(docs10)),
-      ("q81 nb-classify", () => q81(docs), () => q81(docs10)),
-      ("q82 minlen-spans", () => q82(docs), () => q82(docs10)),
-      ("q83 interp-lm", () => q83(docs), () => q83(docs10)),
-      ("q84 fuzzy-decon", () => q84(docs), () => q84(docs10)),
-      ("q85 semdedup", () => q85(emb, 4), () => q85(emb10, 4 * factor)),
-      ("q86 ppl-tiers", () => q86(docs), () => q86(docs10)),
-      ("q87 ann-recall", () => q87(emb), () => q87(emb10)),
-      ("q88 sq-encode", () => q88(emb), () => q88(emb10)),
-      ("q90 mixture", () => q90(docs), () => q90(docs10)),
-      ("q91 line-dedup", () => q91(docs), () => q91(docs10)),
-      ("q92 pq-train", () => q92(emb), () => q92(emb10)),
-      ("q94 rrf-hybrid", () => q94(docs, emb), () => q94(docs10, emb10)),
-      ("q95 incr-dedup", () => q95(docs), () => q95(docs10)),
-      ("q96 keeper", () => q96(docs), () => q96(docs10)),
-      ("q99 word-lm", () => q99(docs), () => q99(docs10)),
-      ("q100 cms", () => q100(docs), () => q100(docs10)),
-      ("q101 kn-lm", () => q101(docs), () => q101(docs10)),
-      ("q102 chunking", () => q102(docs), () => q102(docs10)),
-      ("q103 containment", () => q103(docs), () => q103(docs10)),
-      ("q104 scripts", () => q104(docs), () => q104(docs10)),
-      ("q109 unimax", () => q109(docs.withColumn("shard_key_s",
-          concat(lit("s"), (graft.ops.Sampling.hashUnit(col("doc_id")) * 16).cast("int")))),
-        () => q109(docs10.withColumn("shard_key_s",
-          concat(lit("s"), (graft.ops.Sampling.hashUnit(col("doc_id")) * 16).cast("int"))))),
-      ("q105 mat-chunks", () => q105(docs), () => q105(docs10)),
-      ("q110 vocab-drift", () => q110(docs), () => q110(docs10)),
-      ("q112 refine-spans", () => q112(docs), () => q112(docs10)),
-      ("q113 bpe-ids", () => q113(docs), () => q113(docs10)),
-      ("q114 eos-chunks", () => q114(docs), () => q114(docs10)),
-      ("q115 pii-stats", () => q115(docs), () => q115(docs10)),
-      ("q123 unigram", () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16))
-          graft.ops.UnigramTokenizer.score(docs, "text", v)
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16))
-          graft.ops.UnigramTokenizer.score(docs10, "text", v)
-        }),
-      ("q127 unigram-em", () => {
-          val v = graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16)
-          graft.ops.UnigramTokenizer.emRound(docs, "text", v)
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16)
-          graft.ops.UnigramTokenizer.emRound(docs10, "text", v)
-        }),
-      // the shrink step over a FIXED post-EM vocabulary: the loss DP is
-      // model-sized (the vocab probes itself), so the x10 cost is all
-      // in the re-estimating EM round's word table — same band as q127
-      ("q146 unigram-shrink", () => {
-          val v = graft.ops.UnigramTokenizer.train(docs, "text", rounds = 1,
-            maxPieceLen = 4, vocabSize = 256, maxWordLen = 16)
-          graft.ops.UnigramTokenizer.shrinkRound(docs, "text", v, targetVocab = 40)
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.train(docs10, "text", rounds = 1,
-            maxPieceLen = 4, vocabSize = 256, maxWordLen = 16)
-          graft.ops.UnigramTokenizer.shrinkRound(docs10, "text", v, targetVocab = 40)
-        }),
-      ("q126 attn-layout", () => {
-          val sharded = docs.withColumn("shard_key",
-            (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-          graft.ops.Packing.packTokenIds(sharded, "doc_id", "text",
-            profileVocab, ctxLen = 128L, shardCol = "shard_key")
-        },
-        () => {
-          val sharded = docs10.withColumn("shard_key",
-            (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-          graft.ops.Packing.packTokenIds(sharded, "doc_id", "text",
-            profileVocab, ctxLen = 128L, shardCol = "shard_key")
-        }),
-      ("q129 rand-proj", () => graft.ops.Similarity.randomProject(
-          emb, "embedding", dim = 64, outDim = 16),
-        () => graft.ops.Similarity.randomProject(
-          emb10, "embedding", dim = 64, outDim = 16)),
-      ("q131 sketch-topk", () => graft.ops.Similarity.sketchTopK(
-          emb, "embedding", "vec_id", (0 until 64).map(j => (j % 7 - 3) / 3.0),
-          dim = 64, k = 10, outDim = 16, shortlist = 50),
-        () => graft.ops.Similarity.sketchTopK(
-          emb10, "embedding", "vec_id", (0 until 64).map(j => (j % 7 - 3) / 3.0),
-          dim = 64, k = 10, outDim = 16, shortlist = 50)),
-      ("q130 topk-stratum", () => graft.ops.Sampling.topKPerStratum(
-          docs.withColumn("stratum", pmod(col("doc_id"), lit(1000)))
-            .withColumn("score", length(col("text")).cast("long")),
-          "stratum", "score", "doc_id", k = 3),
-        () => graft.ops.Sampling.topKPerStratum(
-          docs10.withColumn("stratum", pmod(col("doc_id"), lit(1000)))
-            .withColumn("score", length(col("text")).cast("long")),
-          "stratum", "score", "doc_id", k = 3)),
-      ("q121 plan-band", () => graft.ops.Dedup.lshPlanAndBand(
-          docs, "doc_id", 0.5, maxHashes = 16, fnWeight = 10L, steps = 1024),
-        () => graft.ops.Dedup.lshPlanAndBand(
-          docs10, "doc_id", 0.5, maxHashes = 16, fnWeight = 10L, steps = 1024)),
-      ("q116 temp-alloc", () => q116(docs.withColumn("shard_key_s",
-          concat(lit("s"), (graft.ops.Sampling.hashUnit(col("doc_id")) * 16).cast("int")))),
-        () => q116(docs10.withColumn("shard_key_s",
-          concat(lit("s"), (graft.ops.Sampling.hashUnit(col("doc_id")) * 16).cast("int"))))),
-      ("q132 bpe-decode", () => q132(docs), () => q132(docs10)),
-      ("q133 pmi", () => TextAnalysis.pmiCollocations(docs, "text", 3L, 50),
-        () => TextAnalysis.pmiCollocations(docs10, "text", 3L, 50)),
-      ("q134 entropy", () => TextAnalysis.charEntropy(docs, "doc_id", "text"),
-        () => TextAnalysis.charEntropy(docs10, "doc_id", "text")),
-      ("q135 centroid", () => q135(emb), () => q135(emb10)),
-      ("q136 budget", () => q136(docs), () => q136(docs10)),
-      ("q137 confusion", () => graft.ops.Eval.confusion(q135(emb), "label", "pred_label"),
-        () => graft.ops.Eval.confusion(q135(emb10), "label", "pred_label")),
-      ("q138 rollout", () => TextAnalysis.greedyBigramRollout(docs, "text", steps = 4),
-        () => TextAnalysis.greedyBigramRollout(docs10, "text", steps = 4)),
-      ("q139 corpus-diff", () => q139(docs), () => q139(docs10)),
-      // profile the underlying expanded aggregation: tableHealth's
-      // public form returns a driver-reshaped LocalRelation, which
-      // would make the plan-shape audit vacuous
-      ("q140 table-health",
-        () => graft.ops.Eval.healthAgg(docs, Seq("doc_id", "text")),
-        () => graft.ops.Eval.healthAgg(docs10, Seq("doc_id", "text"))),
-      ("q141 pack-sweep", () => q141(docs), () => q141(docs10)),
-      ("q142 sim-histogram",
-        () => Dedup.similarityHistogram(docs, "doc_id", bins = 20),
-        () => Dedup.similarityHistogram(docs10, "doc_id", bins = 20)),
-      ("q143 pack-nosplit",
-        () => graft.ops.Packing.packGreedyNoSplit(
-          docs.withColumn("tok", TextAnalysis.wsTokenCount(col("text")))
-            .withColumn("shard",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int")),
-          "doc_id", "tok", "shard", ctxLen = 64L),
-        () => graft.ops.Packing.packGreedyNoSplit(
-          docs10.withColumn("tok", TextAnalysis.wsTokenCount(col("text")))
-            .withColumn("shard",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int")),
-          "doc_id", "tok", "shard", ctxLen = 64L)),
-      ("q144 sft-mask", () => q144mask(docs), () => q144mask(docs10)),
-      ("q145 bm25-index-probe",
-        () => q145probe(bm25H1), () => q145probe(bm25H10)),
-      // the q148/q186 shared batch — one definition, both arms
-      ("q148 bm25-batch",
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H1, batchQueries, "qid", "terms", k = 25),
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H10, batchQueries, "qid", "terms", k = 25)),
-      ("q149 ann-index-probe",
-        () => graft.ops.AnnIndex.query(spark, annH1, "vec_id", qv1,
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.query(spark, annH10, "vec_id", qv10,
-          k = 25, nProbe = 2)),
-      ("q150 hybrid-rag",
-        () => q150hybrid(bm25H1, annH1, qv1),
-        () => q150hybrid(bm25H10, annH10, qv10)),
-      // the codebook is FROZEN by the op's definition (the standing
-      // index's quantizers), so both scales assign against the SAME
-      // centroids — the ratio measures the corpus-linear assignment
-      // pass, not an O(n·k) conflation of data and codebook growth
-      ("q152 emb-drift",
-        () => graft.ops.Similarity.embeddingDrift(
-          emb, emb.filter(col("vec_id") % 2 === 1), "embedding", annH1.centroids),
-        () => graft.ops.Similarity.embeddingDrift(
-          emb10, emb10.filter(col("vec_id") % 2 === 1), "embedding",
-          annH1.centroids)),
-      ("q151 ann-batch",
-        () => graft.ops.AnnIndex.queryBatch(spark, annH1,
-          emb.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.queryBatch(spark, annH10,
-          emb10.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2)),
-      // round-12: the batched probes' OTHER axis. The corpus-x10 arms
-      // above prove index-size independence at a fixed batch; these
-      // hold each corpus FIXED and scale the QUERY TABLE x10 — the
-      // amortization claim itself (one pruned pass serves the whole
-      // batch, so 10x the queries must cost well under 10x)
-      ("q148 bm25-batch-10q-c1",
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H1, bm25BatchQs(1), "qid", "terms", k = 25),
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H1, bm25BatchQs(10), "qid", "terms", k = 25)),
-      ("q148 bm25-batch-10q-c10",
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H10, bm25BatchQs(1), "qid", "terms", k = 25),
-        () => graft.ops.Bm25Index.topKBatch(
-          spark, bm25H10, bm25BatchQs(10), "qid", "terms", k = 25)),
-      ("q151 ann-batch-10q-c1",
-        () => graft.ops.AnnIndex.queryBatch(spark, annH1,
-          emb.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.queryBatch(spark, annH1,
-          emb.filter(col("vec_id") < 80), "embedding", "vec_id",
-          k = 25, nProbe = 2)),
-      ("q151 ann-batch-10q-c10",
-        () => graft.ops.AnnIndex.queryBatch(spark, annH10,
-          emb10.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.queryBatch(spark, annH10,
-          emb10.filter(col("vec_id") < 80), "embedding", "vec_id",
-          k = 25, nProbe = 2)),
-      // round-12: positional and field-weighted probes of the standing
-      // postings index — like q145, the cost must track the query
-      // terms' postings (now with positions arrays riding along),
-      // never the corpus
-      ("q154 bm25-phrase",
-        () => graft.ops.Bm25Index.phraseTopK(
-          spark, bm25H1, Seq("the", "data"), k = 25),
-        () => graft.ops.Bm25Index.phraseTopK(
-          spark, bm25H10, Seq("the", "data"), k = 25)),
-      // round-12: batched hybrid — one pruned pass per index for the
-      // whole query table, fused per qid; both index sizes scale
-      ("q166 hybrid-batch",
-        () => graft.ops.Retrieval.rrfFuseBatch(Seq(
-          graft.ops.Bm25Index.topKBatch(
-            spark, bm25H1, bm25BatchQs(1), "qid", "terms", k = 20)
-            .select(col("qid"), col("doc_id"), col("rank")),
-          graft.ops.AnnIndex.queryBatch(spark, annH1,
-            emb.filter(col("vec_id").isin(1L, 2L, 3L)), "embedding", "vec_id",
-            k = 20, nProbe = 2)
-            .select(col("query_id").as("qid"),
-              col("neighbor_id").as("doc_id"), col("rank"))),
-          "qid", "doc_id", rrfK = 60, k = 5),
-        () => graft.ops.Retrieval.rrfFuseBatch(Seq(
-          graft.ops.Bm25Index.topKBatch(
-            spark, bm25H10, bm25BatchQs(1), "qid", "terms", k = 20)
-            .select(col("qid"), col("doc_id"), col("rank")),
-          graft.ops.AnnIndex.queryBatch(spark, annH10,
-            emb10.filter(col("vec_id").isin(1L, 2L, 3L)), "embedding", "vec_id",
-            k = 20, nProbe = 2)
-            .select(col("query_id").as("qid"),
-              col("neighbor_id").as("doc_id"), col("rank"))),
-          "qid", "doc_id", rrfK = 60, k = 5)),
-      ("q167 bm25-fsck",
-        () => graft.ops.Bm25Index.fsck(spark, bm25H1.dir),
-        () => graft.ops.Bm25Index.fsck(spark, bm25H10.dir)),
-      ("q165 bm25-proximity",
-        () => graft.ops.Bm25Index.proximityTopK(
-          spark, bm25H1, Seq("the", "data", "query"), k = 25),
-        () => graft.ops.Bm25Index.proximityTopK(
-          spark, bm25H10, Seq("the", "data", "query"), k = 25)),
-      ("q163 bm25-snippets",
-        () => graft.ops.Bm25Index.snippetTopK(
-          spark, bm25H1, Seq("the", "data", "query"), width = 8, k = 25),
-        () => graft.ops.Bm25Index.snippetTopK(
-          spark, bm25H10, Seq("the", "data", "query"), width = 8, k = 25)),
-      ("q155 bm25f",
-        () => graft.ops.Bm25Index.bm25fTopK(spark, bm25fH1,
-          Seq("doc", "data", "query"), Seq("title" -> 2.0, "text" -> 1.0), k = 25),
-        () => graft.ops.Bm25Index.bm25fTopK(spark, bm25fH10,
-          Seq("doc", "data", "query"), Seq("title" -> 2.0, "text" -> 1.0), k = 25)),
-      // round-12: FAISS-typical 256x16 codebook probe — the LUT-join
-      // plan must stay O(m) and whole-stage-codegen-clean at real
-      // codebook sizes (the retired per-sub-centroid union was 4,096
-      // plan branches here). Trained models aren't needed to measure
-      // the probe, so the codes are synthetic over the real id space.
-      ("q151 ann-batch-bigcb",
-        () => graft.ops.AnnIndex.queryBatch(spark, bigCbH1,
-          emb.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.queryBatch(spark, bigCbH10,
-          emb10.filter(col("vec_id") < 8), "embedding", "vec_id",
-          k = 25, nProbe = 2)),
-      // round-12: the phrase member of the batched-probe family —
-      // corpus axis (one pruned positional pass, index-size-bounded)
-      // and query axis (one pass amortizes the whole phrase table)
-      ("q156 bm25-phrase-batch",
-        () => graft.ops.Bm25Index.phraseTopKBatch(
-          spark, bm25H1, phraseBatchQs(1), "qid", "phrase", k = 25),
-        () => graft.ops.Bm25Index.phraseTopKBatch(
-          spark, bm25H10, phraseBatchQs(1), "qid", "phrase", k = 25)),
-      ("q156 bm25-phrase-batch-10q-c10",
-        () => graft.ops.Bm25Index.phraseTopKBatch(
-          spark, bm25H10, phraseBatchQs(1), "qid", "phrase", k = 25),
-        () => graft.ops.Bm25Index.phraseTopKBatch(
-          spark, bm25H10, phraseBatchQs(10), "qid", "phrase", k = 25)),
-      // round-13: the batch snippet member — cost tracks the batch's
-      // terms' postings; the window scan runs on the k survivors only
-      ("q178 bm25-snippet-batch",
-        () => graft.ops.Bm25Index.snippetTopKBatch(
-          spark, bm25H1, bm25BatchQs(1), "qid", "terms", width = 8, k = 25),
-        () => graft.ops.Bm25Index.snippetTopKBatch(
-          spark, bm25H10, bm25BatchQs(1), "qid", "terms", width = 8, k = 25)),
-      // round-12: the full RM3 chain (first pass -> fbDocs point
-      // lookups in the corpus -> relevance model -> weighted second
-      // pass) — cost must track the query/expansion terms' postings
-      // plus a constant-size corpus fetch, never a corpus pass
-      ("q161 rm3-expand-topk",
-        () => graft.ops.Bm25Index.topKWeighted(spark, bm25H1,
-          graft.ops.Bm25Index.rm3Expand(spark, bm25H1, docs,
-            Seq("data", "the", "query"), fbDocs = 5, fbTerms = 5,
-            lambda = 0.5), k = 25),
-        () => graft.ops.Bm25Index.topKWeighted(spark, bm25H10,
-          graft.ops.Bm25Index.rm3Expand(spark, bm25H10, docs10,
-            Seq("data", "the", "query"), fbDocs = 5, fbTerms = 5,
-            lambda = 0.5), k = 25)),
-      // round-12: tombstoned-index probes — the delete anti-join must
-      // stay a broadcast against the small tombstone table; the probe
-      // keeps tracking the query's postings/cells, never the corpus
-      ("q157 bm25-del-probe",
-        () => graft.ops.Bm25Index.topK(
-          spark, bm25DelH1, Seq("data", "the", "query"), k = 25),
-        () => graft.ops.Bm25Index.topK(
-          spark, bm25DelH10, Seq("data", "the", "query"), k = 25)),
-      ("q158 ann-del-probe",
-        () => graft.ops.AnnIndex.query(spark, annDelH1, "vec_id", qv1,
-          k = 25, nProbe = 2),
-        () => graft.ops.AnnIndex.query(spark, annDelH10, "vec_id", qv10,
-          k = 25, nProbe = 2)),
-      // fixed 500-doc batch against 1x vs 10x tombstoned corpus state
-      ("q159 dedup-del-probe",
-        () => graft.ops.DedupIndex.dedupBatch(
-          spark, dedupDelH1, dedupProbeBatch, threshold = 0.8),
-        () => graft.ops.DedupIndex.dedupBatch(
-          spark, dedupDelH10, dedupProbeBatch, threshold = 0.8)),
-      // round-13: rebuild is CORPUS-LINEAR BY CONTRACT (retrain both
-      // quantizers + re-encode every row + swap) — the arm documents
-      // that the constant factor holds, it does not claim sub-linear
-      ("q153 ann-rebuild",
-        () => { graft.ops.AnnIndex.rebuild(emb, "embedding", "vec_id",
-          annRebDir1, nCells = 4, m = 4, k = 4, dim = dim, iters = 2)
-          spark.range(1).toDF() }, // rebuild does its own writes
-        () => { graft.ops.AnnIndex.rebuild(emb10, "embedding", "vec_id",
-          annRebDir10, nCells = 4 * factor, m = 4, k = 4, dim = dim,
-          iters = 2)
-          spark.range(1).toDF() }),
-      // round-13: the fsck twins are index-table-linear by contract
-      // (one pass over the index's own tables)
-      ("q168 dedup-fsck",
-        () => graft.ops.DedupIndex.fsck(spark, dedupDelH1.dir),
-        () => graft.ops.DedupIndex.fsck(spark, dedupDelH10.dir)),
-      ("q169 ann-fsck",
-        () => graft.ops.AnnIndex.fsck(spark, annDelH1.dir),
-        () => graft.ops.AnnIndex.fsck(spark, annDelH10.dir)),
-      ("q180 ann-cell-stats",
-        () => graft.ops.AnnIndex.cellStats(spark, annDelH1.dir),
-        () => graft.ops.AnnIndex.cellStats(spark, annDelH10.dir)),
-      // round-13: filtered probe — the predicate evaluates on the
-      // pruned cell scan (constant-size cells, nProbe fixed), so the
-      // expected ratio stays the ann-probe ~flat shape
-      ("q170 ann-filtered-probe",
-        () => graft.ops.AnnIndex.query(spark, annAttrH1, "vec_id", qv1,
-          k = 25, nProbe = 2, filter = Some(col("lang") === "en")),
-        () => graft.ops.AnnIndex.query(spark, annAttrH10, "vec_id", qv10,
-          k = 25, nProbe = 2, filter = Some(col("lang") === "en"))),
-      // round-13: cross-index audit — id-keyed distincts/anti-joins
-      // over the three indexes' own tables, index-table-linear
-      ("q171 cross-fsck",
-        () => graft.ops.Maintenance.crossFsck(
-          spark, trioDedupDir1, bm25H1.dir, trioAnnDir1),
-        () => graft.ops.Maintenance.crossFsck(
-          spark, trioDedupDir10, bm25H10.dir, trioAnnDir10)),
-      ("q172 imported-bpe", () => q172(docs), () => q172(docs10)),
-      ("q176 imported-ids", () => q176(docs), () => q176(docs10)),
-      ("q183 id-decontam", () => q183(docs), () => q183(docs10)),
-      // round-13: lexical metadata filter — the allowlist join runs on
-      // the query-term-bounded slice; df stays corpus-wide (one
-      // unfiltered stats pass), so expected shape = q145's probe + one
-      // slice-sized semi-join
-      ("q184 bm25-filtered",
-        () => graft.ops.Bm25Index.topK(spark, bm25H1,
-          Seq("data", "the", "query"), k = 25,
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.topK(spark, bm25H10,
-          Seq("data", "the", "query"), k = 25,
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      // round-13: the batched lexical filter — q148's batch probe +
-      // one slice-sized semi-join, df corpus-wide
-      ("q186 bm25-batch-filtered",
-        () => graft.ops.Bm25Index.topKBatch(spark, bm25H1, batchQueries,
-          "qid", "terms", k = 25,
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.topKBatch(spark, bm25H10, batchQueries,
-          "qid", "terms", k = 25,
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      // round-13: per-query attr equality in the batched ADC probe —
-      // the equality prunes the pruned-cell candidates before the LUT
-      // joins, so the expected shape is q151's batch arm
-      ("q185 ann-batch-filtered",
-        () => graft.ops.AnnIndex.queryBatch(spark, annAttrH1,
-          emb.filter(col("vec_id") < 8).select(col("vec_id"),
-            col("embedding"),
-            when(col("vec_id") % 2 === 0, "en").otherwise("pl").as("want")),
-          "embedding", "vec_id", k = 25, nProbe = 2,
-          attrEquals = Some(("lang", "want"))),
-        () => graft.ops.AnnIndex.queryBatch(spark, annAttrH10,
-          emb10.filter(col("vec_id") < 8).select(col("vec_id"),
-            col("embedding"),
-            when(col("vec_id") % 2 === 0, "en").otherwise("pl").as("want")),
-          "embedding", "vec_id", k = 25, nProbe = 2,
-          attrEquals = Some(("lang", "want")))),
-      // round-14: filtered positional/weighted probes — each is its
-      // unfiltered twin's shape (q154/q165/q161) + one slice-sized
-      // semi-join; df/N/avgdl stay corpus-wide (one unfiltered stats
-      // derivation), so the expected ratios match the unfiltered arms
-      ("q187 phrase-filtered",
-        () => graft.ops.Bm25Index.phraseTopK(spark, bm25H1,
-          Seq("the", "data"), k = 10,
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.phraseTopK(spark, bm25H10,
-          Seq("the", "data"), k = 10,
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      ("q188 proximity-filtered",
-        () => graft.ops.Bm25Index.proximityTopK(spark, bm25H1,
-          Seq("data", "the", "query"), k = 10,
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.proximityTopK(spark, bm25H10,
-          Seq("data", "the", "query"), k = 10,
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      ("q189 rm3-filtered",
-        () => graft.ops.Bm25Index.topKWeighted(spark, bm25H1,
-          graft.ops.Bm25Index.rm3Expand(spark, bm25H1, docs,
-            Seq("data", "the", "query")), k = 10,
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.topKWeighted(spark, bm25H10,
-          graft.ops.Bm25Index.rm3Expand(spark, bm25H10, docs10,
-            Seq("data", "the", "query")), k = 10,
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      // round-14: per-query attr equality on the batched lexical probe
-      // — candidates join a doc-keyed attribute projection; the attr
-      // scan is corpus-sized but column-pruned, the join slice
-      // query-term-bounded
-      ("q190 bm25-batch-attr",
-        () => graft.ops.Bm25Index.topKBatch(spark, bm25H1,
-          attrBatchQueries, "qid", "terms", k = 25,
-          attrEquals = Some((attrTableOf(docs), "lang", "ql"))),
-        () => graft.ops.Bm25Index.topKBatch(spark, bm25H10,
-          attrBatchQueries, "qid", "terms", k = 25,
-          attrEquals = Some((attrTableOf(docs10), "lang", "ql")))),
-      // round-14: the unigram id pipeline — seed aggregate + narrow
-      // per-row DP expression (the q123 shape); pack adds the q117
-      // offset window + one (shard, chunk) shuffle
-      ("q191 unigram-ids", () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16))
-          docs.select(col("doc_id"),
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v).as("ids"))
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16))
-          docs10.select(col("doc_id"),
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v).as("ids"))
-        }),
-      ("q192 unigram-decode", () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16))
-          docs.select(col("doc_id"), graft.ops.UnigramTokenizer.decodeIds(
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v), v))
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16))
-          docs10.select(col("doc_id"), graft.ops.UnigramTokenizer.decodeIds(
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v), v))
-        }),
-      ("q193 unigram-pack", () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16))
-          val eos = graft.ops.UnigramTokenizer.idTableRows(v).map(_._2).max + 1
-          graft.ops.Packing.packIds(
-            docs.withColumn("shard_key",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-              .withColumn("uids",
-                graft.ops.UnigramTokenizer.tokenIds(col("text"), v)),
-            "doc_id", "uids", ctxLen = 128L, shardCol = "shard_key", eosId = eos)
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16))
-          val eos = graft.ops.UnigramTokenizer.idTableRows(v).map(_._2).max + 1
-          graft.ops.Packing.packIds(
-            docs10.withColumn("shard_key",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-              .withColumn("uids",
-                graft.ops.UnigramTokenizer.tokenIds(col("text"), v)),
-            "doc_id", "uids", ctxLen = 128L, shardCol = "shard_key", eosId = eos)
-        }),
-      // round-14: filtered feedback — q160's rm3 shape + one
-      // slice-sized semi-join in the first pass
-      ("q196 rm3-filtered-feedback",
-        () => graft.ops.Bm25Index.rm3Expand(spark, bm25H1, docs,
-          Seq("data", "the", "query"),
-          docFilter = Some(docs.filter(col("doc_id") % 3 === 1)
-            .select("doc_id"))),
-        () => graft.ops.Bm25Index.rm3Expand(spark, bm25H10, docs10,
-          Seq("data", "the", "query"),
-          docFilter = Some(docs10.filter(col("doc_id") % 3 === 1)
-            .select("doc_id")))),
-      // round-14: the q183 shape under unigram ids — eval id-gram set
-      // distinct + broadcast, one train-side explode + doc-keyed count
-      ("q194 unigram-decontam", () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs, "text", 4, 256, 16))
-          val ids = docs.select(col("doc_id"),
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v).as("ids"))
-          graft.ops.TextAnalysis.decontaminateIds(
-            ids.filter(col("doc_id") % 10 =!= 7),
-            ids.filter(col("doc_id") % 10 === 7), "doc_id", "ids", n = 20)
-        },
-        () => {
-          val v = graft.ops.UnigramTokenizer.buildVocab(
-            graft.ops.UnigramTokenizer.seedVocab(docs10, "text", 4, 256, 16))
-          val ids = docs10.select(col("doc_id"),
-            graft.ops.UnigramTokenizer.tokenIds(col("text"), v).as("ids"))
-          graft.ops.TextAnalysis.decontaminateIds(
-            ids.filter(col("doc_id") % 10 =!= 7),
-            ids.filter(col("doc_id") % 10 === 7), "doc_id", "ids", n = 20)
-        }),
-      // round-14: both retrieval sides filtered + fused — q150's
-      // hybrid arm + one slice-sized semi-join per side
-      ("q195 hybrid-filtered",
-        () => {
-          val allow = docs.filter(col("doc_id") % 3 === 1).select("doc_id")
-          val lex = graft.util.Ids.withRowIndex(
-            graft.ops.Bm25Index.topK(spark, bm25H1,
-              Seq("data", "the", "query"), k = 50, docFilter = Some(allow)),
-            "rank")
-          val sem = graft.util.Ids.withRowIndex(
-              graft.ops.AnnIndex.query(spark, annH1, "vec_id", qv1, k = 50,
-                nProbe = 2, filter = Some(col("vec_id") % 3 === 1)), "rank")
-            .select(col("vec_id").as("doc_id"), col("rank"))
-          graft.ops.Retrieval.rrfFuse(Seq(lex, sem), "doc_id", rrfK = 60, k = 10)
-        },
-        () => {
-          val allow = docs10.filter(col("doc_id") % 3 === 1).select("doc_id")
-          val lex = graft.util.Ids.withRowIndex(
-            graft.ops.Bm25Index.topK(spark, bm25H10,
-              Seq("data", "the", "query"), k = 50, docFilter = Some(allow)),
-            "rank")
-          val sem = graft.util.Ids.withRowIndex(
-              graft.ops.AnnIndex.query(spark, annH10, "vec_id", qv10, k = 50,
-                nProbe = 2, filter = Some(col("vec_id") % 3 === 1)), "rank")
-            .select(col("vec_id").as("doc_id"), col("rank"))
-          graft.ops.Retrieval.rrfFuse(Seq(lex, sem), "doc_id", rrfK = 60, k = 10)
-        }),
-      // round-14: in-place BM25 rebuild — one corpus tokenize + the
-      // partitioned write + swap; corpus-linear BY CONTRACT (the
-      // build's own shape, run against standing state)
-      ("q198 bm25-rebuild",
-        () => { graft.ops.Bm25Index.rebuild(docs, "doc_id", bm25RebArmDir1)
-          spark.range(1).toDF() },
-        () => { graft.ops.Bm25Index.rebuild(docs10, "doc_id", bm25RebArmDir10)
-          spark.range(1).toDF() }),
-      // round-14: shadow rebuild — the retrain+encode is CORPUS-LINEAR
-      // BY CONTRACT (q153's shape); the point of the shadow form is
-      // WHERE the lock sits, not the total work (the LifecycleDemo
-      // measures the locked window at seconds)
-      ("shadow ann-rebuild",
-        () => { graft.ops.AnnIndex.rebuildShadow(() => emb, "embedding",
-            "vec_id", annShadowDir1, nCells = 4, m = 4, k = 4, dim = dim,
-            iters = 2)
-          spark.range(1).toDF() },
-        () => { graft.ops.AnnIndex.rebuildShadow(() => emb10, "embedding",
-            "vec_id", annShadowDir10, nCells = 4 * factor, m = 4, k = 4,
-            dim = dim, iters = 2)
-          spark.range(1).toDF() }),
-      // round-15: the bm25 SHADOW rebuild — corpus-linear by contract
-      // (one tokenize pass + three table writes, q198's work); the
-      // point is WHERE the lock sits (delta catch-up + renames), which
-      // LifecycleDemo measures at sub-second
-      ("q200 bm25-shadow-rebuild",
-        () => { graft.ops.Bm25Index.rebuildShadow(() => docs, "doc_id",
-            bm25ShadowDir1)
-          spark.range(1).toDF() },
-        () => { graft.ops.Bm25Index.rebuildShadow(() => docs10, "doc_id",
-            bm25ShadowDir10)
-          spark.range(1).toDF() }),
-      // round-15: dedup rebuild — corpus-linear by contract (one
-      // fingerprint+minhash pass + four table swaps, build()'s work)
-      ("q199 dedup-rebuild",
-        () => { graft.ops.DedupIndex.rebuild(docs, "doc_id", dedupRebArmDir1)
-          spark.range(1).toDF() },
-        () => { graft.ops.DedupIndex.rebuild(docs10, "doc_id", dedupRebArmDir10)
-          spark.range(1).toDF() }),
-      // round-15: the dedup SHADOW rebuild — same corpus-linear work,
-      // the lock moved off the signing pass
-      ("q201 dedup-shadow-rebuild",
-        () => { graft.ops.DedupIndex.rebuildShadow(() => docs, "doc_id",
-            dedupShadowArmDir1)
-          spark.range(1).toDF() },
-        () => { graft.ops.DedupIndex.rebuildShadow(() => docs10, "doc_id",
-            dedupShadowArmDir10)
-          spark.range(1).toDF() }),
-      // round-16: the locked-window claim — see the helper block above.
-      // The wall ratio here is the corpus-linear sidecar pass plus a
-      // state restore; the claim lives in the printed locked-span
-      // lines (fixed 200-row delta at every scale → ~flat spans)
-      ("lockspan bm25",
-        () => bm25Lockspan(docs.select(col("doc_id"), col("text")),
-          bm25H1.dir, s"$scratch/bm25lock1", "lockspan bm25 x1"),
-        () => bm25Lockspan(docs10, bm25H10.dir, s"$scratch/bm25lock10",
-          s"lockspan bm25 x$factor")),
-      ("lockspan dedup",
-        () => dedupLockspan(docs.select(col("doc_id"), col("text")),
-          dedupRebArmDir1, s"$scratch/deduplock1", "lockspan dedup x1"),
-        () => dedupLockspan(docs10, dedupRebArmDir10,
-          s"$scratch/deduplock10", s"lockspan dedup x$factor")),
-      ("lockspan ann",
-        () => annLockspan(emb, annH1.dir, s"$scratch/annlock1", 4,
-          "lockspan ann x1"),
-        () => annLockspan(emb10, annH10.dir, s"$scratch/annlock10",
-          4 * factor, s"lockspan ann x$factor")),
-      // round-16: CurationRefresh — see the helper block above. The
-      // add arm's refresh-span line is the delta-scaling claim; the
-      // full arm's is corpus-linear by contract (compact), graded
-      // against its own trio-build line
-      ("refresh add",
-        () => refreshArm(refrCorpus1, refrPristine1,
-          s"$scratch/refrworka1", pureAdd = true, "refresh add x1"),
-        () => refreshArm(refrCorpus10, refrPristine10,
-          s"$scratch/refrworka10", pureAdd = true, s"refresh add x$factor")),
-      ("refresh full",
-        () => refreshArm(refrCorpus1, refrPristine1,
-          s"$scratch/refrworkf1", pureAdd = false, "refresh full x1"),
-        () => refreshArm(refrCorpus10, refrPristine10,
-          s"$scratch/refrworkf10", pureAdd = false, s"refresh full x$factor")),
-      // round-13: tombstone reconcile — idempotent steady-state pass
-      // over the repaired trio (the warm-up run performed the actual
-      // repair); tombstone-table-sized reads + no-op deletes
-      ("q182 tombstone-reconcile",
-        () => { val (dd, bb, aa) = recTrio1
-          graft.ops.Maintenance.reconcileTombstones(spark, dd, bb, aa, docs) },
-        () => { val (dd, bb, aa) = recTrio10
-          graft.ops.Maintenance.reconcileTombstones(spark, dd, bb, aa, docs10) }),
-      // round-13: a fixed 200-doc batch through the full curation
-      // trigger against a 1x vs 10x standing trio — the claim is
-      // batch-proportional trigger cost (band-pruned probe joins, one
-      // tokenize pass, one encode pass), never index-size-linear
-      ("ingest curation-trigger",
-        () => ingestRun(ingTrio1, 1),
-        () => ingestRun(ingTrio10, 10)),
-      // round-13: refined probe — ADC shortlist (constant cells) +
-      // exact re-rank over a point-lookup fetch (candidate-bounded);
-      // the corpus enters only through the pushed id in-filter
-      ("q175 ann-refined-probe",
-        () => graft.ops.AnnIndex.queryRefined(spark, annH1, emb,
-          "embedding", "vec_id", qv1, k = 25, nProbe = 2, refine = 4),
-        () => graft.ops.AnnIndex.queryRefined(spark, annH10, emb10,
-          "embedding", "vec_id", qv10, k = 25, nProbe = 2, refine = 4)),
-      // round-13: batched refine — one ADC pass + ONE corpus
-      // (id, embedding) scan for the whole batch, shortlist broadcast
-      ("q177 ann-batch-refined",
-        () => graft.ops.AnnIndex.queryBatchRefined(spark, annH1,
-          emb.filter(col("vec_id") < 8), emb, "embedding", "vec_id",
-          k = 25, nProbe = 2, refine = 4),
-        () => graft.ops.AnnIndex.queryBatchRefined(spark, annH10,
-          emb10.filter(col("vec_id") < 8), emb10, "embedding", "vec_id",
-          k = 25, nProbe = 2, refine = 4)),
-      // round-13: shard merge — file-copy + one disjointness
-      // aggregate; data-sized IO by contract, zero shuffle/decode.
-      // Each timed run merges into a FRESH dir (merge refuses to mix
-      // into prior state), so the timing includes the copy every time.
-      // round-13: the refine-recall harness — exact panel is
-      // all-pairs BY CONTRACT over the 8 queries (broadcast hash),
-      // the probes stay cell/shortlist-bounded
-      ("q181 refine-recall",
-        () => {
-          val panel = emb.filter(col("vec_id") < 8)
-          val exact = graft.ops.Similarity.bruteForceTopK(
-            emb, panel, "embedding", "vec_id", k = 5)
-          graft.ops.Similarity.recallAtK(
-            graft.ops.AnnIndex.queryBatchRefined(spark, annH1, panel, emb,
-              "embedding", "vec_id", k = 6, nProbe = 2, refine = 4)
-              .select(col("query_id"), col("neighbor_id")), exact)
-        },
-        () => {
-          val panel = emb10.filter(col("vec_id") < 8)
-          val exact = graft.ops.Similarity.bruteForceTopK(
-            emb10, panel, "embedding", "vec_id", k = 5)
-          graft.ops.Similarity.recallAtK(
-            graft.ops.AnnIndex.queryBatchRefined(spark, annH10, panel, emb10,
-              "embedding", "vec_id", k = 6, nProbe = 2, refine = 4)
-              .select(col("query_id"), col("neighbor_id")), exact)
-        }),
-      ("q179 ann-merge",
-        () => { graft.ops.AnnIndex.merge(spark,
-            Seq(s"$scratch/mg_aa", s"$scratch/mg_ab"),
-            s"$scratch/mg_aout1_${System.nanoTime()}")
-          spark.range(1).toDF() },
-        () => { graft.ops.AnnIndex.merge(spark,
-            Seq(s"$scratch/mg_aa10", s"$scratch/mg_ab10"),
-            s"$scratch/mg_aout10_${System.nanoTime()}")
-          spark.range(1).toDF() }),
-      ("q173 bm25-merge",
-        () => { graft.ops.Bm25Index.merge(spark,
-            Seq(s"$scratch/mg_ba", s"$scratch/mg_bb"),
-            s"$scratch/mg_out1_${System.nanoTime()}")
-          spark.range(1).toDF() },
-        () => { graft.ops.Bm25Index.merge(spark,
-            Seq(s"$scratch/mg_ba10", s"$scratch/mg_bb10"),
-            s"$scratch/mg_out10_${System.nanoTime()}")
-          spark.range(1).toDF() }),
-      ("q147 sft-pack", () => {
-          val withPrompt = docs.withColumn("prompt",
-            concat(lit("summarize document "), col("doc_id").cast("string"),
-              lit(": ")))
-            .withColumn("shard_key",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-          graft.ops.Packing.packSftSequences(withPrompt, "doc_id", "prompt",
-            "text", profileVocab, ctxLen = 128L, shardCol = "shard_key")
-        },
-        () => {
-          val withPrompt = docs10.withColumn("prompt",
-            concat(lit("summarize document "), col("doc_id").cast("string"),
-              lit(": ")))
-            .withColumn("shard_key",
-              (graft.ops.Sampling.hashUnit(col("doc_id")) * 32).cast("int"))
-          graft.ops.Packing.packSftSequences(withPrompt, "doc_id", "prompt",
-            "text", profileVocab, ctxLen = 128L, shardCol = "shard_key")
-        }))
-      // SPARK_GRAFT_SCALE_ONLY=q82,q112 restricts the sweep (label
-      // prefix match) — the A/B lever for re-profiling one family
-      // after a change without the full multi-minute run. Blank
-      // tokens are ignored (an empty/whitespace value = no filter);
-      // a filter that matches nothing fails loudly instead of
-      // silently sweeping zero queries.
-      .filter { case (name, _, _) =>
-        val pats = sys.env.get("SPARK_GRAFT_SCALE_ONLY").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        pats.isEmpty || pats.exists(p => name.startsWith(p + " ") || name == p)
-      }
-      .map { case (name, at1, atN) =>
-      // per-entry UNTIMED setup: the harness warms only the x1 thunk,
-      // so any lazily-built per-scale state (the bm25 indexes) must be
-      // forced here or the xN timing absorbs a one-time build
-      if (name.startsWith("q145") || name.startsWith("q148") ||
-          name.startsWith("q150")) {
-        bm25H1.dir; bm25H10.dir; ()
-      }
-      if (name.startsWith("q149") || name.startsWith("q150") ||
-          name.startsWith("q151") || name.startsWith("q152")) {
-        annH1.dir; annH10.dir; qv1.size; qv10.size; ()
-      }
-      if (name.contains("bigcb")) { bigCbH1.dir; bigCbH10.dir; () }
-      if (name.startsWith("q154") || name.startsWith("q156") ||
-          name.startsWith("q161") || name.startsWith("q163") ||
-          name.startsWith("q165") || name.startsWith("q167") ||
-          name.startsWith("q178")) {
-        bm25H1.dir; bm25H10.dir; ()
-      }
-      if (name.startsWith("q155")) { bm25fH1.dir; bm25fH10.dir; () }
-      if (name.startsWith("q157")) { bm25DelH1.dir; bm25DelH10.dir; () }
-      if (name.startsWith("q158")) {
-        annDelH1.dir; annDelH10.dir; qv1.size; qv10.size; ()
-      }
-      if (name.startsWith("q159")) {
-        dedupDelH1.dir; dedupDelH10.dir; dedupProbeBatch.count(); ()
-      }
-      if (name.startsWith("q166")) {
-        bm25H1.dir; bm25H10.dir; annH1.dir; annH10.dir; ()
-      }
-      if (name.startsWith("q153")) {
-        annH1.dir; annH10.dir; annRebDir1; annRebDir10; ()
-      }
-      if (name.startsWith("q168")) { dedupDelH1.dir; dedupDelH10.dir; () }
-      if (name.startsWith("q169") || name.startsWith("q180")) {
-        annDelH1.dir; annDelH10.dir; ()
-      }
-      if (name.startsWith("q170")) {
-        annAttrH1.dir; annAttrH10.dir; qv1.size; qv10.size; ()
-      }
-      // q185 builds its query batch from emb/emb10 — it needs only the
-      // attr indexes warm, not q170's query-vector memos
-      if (name.startsWith("q185")) { annAttrH1.dir; annAttrH10.dir; () }
-      if (name.startsWith("q184") || name.startsWith("q186") ||
-          name.startsWith("q187") || name.startsWith("q188") ||
-          name.startsWith("q189") || name.startsWith("q190")) {
-        bm25H1.dir; bm25H10.dir; ()
-      }
-      if (name.startsWith("shadow")) {
-        annH1.dir; annH10.dir; annShadowDir1; annShadowDir10; ()
-      }
-      if (name.startsWith("q195")) {
-        bm25H1.dir; bm25H10.dir; annH1.dir; annH10.dir
-        qv1.size; qv10.size; ()
-      }
-      if (name.startsWith("q196")) { bm25H1.dir; bm25H10.dir; () }
-      if (name.startsWith("q198")) {
-        bm25H1.dir; bm25H10.dir; bm25RebArmDir1; bm25RebArmDir10; ()
-      }
-      if (name.startsWith("q200")) {
-        bm25H1.dir; bm25H10.dir; bm25ShadowDir1; bm25ShadowDir10; ()
-      }
-      if (name.startsWith("q199")) { dedupRebArmDir1; dedupRebArmDir10; () }
-      if (name.startsWith("refresh")) {
-        refrCorpus1.count(); refrCorpus10.count()
-        refrPristine1; refrPristine10; ()
-      }
-      if (name.startsWith("lockspan")) {
-        bm25H1.dir; bm25H10.dir; annH1.dir; annH10.dir
-        dedupRebArmDir1; dedupRebArmDir10
-        lockDeltaDocs.count(); lockDeltaEmb.count(); ()
-      }
-      if (name.startsWith("q201")) {
-        dedupShadowArmDir1; dedupShadowArmDir10; ()
-      }
-      if (name.startsWith("q171")) {
-        bm25H1.dir; bm25H10.dir
-        trioDedupDir1; trioDedupDir10; trioAnnDir1; trioAnnDir10; ()
-      }
-      if (name.startsWith("q172")) { importedArmVocab; () }
-      if (name.startsWith("q176") || name.startsWith("q183")) {
-        importedIdsArmVocab; ()
-      }
-      if (name.startsWith("q182")) { recTrio1; recTrio10; () }
-      if (name.startsWith("q173")) { mergeShards1; mergeShards10; () }
-      if (name.startsWith("q179")) { annMergeShards1; annMergeShards10; () }
-      if (name.startsWith("ingest")) {
-        bm25H1.dir; bm25H10.dir
-        trioDedupDir1; trioDedupDir10; trioAnnDir1; trioAnnDir10
-        ingTrio1; ingTrio10; ()
-      }
-      if (name.startsWith("q175") || name.startsWith("q177") ||
-          name.startsWith("q181")) {
-        annH1.dir; annH10.dir; qv1.size; qv10.size; ()
-      }
-      run(s"$name x1(warm)", at1) // JIT/codegen warm-up at 1x
-      val t1 = run(s"$name x1", at1)
-      val tN = run(s"$name x$factor", atN)
-      (name, t1, tN)
+    def done: DataFrame = spark.range(1).toDF() // the arm did its own writes
+    def copyFresh(src: String, dst: String): String = {
+      fs.delete(new Path(dst), true)
+      FileUtil.copy(fs, new Path(src), fs, new Path(dst), false, fs.getConf)
+      dst
     }
-    require(results.nonEmpty,
-      s"SPARK_GRAFT_SCALE_ONLY='${sys.env.getOrElse("SPARK_GRAFT_SCALE_ONLY", "")}' " +
-        "matched no benchmark labels — check the query prefixes (e.g. q82,q112)")
+
+    // ---- hand-built state for the arms, index 0 = x1, 1 = xN; lazy,
+    // and forced by each arm's untimed prepare ----
+    def docsAt(i: Int) = QueryDef.t(spark, dirs(i), "documents").select("doc_id", "text")
+    def vecsAt(i: Int) = QueryDef.t(spark, dirs(i), "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    // nCells scales with the corpus, so cells stay constant-size and a
+    // fixed-nProbe probe reads about constant absolute work
+    def annBuild(src: DataFrame, dir: String, i: Int) = AnnIndex.build(src,
+      "embedding", "doc_id", dir, nCells = 4 * scales(i), m = 4, k = 4, dim = Dim, iters = 2)
+    lazy val bm25 = scales.indices.map(i =>
+      Bm25Index.build(docsAt(i), "doc_id", s"$scratch/bm25_$i"))
+    lazy val ann = scales.indices.map(i => annBuild(vecsAt(i), s"$scratch/ann_$i", i))
+    lazy val dedup = scales.indices.map(i =>
+      DedupIndex.build(docsAt(i), "doc_id", s"$scratch/dedup_$i"))
+    def batchQs(n: Int, termsCol: String, qs: Seq[Seq[String]]): DataFrame = {
+      import spark.implicits._
+      (0 until n).flatMap(c => qs.indices.map(j => (1L + 3 * c + j, qs(j))))
+        .toDF("qid", termsCol)
+    }
+    val termQs = Seq(Seq("data", "the"), Seq("query"), Seq("the", "query", "data"))
+    val phraseQs = Seq(Seq("the", "data"), Seq("data", "the"), Seq("and", "the", "data"))
+    val nQueries = Seq(1, 10) // the query axis: x1 = one batch, xN = ten
+    def bm25Batch(c: Int, i: Int) = Bm25Index.topKBatch(spark, bm25(c),
+      batchQs(nQueries(i), "terms", termQs), "qid", "terms", k = 25)
+    def annBatch(c: Int, i: Int) = AnnIndex.queryBatch(spark, ann(c),
+      vecsAt(c).filter(col("doc_id") < 8 * nQueries(i)), "embedding", "doc_id",
+      k = 25, nProbe = 2)
+    // FAISS-typical 256×16 codebooks: the LUT-join plan must stay O(m)
+    // at real codebook sizes. Measuring the probe needs no trained
+    // model, so the codes are synthetic over the real id space.
+    lazy val bigCb = scales.indices.map { i =>
+      val dest = s"$scratch/bigcb_$i"
+      vecsAt(i).select(col("doc_id") +: pmod(col("doc_id"), lit(8)).as("cell") +:
+          (0 until 16).map(mi => pmod(col("doc_id") * (mi + 1), lit(256)).as(s"code_$mi")): _*)
+        .repartition(col("cell")).write.partitionBy("cell").parquet(s"$dest/codes")
+      AnnIndex.Handle(dest,
+        (0L until 8L).map(c => c -> Seq.tabulate(Dim)(j => ((c * 13 + j * 7) % 29 - 14.0) / 7.0)),
+        (0 until 16).map(mi => (0L until 256L).map(cid =>
+          cid -> Seq.tabulate(4)(j => ((mi * 31 + cid * 7 + j) % 97).toDouble))))
+    }
+    lazy val annShadow = scales.indices.map(i =>
+      copyFresh(ann(i).dir, s"$scratch/annshadow_$i"))
+    // the locked window: restore pristine state, start the unlocked
+    // sidecar pass, land a FIXED 200-row delta through the live append
+    // path right before the lock, and print the LOCKED span (catch-up +
+    // swap) on its own line — it must stay about flat from x1 to xN
+    lazy val lockDocs = docsAt(0).filter(col("doc_id") < 200)
+      .select((col("doc_id") + lit(50000000L)).as("doc_id"), col("text")).localCheckpoint(true)
+    lazy val lockVecs = vecsAt(0).filter(col("doc_id") < 200)
+      .select((col("doc_id") + lit(50000000L)).as("doc_id"), col("embedding"))
+      .localCheckpoint(true)
+    def lockspan(kind: String, i: Int, pristine: String)(
+        rebuild: (String, () => Unit) => Unit): DataFrame = {
+      val dest = copyFresh(pristine, s"$scratch/lock_${kind}_$i")
+      var t0 = 0L
+      rebuild(dest, () => t0 = System.nanoTime())
+      val tag = s"lockspan $kind x${scales(i)}"
+      println(f"[scale] $tag%-24s locked-span ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+      done
+    }
+    // CurationRefresh with a FIXED absolute delta at every scale: ids
+    // < 200 added, [200, 400) changed, [400, 600) removed. `refresh
+    // add` (no deletes, no compact) must stay about flat; `refresh
+    // full` runs the three compact purges, corpus-linear by contract,
+    // and is graded against the trio-build line printed at prepare.
+    def revised(c: DataFrame) = c.withColumn("text",
+      when(col("doc_id") >= 200 && col("doc_id") < 400, concat(col("text"), lit(" [old]")))
+        .otherwise(col("text")))
+    lazy val refr = scales.indices.map { i =>
+      docsAt(i).join(vecsAt(i), Seq("doc_id")).write.parquet(s"$scratch/refr_corpus_$i")
+      val corpus = spark.read.parquet(s"$scratch/refr_corpus_$i")
+      val old = revised(corpus).filter(col("doc_id") >= 200)
+      val root = s"$scratch/refr_pristine_$i"
+      val t0 = System.nanoTime()
+      DedupIndex.build(old, "doc_id", s"$root/dedup")
+      Bm25Index.build(old, "doc_id", s"$root/bm25")
+      annBuild(old, s"$root/ann", i)
+      val tag = s"refresh x${scales(i)}"
+      println(f"[scale] $tag%-24s trio-build ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+      CurationRefresh.snapshot(old, s"$root/state")
+      (corpus, root)
+    }
+    def refreshArm(kind: String, i: Int): DataFrame = {
+      val (corpus, pristine) = refr(i)
+      val work = s"$scratch/refr_${kind}_$i"
+      Seq("dedup", "bm25", "ann", "state").foreach(t => copyFresh(s"$pristine/$t", s"$work/$t"))
+      val neu = if (kind == "add") revised(corpus)
+        else corpus.filter(col("doc_id") < 400 || col("doc_id") >= 600)
+      val t0 = System.nanoTime()
+      val rep = CurationRefresh.refresh(spark, neu, s"$work/state", s"$work/dedup",
+        s"$work/bm25", s"$work/ann", "embedding")
+      val tag = s"refresh $kind x${scales(i)}"
+      println(f"[scale] $tag%-24s refresh-span ${(System.nanoTime() - t0) / 1e9}%7.3f s " +
+        s"(+${rep.added} ~${rep.changed} -${rep.removed} =${rep.unchanged})")
+      done
+    }
+    // streaming ingest: a fixed 200-doc batch of FRESH ids per call
+    // through the full screen -> gate -> three-append trigger, against
+    // copies of the trio (the sink appends)
+    lazy val ingTrio = scales.indices.map(i => (
+      DedupIndex.load(spark, copyFresh(dedup(i).dir, s"$scratch/ing_dedup_$i")),
+      Bm25Index.load(spark, copyFresh(bm25(i).dir, s"$scratch/ing_bm25_$i")),
+      AnnIndex.load(spark, copyFresh(ann(i).dir, s"$scratch/ing_ann_$i"))))
+    var ingestEpoch = 0L
+    def ingestRun(i: Int): DataFrame = {
+      ingestEpoch += 1
+      val batch = spark.range(200)
+        .select((col("id") + lit(10000000L * ingestEpoch)).as("doc_id"))
+        .withColumn("text", concat(lit("fresh ingest document number "),
+          col("doc_id").cast("string"), lit(" with a deterministic tail of filler words")))
+        .withColumn("embedding", transform(sequence(lit(0), lit(Dim - 1)),
+          j => ((col("doc_id") % 89 + j * 17) % 37).cast("double") / lit(37.0)))
+      val (dh, bh, ah) = ingTrio(i)
+      graft.streaming.CurationIngest.curationSink(dh, bh, ah, s"$scratch/ing_verdicts_$i",
+        "embedding", qualityGate = length(col("text")) > 20)(batch, ingestEpoch)
+      done
+    }
+
+    // (label, untimed prepare, run at index 0 = x1 / 1 = xN)
+    val entries: Seq[(String, () => Any, Int => DataFrame)] =
+      Declared.map(byName).map { q =>
+        (q.name, () => dirs.foreach(d => q.benchPrepare.foreach(_(spark, d))),
+          (i: Int) => q.benchFn.getOrElse(q.fn)(spark, dirs(i)))
+      } ++ Seq[(String, () => Any, Int => DataFrame)](
+        ("q148 bm25-batch-10q-c1", () => bm25, bm25Batch(0, _)),
+        ("q148 bm25-batch-10q-c10", () => bm25, bm25Batch(1, _)),
+        ("q151 ann-batch-10q-c1", () => ann, annBatch(0, _)),
+        ("q151 ann-batch-10q-c10", () => ann, annBatch(1, _)),
+        ("q156 bm25-phrase-batch-10q-c10", () => bm25, i => Bm25Index.phraseTopKBatch(
+          spark, bm25(1), batchQs(nQueries(i), "phrase", phraseQs), "qid", "phrase", k = 25)),
+        ("q151 ann-batch-bigcb", () => bigCb, i => AnnIndex.queryBatch(spark, bigCb(i),
+          vecsAt(i).filter(col("doc_id") < 8), "embedding", "doc_id", k = 25, nProbe = 2)),
+        ("shadow ann-rebuild", () => annShadow, i => {
+          AnnIndex.rebuildShadow(() => vecsAt(i), "embedding", "doc_id", annShadow(i),
+            nCells = 4 * scales(i), m = 4, k = 4, dim = Dim, iters = 2)
+          done
+        }),
+        ("lockspan bm25", () => (bm25, lockDocs.count()), i =>
+          lockspan("bm25", i, bm25(i).dir) { (dest, mark) =>
+            Bm25Index.rebuildShadow(() => docsAt(i).unionByName(lockDocs), "doc_id", dest,
+              beforeLock = () => {
+                Bm25Index.append(Bm25Index.load(spark, dest), lockDocs); mark()
+              })
+            ()
+          }),
+        ("lockspan dedup", () => (dedup, lockDocs.count()), i =>
+          lockspan("dedup", i, dedup(i).dir) { (dest, mark) =>
+            DedupIndex.rebuildShadow(() => docsAt(i).unionByName(lockDocs), "doc_id", dest,
+              beforeLock = () => {
+                DedupIndex.append(DedupIndex.load(spark, dest), lockDocs); mark()
+              })
+            ()
+          }),
+        ("lockspan ann", () => (ann, lockVecs.count()), i =>
+          lockspan("ann", i, ann(i).dir) { (dest, mark) =>
+            AnnIndex.rebuildShadow(() => vecsAt(i).unionByName(lockVecs), "embedding",
+              "doc_id", dest, nCells = 4 * scales(i), m = 4, k = 4, dim = Dim, iters = 2,
+              beforeLock = () => {
+                AnnIndex.append(AnnIndex.load(spark, dest), lockVecs, "embedding", "doc_id")
+                mark()
+              })
+            ()
+          }),
+        ("refresh add", () => refr, refreshArm("add", _)),
+        ("refresh full", () => refr, refreshArm("full", _)),
+        ("ingest curation-trigger", () => ingTrio, ingestRun))
+    // SPARK_GRAFT_SCALE_ONLY=q82,q112 restricts the sweep by q-number
+    // prefix. Blank tokens are ignored; a filter that matches nothing
+    // fails instead of sweeping zero entries.
+    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val picked = entries.filter { case (name, _, _) =>
+      only.isEmpty || only.exists(p => name == p || name.startsWith(p + " ") ||
+        name.startsWith(p + "_"))
+    }
+    require(picked.nonEmpty, s"SPARK_GRAFT_SCALE_ONLY='${only.mkString(",")}' " +
+      "matched no entry — check the query prefixes (e.g. q82,q112)")
+
+    val results = picked.map { case (name, prepare, at) =>
+      prepare()
+      run(s"$name x1(warm)", at(0)) // JIT/codegen warm-up at x1
+      (name, run(s"$name x1", at(0)), run(s"$name x$factor", at(1)))
+    }
     results.foreach { case (name, t1, tN) =>
       println(f"[scale] $name%-12s x1 $t1%7.3f s -> x$factor $tN%7.3f s   " +
         f"wall ratio ${tN / t1}%5.2fx for ${factor}x input")
     }
     spark.stop()
+    FileUtil.fullyDelete(new java.io.File(scratch))
+  }
+
+  /** Writes `sfDir` blown up `factor` times as an sf-layout directory at
+    * `out`: `documents` and `embeddings` as `factor` copies with
+    * disjoint id spaces (documents get a per-copy marker token and their
+    * `n_chars` recomputed), every other table copied unchanged. Fails
+    * unless each replicated table holds exactly `factor ×` its source's
+    * rows. */
+  private def writeScaled(
+      spark: SparkSession, fs: FileSystem, sfDir: String, out: String, factor: Int): Unit = {
+    def replicate(name: String, id: String, rest: Int => Seq[Column]): Unit = {
+      val src = spark.read.parquet(s"$sfDir/$name.parquet")
+      val span = src.agg(max(id)).head().getLong(0) + 1
+      (0 until factor)
+        .map(i => src.select((col(id) + lit(i * span)).as(id) +: rest(i): _*))
+        .reduce(_ unionByName _)
+        .write.parquet(s"$out/$name.parquet")
+      val (n, scaled) = (src.count(), spark.read.parquet(s"$out/$name.parquet").count())
+      require(scaled == factor * n, s"scaled $name holds $scaled rows, not $factor × $n")
+      println(s"[scale] corpus x$factor: $name $scaled rows")
+    }
+    replicate("documents", "doc_id", i => {
+      val text = concat(col("text"), lit(s" copymarker$i"))
+      Seq(text.as("text"), col("lang"), col("source"), length(text).cast("long").as("n_chars"))
+    })
+    replicate("embeddings", "vec_id", _ => Seq(col("embedding"), col("label")))
+    fs.listStatus(new Path(sfDir)).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !Seq("documents.parquet", "embeddings.parquet").contains(p.getName))
+      .foreach(p => FileUtil.copy(fs, p, fs, new Path(s"$out/${p.getName}"), false, fs.getConf))
   }
 }

@@ -16,8 +16,9 @@ package graft
   * `banNestedLoop` stays OFF here: q44's IVF assign legitimately
   * broadcast-crosses the corpus with its k-row codebook (bounded by
   * the `vec_id < k` pushed filter, not recognizable as a literal).
-  * The flagship scale runs (tools/ProfileScale) DO ban nested loops —
-  * none of q46/q47/q48 has a bounded cross.
+  * tools/ProfileScale DOES ban nested loops when it runs the declared
+  * queries' bench forms at x1 and xN, so a bounded cross prints there as
+  * a violation to review.
   */
 class PlanAuditSpec extends SparkSpec {
 

@@ -115,6 +115,29 @@ class CurationRefreshSpec extends SparkSpec {
     } finally rmTree(root)
   }
 
+  test("refresh: a new corpus that changes or removes every indexed doc") {
+    val root = java.nio.file.Files.createTempDirectory("refrall").toString
+    try {
+      val corpus = corpusOf("sf0.001").filter(col("text").isNotNull)
+      val old = corpus.filter(col("doc_id") < 40)
+        .withColumn("text", concat(col("text"), lit(" [rev1]")))
+      val neu = corpus.filter(col("doc_id") < 20 || col("doc_id").between(40, 59))
+      val (dd, bd, ad) = buildTrio(old, s"$root/live")
+      CurationRefresh.snapshot(old, s"$root/state")
+      // every old doc is deleted, so each compact purges its whole table
+      val rep = CurationRefresh.refresh(
+        spark, neu, s"$root/state", dd, bd, ad, "embedding")
+      assert(rep.unchanged == 0 && rep.changed + rep.removed == old.count())
+      assert(rep.added == neu.filter(col("doc_id") >= 40).count())
+      val (cd, cb, _) = buildTrio(neu, s"$root/clean")
+      val probe = corpusOf("sf0.001").filter(col("doc_id") < 80)
+      assert(screenRows(DedupIndex.load(spark, dd), probe) ==
+        screenRows(DedupIndex.load(spark, cd), probe))
+      assert(topkRows(bd) == topkRows(cb))
+      assert(spark.read.parquet(s"$ad/codes").count() == neu.count())
+    } finally rmTree(root)
+  }
+
   test("refresh: shared fingerprints survive a removed twin (refcount)") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("refr2").toString

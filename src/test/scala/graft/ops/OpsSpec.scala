@@ -4538,6 +4538,17 @@ class OpsSpec extends SparkSpec {
       val withMiss = Seq("data", "nosuchterm")
       assert(rows(Bm25Index.topK(spark, loaded, withMiss, k = 4)) ==
         rows(Retrieval.bm25TopK(corpus, "doc_id", "text", withMiss, k = 4)))
+      // k1 = 0 stays total: a term a document lacks scores 0, not 0/0,
+      // and the batch core ranks the same single query the same way
+      for (b <- Seq(0.0, 0.75)) {
+        val single = rows(Bm25Index.topK(spark, loaded, terms, k = 4, k1 = 0.0, b = b))
+        assert(single == rows(Retrieval.bm25TopK(
+          corpus, "doc_id", "text", terms, k = 4, k1 = 0.0, b = b)), s"b = $b")
+        val batch = Bm25Index.topKBatch(spark, loaded, Seq((1L, terms)).toDF("qid", "terms"),
+            "qid", "terms", k = 4, k1 = 0.0, b = b)
+          .collect().sortBy(_.getAs[Int]("rank")).map(_.getAs[Long]("doc_id")).toSeq
+        assert(batch == single.map(_._1), s"b = $b: topKBatch $batch vs topK $single")
+      }
       // the probe scan prunes: PartitionFilters on term_bucket, and the
       // doc text is nowhere in the read schema
       val plan = viaIndex.queryExecution.executedPlan.toString
